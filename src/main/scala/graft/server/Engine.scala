@@ -2,7 +2,7 @@ package graft.server
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
@@ -40,7 +40,10 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     s"autoflush requires flushInterval > 0 (got $flushInterval)")
   require(!autoCompact || compactMaxLeafFiles > 0,
     s"autoCompact requires compactMaxLeafFiles > 0 (got $compactMaxLeafFiles)")
-  import spark.implicits._
+  /** Derived once: the implicit product encoder is re-derived by
+    * reflection on every call, which roughly doubles the cost of a
+    * `createDataset` over a staging buffer. */
+  private val updateEncoder: Encoder[Update] = Encoders.product[Update]
 
   private val books = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Update]]
   /** Live wire subscribers (the reference's per-connection sender channels,
@@ -88,7 +91,9 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * Ordering contract: the read lock is acquired BEFORE the engine
     * monitor and never the reverse; swappers take only the write lock —
     * a thread holding the read lock must NOT call [[compactBook]] /
-    * archival sweeps (RRWL reads don't upgrade; it would self-deadlock). */
+    * archival sweeps (RRWL reads don't upgrade; it would self-deadlock).
+    * The one read taken inside the monitor, flush's footer read, uses a
+    * barging `tryLock` that never queues behind a swap ([[withSwapRead]]). */
   val swapGate =
     new java.util.concurrent.locks.ReentrantReadWriteLock(true)
   private val defaultSession = new Session
@@ -99,8 +104,8 @@ final class Engine(spark: SparkSession, dtfFolder: String,
   private def hasFs(book: String) = new java.io.File(fsPath(book)).exists()
 
   def memDf(book: String): DataFrame =
-    spark.createDataset(books.getOrElse(book, mutable.ArrayBuffer.empty).toSeq)
-      .toDF()
+    spark.createDataset(books.getOrElse(book, mutable.ArrayBuffer.empty).toSeq)(
+      updateEncoder).toDF()
 
   /** Root-level parquet files of a book dir — rows from LEGACY flat
     * flushes (pre-`day=` layout). Spark's partition discovery silently
@@ -109,8 +114,10 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * [[fsDf]]/[[fsDfInRange]] union them explicitly instead.
     * [[compactBook]] migrates them into the `day=` tree for good. */
   private def legacyFlatFiles(book: String): Array[java.io.File] =
-    Option(new java.io.File(fsPath(book)).listFiles())
-      .getOrElse(Array.empty)
+    parquetFilesIn(new java.io.File(fsPath(book)))
+
+  private def parquetFilesIn(dir: java.io.File): Array[java.io.File] =
+    Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
 
   /** One book's on-disk side. Flushes write `day=<epochDay>` partition
@@ -296,7 +303,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
 
     case Command.Load(book) =>
       if (hasFs(book)) {
-        val loaded = fsDf(book).get.as[Update].collect()
+        val loaded = fsDf(book).get.as(updateEncoder).collect()
         val buf = books.getOrElseUpdate(book, mutable.ArrayBuffer.empty)
         buf ++= loaded
         // the reference's load RESETS nominal_count to the stored header
@@ -389,26 +396,123 @@ final class Engine(spark: SparkSession, dtfFolder: String,
   }
 
   /** Flush staging to parquet, keeping only rows newer than the stored
-    * max_ts (append semantics S6). */
+    * max_ts (append semantics S6). Synchronous: the rows are on disk
+    * when this returns.
+    *
+    * The stored max comes from parquet footers ([[storedMaxTs]]), the
+    * way the reference reads `max_ts` from its file header
+    * (`file_format.rs:52-53,783-819`) — no Spark job, and a cost that
+    * does not grow with the book. It is read fresh on every flush, never
+    * memoized: Archiver's `removeLocal` deletes files, compaction
+    * rewrites them and another writer may add some, and a memo would go
+    * stale under each of them.
+    *
+    * The write is ONE single-task job: the staged rows already sit on the
+    * driver, so a global `orderBy` would only add a range-sampling job
+    * and a shuffle. Coalescing to one partition and sorting it by
+    * (day, ts, seq) gives the partitioned writer its day order and
+    * writes one file per day leaf with rows in (ts, seq) order, so each
+    * file's ts range is disjoint from every other file this flush writes
+    * — the contract [[graft.sources.Compaction]] keeps. */
   private def flush(book: String): Unit =
     books.get(book).filter(_.nonEmpty).foreach { buf =>
-      val maxTs = fsDf(book)
-        .map(_.agg(max(col("ts"))).as[Option[Long]].head().getOrElse(Long.MinValue))
-        .getOrElse(Long.MinValue)
+      import graft.sources.TickStore.{DayCol, dayOf, dayOfMs}
+      val t0 = System.nanoTime()
+      val maxTs = storedMaxTs(book)
       val fresh = buf.filter(_.ts > maxTs).toSeq
       if (fresh.nonEmpty)
-        spark.createDataset(fresh).toDF()
-          .withColumn(graft.sources.TickStore.DayCol,
-            graft.sources.TickStore.dayOf(col("ts")))
-          .orderBy("ts", "seq")
+        spark.createDataset(fresh)(updateEncoder).toDF()
+          .withColumn(DayCol, dayOf(col("ts")))
+          .coalesce(1)
+          .sortWithinPartitions(DayCol, "ts", "seq")
           .write.mode("append")
-          .partitionBy(graft.sources.TickStore.DayCol)
+          .partitionBy(DayCol)
           .parquet(fsPath(book))
+      flushCount.incrementAndGet()
+      flushDroppedRows.addAndGet((buf.size - fresh.size).toLong)
+      flushNanos.addAndGet(System.nanoTime() - t0)
       buf.clear()
       if (autoCompact && fresh.nonEmpty)
-        maybeScheduleCompaction(book,
-          fresh.map(u => graft.sources.TickStore.dayOfMs(u.ts)).distinct)
+        maybeScheduleCompaction(book, fresh.map(u => dayOfMs(u.ts)).distinct)
     }
+
+  private val flushCount = new java.util.concurrent.atomic.AtomicLong
+  private val flushNanos = new java.util.concurrent.atomic.AtomicLong
+  private val flushDroppedRows = new java.util.concurrent.atomic.AtomicLong
+  /** Lifetime flush counters: flushes that had staged rows, their wall
+    * time, and the staged rows S6 dropped for not being newer than the
+    * stored max. Kept out of INFO, whose bytes match the reference. */
+  private[graft] def flushStats: Engine.FlushStats =
+    Engine.FlushStats(flushCount.get(), flushNanos.get() / 1e9,
+      flushDroppedRows.get())
+
+  /** The max `ts` on disk for a book (Long.MinValue when it has none),
+    * from parquet footer statistics. `day` is `floor(ts / 86400000)`, so
+    * the max sits in the highest `day=` leaf holding rows — not always
+    * the highest `day=` dir: Archiver's `removeLocal` can empty one.
+    * Legacy root-level flat files can hold any ts and are always read.
+    * A leaf whose footers lack `ts` statistics falls back to a Spark
+    * `max` over that leaf alone. Runs under the
+    * READ side of [[swapGate]], so a compaction or archival swap never
+    * lands between the listing and the footer reads. */
+  private def storedMaxTs(book: String): Long = withSwapRead {
+    val prefix = s"${graft.sources.TickStore.DayCol}="
+    val dayLeaves = Option(new java.io.File(fsPath(book)).listFiles())
+      .getOrElse(Array.empty).toSeq
+      .filter(d => d.isDirectory && d.getName.startsWith(prefix))
+      .flatMap(d => d.getName.drop(prefix.length).toLongOption.map(_ -> d))
+      .sortBy(-_._1)
+    val newestDay = dayLeaves.iterator
+      .map { case (_, d) => maxTsOf(parquetFilesIn(d).toSeq) }
+      .find(_ > Long.MinValue).getOrElse(Long.MinValue)
+    math.max(newestDay, maxTsOf(legacyFlatFiles(book).toSeq))
+  }
+
+  /** Max `ts` over a set of parquet files (Long.MinValue when they hold
+    * no rows): footer statistics per row group, or one Spark `max` over
+    * the set when any row group lacks them. */
+  private def maxTsOf(files: Seq[java.io.File]): Long = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import scala.jdk.CollectionConverters._
+    // session Hadoop conf, as Tables' footer probe: spark.hadoop.*
+    // settings reach the read
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fromFooters: Seq[Option[Long]] = files.flatMap { f =>
+      val r = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f.getPath), conf))
+      try r.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+        .map { rg =>
+          rg.getColumns.asScala.find(_.getPath.toDotString == "ts")
+            .map(_.getStatistics)
+            .filter(s => s != null && s.hasNonNullValue)
+            .map(_.genericGetMax)
+            .collect { case l: java.lang.Long => l.longValue }
+        }
+      finally r.close()
+    }
+    if (fromFooters.forall(_.isDefined))
+      fromFooters.flatten.foldLeft(Long.MinValue)(math.max)
+    else {
+      val m = spark.read.parquet(files.map(_.getPath): _*)
+        .agg(max(col("ts"))).head()
+      if (m.isNullAt(0)) Long.MinValue else m.getLong(0)
+    }
+  }
+
+  /** Runs `body` holding the READ side of [[swapGate]]. The barging
+    * `tryLock` never queues behind a waiting swap: a caller already
+    * inside the engine monitor (every `execute`) must not wait on a swap
+    * that itself waits on a reader blocked on that monitor. It only
+    * spins while a swap actually holds the write side, and swaps take
+    * no engine monitor. Reentrant for Wire threads, which already hold
+    * the read side. */
+  private def withSwapRead[T](body: => T): T = {
+    val read = swapGate.readLock()
+    while (!read.tryLock()) Thread.sleep(1L)
+    try body finally read.unlock()
+  }
 
   // ---- auto-compaction (the compaction consequence of autoflush's
   // one-file-per-day-per-flush discipline, VERDICT r10 gap #2): a
@@ -439,10 +543,8 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * every leaf once it runs.) */
   private def leafOverPolicy(book: String, days: Seq[Long]): Boolean =
     days.exists { day =>
-      val leaf = new java.io.File(fsPath(book),
-        s"${graft.sources.TickStore.DayCol}=$day")
-      Option(leaf.listFiles()).getOrElse(Array.empty)
-        .count(f => f.isFile && f.getName.endsWith(".parquet")) >
+      parquetFilesIn(new java.io.File(fsPath(book),
+        s"${graft.sources.TickStore.DayCol}=$day")).length >
         compactMaxLeafFiles
     }
 
@@ -631,6 +733,10 @@ object Engine {
         s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
       else s
     }
+
+  /** Lifetime flush counters of one engine ([[Engine.flushStats]]). */
+  final case class FlushStats(flushes: Long, wallSeconds: Double,
+      droppedRows: Long)
 
   /** The reference's `PRICE_DECIMALS` (`state.rs:23`) — every book's
     * orderbook discretizes prices at 10 decimals. */

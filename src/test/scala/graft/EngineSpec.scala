@@ -326,4 +326,169 @@ class EngineSpec extends SparkSpec {
     val names = e.bookSizes().map(_._1)
     assert(names === Seq("default", "real"), names.mkString(", "))
   }
+
+  /** ADD one row at `tsMs` into the session's book. */
+  private def addAt(e: Engine, tsMs: Long, seq: Long): Unit =
+    e.execute(CommandParser.parse(
+      f"ADD ${tsMs / 1000}%d.${tsMs % 1000}%03d, $seq%d, t, f, 1.0, 2.0;"))
+
+  private def updates(sym: String, ts: Seq[Long]): Seq[graft.model.Update] =
+    ts.zipWithIndex.map { case (t, i) =>
+      graft.model.Update(sym, t, 1000L + i, is_trade = true,
+        is_bid = false, 1.0, 2.0)
+    }
+
+  private val base = 1505177459000L
+  private val day = graft.sources.TickStore.MsPerDay
+
+  test("a multi-day FLUSH into a book with rows on disk runs one Spark " +
+      "job and writes one (ts, seq)-sorted file per day leaf") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-onejob").toString
+    val e = new Engine(spark, dir)
+    e.execute(CommandParser.parse("CREATE oj"))
+    e.execute(CommandParser.parse("USE oj"))
+    (0 until 3).foreach(i => addAt(e, base + i * 1000L, i.toLong))
+    e.execute(CommandParser.parse("FLUSH"))
+    // three later days, staged out of order (ts ties broken by seq)
+    val staged = for (d <- Seq(3, 1, 2); i <- Seq(2, 0, 1))
+      yield (base + d * day + i * 1000L, (d * 10 + i).toLong)
+    staged.foreach { case (ts, seq) => addAt(e, ts, seq) }
+    addAt(e, base + 3 * day + 2000L, 29L)
+
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("flush-under-test", "one FLUSH")
+      try e.execute(CommandParser.parse("FLUSH"))
+      finally sc.clearJobGroup()
+      // the listener bus is FIFO: once a later marker job is seen, every
+      // job the FLUSH started has been seen too
+      sc.setJobGroup("flush-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000L
+      while (!groups.contains("flush-marker") &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20L)
+      assert(groups.contains("flush-marker"), "marker job never observed")
+      assert(groups.asScala.count(_ == "flush-under-test") === 1,
+        groups.asScala.toList)
+    } finally sc.removeSparkListener(listener)
+
+    assert(e.execute(CommandParser.parse("COUNT")) === e.Text("13"))
+    for (d <- 1 to 3) {
+      val leaf = new java.io.File(s"$dir/book=oj/day=${(base + d * day) / day}")
+      val files = leaf.listFiles().filter(_.getName.endsWith(".parquet"))
+      assert(files.length === 1, leaf.list().mkString(", "))
+      val keys = spark.read.parquet(files.head.getPath).collect()
+        .map(r => (r.getAs[Long]("ts"), r.getAs[Long]("seq"))).toSeq
+      assert(keys === keys.sorted && keys.nonEmpty, keys)
+    }
+  }
+
+  test("FLUSH reads the stored max from the disk as it is now: legacy " +
+      "flat files, a compacted leaf, another writer's later day, a " +
+      "day emptied by archival, a footer without statistics") {
+    import org.apache.spark.sql.functions.col
+    val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
+    /** Stages `ts` (one row each), FLUSHes, and checks the flush kept
+      * exactly the rows newer than `diskMax`. */
+    def flushAgainst(e: Engine, book: String, diskMax: Long,
+        ts: Seq[Long]): Unit = {
+      val before = e.bookDf(book).count()
+      val dropped0 = e.flushStats.droppedRows
+      ts.zipWithIndex.foreach { case (t, i) => addAt(e, t, 500L + i) }
+      e.execute(CommandParser.parse("FLUSH"))
+      val kept = ts.filter(_ > diskMax).sorted
+      assert(kept.nonEmpty && kept.size < ts.size)
+      assert(e.execute(CommandParser.parse("COUNT")) ===
+        e.Text(s"${before + kept.size}"))
+      val newer = e.bookDf(book).where(col("ts") > diskMax)
+        .select("ts").collect().map(_.getLong(0)).toSeq
+      assert(newer.headOption === kept.headOption &&
+        newer.lastOption === kept.lastOption && newer.size === kept.size,
+        s"rows newer than $diskMax: $newer, want $kept")
+      assert(e.flushStats.droppedRows - dropped0 === ts.size - kept.size)
+    }
+    def bookOnDisk(book: String): (Engine, String) = {
+      val dir = Files.createTempDirectory("graft-maxts").toString
+      val e = new Engine(spark, dir)
+      e.execute(CommandParser.parse(s"CREATE $book"))
+      e.execute(CommandParser.parse(s"USE $book"))
+      (0 until 3).foreach(i => addAt(e, base + i * 1000L, i.toLong))
+      e.execute(CommandParser.parse("FLUSH"))
+      (e, s"$dir/book=$book")
+    }
+    def writeDays(rows: Seq[graft.model.Update], path: String,
+        options: Map[String, String] = Map.empty): Unit =
+      spark.createDataset(rows)(enc).toDF()
+        .withColumn("day", graft.sources.TickStore.dayOf(col("ts")))
+        .write.options(options).mode("append").partitionBy("day")
+        .parquet(path)
+
+    // the max sits in a legacy root-level flat file
+    val (e1, root1) = bookOnDisk("flat")
+    spark.createDataset(updates("flat", Seq(base + 30000L)))(enc).toDF()
+      .write.mode("append").parquet(root1)
+    flushAgainst(e1, "flat", base + 30000L,
+      Seq(10000L, 20000L, 30000L, 40000L, 50000L).map(base + _))
+
+    // the max sits in a leaf compactBook has just rewritten
+    val (e2, root2) = bookOnDisk("comp")
+    for (k <- 1 to 3) {
+      addAt(e2, base + k * 10000L, 10L + k)
+      e2.execute(CommandParser.parse("FLUSH"))
+    }
+    val leaf2 = new java.io.File(s"$root2/day=${base / day}")
+    assert(leaf2.list().count(_.endsWith(".parquet")) === 4)
+    e2.compactBook("comp")
+    assert(leaf2.list().count(_.endsWith(".parquet")) === 1)
+    flushAgainst(e2, "comp", base + 30000L,
+      Seq(25000L, 30000L, 35000L, day + 1000L).map(base + _))
+
+    // another writer has added a file for a later day
+    val (e3, root3) = bookOnDisk("other")
+    writeDays(updates("other", Seq(base + 2 * day, base + 2 * day + 500L)),
+      root3)
+    flushAgainst(e3, "other", base + 2 * day + 500L,
+      Seq(day, 2 * day, 2 * day + 500L, 2 * day + 600L, 3 * day).map(base + _))
+
+    // the highest day dir lost its files, as Archiver's removeLocal
+    // leaves it: the max moves back to the next leaf down
+    val (e4, root4) = bookOnDisk("archived")
+    addAt(e4, base + day + 9000L, 9L)
+    e4.execute(CommandParser.parse("FLUSH"))
+    val leaf4 = new java.io.File(s"$root4/day=${(base + day) / day}")
+    leaf4.listFiles().foreach(_.delete())
+    assert(leaf4.isDirectory && leaf4.list().isEmpty)
+    flushAgainst(e4, "archived", base + 2000L,
+      Seq(1000L, 2000L, 3000L, day + 5000L).map(base + _))
+
+    // a later day whose footer carries no ts statistics: the leaf falls
+    // back to a Spark max
+    val (e5, root5) = bookOnDisk("nostats")
+    writeDays(updates("nostats", Seq(base + day, base + day + 700L)), root5,
+      Map("parquet.column.statistics.enabled" -> "false"))
+    val noStats = new java.io.File(s"$root5/day=${(base + day) / day}")
+      .listFiles().filter(_.getName.endsWith(".parquet")).head
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(noStats.getPath),
+        spark.sparkContext.hadoopConfiguration))
+    try {
+      import scala.jdk.CollectionConverters._
+      assert(footer.getFooter.getBlocks.asScala.forall(_.getColumns.asScala
+        .forall(c => !c.getStatistics.hasNonNullValue)),
+        "fixture still carries statistics")
+    } finally footer.close()
+    flushAgainst(e5, "nostats", base + day + 700L,
+      Seq(day + 600L, day + 700L, day + 800L).map(base + _))
+  }
 }
