@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.functions._
 import graft.model.Update
 import graft.operators.Orderbook
+import graft.sources.TickStore
 
 /** Per-connection state — the reference tracks the current book per
   * connection (`Connection.book_entry`, `state.rs:177-188,510`), so USE /
@@ -107,75 +108,84 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     spark.createDataset(books.getOrElse(book, mutable.ArrayBuffer.empty).toSeq)(
       updateEncoder).toDF()
 
-  /** Root-level parquet files of a book dir — rows from LEGACY flat
-    * flushes (pre-`day=` layout). Spark's partition discovery silently
-    * ignores root-level files once any `day=` subdir exists, so a mixed
-    * dir read naively would DROP every legacy row without an error;
-    * [[fsDf]]/[[fsDfInRange]] union them explicitly instead.
-    * [[compactBook]] migrates them into the `day=` tree for good. */
-  private def legacyFlatFiles(book: String): Array[java.io.File] =
-    parquetFilesIn(new java.io.File(fsPath(book)))
-
-  private def parquetFilesIn(dir: java.io.File): Array[java.io.File] =
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-
-  /** One book's on-disk side. Flushes write `day=<epochDay>` partition
-    * dirs inside the book dir ([[graft.sources.TickStore]] layout at
-    * book granularity); partition discovery re-adds the day column,
-    * which is dropped here so the schema stays the 7-column Update
-    * shape every consumer expects. Legacy flat dirs (no day subdirs)
-    * read identically — drop of an absent column is a no-op. A MIXED
-    * dir (root files + day= subdirs, i.e. a legacy book that has been
-    * flushed post-upgrade) reads as the union of the partitioned tree
-    * and the explicitly-listed root files — partition discovery alone
-    * would silently ignore the latter (verified Spark behavior, not a
-    * crash), which would be data loss on every pre-upgrade row. */
-  def fsDf(book: String): Option[DataFrame] =
-    if (!hasFs(book)) None
-    else {
-      val df = spark.read.parquet(fsPath(book))
-      Some(withLegacyFlat(book, df,
-        df.drop(graft.sources.TickStore.DayCol)))
+  /** One listing of a book dir: its `day=<epochDay>` leaves and its
+    * root-level parquet files. Every read of the book's parquet side takes
+    * whether the dir exists (`None` when not), whether it has `day=`
+    * leaves and which root files it has from this one listing.
+    *
+    * Root-level files hold rows from LEGACY flat flushes (pre-`day=`
+    * layout). Spark's partition discovery silently ignores them once any
+    * `day=` subdir exists, so a mixed dir read naively would DROP every
+    * legacy row without an error; [[fsDf]]/[[fsDfInRange]] union them
+    * explicitly instead. [[compactBook]] migrates them into the `day=`
+    * tree for good. */
+  private def layoutOf(book: String): Option[Engine.Layout] =
+    Option(new java.io.File(fsPath(book)).listFiles()).map { entries =>
+      val prefix = s"${TickStore.DayCol}="
+      Engine.Layout(
+        entries.toSeq
+          .filter(d => d.isDirectory && d.getName.startsWith(prefix))
+          .flatMap(d =>
+            d.getName.drop(prefix.length).toLongOption.map(_ -> d)),
+        entries.toSeq.filter(isParquetFile))
     }
 
-  /** The ONE place the mixed-layout union lives (see [[fsDf]]'s
-    * contract): appends explicitly-listed root-level legacy files to
-    * `dayHandled` when the dir is mixed — both read paths must apply
-    * it identically or one of them silently drops pre-upgrade rows. */
-  private def withLegacyFlat(book: String,
-      discovered: DataFrame, dayHandled: DataFrame): DataFrame = {
-    val flat = legacyFlatFiles(book)
-    if (flat.isEmpty ||
-        !discovered.columns.contains(graft.sources.TickStore.DayCol))
-      dayHandled
-    else dayHandled.unionByName(
-      spark.read.parquet(flat.map(_.getPath).toIndexedSeq: _*))
-  }
+  private def isParquetFile(f: java.io.File): Boolean =
+    f.isFile && f.getName.endsWith(".parquet")
+
+  private def parquetFilesIn(dir: java.io.File): Array[java.io.File] =
+    Option(dir.listFiles()).getOrElse(Array.empty).filter(isParquetFile)
+
+  /** One book's on-disk side, in the 7-column Update shape every
+    * consumer expects.
+    *
+    * The read is planned from the schema the engine writes, never
+    * inferred: a book dir holds only Update-schema files, written by
+    * flush, compaction or the legacy-layout migration, so inferring it
+    * would only add a Spark job to every GET, OB, COUNT, CLEAR, LOAD and
+    * SQL. Flushes write `day=<epochDay>` leaves (the [[TickStore]] layout
+    * at book granularity), read with [[TickStore.PartitionedSchema]] and
+    * the `day` column dropped again; a legacy flat dir (no `day=` leaf)
+    * reads with [[Update.schema]]. A MIXED dir (root files + `day=` leaves, i.e. a
+    * legacy book flushed post-upgrade) reads as the union of the tree and
+    * the explicitly-listed root files.
+    *
+    * Which of the three layouts a book has comes from [[layoutOf]]'s
+    * listing, not from the columns of the read: with a supplied schema
+    * the `day` column is always there, so a flat book would read `day` as
+    * null and a ranged read's day filter would drop every legacy row. */
+  def fsDf(book: String): Option[DataFrame] =
+    layoutOf(book).map(fsRead(book, _))
 
   /** The fs side of a RANGED read, with the ms range mapped onto the
-    * `day=` partition dirs (plan-time pruning: only overlapping days
-    * are listed — the reference's file-header skip, S4, at directory
+    * `day=` leaves (plan-time pruning: files of other days are never
+    * opened — the reference's file-header skip, S4, at directory
     * granularity). The exact ts bounds stay with the caller; the day
     * interval is closed over the range's floor-days, so pruning can
-    * never drop a row the ts predicate keeps. */
+    * never drop a row the ts predicate keeps. Schema and layout come
+    * from the same places as in [[fsDf]]. */
   private def fsDfInRange(book: String, loMs: Long,
       hiMs: Long): Option[DataFrame] =
-    if (!hasFs(book)) None
+    layoutOf(book).map(fsRead(book, _,
+      Some((TickStore.dayOfMs(loMs), TickStore.dayOfMs(hiMs)))))
+
+  /** The ONE place both reads of [[fsDf]]'s contract live; `days`
+    * prunes the `day=` tree to a closed epoch-day interval. Root-level
+    * legacy files are never day-pruned — the caller's exact ts predicate
+    * still filters them, and compactBook's migration restores pruning. */
+  private def fsRead(book: String, layout: Engine.Layout,
+      days: Option[(Long, Long)] = None): DataFrame =
+    if (layout.dayLeaves.isEmpty)
+      spark.read.schema(Update.schema).parquet(fsPath(book))
     else {
-      import graft.sources.TickStore
-      val df = spark.read.parquet(fsPath(book))
-      val pruned =
-        if (df.columns.contains(TickStore.DayCol))
-          df.where(col(TickStore.DayCol).between(
-              TickStore.dayOfMs(loMs), TickStore.dayOfMs(hiMs)))
-            .drop(TickStore.DayCol)
-        else df
-      // mixed-layout legacy rows ride along via the shared union (no
-      // day pruning for root-level files — the caller's exact ts
-      // predicate still filters them; compactBook migration restores
-      // pruning)
-      Some(withLegacyFlat(book, df, pruned))
+      val tree = spark.read.schema(TickStore.PartitionedSchema)
+        .parquet(fsPath(book))
+      val pruned = days.fold(tree) { case (lo, hi) =>
+        tree.where(col(TickStore.DayCol).between(lo, hi))
+      }.drop(TickStore.DayCol)
+      if (layout.flatFiles.isEmpty) pruned
+      else pruned.unionByName(spark.read.schema(Update.schema)
+        .parquet(layout.flatFiles.map(_.getPath): _*))
     }
 
   /** mem ++ fs view of one book (J1, `state.rs:639-656`) — re-sorted by
@@ -289,7 +299,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
         // the reference's clear()/clearall() call load_size_from_file()
         // (state.rs:562-579, 112-118), resetting nominal_count to the
         // on-disk header size; books with no file keep their count
-        if (hasFs(b)) nominal(b) = fsDf(b).map(_.count()).getOrElse(0L)
+        fsDf(b).foreach(df => nominal(b) = df.count())
       }
       Text("1")
 
@@ -302,8 +312,8 @@ final class Engine(spark: SparkSession, dtfFolder: String,
       Text("1")
 
     case Command.Load(book) =>
-      if (hasFs(book)) {
-        val loaded = fsDf(book).get.as(updateEncoder).collect()
+      fsDf(book).fold[Reply](Err(s"No db named `$book`")) { df =>
+        val loaded = df.as(updateEncoder).collect()
         val buf = books.getOrElseUpdate(book, mutable.ArrayBuffer.empty)
         buf ++= loaded
         // the reference's load RESETS nominal_count to the stored header
@@ -311,7 +321,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
         nominal(book) = loaded.length.toLong
         session.book = book
         Text(s"Loaded orderbook `$book`.")
-      } else Err(s"No db named `$book`")
+      }
 
     case Command.Subscribe(book) =>
       subscribers(book) = mutable.ArrayBuffer.empty
@@ -416,7 +426,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * — the contract [[graft.sources.Compaction]] keeps. */
   private def flush(book: String): Unit =
     books.get(book).filter(_.nonEmpty).foreach { buf =>
-      import graft.sources.TickStore.{DayCol, dayOf, dayOfMs}
+      import TickStore.{DayCol, dayOf, dayOfMs}
       val t0 = System.nanoTime()
       val maxTs = storedMaxTs(book)
       val fresh = buf.filter(_.ts > maxTs).toSeq
@@ -456,16 +466,12 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * READ side of [[swapGate]], so a compaction or archival swap never
     * lands between the listing and the footer reads. */
   private def storedMaxTs(book: String): Long = withSwapRead {
-    val prefix = s"${graft.sources.TickStore.DayCol}="
-    val dayLeaves = Option(new java.io.File(fsPath(book)).listFiles())
-      .getOrElse(Array.empty).toSeq
-      .filter(d => d.isDirectory && d.getName.startsWith(prefix))
-      .flatMap(d => d.getName.drop(prefix.length).toLongOption.map(_ -> d))
-      .sortBy(-_._1)
-    val newestDay = dayLeaves.iterator
-      .map { case (_, d) => maxTsOf(parquetFilesIn(d).toSeq) }
-      .find(_ > Long.MinValue).getOrElse(Long.MinValue)
-    math.max(newestDay, maxTsOf(legacyFlatFiles(book).toSeq))
+    layoutOf(book).fold(Long.MinValue) { layout =>
+      val newestDay = layout.dayLeaves.sortBy(-_._1).iterator
+        .map { case (_, d) => maxTsOf(parquetFilesIn(d).toSeq) }
+        .find(_ > Long.MinValue).getOrElse(Long.MinValue)
+      math.max(newestDay, maxTsOf(layout.flatFiles))
+    }
   }
 
   /** Max `ts` over a set of parquet files (Long.MinValue when they hold
@@ -495,7 +501,8 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     if (fromFooters.forall(_.isDefined))
       fromFooters.flatten.foldLeft(Long.MinValue)(math.max)
     else {
-      val m = spark.read.parquet(files.map(_.getPath): _*)
+      val m = spark.read.schema(Update.schema)
+        .parquet(files.map(_.getPath): _*)
         .agg(max(col("ts"))).head()
       if (m.isNullAt(0)) Long.MinValue else m.getLong(0)
     }
@@ -544,7 +551,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
   private def leafOverPolicy(book: String, days: Seq[Long]): Boolean =
     days.exists { day =>
       parquetFilesIn(new java.io.File(fsPath(book),
-        s"${graft.sources.TickStore.DayCol}=$day")).length >
+        s"${TickStore.DayCol}=$day")).length >
         compactMaxLeafFiles
     }
 
@@ -733,6 +740,11 @@ object Engine {
         s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
       else s
     }
+
+  /** A book dir's `day=<epochDay>` leaves and root-level parquet files,
+    * from one listing ([[Engine.layoutOf]]). */
+  private final case class Layout(dayLeaves: Seq[(Long, java.io.File)],
+      flatFiles: Seq[java.io.File])
 
   /** Lifetime flush counters of one engine ([[Engine.flushStats]]). */
   final case class FlushStats(flushes: Long, wallSeconds: Double,

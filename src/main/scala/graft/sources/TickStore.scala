@@ -2,6 +2,9 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+
+import graft.model.Update
 
 /** Hive-partitioned physical layout for the tick store — SURVEY §1.2's
   * mapping made literal: `root/symbol=<book>/day=<epochDay>/part-*`.
@@ -28,6 +31,15 @@ object TickStore {
   val MsPerDay = 86400000L
   val DayCol = "day"
 
+  /** The schema every read of a `day=`-partitioned tree plans with:
+    * [[Update.schema]] plus `day: Long`. A store root and an engine book
+    * dir with `day=` leaves both read with it (in the store `symbol` and
+    * `day` are partition columns, in a book dir only `day` is), so no read
+    * runs a Spark job to infer what the writer already fixed, and a
+    * numeric-looking partition value (`symbol=0001`) stays a String. A
+    * book dir with no `day=` leaf reads with [[Update.schema]] alone. */
+  val PartitionedSchema: StructType = Update.schema.add(DayCol, LongType)
+
   /** Epoch day of a ms timestamp (floor division — exact for negatives
     * too, matching [[dayOf]]'s floor). */
   def dayOfMs(tsMs: Long): Long = Math.floorDiv(tsMs, MsPerDay)
@@ -46,12 +58,23 @@ object TickStore {
     * ts pushdown. */
   def write(updates: DataFrame, root: String,
       mode: SaveMode = SaveMode.Append): Unit = {
-    val need = graft.model.Update.schema.fieldNames.toSet
+    val need = Update.schema.fieldNames.toSet
     val missing = need -- updates.columns.toSet
     require(missing.isEmpty,
       s"TickStore.write: input is missing Update columns " +
         s"${missing.toSeq.sorted.mkString(", ")} " +
         s"(got: ${updates.columns.mkString(", ")})")
+    // reads plan from PartitionedSchema, so a file of any other type
+    // would fail every later read of the store
+    val wrongType = Update.schema.fields.toSeq.flatMap { f =>
+      val got = updates.schema(f.name).dataType
+      if (got == f.dataType) None
+      else Some(s"${f.name} is ${got.simpleString}, " +
+        s"want ${f.dataType.simpleString}")
+    }
+    require(wrongType.isEmpty,
+      s"TickStore.write: Update columns of the wrong type: " +
+        wrongType.mkString(", "))
     updates
       .withColumn(DayCol, dayOf(col("ts")))
       .repartition(col("symbol"), col(DayCol))
@@ -60,11 +83,16 @@ object TickStore {
   }
 
   /** The whole store, with the partition columns folded back into the
-    * canonical Update column order. */
+    * canonical Update column order.
+    *
+    * Planned from [[PartitionedSchema]], not inferred: a store root holds
+    * only files [[write]] put there (and compaction rewrote), whose data
+    * columns are the Update columns without `symbol`, and the `symbol=` /
+    * `day=` directory names supply the rest. Inference would cost a Spark
+    * job per read and would type a numeric-looking symbol as an integer. */
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(root).select(
-      col("symbol"), col("ts"), col("seq"), col("is_trade"),
-      col("is_bid"), col("price"), col("size"))
+    spark.read.schema(PartitionedSchema).parquet(root)
+      .select(Update.schema.fieldNames.map(col).toIndexedSeq: _*)
 
   /** MIGRATION bridge, reference → Spark: read an entire tdb
     * `dtf_folder` through the DSv2 "dtf" source (file-parallel decode,
@@ -101,13 +129,13 @@ object TickStore {
     * predicates (plan-time pruning — `PartitionFilters` in the explain,
     * only one symbol's overlapping days are listed); the exact ts
     * bounds remain data predicates pushed to the parquet footers of
-    * the surviving files. */
+    * the surviving files. Planned from [[PartitionedSchema]] like
+    * [[read]]. */
   def scan(spark: SparkSession, root: String, symbol: String,
       loMs: Long, hiMs: Long): DataFrame =
-    spark.read.parquet(root)
+    spark.read.schema(PartitionedSchema).parquet(root)
       .where(col("symbol") === symbol &&
         col(DayCol).between(dayOfMs(loMs), dayOfMs(hiMs)) &&
         col("ts").between(loMs, hiMs))
-      .select(col("symbol"), col("ts"), col("seq"), col("is_trade"),
-        col("is_bid"), col("price"), col("size"))
+      .select(Update.schema.fieldNames.map(col).toIndexedSeq: _*)
 }

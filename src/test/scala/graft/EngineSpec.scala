@@ -343,8 +343,6 @@ class EngineSpec extends SparkSpec {
 
   test("a multi-day FLUSH into a book with rows on disk runs one Spark " +
       "job and writes one (ts, seq)-sorted file per day leaf") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("graft-onejob").toString
     val e = new Engine(spark, dir)
     e.execute(CommandParser.parse("CREATE oj"))
@@ -357,30 +355,8 @@ class EngineSpec extends SparkSpec {
     staged.foreach { case (ts, seq) => addAt(e, ts, seq) }
     addAt(e, base + 3 * day + 2000L, 29L)
 
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("flush-under-test", "one FLUSH")
-      try e.execute(CommandParser.parse("FLUSH"))
-      finally sc.clearJobGroup()
-      // the listener bus is FIFO: once a later marker job is seen, every
-      // job the FLUSH started has been seen too
-      sc.setJobGroup("flush-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 10000L
-      while (!groups.contains("flush-marker") &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20L)
-      assert(groups.contains("flush-marker"), "marker job never observed")
-      assert(groups.asScala.count(_ == "flush-under-test") === 1,
-        groups.asScala.toList)
-    } finally sc.removeSparkListener(listener)
+    val (_, jobs) = jobsDuring(e.execute(CommandParser.parse("FLUSH")))
+    assert(jobs.size === 1, jobs)
 
     assert(e.execute(CommandParser.parse("COUNT")) === e.Text("13"))
     for (d <- 1 to 3) {
@@ -490,5 +466,83 @@ class EngineSpec extends SparkSpec {
     } finally footer.close()
     flushAgainst(e5, "nostats", base + day + 700L,
       Seq(day + 600L, day + 700L, day + 800L).map(base + _))
+  }
+
+  /** The `ts` of every row a GET reply frames, in reply order. */
+  private def replyTs(e: Engine)(reply: e.Reply): Seq[Long] = reply match {
+    case e.Frame(df, _, _) if df.columns.contains("ts") =>
+      df.select("ts").collect().map(_.getLong(0)).toSeq
+    case e.Frame(df, _, _) => // AS JSON / AS CSV: ts is the first field
+      df.collect().map { r =>
+        val secs = r.getString(0).stripPrefix("{\"ts\":")
+          .takeWhile(c => c != ',')
+        (BigDecimal(secs) * 1000).toLongExact
+      }.toSeq
+    case other => fail(s"unexpected: $other")
+  }
+
+  test("a ranged GET on a book with day= leaves and staged rows plans " +
+      "without a Spark job, as DTF, JSON and CSV") {
+    val dir = Files.createTempDirectory("graft-nojob").toString
+    val e = new Engine(spark, dir)
+    e.execute(CommandParser.parse("CREATE nj"))
+    e.execute(CommandParser.parse("USE nj"))
+    (0 until 3).foreach(d => addAt(e, base + d * day, d.toLong))
+    e.execute(CommandParser.parse("FLUSH"))
+    addAt(e, base + 3 * day, 3L)
+    val range = Some((base + day, base + 3 * day))
+    for (format <- Seq(GetFormat.Dtf, GetFormat.Json, GetFormat.Csv)) {
+      val (reply, jobs) = jobsDuring(e.execute(
+        Command.Get(ReqCount.All, format, range, Loc.Fs)))
+      assert(jobs.isEmpty, s"$format GET planned with jobs: $jobs")
+      assert(replyTs(e)(reply) === (1 to 3).map(base + _ * day), format)
+    }
+  }
+
+  test("pure-flat, mixed and day-only books: ranged GET, unranged GET " +
+      "and COUNT return exactly the book's rows") {
+    val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
+    // legacy flat rows on days 0 and 1, flushed rows after them on days
+    // 1 and 2, staged rows on days 2 and 3
+    val older = Seq(0L, 5000L, day + 1000L, day + 9000L).map(base + _)
+    val newer = Seq(day + 20000L, 2 * day, 2 * day + 500L).map(base + _)
+    val staged = Seq(2 * day + 900L, 3 * day).map(base + _)
+    val layouts = Seq(
+      ("flat", older, Seq.empty[Long]),
+      ("mixed", older, newer),
+      ("days", Seq.empty[Long], older ++ newer))
+    val ranges = Seq(
+      (base + 5000L, base + day + 20000L), // legacy and flushed, days 0-1
+      (base + day + 1000L, base + day + 1000L), // one ms
+      (base + day + 9001L, base + 3 * day), // no legacy row
+      (base + 4 * day, base + 5 * day)) // nothing
+    for ((book, flatTs, flushedTs) <- layouts) {
+      val dir = Files.createTempDirectory(s"graft-layout").toString
+      val bookDir = new java.io.File(s"$dir/book=$book")
+      if (flatTs.nonEmpty)
+        spark.createDataset(updates(book, flatTs))(enc).toDF()
+          .write.parquet(bookDir.getPath)
+      val e = new Engine(spark, dir)
+      e.execute(CommandParser.parse(s"CREATE $book"))
+      e.execute(CommandParser.parse(s"USE $book"))
+      flushedTs.zipWithIndex.foreach { case (t, i) => addAt(e, t, i.toLong) }
+      e.execute(CommandParser.parse("FLUSH"))
+      staged.zipWithIndex.foreach { case (t, i) => addAt(e, t, 50L + i) }
+      val entries = bookDir.listFiles().toSeq
+      assert(entries.exists(f => f.isFile && f.getName.endsWith(".parquet"))
+        === flatTs.nonEmpty, s"$book: ${entries.map(_.getName)}")
+      assert(entries.exists(_.getName.startsWith("day=")) ===
+        flushedTs.nonEmpty, s"$book: ${entries.map(_.getName)}")
+
+      val all = (flatTs ++ flushedTs ++ staged).sorted
+      assert(e.execute(CommandParser.parse("COUNT")) ===
+        e.Text(s"${all.size}"), book)
+      assert(replyTs(e)(e.execute(Command.Get(ReqCount.All,
+        GetFormat.Dtf, None, Loc.Fs))) === all, book)
+      for ((lo, hi) <- ranges)
+        assert(replyTs(e)(e.execute(Command.Get(ReqCount.All,
+          GetFormat.Dtf, Some((lo, hi)), Loc.Fs))) ===
+          all.filter(t => t >= lo && t <= hi), s"$book [$lo, $hi]")
+    }
   }
 }

@@ -457,8 +457,6 @@ class EventAnalyticsSpec extends SparkSpec {
   test("shapleyAttribution: a type-rich feed raises the maxChannels " +
       "guard BEFORE the coalition collect (r13 verdict: the collect " +
       "is bounded by min(#users, 2^T) and must never run unguarded)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import scala.jdk.CollectionConverters._
     // 15 pre-conversion channel types across 3 users with default
     // maxChannels=12: the guard must fire off the tiny distinct-type
     // take, and the coalition collect must never launch a job
@@ -466,33 +464,15 @@ class EventAnalyticsSpec extends SparkSpec {
       (i.toLong + 1L, i.toLong * M, (i % 3).toLong + 1L, s"ch$i", 0.0)
     } ++ Seq((100L, 100L * M, 1L, "purchase", 0.0))
     val df = eventsDf(rows)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val cs = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("")
-        sites.add(cs)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, seen) = jobsDuring {
       val ex = intercept[IllegalStateException] {
         EventAnalytics.shapleyAttribution(df)
       }
       assert(ex.getMessage.contains("maxChannels"))
-      // the listener bus posts asynchronously — wait for the guard's
-      // take job to surface, then settle so a stray collect job
-      // (the pre-fix failure mode) would have been posted too
-      val deadline = System.currentTimeMillis() + 10000L
-      while (sites.isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(50L)
-      Thread.sleep(500L)
-      val seen = sites.asScala.toList
-      assert(seen.nonEmpty, "the guard's take job was never observed")
-      assert(!seen.exists(_.startsWith("collect at")),
-        s"coalition collect launched before the guard: $seen")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(seen.nonEmpty, "the guard's take job was never observed")
+    assert(!seen.exists(_.startsWith("collect at")),
+      s"coalition collect launched before the guard: $seen")
   }
 
   test("positionAttribution: U-shape splits with the exact remainder " +

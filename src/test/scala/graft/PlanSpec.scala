@@ -824,31 +824,15 @@ class PlanSpec extends SparkSpec {
     // eager base.count() before the main plan — at 100 TB that is a
     // full extra pass over the input per query. The dispatch now reads
     // the optimizer's statistics (TickCarry.exceedsRows), so operator
-    // CONSTRUCTION must be job-free. Probe: tag a job group, construct
-    // all ten, flush the listener bus with a barrier action in a
-    // second group (bus is FIFO — once the barrier's event is visible,
-    // any earlier construction job would be too), assert the probe
-    // group stayed empty.
+    // CONSTRUCTION must be job-free.
     import graft.operators.Microstructure
-    val sc = spark.sparkContext
     val u = Tables.updates(spark, sf())
-    sc.setJobGroup("dispatch-probe", "operator construction", false)
-    Seq[DataFrame](
+    val (_, probeJobs) = jobsDuring(Seq[DataFrame](
       Microstructure.realizedVol(u), Microstructure.rollSpread(u),
       Microstructure.tickRuleFlow(u), Microstructure.effectiveSpread(u),
       Microstructure.leeReady(u), Microstructure.kyleLambda(u),
       Microstructure.flowAutocorr(u), Microstructure.quoteTradeLag(u),
-      Microstructure.durationAcf(u), Microstructure.hayashiYoshida(u))
-    sc.clearJobGroup()
-    sc.setJobGroup("dispatch-barrier", "bus flush", false)
-    spark.range(1).count()
-    sc.clearJobGroup()
-    val deadline = System.nanoTime() + 10_000_000_000L
-    while (sc.statusTracker.getJobIdsForGroup("dispatch-barrier").isEmpty
-        && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(sc.statusTracker.getJobIdsForGroup("dispatch-barrier").nonEmpty,
-      "barrier job never surfaced — cannot trust the probe")
-    val probeJobs = sc.statusTracker.getJobIdsForGroup("dispatch-probe")
+      Microstructure.durationAcf(u), Microstructure.hayashiYoshida(u)))
     assert(probeJobs.isEmpty,
       s"operator construction submitted ${probeJobs.length} job(s) — " +
         "an eager pre-scan is back in the dispatch path")

@@ -214,4 +214,42 @@ class TickStoreSpec extends SparkSpec {
       }
     }
   }
+
+  test("a numeric-looking symbol reads and scans back as the String " +
+      "it was written as") {
+    val root = Files.createTempDirectory("graft-tickstore-num").toString +
+      "/store"
+    val t0 = 1704672000000L
+    val written = Seq("0001", "0001", "0002", "7").zipWithIndex.map {
+      case (sym, i) => graft.model.Update(sym, t0 + i * 1000L, i.toLong,
+        is_trade = i % 2 == 0, is_bid = true, 1.5 + i, 2.0)
+    }
+    TickStore.write(updatesDf(written), root)
+    val read = TickStore.read(spark, root)
+    assert(read.schema("symbol").dataType ===
+      org.apache.spark.sql.types.StringType, read.schema)
+    assert(rows(read) === written.map(u => Seq(u.symbol, u.ts, u.seq,
+      u.is_trade, u.is_bid, u.price, u.size)))
+    val scan = TickStore.scan(spark, root, "0001", t0, t0 + 5000L)
+    assert(scan.collect().map(r => (r.getString(0), r.getLong(1))).toSet ===
+      Set("0001" -> t0, "0001" -> (t0 + 1000L)))
+  }
+
+  test("read and scan plan without a Spark job; write rejects Update " +
+      "columns of the wrong type by name") {
+    val root = freshStore()
+    val (_, jobs) = jobsDuring {
+      TickStore.read(spark, root)
+      TickStore.scan(spark, root, "click", 1704672000000L, 1704931199999L)
+    }
+    assert(jobs.isEmpty, s"planning ran jobs: $jobs")
+    val bad = updates.withColumn("price", col("price").cast("float"))
+      .withColumn("seq", col("seq").cast("int"))
+    val ex = intercept[IllegalArgumentException] {
+      TickStore.write(bad, root + "-bad")
+    }
+    assert(ex.getMessage.contains("seq is int, want bigint") &&
+      ex.getMessage.contains("price is float, want double"), ex.getMessage)
+    assert(!new java.io.File(root + "-bad").exists())
+  }
 }
