@@ -7,11 +7,10 @@ import graft.operators.Orderbook
 
 class DtfCodecSpec extends SparkSpec {
 
-  private val Fixture = "/root/reference/test/test-data/bnc_zrx_btc.dtf"
-
   test("decode reference fixture: header metadata and rows agree") {
-    val meta = DtfCodec.metadata(Fixture)
-    val ups = DtfCodec.decode(Fixture)
+    val fixture = referenceFixture()
+    val meta = DtfCodec.metadata(fixture)
+    val ups = DtfCodec.decode(fixture)
     assert(meta.symbol === "bnc_zrx_btc")
     assert(ups.size.toLong === meta.count)
     assert(ups.nonEmpty)
@@ -25,8 +24,9 @@ class DtfCodecSpec extends SparkSpec {
   /** The reference's book-replay sanity check on the same fixture
     * (`orderbook.rs:317-326`): after replay, best bid < best ask. */
   test("book replay on fixture: best bid < best ask") {
+    val fixture = referenceFixture()
     import spark.implicits._
-    val ds = DtfCodec.toDataset(spark, Fixture)
+    val ds = DtfCodec.toDataset(spark, fixture)
     // reference uses price_decimals=10 in that test
     val top = Orderbook.top(Orderbook.snapshot(ds.toDF(), 10), 10)
       .as[(String, Long, Long, Long, Double, Double, Double)].collect()
@@ -37,7 +37,7 @@ class DtfCodecSpec extends SparkSpec {
   }
 
   test("encode/decode roundtrip preserves rows (incl. batch rollover)") {
-    val ups = DtfCodec.decode(Fixture)
+    val ups = DtfCodec.decode(bookFixture())
     val f = Files.createTempFile("graft", ".dtf").toString
     DtfCodec.encode(f, "bnc_zrx_btc", ups)
     val back = DtfCodec.decode(f)

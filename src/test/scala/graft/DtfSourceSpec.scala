@@ -11,12 +11,11 @@ import graft.sources.{DtfDataSource, DtfScan}
   * rebuild of `scan_files_for_range`, `file_format.rs:822-874`). */
 class DtfSourceSpec extends SparkSpec {
 
-  private val Fixture = "/root/reference/test/test-data/bnc_zrx_btc.dtf"
-
   test("format(\"dtf\") reads the reference fixture with the update schema") {
-    val df = spark.read.format("dtf").load(Fixture)
+    val fixture = referenceFixture()
+    val df = spark.read.format("dtf").load(fixture)
     assert(df.schema === DtfDataSource.Schema)
-    val ups = DtfCodec.decode(Fixture)
+    val ups = DtfCodec.decode(fixture)
     assert(df.count() === ups.size.toLong)
     val first = df.orderBy("ts", "seq").head()
     val expect = ups.minBy(u => (u.ts, u.seq))

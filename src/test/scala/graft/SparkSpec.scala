@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.dtf.DtfCodec
 import graft.model.Update
 
 /** Shared local SparkSession for all suites (getOrCreate reuses one JVM-wide
@@ -28,6 +31,49 @@ trait SparkSpec extends AnyFunSuite {
         i.toDouble, i.toDouble))
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
+
+  /** The upstream tectonicdb test book (FIXTURES.md §2), written by the
+    * reference itself. It lives in the tectonicdb checkout, not in this
+    * repository, so only tests whose subject is the reference's own bytes
+    * read it. */
+  val ReferenceFixture = "/root/reference/test/test-data/bnc_zrx_btc.dtf"
+
+  /** [[ReferenceFixture]], or cancel the calling test where it is absent. */
+  def referenceFixture(): String = {
+    assume(Files.isRegularFile(Paths.get(ReferenceFixture)),
+      s"upstream fixture $ReferenceFixture is absent")
+    ReferenceFixture
+  }
+
+  /** A deterministic `bnc_zrx_btc` book, DTF-encoded into a new temp dir;
+    * returns its path. 123 rows sorted by `(ts, seq)`, seq `7000000 + i`,
+    * one row every 4 s from a minute-aligned start; trades on every third
+    * row, bids on even rows, prices and sizes exact in f32. Row 10 shares
+    * its ts with row 9 and row 50 with row 51, so a clip from row 10's ts
+    * to row 50's counts 43 rows, not the 41 of a clip by index. Rows from
+    * minute 3 on move a minute later, so minute 3 is empty and the trades
+    * span minutes 0-8. Seq steps of 1 roll a batch over at least every 15
+    * rows. See FIXTURES.md §2. */
+  def bookFixture(): String = {
+    val base = 1700000040000L // 2023-11-14T22:14:00Z
+    val rows = (0 until 123).map { i =>
+      val slot = i - (if (i >= 10) 1 else 0) - (if (i >= 51) 1 else 0)
+      val t = slot * 4000L
+      val isTrade = i % 3 == 0
+      val isBid = i % 2 == 0
+      val price =
+        if (isTrade) 100.5 + ((i / 3) % 8 - 4) * 0.125
+        else if (isBid) 100.0 - (i % 5) * 0.25
+        else 101.0 + (i % 5) * 0.25
+      val size = if (isTrade) 0.25 + (i % 7) * 0.5 else (i % 4) * 0.5
+      Update("bnc_zrx_btc", base + t + (if (t >= 180000L) 60000L else 0L),
+        7000000L + i, isTrade, isBid, price, size)
+    }
+    val path = Files.createTempDirectory("graft-book")
+      .resolve("bnc_zrx_btc.dtf").toString
+    DtfCodec.encode(path, "bnc_zrx_btc", rows)
+    path
+  }
 
   /** `body`'s result and the Spark jobs it launched, as their short call
     * sites in the order the listener bus saw them. `body` runs under a job group of

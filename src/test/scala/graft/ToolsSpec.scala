@@ -8,13 +8,12 @@ import graft.operators.{CandlestickChart, TimeBars}
 
 class ToolsSpec extends SparkSpec {
 
-  private val Fixture = "/root/reference/test/test-data/bnc_zrx_btc.dtf"
-
   test("dtfsplit + dtfconcat + dtfrepair roundtrip the fixture") {
+    val book = bookFixture()
     val dir = Files.createTempDirectory("graft-tools").toString
-    val ups = DtfCodec.decode(Fixture)
+    val ups = DtfCodec.decode(book)
 
-    val parts = DtfTools.split(Fixture, s"$dir/part", 20)
+    val parts = DtfTools.split(book, s"$dir/part", 20)
     assert(parts.size === math.ceil(ups.size / 20.0).toInt)
     val reread = parts.flatMap(DtfCodec.decode)
     assert(reread === ups)
@@ -28,7 +27,7 @@ class ToolsSpec extends SparkSpec {
     assert(DtfCodec.decode(out) === ups.take(97))
 
     val rep = s"$dir/r.dtf"
-    assert(DtfTools.repair(Fixture, rep) === ups.size)
+    assert(DtfTools.repair(book, rep) === ups.size)
     assert(DtfCodec.decode(rep) === ups)
 
     // the reference's within_range OR-bug is fixed (C4)
@@ -36,10 +35,29 @@ class ToolsSpec extends SparkSpec {
     assert(!DtfTools.rangesOverlap(0, 10, 11, 20))
   }
 
+  test("the generated book has what the tool tests rely on") {
+    val book = bookFixture()
+    val ups = DtfCodec.decode(book)
+    assert(DtfCodec.decode(bookFixture()) === ups) // deterministic
+    assert(DtfCodec.metadata(book).symbol === "bnc_zrx_btc")
+    assert(ups.size >= 97 && ups.size % 20 != 0)
+    val keys = ups.map(u => (u.ts, u.seq))
+    assert(keys === keys.sorted.distinct)
+    assert(ups.map(u => (u.is_trade, u.is_bid)).toSet.size === 4)
+    assert(ups(10).ts === ups(9).ts && ups(50).ts === ups(51).ts)
+    // header (80 B) + 15 B per batch frame + 12 B per row
+    val frames = (new java.io.File(book).length() - 80 - 12 * ups.size) / 15
+    assert(frames >= 2)
+    val minutes = ups.filter(_.is_trade).map(_.ts / 60000).distinct
+    assert(minutes.max - minutes.min >= 7)
+    assert(minutes.size <= minutes.max - minutes.min) // an empty minute
+  }
+
   test("dtfcat clips ranges inclusively (F7)") {
-    val ups = DtfCodec.decode(Fixture)
+    val book = bookFixture()
+    val ups = DtfCodec.decode(book)
     val lo = ups(10).ts; val hi = ups(50).ts
-    val got = DtfTools.cat(spark, Fixture, Some((lo, hi))).count()
+    val got = DtfTools.cat(spark, book, Some((lo, hi))).count()
     assert(got === ups.count(u => u.ts >= lo && u.ts <= hi).toLong)
   }
 
@@ -61,7 +79,8 @@ class ToolsSpec extends SparkSpec {
   }
 
   test("dtfcat --timebars lifecycle (S12, SURVEY 3.3)") {
-    val out = DtfTools.catTimebars(spark, Fixture, minutes = 1).collect()
+    val book = bookFixture()
+    val out = DtfTools.catTimebars(spark, book, minutes = 1).collect()
     assert(out.nonEmpty)
     // continuation fill makes the minute grid contiguous
     val ts = out.map(_.getAs[Long]("T"))
@@ -76,16 +95,17 @@ class ToolsSpec extends SparkSpec {
       assert(h >= math.max(o, c) && l <= math.min(o, c))
     }
     // rebin to 3-minute bars: positional groups of 3, partials dropped
-    // (the short fixture may yield zero complete groups — that IS the
-    // reference's `res.len == v.len / k` contract)
-    val r3 = DtfTools.catTimebars(spark, Fixture, minutes = 3).collect()
+    // (the reference's `res.len == v.len / k` contract)
+    val r3 = DtfTools.catTimebars(spark, book, minutes = 3).collect()
+    assert(r3.nonEmpty)
     assert(r3.length === ts.length / 3)
   }
 
   test("columnar per-field export (S11, dtfnumpy.rs:13-91)") {
+    val book = bookFixture()
     val dir = Files.createTempDirectory("graft-npy").toString
-    val ups = DtfCodec.decode(Fixture)
-    val paths = DtfTools.exportColumnar(spark, Fixture, dir)
+    val ups = DtfCodec.decode(book)
+    val paths = DtfTools.exportColumnar(spark, book, dir)
     assert(paths.keySet === Set("ts", "seq", "is_trade", "is_bid",
       "price", "size"))
     val ts = spark.read.parquet(paths("ts"))
@@ -100,10 +120,11 @@ class ToolsSpec extends SparkSpec {
   test(".npz export: numpy container byte-golden + roundtrip (S11)") {
     import java.nio.{ByteBuffer, ByteOrder}
     import java.util.zip.ZipFile
+    val book = bookFixture()
     val dir = Files.createTempDirectory("graft-npz").toString
-    val ups = DtfCodec.decode(Fixture)
+    val ups = DtfCodec.decode(book)
     val out = s"$dir/fixture.npz"
-    DtfTools.exportNpz(Fixture, out)
+    DtfTools.exportNpz(book, out)
     val zf = new ZipFile(out)
     try {
       import scala.jdk.CollectionConverters._
@@ -145,7 +166,7 @@ class ToolsSpec extends SparkSpec {
     } finally zf.close()
     // deflated variant roundtrips too
     val outz = s"$dir/fixture-z.npz"
-    DtfTools.exportNpz(Fixture, outz, compressed = true)
+    DtfTools.exportNpz(book, outz, compressed = true)
     val zf2 = new ZipFile(outz)
     try {
       val e = zf2.getEntry("ts")
