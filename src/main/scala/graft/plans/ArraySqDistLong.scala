@@ -20,8 +20,10 @@ import org.apache.spark.sql.types._
   * wraps identically in both forms, so results are bit-for-bit
   * unchanged (the callers' quantization guard bounds |x| ≤ 1e8 over
   * ≤ 230 dims, keeping the exact sum < 2⁶³).
-  * Contract: array elements are non-null (quantized embeddings);
-  * callers guard ragged lengths loudly before this runs.
+  * Contract: array elements are non-null (quantized embeddings), and
+  * both arrays have the same length: a ragged pair raises an error naming
+  * both lengths, in interpreted and generated code alike, instead of
+  * folding over the shorter one.
   */
 case class ArraySqDistLong(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -35,7 +37,9 @@ case class ArraySqDistLong(left: Expression, right: Expression)
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
+    if (n != b.numElements())
+      throw ArraySqDistLong.raggedInput(n, b.numElements())
     var s = 0L
     var i = 0
     while (i < n) {
@@ -53,7 +57,10 @@ case class ArraySqDistLong(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val d = ctx.freshName("d")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |if ($n != $b.numElements()) {
+         |  throw graft.plans.ArraySqDistLong.raggedInput($n, $b.numElements());
+         |}
          |${ev.value} = 0L;
          |for (int $i = 0; $i < $n; $i++) {
          |  long $d = $a.getLong($i) - $b.getLong($i);
@@ -65,4 +72,12 @@ case class ArraySqDistLong(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object ArraySqDistLong {
+  /** The error a ragged pair raises, from both evaluation paths. */
+  def raggedInput(left: Int, right: Int): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"graft_array_sqdist_long: arrays of different lengths " +
+        s"($left and $right)")
 }

@@ -1,8 +1,13 @@
 package graft.server
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetCompressionCodec
 import org.apache.spark.sql.functions._
 
 import graft.functions._
@@ -284,7 +289,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
         val mem = books.get(b).map(_.size.toLong).getOrElse(0L)
         loc match {
           case Loc.Mem => mem
-          case Loc.Fs => mem + fsDf(b).map(_.count()).getOrElse(0L)
+          case Loc.Fs => mem + storedRows(b).getOrElse(0L)
         }
       }.sum
       Text(s"$n")
@@ -299,7 +304,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
         // the reference's clear()/clearall() call load_size_from_file()
         // (state.rs:562-579, 112-118), resetting nominal_count to the
         // on-disk header size; books with no file keep their count
-        fsDf(b).foreach(df => nominal(b) = df.count())
+        storedRows(b).foreach(n => nominal(b) = n)
       }
       Text("1")
 
@@ -417,33 +422,35 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * rewrites them and another writer may add some, and a memo would go
     * stale under each of them.
     *
-    * The write is ONE single-task job: the staged rows already sit on the
-    * driver, so a global `orderBy` would only add a range-sampling job
-    * and a shuffle. Coalescing to one partition and sorting it by
-    * (day, ts, seq) gives the partitioned writer its day order and
-    * writes one file per day leaf with rows in (ts, seq) order, so each
-    * file's ts range is disjoint from every other file this flush writes
-    * — the contract [[graft.sources.Compaction]] keeps. */
+    * The write runs no Spark job either: the staged rows already sit on
+    * the driver, so a job would only re-encode them through a task. The
+    * fresh rows are sorted by (ts, seq) and [[FlushWriter]] writes one
+    * file per day leaf with a parquet-hadoop writer, so each file's ts
+    * range is disjoint from every other file this flush writes — the
+    * contract [[graft.sources.Compaction]] keeps. Each file is written
+    * under a hidden `.part-<uuid>.<codec>.parquet.inprogress` name and
+    * moved to `part-<uuid>.<codec>.parquet` with `ATOMIC_MOVE`, so no
+    * read, footer read, compaction or archival sweep ever lists a partial
+    * file. The codec is the session's
+    * `spark.sql.parquet.compression.codec`, and the writer properties
+    * are the `parquet.*` keys of the session Hadoop conf, as for a Spark
+    * write. No `_SUCCESS` marker and no `.crc` sidecars are written;
+    * nothing in the engine reads them. */
   private def flush(book: String): Unit =
     books.get(book).filter(_.nonEmpty).foreach { buf =>
-      import TickStore.{DayCol, dayOf, dayOfMs}
       val t0 = System.nanoTime()
       val maxTs = storedMaxTs(book)
-      val fresh = buf.filter(_.ts > maxTs).toSeq
-      if (fresh.nonEmpty)
-        spark.createDataset(fresh)(updateEncoder).toDF()
-          .withColumn(DayCol, dayOf(col("ts")))
-          .coalesce(1)
-          .sortWithinPartitions(DayCol, "ts", "seq")
-          .write.mode("append")
-          .partitionBy(DayCol)
-          .parquet(fsPath(book))
+      val fresh = buf.filter(_.ts > maxTs).sorted(Engine.TsSeqOrder)
+      val days = FlushWriter.writeByDay(new java.io.File(fsPath(book)),
+        fresh, spark.sessionState.newHadoopConf(),
+        ParquetCompressionCodec.fromString(
+          spark.conf.get("spark.sql.parquet.compression.codec"))
+          .getCompressionCodec)
       flushCount.incrementAndGet()
       flushDroppedRows.addAndGet((buf.size - fresh.size).toLong)
       flushNanos.addAndGet(System.nanoTime() - t0)
       buf.clear()
-      if (autoCompact && fresh.nonEmpty)
-        maybeScheduleCompaction(book, fresh.map(u => dayOfMs(u.ts)).distinct)
+      if (autoCompact && days.nonEmpty) maybeScheduleCompaction(book, days)
     }
 
   private val flushCount = new java.util.concurrent.atomic.AtomicLong
@@ -474,21 +481,25 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     }
   }
 
+  /** Rows on disk for a book (`None` when it has no dir), summed from
+    * the row counts in the footers of its `day=` leaves' files and its
+    * legacy root-level files — the files [[fsDf]] reads — so COUNT and
+    * CLEAR run no Spark job. Under the READ side of [[swapGate]], as
+    * [[storedMaxTs]]. */
+  private def storedRows(book: String): Option[Long] = withSwapRead {
+    layoutOf(book).map { layout =>
+      (layout.dayLeaves.flatMap(d => parquetFilesIn(d._2)) ++
+        layout.flatFiles).iterator
+        .flatMap(footerOf(_).getBlocks.asScala).map(_.getRowCount).sum
+    }
+  }
+
   /** Max `ts` over a set of parquet files (Long.MinValue when they hold
     * no rows): footer statistics per row group, or one Spark `max` over
     * the set when any row group lacks them. */
   private def maxTsOf(files: Seq[java.io.File]): Long = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import scala.jdk.CollectionConverters._
-    // session Hadoop conf, as Tables' footer probe: spark.hadoop.*
-    // settings reach the read
-    val conf = spark.sparkContext.hadoopConfiguration
     val fromFooters: Seq[Option[Long]] = files.flatMap { f =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(f.getPath), conf))
-      try r.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
+      footerOf(f).getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
         .map { rg =>
           rg.getColumns.asScala.find(_.getPath.toDotString == "ts")
             .map(_.getStatistics)
@@ -496,7 +507,6 @@ final class Engine(spark: SparkSession, dtfFolder: String,
             .map(_.genericGetMax)
             .collect { case l: java.lang.Long => l.longValue }
         }
-      finally r.close()
     }
     if (fromFooters.forall(_.isDefined))
       fromFooters.flatten.foldLeft(Long.MinValue)(math.max)
@@ -506,6 +516,16 @@ final class Engine(spark: SparkSession, dtfFolder: String,
         .agg(max(col("ts"))).head()
       if (m.isNullAt(0)) Long.MinValue else m.getLong(0)
     }
+  }
+
+  /** The footer of one parquet file, read with the session Hadoop conf
+    * (as Tables' footer probe), so `spark.hadoop.*` settings reach the
+    * read. */
+  private def footerOf(f: java.io.File): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(f.getPath),
+      spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
   }
 
   /** Runs `body` holding the READ side of [[swapGate]]. The barging
@@ -745,6 +765,12 @@ object Engine {
     * from one listing ([[Engine.layoutOf]]). */
   private final case class Layout(dayLeaves: Seq[(Long, java.io.File)],
       flatFiles: Seq[java.io.File])
+
+  /** The (ts, seq) order every flushed file is written in. */
+  private val TsSeqOrder: Ordering[Update] = (a, b) => {
+    val c = java.lang.Long.compare(a.ts, b.ts)
+    if (c != 0) c else java.lang.Long.compare(a.seq, b.seq)
+  }
 
   /** Lifetime flush counters of one engine ([[Engine.flushStats]]). */
   final case class FlushStats(flushes: Long, wallSeconds: Double,

@@ -1,0 +1,148 @@
+package graft.server
+
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY,
+  BOOLEAN, DOUBLE, INT64}
+
+import graft.model.Update
+import graft.sources.TickStore
+
+/** Writes a flush's rows into a book dir's `day=<epochDay>` leaves with a
+  * plain parquet-hadoop writer on the driver, the way the reference writes
+  * its `.dtf` file straight from the book's `Vec<Update>`
+  * (`file_format.rs:783-819`).
+  *
+  * Each file is written under an in-progress name and then renamed into
+  * place with `ATOMIC_MOVE`, so a reader only ever lists whole files. The
+  * in-progress name starts with `.` (Spark's file listing skips it as
+  * hidden) and does not end in `.parquet` (the engine's listings,
+  * Compaction, Archiver and the metrics sweep take only `*.parquet`), so
+  * a file a crash leaves half-written is never read, compacted, archived
+  * or counted. */
+private[graft] object FlushWriter {
+
+  /** The parquet schema Spark writes an `Encoders.product[Update]`
+    * Dataset with: the String field optional, the primitives required. */
+  val Schema: MessageType = Types.buildMessage()
+    .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("symbol")
+    .required(INT64).named("ts")
+    .required(INT64).named("seq")
+    .required(BOOLEAN).named("is_trade")
+    .required(BOOLEAN).named("is_bid")
+    .required(DOUBLE).named("price")
+    .required(DOUBLE).named("size")
+    .named("spark_schema")
+
+  /** The hidden name a file of `name` is written under until it is
+    * complete. */
+  def inProgressName(name: String): String = s".$name.inprogress"
+
+  /** Writes `rows`, sorted by (ts, seq), as one file per day into
+    * `bookDir/day=<epochDay>/`, in ascending day order, and returns the
+    * days written. Ascending order keeps a failed flush retryable: the
+    * days already renamed into place hold only rows at or below the new
+    * stored max, so the retry's S6 filter drops exactly them. */
+  def writeByDay(bookDir: File, rows: collection.IndexedSeq[Update],
+      conf: Configuration, codec: CompressionCodecName): Seq[Long] = {
+    val days = Seq.newBuilder[Long]
+    var from = 0
+    while (from < rows.length) {
+      val day = TickStore.dayOfMs(rows(from).ts)
+      var until = from + 1
+      while (until < rows.length && TickStore.dayOfMs(rows(until).ts) == day)
+        until += 1
+      writeFile(new File(bookDir, s"${TickStore.DayCol}=$day"),
+        rows.view.slice(from, until), conf, codec)
+      days += day
+      from = until
+    }
+    days.result()
+  }
+
+  /** Writes `rows` as one new file in `dir` and returns it. The writer
+    * properties (row group, page and dictionary sizes, dictionary and
+    * statistics switches, writer version, page checksums) come from
+    * `conf`'s `parquet.*` keys, with parquet-hadoop's defaults, as they
+    * would for Spark's writer. */
+  def writeFile(dir: File, rows: Iterable[Update], conf: Configuration,
+      codec: CompressionCodecName): File = {
+    import ParquetOutputFormat._
+    dir.mkdirs()
+    val name =
+      s"part-${java.util.UUID.randomUUID()}${codec.getExtension}.parquet"
+    val tmp = new File(dir, inProgressName(name))
+    val out = new File(dir, name)
+    try {
+      val writer = new Builder(new LocalOutputFile(tmp.toPath))
+        .withConf(conf)
+        .withWriteMode(ParquetFileWriter.Mode.CREATE)
+        .withCompressionCodec(codec)
+        .withRowGroupSize(getLongBlockSize(conf))
+        .withPageSize(getPageSize(conf))
+        .withDictionaryPageSize(getDictionaryPageSize(conf))
+        .withDictionaryEncoding(getEnableDictionary(conf))
+        .withWriterVersion(getWriterVersion(conf))
+        .withStatisticsEnabled(getStatisticsEnabled(conf))
+        .withPageWriteChecksumEnabled(getPageWriteChecksumEnabled(conf))
+        .withValidation(getValidation(conf))
+        .build()
+      try rows.foreach(writer.write) finally writer.close()
+      Files.move(tmp.toPath, out.toPath, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable => tmp.delete(); throw e
+    }
+    out
+  }
+
+  private final class Builder(file: OutputFile)
+      extends ParquetWriter.Builder[Update, Builder](file) {
+    override protected def self(): Builder = this
+    override protected def getWriteSupport(
+        conf: Configuration): WriteSupport[Update] = new UpdateWriteSupport
+  }
+
+  /** One [[Update]] per record, in [[Schema]]'s field order. */
+  private final class UpdateWriteSupport extends WriteSupport[Update] {
+    private var rc: RecordConsumer = _
+
+    override def init(conf: Configuration): WriteSupport.WriteContext =
+      new WriteSupport.WriteContext(Schema, java.util.Collections.emptyMap())
+    override def prepareForWrite(consumer: RecordConsumer): Unit =
+      rc = consumer
+
+    override def write(u: Update): Unit = {
+      rc.startMessage()
+      if (u.symbol != null) {
+        rc.startField("symbol", 0)
+        rc.addBinary(Binary.fromString(u.symbol))
+        rc.endField("symbol", 0)
+      }
+      long("ts", 1, u.ts)
+      long("seq", 2, u.seq)
+      bool("is_trade", 3, u.is_trade)
+      bool("is_bid", 4, u.is_bid)
+      double("price", 5, u.price)
+      double("size", 6, u.size)
+      rc.endMessage()
+    }
+
+    private def long(name: String, i: Int, v: Long): Unit = {
+      rc.startField(name, i); rc.addLong(v); rc.endField(name, i)
+    }
+    private def bool(name: String, i: Int, v: Boolean): Unit = {
+      rc.startField(name, i); rc.addBoolean(v); rc.endField(name, i)
+    }
+    private def double(name: String, i: Int, v: Double): Unit = {
+      rc.startField(name, i); rc.addDouble(v); rc.endField(name, i)
+    }
+  }
+}

@@ -341,7 +341,7 @@ class EngineSpec extends SparkSpec {
   private val base = 1505177459000L
   private val day = graft.sources.TickStore.MsPerDay
 
-  test("a multi-day FLUSH into a book with rows on disk runs one Spark " +
+  test("a multi-day FLUSH into a book with rows on disk runs no Spark " +
       "job and writes one (ts, seq)-sorted file per day leaf") {
     val dir = Files.createTempDirectory("graft-onejob").toString
     val e = new Engine(spark, dir)
@@ -356,7 +356,7 @@ class EngineSpec extends SparkSpec {
     addAt(e, base + 3 * day + 2000L, 29L)
 
     val (_, jobs) = jobsDuring(e.execute(CommandParser.parse("FLUSH")))
-    assert(jobs.size === 1, jobs)
+    assert(jobs.isEmpty, jobs)
 
     assert(e.execute(CommandParser.parse("COUNT")) === e.Text("13"))
     for (d <- 1 to 3) {
@@ -535,14 +535,178 @@ class EngineSpec extends SparkSpec {
         flushedTs.nonEmpty, s"$book: ${entries.map(_.getName)}")
 
       val all = (flatTs ++ flushedTs ++ staged).sorted
-      assert(e.execute(CommandParser.parse("COUNT")) ===
-        e.Text(s"${all.size}"), book)
+      val (count, countJobs) =
+        jobsDuring(e.execute(CommandParser.parse("COUNT")))
+      assert(count === e.Text(s"${all.size}"), book)
+      assert(countJobs.isEmpty, s"$book: COUNT ran jobs: $countJobs")
       assert(replyTs(e)(e.execute(Command.Get(ReqCount.All,
         GetFormat.Dtf, None, Loc.Fs))) === all, book)
       for ((lo, hi) <- ranges)
         assert(replyTs(e)(e.execute(Command.Get(ReqCount.All,
           GetFormat.Dtf, Some((lo, hi)), Loc.Fs))) ===
           all.filter(t => t >= lo && t <= hi), s"$book [$lo, $hi]")
+
+      // CLEAR resets the nominal count to the rows on disk, also jobless
+      val (_, clearJobs) = jobsDuring(e.execute(CommandParser.parse("CLEAR")))
+      assert(clearJobs.isEmpty, s"$book: CLEAR ran jobs: $clearJobs")
+      assert(infoCount(e, book) === flatTs.size + flushedTs.size, book)
     }
+  }
+
+  /** The nominal `count` INFO reports for `book`. */
+  private def infoCount(e: Engine, book: String): Long =
+    e.execute(CommandParser.parse("INFO")) match {
+      case e.Text(t) =>
+        val at = t.indexOf(s"\"name\": \"$book\"")
+        assert(at >= 0, t)
+        val key = "\"count\": "
+        val from = t.indexOf(key, at) + key.length
+        t.substring(from).takeWhile(_.isDigit).toLong
+      case other => fail(s"unexpected: $other")
+    }
+
+  /** Parquet footer of one file. */
+  private def footer(f: java.io.File) = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath),
+        spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  private def parquetFiles(dir: java.io.File): Seq[java.io.File] =
+    graft.sources.Compaction.leafDataDirs(dir).flatMap(_.listFiles()
+      .filter(_.getName.endsWith(".parquet"))).sortBy(_.getPath)
+
+  test("flushed files have the schema a Spark write gives, ts statistics " +
+      "in every row group and the session's parquet codec; autoflush " +
+      "runs no Spark job") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    val codecKey = "spark.sql.parquet.compression.codec"
+    val dir = Files.createTempDirectory("graft-files").toString
+    val ts = Seq(0L, 4000L, 9000L, day + 1000L, 2 * day, 2 * day + 3000L)
+      .map(base + _)
+    val rows = updates("ff", ts)
+    val e = new Engine(spark, dir, autoflush = true,
+      flushInterval = ts.size.toLong)
+    e.execute(CommandParser.parse("CREATE ff"))
+    e.execute(CommandParser.parse("USE ff"))
+    val prevCodec = spark.conf.get(codecKey)
+    spark.conf.set(codecKey, "gzip")
+    val (_, jobs) =
+      try jobsDuring(rows.foreach(u => addAt(e, u.ts, u.seq)))
+      finally spark.conf.set(codecKey, prevCodec)
+    assert(jobs.isEmpty, s"autoflush ran jobs: $jobs")
+    assert(e.execute(CommandParser.parse("COUNT IN MEM")) === e.Text("0"))
+
+    // the same rows as a Spark job wrote them before
+    val sparkDir =
+      s"${Files.createTempDirectory("graft-sparkfiles")}/book=ff"
+    spark.createDataset(rows)(
+        org.apache.spark.sql.Encoders.product[graft.model.Update]).toDF()
+      .withColumn("day", graft.sources.TickStore.dayOf(col("ts")))
+      .coalesce(1).write.partitionBy("day").parquet(sparkDir)
+    val bookDir = new java.io.File(s"$dir/book=ff")
+    val ours = parquetFiles(bookDir)
+    val theirs = parquetFiles(new java.io.File(sparkDir))
+    assert(ours.size === 3 && theirs.size === 3)
+
+    def fields(path: String) = spark.read.parquet(path).schema.fields
+      .map(f => f.name -> f.dataType).toSeq
+    val inferred = fields(bookDir.getPath)
+    assert(inferred === fields(sparkDir))
+    assert(inferred.init ===
+      graft.model.Update.schema.fields.map(f => f.name -> f.dataType).toSeq)
+    assert(inferred.last._1 === "day")
+    assert(spark.read.parquet(bookDir.getPath).drop("day")
+      .as(org.apache.spark.sql.Encoders.product[graft.model.Update])
+      .collect().sortBy(_.ts).toSeq === rows)
+
+    for ((f, g) <- ours.zip(theirs)) {
+      val meta = footer(f)
+      assert(meta.getFileMetaData.getSchema ===
+        footer(g).getFileMetaData.getSchema, f.getName)
+      val fileTs = spark.read.parquet(f.getPath).select("ts").collect()
+        .map(_.getLong(0))
+      val blocks = meta.getBlocks.asScala
+      assert(blocks.nonEmpty && blocks.map(_.getRowCount).sum === fileTs.length)
+      for (rg <- blocks) {
+        val stats = rg.getColumns.asScala
+          .find(_.getPath.toDotString == "ts").get.getStatistics
+          .asInstanceOf[org.apache.parquet.column.statistics.LongStatistics]
+        assert(stats.hasNonNullValue, f.getName)
+        assert(stats.getMin === fileTs.min && stats.getMax === fileTs.max,
+          f.getName)
+        assert(rg.getColumns.asScala.forall(_.getCodec ===
+          org.apache.parquet.hadoop.metadata.CompressionCodecName.GZIP),
+          f.getName)
+      }
+      assert(f.getName.startsWith("part-") &&
+        f.getName.endsWith(".gz.parquet"), f.getName)
+    }
+    // no in-progress file, `_SUCCESS` marker or `.crc` sidecar is left
+    val leftovers = bookDir.listFiles().flatMap(d =>
+      Option(d.listFiles()).getOrElse(Array(d)))
+      .filterNot(_.getName.endsWith(".parquet"))
+    assert(leftovers.isEmpty, leftovers.map(_.getName).mkString(", "))
+  }
+
+  test("a truncated in-progress file a crashed flush leaves is ignored by " +
+      "GET, COUNT, the next FLUSH, compaction, archival and bookSizes") {
+    val dir = Files.createTempDirectory("graft-crash").toString
+    val e = new Engine(spark, dir)
+    e.execute(CommandParser.parse("CREATE cr"))
+    e.execute(CommandParser.parse("USE cr"))
+    val onDisk = Seq(0L, 1000L, day, day + 2000L).map(base + _)
+    onDisk.zipWithIndex.foreach { case (t, i) => addAt(e, t, i.toLong) }
+    e.execute(CommandParser.parse("FLUSH"))
+    val bookDir = new java.io.File(s"$dir/book=cr")
+
+    // a crash mid-write: half of a later-day file under the in-progress
+    // name, once next to whole files and once alone in a new day leaf
+    val later = Files.createTempDirectory("graft-crash-src").toString
+    val e2 = new Engine(spark, later)
+    e2.execute(CommandParser.parse("CREATE cr"))
+    e2.execute(CommandParser.parse("USE cr"))
+    addAt(e2, base + 5 * day, 99L)
+    e2.execute(CommandParser.parse("FLUSH"))
+    val whole = Files.readAllBytes(
+      parquetFiles(new java.io.File(later)).head.toPath)
+    val partial = java.util.Arrays.copyOf(whole, whole.length / 2)
+    for (d <- Seq(base + day, base + 5 * day).map(_ / day)) {
+      val leaf = new java.io.File(bookDir, s"day=$d")
+      leaf.mkdirs()
+      Files.write(new java.io.File(leaf, FlushWriter.inProgressName(
+        s"part-${java.util.UUID.randomUUID()}.snappy.parquet")).toPath,
+        partial)
+    }
+
+    assert(replyTs(e)(e.execute(Command.Get(ReqCount.All, GetFormat.Dtf,
+      None, Loc.Fs))) === onDisk)
+    assert(replyTs(e)(e.execute(Command.Get(ReqCount.All, GetFormat.Dtf,
+      Some((base + day, base + 6 * day)), Loc.Fs))) === onDisk.drop(2))
+    assert(e.execute(CommandParser.parse("COUNT")) === e.Text("4"))
+
+    // the stored max is still the last whole file's, not the leftover's
+    val staged = Seq(day + 1000L, day + 3000L, 2 * day).map(base + _)
+    staged.zipWithIndex.foreach { case (t, i) => addAt(e, t, 10L + i) }
+    val dropped0 = e.flushStats.droppedRows
+    e.execute(CommandParser.parse("FLUSH"))
+    assert(e.flushStats.droppedRows - dropped0 === 1)
+    assert(e.execute(CommandParser.parse("COUNT")) === e.Text("6"))
+
+    val (before, after) = e.compactBook("cr")
+    assert(before === 4 && after === 3, s"$before -> $after")
+    assert(e.execute(CommandParser.parse("COUNT")) === e.Text("6"))
+
+    val dest = Files.createTempDirectory("graft-crash-archive").toUri.toString
+    val archived = e.newArchiver(dest, removeLocal = false).scanOnce(0L)
+    assert(archived.size === 3 &&
+      archived.forall(_.name.endsWith(".parquet")),
+      archived.map(_.name).mkString(", "))
+
+    assert(e.bookSizes().find(_._1 == "cr").map(_._2) ===
+      Some(parquetFiles(bookDir).map(_.length).sum))
   }
 }
