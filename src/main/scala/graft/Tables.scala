@@ -192,7 +192,8 @@ object Tables {
       case org.apache.spark.sql.types.LongType => expr("ts div 1000000")
       case org.apache.spark.sql.types.TimestampNTZType =>
         unix_millis(col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => unix_millis(col("ts"))
+      case org.apache.spark.sql.types.TimestampType => unix_millis(col("ts"))
+      case other => throw unknownTsFlavor(other)
     }
     ev.select(
       col("event_type").as("symbol"),
@@ -242,12 +243,21 @@ object Tables {
         val hi = timestamp_millis(lit(hiMs + 1))
           .cast(org.apache.spark.sql.types.TimestampNTZType)
         ev.where(col("ts") >= lo && col("ts") < hi)
-      case _ =>
+      case org.apache.spark.sql.types.TimestampType =>
         ev.where(col("ts") >= timestamp_millis(lit(loMs)) &&
           col("ts") < timestamp_millis(lit(hiMs + 1)))
+      case other => throw unknownTsFlavor(other)
     }
     projectUpdates(ranged)
   }
+
+  /** `events.ts` read as a type none of the three known flavors gives:
+    * refused by name, never projected as if it were one of them. */
+  private def unknownTsFlavor(t: org.apache.spark.sql.types.DataType) =
+    new IllegalArgumentException(s"events.ts has type ${t.simpleString}; " +
+      "the known flavors are TIMESTAMP(NANOS) read as bigint " +
+      "(nanosAsLong), TIMESTAMP(MICROS) with a time zone (timestamp) and " +
+      "TIMESTAMP(MICROS) without one (timestamp_ntz)")
 
   def updatesDs(spark: SparkSession, dir: String): Dataset[Update] = {
     import spark.implicits._

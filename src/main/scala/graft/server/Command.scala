@@ -160,10 +160,12 @@ object CommandParser {
           }
         } else Insert(parseLine(l.substring(3)), None)
       case l if l.startsWith("GET ") =>
+        // a count that is not a non-negative Int (`GET x`, `GET -5`)
+        // reads as 1
         val count =
           if (l.startsWith("GET ALL ")) ReqCount.All
-          else ReqCount.N(
-            l.substring(4).split(' ')(0).toIntOption.getOrElse(1))
+          else ReqCount.N(l.substring(4).split(' ')(0).toIntOption
+            .filter(_ >= 0).getOrElse(1))
         val format =
           if (l.contains(" AS JSON")) GetFormat.Json
           else if (l.contains(" AS CSV")) GetFormat.Csv

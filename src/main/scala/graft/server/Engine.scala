@@ -10,7 +10,6 @@ import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetCompressionCodec
 import org.apache.spark.sql.functions._
 
-import graft.functions._
 import graft.model.Update
 import graft.operators.Orderbook
 import graft.sources.TickStore
@@ -29,14 +28,15 @@ final class Session {
   *
   * State model (SURVEY §1.2): a book = in-memory staging rows (the
   * reference's `Vec<Update>`) + a parquet directory under `dtfFolder`
-  * (the reference's `{book}.dtf` files). Queries union mem + fs exactly
+  * (the reference's `{book}.dtf` files). GET unions mem + fs exactly
   * like `TectonicServer::get` (`state.rs:604-671`); FLUSH appends staging
   * to parquet keeping only `ts > max` rows (append semantics S6,
   * `file_format.rs:783-819`).
   *
-  * The driver-side mutable maps are metadata-only (book registry, staging
-  * buffers, subscriber queues); all scans/aggregations stay distributed
-  * DataFrame plans.
+  * GET and LOAD read the book's files on the driver, as the reference
+  * does ([[GetReader]]); FLUSH writes them there ([[FlushWriter]]); COUNT
+  * and CLEAR read their footers. None of them runs a Spark job. OB, SQL
+  * and compaction stay DataFrame plans over the same files.
   */
 final class Engine(spark: SparkSession, dtfFolder: String,
     autoflush: Boolean = false, flushInterval: Long = 1000L,
@@ -121,7 +121,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * Root-level files hold rows from LEGACY flat flushes (pre-`day=`
     * layout). Spark's partition discovery silently ignores them once any
     * `day=` subdir exists, so a mixed dir read naively would DROP every
-    * legacy row without an error; [[fsDf]]/[[fsDfInRange]] union them
+    * legacy row without an error; [[fsDf]] and [[getReader]] read them
     * explicitly instead. [[compactBook]] migrates them into the `day=`
     * tree for good. */
   private def layoutOf(book: String): Option[Engine.Layout] =
@@ -147,51 +147,55 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * The read is planned from the schema the engine writes, never
     * inferred: a book dir holds only Update-schema files, written by
     * flush, compaction or the legacy-layout migration, so inferring it
-    * would only add a Spark job to every GET, OB, COUNT, CLEAR, LOAD and
-    * SQL. Flushes write `day=<epochDay>` leaves (the [[TickStore]] layout
-    * at book granularity), read with [[TickStore.PartitionedSchema]] and
-    * the `day` column dropped again; a legacy flat dir (no `day=` leaf)
-    * reads with [[Update.schema]]. A MIXED dir (root files + `day=` leaves, i.e. a
+    * would only add a Spark job to every OB and SQL. Flushes write
+    * `day=<epochDay>` leaves (the [[TickStore]] layout at book
+    * granularity), read with [[TickStore.PartitionedSchema]] and the `day`
+    * column dropped again; a legacy flat dir (no `day=` leaf) reads with
+    * [[Update.schema]]. A MIXED dir (root files + `day=` leaves, i.e. a
     * legacy book flushed post-upgrade) reads as the union of the tree and
     * the explicitly-listed root files.
     *
     * Which of the three layouts a book has comes from [[layoutOf]]'s
     * listing, not from the columns of the read: with a supplied schema
-    * the `day` column is always there, so a flat book would read `day` as
-    * null and a ranged read's day filter would drop every legacy row. */
+    * the `day` column is always there, even in a flat book. */
   def fsDf(book: String): Option[DataFrame] =
     layoutOf(book).map(fsRead(book, _))
 
-  /** The fs side of a RANGED read, with the ms range mapped onto the
-    * `day=` leaves (plan-time pruning: files of other days are never
-    * opened — the reference's file-header skip, S4, at directory
-    * granularity). The exact ts bounds stay with the caller; the day
-    * interval is closed over the range's floor-days, so pruning can
-    * never drop a row the ts predicate keeps. Schema and layout come
-    * from the same places as in [[fsDf]]. */
-  private def fsDfInRange(book: String, loMs: Long,
-      hiMs: Long): Option[DataFrame] =
-    layoutOf(book).map(fsRead(book, _,
-      Some((TickStore.dayOfMs(loMs), TickStore.dayOfMs(hiMs)))))
-
-  /** The ONE place both reads of [[fsDf]]'s contract live; `days`
-    * prunes the `day=` tree to a closed epoch-day interval. Root-level
-    * legacy files are never day-pruned — the caller's exact ts predicate
-    * still filters them, and compactBook's migration restores pruning. */
-  private def fsRead(book: String, layout: Engine.Layout,
-      days: Option[(Long, Long)] = None): DataFrame =
+  /** The ONE place both reads of [[fsDf]]'s contract live. */
+  private def fsRead(book: String, layout: Engine.Layout): DataFrame =
     if (layout.dayLeaves.isEmpty)
       spark.read.schema(Update.schema).parquet(fsPath(book))
     else {
       val tree = spark.read.schema(TickStore.PartitionedSchema)
-        .parquet(fsPath(book))
-      val pruned = days.fold(tree) { case (lo, hi) =>
-        tree.where(col(TickStore.DayCol).between(lo, hi))
-      }.drop(TickStore.DayCol)
-      if (layout.flatFiles.isEmpty) pruned
-      else pruned.unionByName(spark.read.schema(Update.schema)
+        .parquet(fsPath(book)).drop(TickStore.DayCol)
+      if (layout.flatFiles.isEmpty) tree
+      else tree.unionByName(spark.read.schema(Update.schema)
         .parquet(layout.flatFiles.map(_.getPath): _*))
     }
+
+  /** A [[GetReader]] over `staged` and the files of `layout` as they are
+    * now: its legacy root files and its `day=` leaves' files, by ascending
+    * day, pruned to the closed interval of `range`'s floor-days (the
+    * reference's file-header skip, S4, at directory granularity; the
+    * interval is closed, so pruning never drops a row the exact ts
+    * filter keeps). Root files are never day-pruned: the ts filter still
+    * applies to them, and compactBook's migration restores pruning. The
+    * listing is taken here, so the caller's monitor fixes the snapshot. */
+  private def getReader(layout: Option[Engine.Layout],
+      staged: Array[Update], range: Option[(Long, Long)],
+      limit: Option[Int]): GetReader = {
+    val days = range.map { case (lo, hi) =>
+      (TickStore.dayOfMs(lo), TickStore.dayOfMs(hi))
+    }
+    val leaves = layout.toSeq.flatMap(_.dayLeaves)
+      .filter { case (d, _) =>
+        days.forall { case (lo, hi) => d >= lo && d <= hi }
+      }
+      .sortBy(_._1)
+      .map { case (d, dir) => d -> parquetFilesIn(dir).toSeq }
+    new GetReader(staged, layout.toSeq.flatMap(_.flatFiles), leaves, range,
+      limit, spark.sparkContext.hadoopConfiguration)
+  }
 
   /** mem ++ fs view of one book (J1, `state.rs:639-656`) — re-sorted by
     * (ts,seq), a documented deviation from the reference's raw concat. */
@@ -201,13 +205,44 @@ final class Engine(spark: SparkSession, dtfFolder: String,
 
   sealed trait Reply
   case class Text(s: String) extends Reply
-  /** A distributed result to materialize on the wire. For single-string-
-    * column frames (AS JSON / AS CSV) the server joins rows with `sep` and
-    * appends `trailer` — the reference joins JSON objects with `", "` and
-    * CSV rows with newlines, then pushes one trailing `'\n'` on both
-    * (`state.rs:31-52`, `update.rs:34-42`). */
-  case class Frame(df: DataFrame, sep: String = "\n", trailer: String = "")
-    extends Reply
+  /** A result to materialize on the wire. A GET frame carries its `body`,
+    * computed on the driver by [[GetReader]] when first asked for; its
+    * `df` is a local relation over the same rows (DTF) or lines (JSON,
+    * CSV), built only when a caller asks for it. A SQL frame has no body:
+    * the server drains its `df`, a single string column, joining rows
+    * with `sep` and appending `trailer` — the reference joins JSON objects
+    * with `", "` and CSV rows with newlines, then pushes one trailing
+    * `'\n'` on both (`state.rs:31-52`, `update.rs:34-42`). */
+  final class Frame private (mkDf: () => DataFrame, val sep: String,
+      val trailer: String, mkBody: Option[() => Array[Byte]])
+      extends Reply {
+    lazy val df: DataFrame = mkDf()
+    lazy val body: Option[Array[Byte]] = mkBody.map(_())
+  }
+  object Frame {
+    def apply(df: DataFrame, sep: String, trailer: String): Frame =
+      new Frame(() => df, sep, trailer, None)
+    def unapply(f: Frame): Some[(DataFrame, String, String)] =
+      Some((f.df, f.sep, f.trailer))
+
+    /** A GET reply: `get`'s rows in `format`. */
+    private[Engine] def of(get: GetReader, format: GetFormat): Frame = {
+      def text(name: String, row: Update => String, sep: String) = {
+        def lines = get.rows.iterator.map(row)
+        new Frame(
+          () => spark.createDataset(lines.toSeq)(Encoders.STRING).toDF(name),
+          sep, "\n",
+          Some(() => lines.mkString("", sep, "\n").getBytes("UTF-8")))
+      }
+      format match {
+        case GetFormat.Dtf => new Frame(
+          () => spark.createDataset(get.rows.toSeq)(updateEncoder).toDF(),
+          "\n", "", Some(() => Wire.serializeBatches(get.rows.iterator)))
+        case GetFormat.Json => text("json", Engine.jsonRow, ", ")
+        case GetFormat.Csv => text("csv", Engine.csvRow, "\n")
+      }
+    }
+  }
   case class Err(s: String) extends Reply
 
   def execute(cmd: Command): Reply = execute(cmd, defaultSession)
@@ -317,8 +352,9 @@ final class Engine(spark: SparkSession, dtfFolder: String,
       Text("1")
 
     case Command.Load(book) =>
-      fsDf(book).fold[Reply](Err(s"No db named `$book`")) { df =>
-        val loaded = df.as(updateEncoder).collect()
+      withSwapRead(layoutOf(book).map(layout =>
+        getReader(Some(layout), Array.empty, None, None).rows))
+        .fold[Reply](Err(s"No db named `$book`")) { loaded =>
         val buf = books.getOrElseUpdate(book, mutable.ArrayBuffer.empty)
         buf ++= loaded
         // the reference's load RESETS nominal_count to the stored header
@@ -340,53 +376,18 @@ final class Engine(spark: SparkSession, dtfFolder: String,
 
     case Command.Get(count, format, range, loc) =>
       val book = session.book
-      val base = loc match {
-        case Loc.Mem => memDf(book)
-        // ranged fs reads go through the day-pruned fs side (same
-        // mem ++ fs ++ sort contract as bookDf; only the file listing
-        // shrinks to the range's days)
-        case Loc.Fs => range match {
-          case Some((lo, hi)) =>
-            fsDfInRange(book, lo, hi)
-              .map(memDf(book).unionByName(_)).getOrElse(memDf(book))
-              .orderBy("ts", "seq")
-          case None => bookDf(book)
-        }
+      // reference mem filter is exclusive (`state.rs:617-624`); we use
+      // consistent inclusive bounds (documented deviation, SURVEY §7.4-4)
+      val staged = books.get(book).fold(Array.empty[Update])(buf =>
+        range.fold(buf.toArray) { case (lo, hi) =>
+          buf.iterator.filter(u => u.ts >= lo && u.ts <= hi).toArray
+        })
+      val limit = count match {
+        case ReqCount.All => None
+        case ReqCount.N(n) => Some(n)
       }
-      val ranged = range match {
-        // reference mem filter is exclusive (`state.rs:617-624`); we use
-        // consistent inclusive bounds (documented deviation, SURVEY §7.4-4)
-        case Some((lo, hi)) => base.where(col("ts").between(lo, hi))
-        case None => base
-      }
-      val limited = count match {
-        case ReqCount.All => ranged.orderBy("ts", "seq")
-        case ReqCount.N(n) => ranged.orderBy("ts", "seq").limit(n)
-      }
-      // Floats render with Rust `{}` Display semantics (plain decimal,
-      // shortest round-trip digits, no ".0") — Spark's native double→string
-      // cast and to_json both emit scientific notation for |x| ≥ 1e7, which
-      // would corrupt every ts-seconds field on the wire. The UDF is
-      // sanctioned here: this is the response-size-bounded server
-      // materialization path, not an analytics hot path.
-      val rr = udf(Engine.rustRepr _)
-      format match {
-        case GetFormat.Csv => Frame(limited.select(
-          concat_ws(",", rr(tsAsSecondsFloat(col("ts"))),
-            col("seq").cast("string"),
-            tfBool(col("is_trade")), tfBool(col("is_bid")),
-            rr(col("price")), rr(col("size"))).as("csv")),
-          sep = "\n", trailer = "\n")
-        case GetFormat.Json => Frame(limited.select(
-          concat(lit("{\"ts\":"), rr(tsAsSecondsFloat(col("ts"))),
-            lit(",\"seq\":"), col("seq").cast("string"),
-            lit(",\"is_trade\":"), col("is_trade").cast("string"),
-            lit(",\"is_bid\":"), col("is_bid").cast("string"),
-            lit(",\"price\":"), rr(col("price")),
-            lit(",\"size\":"), rr(col("size")), lit("}")).as("json")),
-          sep = ", ", trailer = "\n")
-        case GetFormat.Dtf => Frame(limited)
-      }
+      val files = if (loc == Loc.Fs) layoutOf(book) else None
+      Frame.of(getReader(files, staged, range, limit), format)
   }
 
   /** OB reply — serde-shaped orderbook JSON exactly like the reference's
@@ -551,7 +552,11 @@ final class Engine(spark: SparkSession, dtfFolder: String,
   // rewrites instead: flush only checks the cheap per-leaf file counts
   // and enqueues; compactingBooks already makes overlapping rewrites of
   // one book a no-op, and queuedCompactions keeps a hot book from
-  // stacking duplicate jobs behind the worker.
+  // stacking duplicate jobs behind the worker. A job leaves
+  // queuedCompactions when it STARTS, not when it ends: a flush that
+  // lands while a rewrite runs (flushes take milliseconds, a rewrite a
+  // Spark job) may write a file the rewrite has already listed past, so
+  // it must be able to queue the next job.
 
   private lazy val compactionWorker =
     java.util.concurrent.Executors.newSingleThreadExecutor(r => {
@@ -588,6 +593,7 @@ final class Engine(spark: SparkSession, dtfFolder: String,
       days: Seq[Long]): Unit =
     if (leafOverPolicy(book, days) && queuedCompactions.add(book))
       compactionWorker.execute { () =>
+        queuedCompactions.remove(book)
         try compactBook(book, compactTargetBytes)
         catch {
           case e: Throwable =>
@@ -596,7 +602,6 @@ final class Engine(spark: SparkSession, dtfFolder: String,
             System.err.println(
               s"[engine] auto-compaction failed for book=$book: $e")
         }
-        finally queuedCompactions.remove(book)
       }
 
   /** Test/ops hook: wait until every auto-compaction enqueued so far has
@@ -744,6 +749,19 @@ final class Engine(spark: SparkSession, dtfFolder: String,
 }
 
 object Engine {
+  /** A GET row AS JSON: ts in seconds and floats as [[rustRepr]], the
+    * flags as `true`/`false` (`update.rs:144-168`). */
+  def jsonRow(u: Update): String =
+    s"""{"ts":${rustRepr(u.ts.toDouble / 1000.0)},"seq":${u.seq},""" +
+      s""""is_trade":${u.is_trade},"is_bid":${u.is_bid},""" +
+      s""""price":${rustRepr(u.price)},"size":${rustRepr(u.size)}}"""
+
+  /** A GET row AS CSV: as [[jsonRow]], with the flags as `t`/`f`. */
+  def csvRow(u: Update): String =
+    s"${rustRepr(u.ts.toDouble / 1000.0)},${u.seq}," +
+      s"${if (u.is_trade) "t" else "f"},${if (u.is_bid) "t" else "f"}," +
+      s"${rustRepr(u.price)},${rustRepr(u.size)}"
+
   /** Rust `{}` Display for doubles (`update.rs:145-168` renders ts/price/
     * size with `format!("{}")`): plain decimal notation with the shortest
     * round-trip digits and no trailing ".0" — never scientific. Java's
@@ -766,8 +784,9 @@ object Engine {
   private final case class Layout(dayLeaves: Seq[(Long, java.io.File)],
       flatFiles: Seq[java.io.File])
 
-  /** The (ts, seq) order every flushed file is written in. */
-  private val TsSeqOrder: Ordering[Update] = (a, b) => {
+  /** The (ts, seq) order every flushed file is written in and every GET
+    * returns. */
+  private[server] val TsSeqOrder: Ordering[Update] = (a, b) => {
     val c = java.lang.Long.compare(a.ts, b.ts)
     if (c != 0) c else java.lang.Long.compare(a.seq, b.seq)
   }

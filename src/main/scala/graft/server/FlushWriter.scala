@@ -3,12 +3,21 @@ package graft.server
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat, ParquetWriter}
-import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.conf.{HadoopParquetConfiguration,
+  ParquetConfiguration}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetOutputFormat,
+  ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{LocalOutputFile, OutputFile}
-import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.io.{InputFile, LocalInputFile, LocalOutputFile,
+  OutputFile}
+import org.apache.parquet.io.api.{Binary, Converter, GroupConverter,
+  PrimitiveConverter, RecordConsumer, RecordMaterializer}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY,
   BOOLEAN, DOUBLE, INT64}
@@ -144,5 +153,124 @@ private[graft] object FlushWriter {
     private def double(name: String, i: Int, v: Double): Unit = {
       rc.startField(name, i); rc.addDouble(v); rc.endField(name, i)
     }
+  }
+}
+
+/** Reads a book file's rows back on the driver with a plain parquet-hadoop
+  * reader — the read half of [[FlushWriter]], and the reference's direct
+  * read of the batches of a `.dtf` file (`file_format.rs:306-413`).
+  * Columns are matched by name, so a file Spark wrote, a file
+  * [[FlushWriter]] wrote and a file without a `symbol` column all read;
+  * a missing `symbol` reads as null, as Spark reads it. */
+private[graft] object BookFileReader {
+
+  private val Ts = FilterApi.longColumn("ts")
+
+  /** Calls `f` on every row of `file`, or on the rows whose `ts` lies in
+    * the inclusive `range`. The range is pushed down as a parquet filter
+    * predicate: row groups whose `ts` statistics lie outside it are
+    * skipped unread, and the record-level filter keeps the result exact
+    * on files that carry no statistics. `conf` supplies the read options,
+    * as it does for Spark's reader; it is wrapped, not copied, so a read
+    * never builds a Configuration of its own. */
+  def foreach(file: File, conf: Configuration, range: Option[(Long, Long)])(
+      f: Update => Unit): Unit = {
+    val builder = new Builder(new LocalInputFile(file.toPath),
+      new HadoopParquetConfiguration(conf))
+    range.foreach { case (lo, hi) =>
+      builder.withFilter(FilterCompat.get(FilterApi.and(
+        FilterApi.gtEq(Ts, java.lang.Long.valueOf(lo)),
+        FilterApi.ltEq(Ts, java.lang.Long.valueOf(hi)))))
+        .useRecordFilter(true)
+    }
+    val reader = builder.build()
+    try {
+      var u = reader.read()
+      while (u != null) { f(u); u = reader.read() }
+    } finally reader.close()
+  }
+
+  private final class Builder(file: InputFile, conf: ParquetConfiguration)
+      extends ParquetReader.Builder[Update](file, conf) {
+    override protected def getReadSupport(): ReadSupport[Update] =
+      new UpdateReadSupport
+  }
+
+  /** Requests the file's columns named in [[FlushWriter.Schema]] and
+    * materializes each record as an [[Update]]. */
+  private final class UpdateReadSupport extends ReadSupport[Update] {
+    override def init(context: InitContext): ReadSupport.ReadContext = {
+      val file = context.getFileSchema
+      val names = FlushWriter.Schema.getFields.asScala.map(_.getName)
+      val missing = names.filterNot(n => n == "symbol" || file.containsField(n))
+      require(missing.isEmpty,
+        s"not a book file: no ${missing.mkString(", ")} column in $file")
+      new ReadSupport.ReadContext(new MessageType(file.getName,
+        file.getFields.asScala.filter(f => names.contains(f.getName)).asJava))
+    }
+
+    override def prepareForRead(conf: Configuration,
+        meta: java.util.Map[String, String], file: MessageType,
+        context: ReadSupport.ReadContext): RecordMaterializer[Update] =
+      new UpdateMaterializer(context.getRequestedSchema)
+
+    // the reader calls this overload; the default copies `conf` into a
+    // new Hadoop Configuration on every file only to ignore it here
+    override def prepareForRead(conf: ParquetConfiguration,
+        meta: java.util.Map[String, String], file: MessageType,
+        context: ReadSupport.ReadContext): RecordMaterializer[Update] =
+      new UpdateMaterializer(context.getRequestedSchema)
+  }
+
+  private final class UpdateMaterializer(schema: MessageType)
+      extends RecordMaterializer[Update] {
+    private var symbol: String = _
+    private var ts, seq = 0L
+    private var isTrade, isBid = false
+    private var price, size = 0.0
+
+    private def long(set: Long => Unit): Converter = new PrimitiveConverter {
+      override def addLong(v: Long): Unit = set(v)
+    }
+    private def bool(set: Boolean => Unit): Converter = new PrimitiveConverter {
+      override def addBoolean(v: Boolean): Unit = set(v)
+    }
+    private def double(set: Double => Unit): Converter =
+      new PrimitiveConverter {
+        override def addDouble(v: Double): Unit = set(v)
+      }
+    /** A book's rows share one symbol: decode it once per run of equal
+      * values. */
+    private val symbolConverter: Converter = new PrimitiveConverter {
+      private var last: Binary = _
+      private var lastString: String = _
+      override def addBinary(v: Binary): Unit = {
+        if (!v.equals(last)) {
+          last = v.copy(); lastString = v.toStringUsingUTF8
+        }
+        symbol = lastString
+      }
+    }
+
+    private val converters: Array[Converter] =
+      schema.getFields.asScala.map(_.getName match {
+        case "symbol" => symbolConverter
+        case "ts" => long(ts = _)
+        case "seq" => long(seq = _)
+        case "is_trade" => bool(isTrade = _)
+        case "is_bid" => bool(isBid = _)
+        case "price" => double(price = _)
+        case "size" => double(size = _)
+      }).toArray
+
+    private val root = new GroupConverter {
+      override def getConverter(i: Int): Converter = converters(i)
+      override def start(): Unit = symbol = null
+      override def end(): Unit = ()
+    }
+
+    override def getRootConverter: GroupConverter = root
+    override def getCurrentRecord: Update =
+      Update(symbol, ts, seq, isTrade, isBid, price, size)
   }
 }

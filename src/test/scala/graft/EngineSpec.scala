@@ -709,4 +709,197 @@ class EngineSpec extends SparkSpec {
     assert(e.bookSizes().find(_._1 == "cr").map(_._2) ===
       Some(parquetFiles(bookDir).map(_.length).sum))
   }
+
+  /** The GET reply the Spark formulation GET had before it moved to the
+    * driver, as the wire drained it: the book (or its staged rows)
+    * filtered by `between`, sorted by (ts, seq), limited, and rendered
+    * with `concat_ws`/`concat` and a `rustRepr` UDF. */
+  private def sparkGetBody(e: Engine, book: String, get: Command.Get)
+      : Array[Byte] = {
+    import org.apache.spark.sql.functions.{col, concat, concat_ws, lit, udf}
+    import graft.functions.{tfBool, tsAsSecondsFloat}
+    val base = if (get.loc == Loc.Mem) e.memDf(book) else e.bookDf(book)
+    val ranged = get.range.fold(base) { case (lo, hi) =>
+      base.where(col("ts").between(lo, hi))
+    }.orderBy("ts", "seq")
+    val limited = get.count match {
+      case ReqCount.All => ranged
+      case ReqCount.N(n) => ranged.limit(n)
+    }
+    val rr = udf(Engine.rustRepr _)
+    def text(c: org.apache.spark.sql.Column, sep: String) =
+      limited.select(c).collect().map(_.getString(0))
+        .mkString("", sep, "\n").getBytes("UTF-8")
+    get.format match {
+      case GetFormat.Dtf => Wire.serializeBatches(limited
+        .as(org.apache.spark.sql.Encoders.product[graft.model.Update])
+        .collect().iterator)
+      case GetFormat.Csv => text(concat_ws(",",
+        rr(tsAsSecondsFloat(col("ts"))), col("seq").cast("string"),
+        tfBool(col("is_trade")), tfBool(col("is_bid")),
+        rr(col("price")), rr(col("size"))), "\n")
+      case GetFormat.Json => text(concat(lit("{\"ts\":"),
+        rr(tsAsSecondsFloat(col("ts"))),
+        lit(",\"seq\":"), col("seq").cast("string"),
+        lit(",\"is_trade\":"), col("is_trade").cast("string"),
+        lit(",\"is_bid\":"), col("is_bid").cast("string"),
+        lit(",\"price\":"), rr(col("price")),
+        lit(",\"size\":"), rr(col("size")), lit("}")), ", ")
+    }
+  }
+
+  /** A book with a legacy flat file (days 0-1), flushed `day=` leaves
+    * (days 1, 3 and 4, and 2 after the next), a day-2 file another writer
+    * wrote without statistics, and staged rows below, inside and above
+    * the ranges of the returned GETs; prices and sizes that stress
+    * `rustRepr`, and ts ending in 000 and 100. No two rows share a
+    * (ts, seq). Returns the engine, its session on the book, and GETs of
+    * every count, format and location over two ranges and none. */
+  private def parityBook(book: String): (Engine, Seq[Command.Get]) = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
+    val prices = Seq(12345678.9, 1e-7, 0.1 + 0.2, 1.5, 1e7, 0.30000000000000004)
+    val sizes = Seq(2.0, 1e21, 0.001, 7.25e-9)
+    def row(ts: Long, seq: Long) = graft.model.Update(book, ts, seq,
+      is_trade = seq % 3 == 0, is_bid = seq % 2 == 0,
+      prices((seq % prices.size).toInt), sizes((seq % sizes.size).toInt))
+    def at(d: Long, ms: Long) = base + d * day + ms
+    val dir = Files.createTempDirectory("graft-parity").toString
+    val root = s"$dir/book=$book"
+    spark.createDataset(Seq(at(0, 0), at(0, 100), at(0, 5000), at(1, 100),
+        at(1, 100), at(1, 3000)).zipWithIndex.map { case (t, i) =>
+        row(t, 100L + i) })(enc).toDF().write.parquet(root)
+    val e = new Engine(spark, dir)
+    e.execute(CommandParser.parse(s"CREATE $book"))
+    e.execute(CommandParser.parse(s"USE $book"))
+    def stage(ts: Seq[Long], seq0: Long): Unit =
+      ts.zipWithIndex.foreach { case (t, i) =>
+        e.execute(Command.Insert(Some(row(t, seq0 + i)), None))
+      }
+    stage(Seq(at(1, 5000), at(1, 5100), at(1, 9000)), 300L)
+    e.execute(CommandParser.parse("FLUSH"))
+    // an outside writer's day-2 leaf, without ts statistics
+    spark.createDataset(Seq(at(2, 0), at(2, 100), at(2, 2000), at(2, 2100),
+        at(2, 9000)).zipWithIndex.map { case (t, i) => row(t, 200L + i) })(
+        enc).toDF().coalesce(1)
+      .withColumn("day", graft.sources.TickStore.dayOf(col("ts")))
+      .write.option("parquet.column.statistics.enabled", "false")
+      .mode("append").partitionBy("day").parquet(root)
+    stage(Seq(at(2, 10000), at(3, 0), at(3, 0), at(3, 100), at(3, 2000),
+      at(4, 0), at(4, 100), at(4, 20000)), 400L)
+    e.execute(CommandParser.parse("FLUSH"))
+    assert(e.execute(CommandParser.parse("COUNT")) === e.Text("22"))
+    // staged: below, inside and above the ranges, ts tied with file
+    // rows; the next FLUSH keeps only the last two (S6), one of them in
+    // an existing leaf
+    stage(Seq(at(0, 50), at(1, 100), at(2, 2050), at(3, 100), at(1, 6000),
+      at(5, 0), at(4, 30000)), 500L)
+    val day2 = new java.io.File(s"$root/day=${at(2, 0) / day}")
+      .listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+    assert(day2.size === 2 && day2.exists(f => footer(f).getBlocks.asScala
+      .forall(_.getColumns.asScala.forall(!_.getStatistics.hasNonNullValue))),
+      "no statistics-less fixture")
+    val ranges = Seq(Some((at(1, 100), at(3, 100))), // ends inside files
+      Some((at(2, 50), at(2, 2100))), // inside the statistics-less file
+      None)
+    val gets = for {
+      range <- ranges
+      loc <- Seq(Loc.Fs, Loc.Mem)
+      count <- Seq(ReqCount.N(1), ReqCount.N(10), ReqCount.All)
+      format <- Seq(GetFormat.Dtf, GetFormat.Json, GetFormat.Csv)
+    } yield Command.Get(count, format, range, loc)
+    (e, gets)
+  }
+
+  test("every GET form is served on the driver with no Spark job, " +
+      "byte-equal to the Spark formulation it replaced") {
+    val (e, gets) = parityBook("par")
+    for (get <- gets) {
+      val want = sparkGetBody(e, "par", get)
+      val (body, jobs) = jobsDuring(e.execute(get) match {
+        case f: e.Frame => f.body
+        case other => fail(s"$get: $other")
+      })
+      assert(jobs.isEmpty, s"$get ran jobs: $jobs")
+      assert(body.map(_.toSeq) === Some(want.toSeq),
+        s"$get:\n${body.map(new String(_, "UTF-8"))}\nwant\n" +
+          new String(want, "UTF-8"))
+    }
+    // the frame's df holds the same rows or lines
+    val dtf = Command.Get(ReqCount.N(10), GetFormat.Dtf, None, Loc.Fs)
+    e.execute(dtf) match {
+      case e.Frame(df, _, _) => assert(Wire.serializeBatches(df
+        .as(org.apache.spark.sql.Encoders.product[graft.model.Update])
+        .collect().iterator).toSeq === sparkGetBody(e, "par", dtf).toSeq)
+      case other => fail(s"unexpected: $other")
+    }
+    val csv = dtf.copy(format = GetFormat.Csv)
+    e.execute(csv) match {
+      case e.Frame(df, sep, trailer) =>
+        assert(df.collect().map(_.getString(0)).mkString("", sep, trailer) ===
+          new String(sparkGetBody(e, "par", csv), "UTF-8"))
+      case other => fail(s"unexpected: $other")
+    }
+    // a staged row with a file row's (ts, seq) comes after it
+    val tied = graft.model.Update("par", base + 100L, 101L, is_trade = false,
+      is_bid = false, 9.5, 9.5)
+    e.execute(Command.Insert(Some(tied), None))
+    e.execute(Command.Get(ReqCount.All, GetFormat.Csv,
+      Some((base + 100L, base + 100L)), Loc.Fs)) match {
+      case f: e.Frame =>
+        assert(new String(f.body.get, "UTF-8").split('\n').toSeq
+          .map(_.split(',')(4)) === Seq("0.30000000000000004", "9.5"))
+      case other => fail(s"unexpected: $other")
+    }
+  }
+
+  test("a FLUSH between a GET's execute and its drain neither drops nor " +
+      "duplicates a row") {
+    val (e, gets) = parityBook("snap")
+    val fsGets = gets.filter(g => g.loc == Loc.Fs && g.format == GetFormat.Csv)
+    val wants = fsGets.map(g => new String(sparkGetBody(e, "snap", g), "UTF-8"))
+    val frames = fsGets.map(e.execute(_).asInstanceOf[e.Frame])
+    val before = e.execute(CommandParser.parse("COUNT"))
+    e.execute(CommandParser.parse("FLUSH"))
+    assert(e.execute(CommandParser.parse("COUNT IN MEM")) === e.Text("0"))
+    assert(e.execute(CommandParser.parse("COUNT")) !== before,
+      "the FLUSH wrote nothing")
+    for ((get, (frame, want)) <- fsGets.zip(frames.zip(wants)))
+      assert(frame.body.map(new String(_, "UTF-8")) === Some(want), get)
+  }
+
+  test("LOAD reads the book's files with no Spark job: the same rows as " +
+      "a Spark read of a flat, a mixed and a day-only book") {
+    val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
+    val older = Seq(0L, 5000L, day + 1000L).map(base + _)
+    val newer = Seq(day + 20000L, 2 * day, 2 * day + 500L).map(base + _)
+    for ((book, flatTs, flushedTs) <- Seq(("flat", older, Seq.empty[Long]),
+        ("mixed", older, newer), ("days", Seq.empty[Long], older ++ newer))) {
+      val dir = Files.createTempDirectory("graft-load").toString
+      if (flatTs.nonEmpty)
+        spark.createDataset(updates(book, flatTs))(enc).toDF()
+          .write.parquet(s"$dir/book=$book")
+      val writer = new Engine(spark, dir)
+      writer.execute(CommandParser.parse(s"CREATE $book"))
+      writer.execute(CommandParser.parse(s"USE $book"))
+      flushedTs.zipWithIndex.foreach { case (t, i) =>
+        addAt(writer, t, 2000L + i)
+      }
+      writer.execute(CommandParser.parse("FLUSH"))
+
+      val e = new Engine(spark, dir)
+      val want = e.fsDf(book).get.as(enc).collect().toSeq
+      val (reply, jobs) = jobsDuring(e.execute(Command.Load(book)))
+      assert(reply === e.Text(s"Loaded orderbook `$book`."), book)
+      assert(jobs.isEmpty, s"$book: LOAD ran jobs: $jobs")
+      val loaded = e.memDf(book).as(enc).collect().toSeq
+      assert(loaded.size === flatTs.size + flushedTs.size, book)
+      assert(loaded.sortBy(u => (u.ts, u.seq)) ===
+        want.sortBy(u => (u.ts, u.seq)), book)
+      assert(infoCount(e, book) === loaded.size, book)
+    }
+    val e = engine()
+    assert(e.execute(Command.Load("ghost")) === e.Err("No db named `ghost`"))
+  }
 }

@@ -114,6 +114,28 @@ class TimestampFlavorSpec extends SparkSpec {
     assert(Tables.updates(spark, good).count() > 0)
   }
 
+  test("a ts of any other type is refused by name, never projected") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-tsflavor-str")
+    rowsMicros.toDF("event_id", "ts_us")
+      .select(col("event_id"),
+        timestamp_micros(col("ts_us")).cast("string").as("ts"),
+        lit("evt_0").as("event_type"), lit(1.0).as("value"))
+      .write.mode("overwrite")
+      .parquet(tmp.resolve("events.parquet").toString)
+    assert(spark.read.parquet(tmp.resolve("events.parquet").toString)
+      .schema("ts").dataType === StringType)
+    for (read <- Seq(
+        () => Tables.updates(spark, tmp.toString),
+        () => Tables.updatesInRange(spark, tmp.toString, baseMs,
+          baseMs + 86400000L))) {
+      val e = intercept[IllegalArgumentException](read())
+      for (word <- Seq("events.ts has type string", "TIMESTAMP(NANOS)",
+          "timestamp_ntz", "TIMESTAMP(MICROS) with a time zone"))
+        assert(e.getMessage.contains(word), e.getMessage)
+    }
+  }
+
   test("NTZ range bounds still reach the parquet scan as PushedFilters") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-tsflavor-push")
     val d = writeFlavor(tmp, "ntz")

@@ -137,6 +137,29 @@ class WireSpec extends SparkSpec {
     } finally { client.close(); server.stop() }
   }
 
+  test("a negative GET count gets a reply and the connection serves the " +
+      "next GET") {
+    assert(CommandParser.parse("GET -5 FROM 100 TO 200") ===
+      Command.Get(ReqCount.N(1), GetFormat.Dtf, Some((100000L, 200000L)),
+        Loc.Fs))
+    val engine =
+      new Engine(spark, Files.createTempDirectory("graft-neg").toString)
+    val server = new TcpServer(engine)
+    val client = new TcpClient("127.0.0.1", server.boundPort)
+    try {
+      assert(client.cmd("CREATE neg")._1)
+      for (i <- 0 until 3)
+        assert(client.cmd(s"ADD 150517745$i.000, $i, t, f, 1.5, 2.0;")._1)
+      val (ok, body) = client.request(
+        "GET -5 FROM 1505177450 TO 1505177460".getBytes("UTF-8"))
+      assert(ok && Wire.parseStream(body).map(_.seq) === Seq(0L))
+      val (okCsv, csv) = client.cmd("GET -1 AS CSV")
+      assert(okCsv && csv === "1505177450,0,t,f,1.5,2\n", csv)
+      assert(client.getUpdates("GET 10 FROM 1505177450 TO 1505177460")
+        .map(_.seq) === Seq(0L, 1L, 2L))
+    } finally { client.close(); server.stop() }
+  }
+
   test("malformed raw insert (negative name length) replies Bad format") {
     val engine =
       new Engine(spark, Files.createTempDirectory("graft-badra").toString)
