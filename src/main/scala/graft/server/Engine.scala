@@ -3,6 +3,7 @@ package graft.server
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -521,11 +522,15 @@ final class Engine(spark: SparkSession, dtfFolder: String,
 
   /** The footer of one parquet file, read with the session Hadoop conf
     * (as Tables' footer probe), so `spark.hadoop.*` settings reach the
-    * read. */
+    * read. The read options come from that conf too: without them
+    * `ParquetFileReader.open` builds a new Hadoop Configuration, parsing
+    * its default resources, for every footer — about 12 ms each, more
+    * than the rest of a flush's max-ts read. */
   private def footerOf(f: java.io.File): ParquetMetadata = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(f.getPath),
-      spark.sparkContext.hadoopConfiguration))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(f.getPath)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
     try r.getFooter finally r.close()
   }
 
