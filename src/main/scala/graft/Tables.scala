@@ -1,5 +1,15 @@
 package graft
 
+import java.net.URI
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,16 +43,15 @@ object Tables {
   val oracleSfDir = new java.util.concurrent.atomic.AtomicReference[String](
     "/root/testdata/sf0.001")
 
-  /** Row count straight from parquet footers (no Spark job, no session):
+  /** Row count straight from parquet footers (no Spark job):
     * used to derive data-dependent operator parameters (LSH plane / IVF
     * centroid counts) at plan-build time on both the Spark and oracle
-    * sides — the scale dial VERDICT r4 flagged as never exercised. */
+    * sides — the scale dial VERDICT r4 flagged as never exercised. Read
+    * with the active session's Hadoop conf, or a new one where no
+    * session exists. */
   def parquetRowCount(path: String): Long = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new Configuration()
+    val conf = SparkSession.getActiveSession
+      .fold(new Configuration())(_.sparkContext.hadoopConfiguration)
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val files =
@@ -50,10 +59,52 @@ object Tables {
         fs.listStatus(p).map(_.getPath)
           .filter(_.getName.endsWith(".parquet"))
       else Array(p)
-    files.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-      try r.getRecordCount finally r.close()
-    }.sum
+    files.map(footerRows(_, conf)).sum
+  }
+
+  /** The footer of one parquet file, read on the driver with `conf` (the
+    * session Hadoop conf wherever a session exists, so `spark.hadoop.*`
+    * settings and remote-FS credentials reach the read). The read
+    * options are built from `conf` too: without them
+    * `ParquetFileReader.open` builds a new Hadoop Configuration, parsing
+    * its default resources, for every footer — 12–27 ms each, several
+    * times the read itself. */
+  def footer(path: Path, conf: Configuration): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+    try r.getFooter finally r.close()
+  }
+
+  /** Rows in one parquet file, from its [[footer]]. */
+  def footerRows(path: Path, conf: Configuration): Long =
+    footer(path, conf).getBlocks.asScala.map(_.getRowCount).sum
+
+  /** An upper bound on `df`'s row count, from the footers of the parquet
+    * files it reads, on the driver (no Spark job): the footer rows of
+    * every file each parquet scan in its plan lists. `None` when the plan
+    * holds anything but parquet scans, projections, filters and aliases:
+    * a join or a generator can emit more rows than it reads, and no
+    * footer sum bounds those. */
+  def parquetRowBound(df: DataFrame): Option[Long] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val files = df.queryExecution.analyzed.collect {
+      case scan: LogicalRelation => scan.relation match {
+        case fs: HadoopFsRelation
+            if fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          Some(fs.location.inputFiles.toSeq)
+        case _ => None
+      }
+      case _: Project | _: Filter | _: SubqueryAlias | _: View => Some(Nil)
+      case _ => None
+    }
+    Option.when(files.forall(_.isDefined)) {
+      val conf = df.sparkSession.sparkContext.hadoopConfiguration
+      files.flatten.flatten.map(f => footerRows(new Path(new URI(f)), conf))
+        .sum
+    }
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -102,25 +153,15 @@ object Tables {
 
   private val rgMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def rowGroupCount(path: String,
-      conf: org.apache.hadoop.conf.Configuration): Int = {
+  private def rowGroupCount(path: String, conf: Configuration): Int = {
     // memo key carries (size, mtime) — the IndexCatalog.fileFingerprint
     // stance — so a file regenerated at the same path within one JVM
     // (test fixtures rewritten between suites) never reuses a stale
     // row-group count (ADVICE r16)
     val f = new java.io.File(path)
     val memoKey = s"$path:${f.length}:${f.lastModified}"
-    rgMemo.computeIfAbsent(memoKey, { _ =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      // session Hadoop conf, not a bare Configuration: spark.hadoop.*
-      // and remote-FS credentials must reach the footer probe on
-      // non-local filesystems (ADVICE r16)
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(path), conf))
-      try Integer.valueOf(r.getRowGroups.size()) finally r.close()
-    })
+    rgMemo.computeIfAbsent(memoKey, _ =>
+      Integer.valueOf(footer(new Path(path), conf).getBlocks.size()))
   }
 
   /** Plan-time unit guard for the raw-Long timestamp flavor: a Long
@@ -134,13 +175,9 @@ object Tables {
     * path — one footer read per (process, file). */
   private val nsGuardMemo =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def assertNanosMagnitude(path: String): Unit = {
+  private def assertNanosMagnitude(path: String,
+      conf: Configuration): Unit = {
     if (nsGuardMemo.contains(path)) return
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = new Configuration()
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val file =
@@ -148,29 +185,25 @@ object Tables {
         fs.listStatus(p).map(_.getPath)
           .find(_.getName.endsWith(".parquet")).getOrElse(p)
       else p
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = r.getFooter.getBlocks
-      if (!blocks.isEmpty) {
-        import scala.jdk.CollectionConverters._
-        blocks.get(0).getColumns.asScala
-          .find(_.getPath.toDotString == "ts")
-          .flatMap(c => Option(c.getStatistics))
-          .filter(_.hasNonNullValue)
-          .foreach { st =>
-            val min = st.genericGetMin match {
-              case l: java.lang.Long => l.longValue()
-              case _ => return // non-int64 stats: other branches handle
-            }
-            require(min >= 100000000000000000L,
-              s"events.ts is a raw Long but its minimum $min is not a " +
-                "nanosecond epoch — the driver changed the timestamp " +
-                "unit again; extend Tables.projectUpdates/updatesInRange " +
-                "with the new flavor instead of letting `div 1000000` " +
-                "mis-scale silently")
+    val blocks = footer(file, conf).getBlocks
+    if (!blocks.isEmpty) {
+      blocks.get(0).getColumns.asScala
+        .find(_.getPath.toDotString == "ts")
+        .flatMap(c => Option(c.getStatistics))
+        .filter(_.hasNonNullValue)
+        .foreach { st =>
+          val min = st.genericGetMin match {
+            case l: java.lang.Long => l.longValue()
+            case _ => return // non-int64 stats: other branches handle
           }
-      }
-    } finally r.close()
+          require(min >= 100000000000000000L,
+            s"events.ts is a raw Long but its minimum $min is not a " +
+              "nanosecond epoch — the driver changed the timestamp " +
+              "unit again; extend Tables.projectUpdates/updatesInRange " +
+              "with the new flavor instead of letting `div 1000000` " +
+              "mis-scale silently")
+        }
+    }
     nsGuardMemo.add(path)
   }
 
@@ -214,7 +247,8 @@ object Tables {
     val ev = table(spark, dir, "events")
     if (ev.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType)
-      assertNanosMagnitude(s"$dir/events.parquet")
+      assertNanosMagnitude(s"$dir/events.parquet",
+        spark.sparkContext.hadoopConfiguration)
     projectUpdates(ev)
   }
 
@@ -231,7 +265,8 @@ object Tables {
     val ev = table(spark, dir, "events")
     val ranged = ev.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        assertNanosMagnitude(s"$dir/events.parquet")
+        assertNanosMagnitude(s"$dir/events.parquet",
+          spark.sparkContext.hadoopConfiguration)
         ev.where(col("ts") >= loMs * 1000000L &&
           col("ts") < (hiMs + 1) * 1000000L)
       case org.apache.spark.sql.types.TimestampNTZType =>

@@ -2414,7 +2414,7 @@ object Similarity {
     // top-2 selection as ONE hash aggregation (VERDICT r16 #1): the
     // old rank window shuffled AND sorted the full candidate stream to
     // keep two rows per point; [[graft.plans.LongMin2]] is partial —
-    // the map side reduces each partition to a two-long buffer per
+    // the map side reduces each partition to a three-long buffer per
     // point, so the exchange carries O(points) rows, not O(pairs).
     // d1/d2n are the 1st/2nd order statistics of the d2 MULTISET in
     // both spellings (the window's vec_id tiebreak only permutes

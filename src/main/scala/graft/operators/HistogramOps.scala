@@ -155,13 +155,19 @@ object HistogramOps {
   private def interpolate(df: DataFrame,
       pcts: Seq[(Double, String)]): DataFrame =
     df.select(col("symbol") +: pcts.map { case (pct, out) =>
-      val rank = lit(pct / 100.0) * (col("_n") - 1)
-      val d = rank - floor(rank)
-      when(d === 0.0, col(s"_lo_$out"))
-        .otherwise(col(s"_lo_$out") +
-          (col(s"_hi_$out") - col(s"_lo_$out")) * d)
+      interpolated(pct, col("_n"), col(s"_lo_$out"), col(s"_hi_$out"))
         .as(out)
     }: _*)
+
+  /** The pct-percentile of `n` values from its two neighbours at ranks
+    * `floor(p·(n−1))` and one above: `lo + (hi − lo)·d`, `lo` itself when
+    * `d == 0`. */
+  private def interpolated(pct: Double, n: Column, lo: Column,
+      hi: Column): Column = {
+    val rank = lit(pct / 100.0) * (n - 1)
+    val d = rank - floor(rank)
+    when(d === 0.0, lo).otherwise(lo + (hi - lo) * d)
+  }
 
   /** Test hooks: the two LAZY percentile plans over an arbitrary input —
     * PlanSpec gates the bucketed plan's window shape (no hot-symbol
@@ -185,7 +191,8 @@ object HistogramOps {
     * passes cost more than the funnel it avoids. The same
     * adaptive-by-statistics principle as Spark's broadcast-vs-sort-merge
     * join selection; the count is already in hand from the cache-populating
-    * pass, so the choice is free. */
+    * pass, so the choice is free. [[stats]] holds a symbol's sorted prices
+    * in one task only under the same bound. */
   val PctWindowMaxRows: Long = 10_000_000L
 
   /** DuckDB twin of [[percentileBy]]: percentile of `valExpr` over
@@ -350,57 +357,124 @@ object HistogramOps {
     * (`Stats for [f64]`, histogram.rs:160-366): exact sum, min/max, mean,
     * manual median, TWO-PASS sample variance (the reference's algorithm),
     * stddev(+pct), MAD(+pct, ×1.4826), quartiles, IQR. Decimal accumulation
-    * keeps every aggregate bit-exact vs. the oracle. */
+    * keeps every aggregate bit-exact vs. the oracle.
+    *
+    * Two plans give bit-identical rows (OperatorPropertySpec):
+    *  - [[sortedStats]] when `updates` reads only parquet files whose
+    *    footers bound it to at most [[PctWindowMaxRows]] rows
+    *    ([[graft.Tables.parquetRowBound]], read on the driver): ONE
+    *    `groupBy("symbol")` aggregation collects n, the exact sum, min,
+    *    max and the symbol's sorted prices, and reads every other
+    *    statistic off that array, the way the reference reads its sorted
+    *    slice (`percentile_of_sorted`, histogram.rs:370-390). It launches
+    *    no Spark job while it is built. The array holds all of one
+    *    symbol's prices inside one task, so the bound keeps it to what
+    *    the window-sort percentile plan already sorts in one task;
+    *  - [[scanStats]] for every other input (one that reads no parquet
+    *    file, that the footers cannot bound, or that is above the bound):
+    *    a local per-symbol base aggregate, [[percentilesBy]] for the
+    *    quartiles and the MAD, and a variance pass joined to the base.
+    *
+    * Nulls and NaN follow the window-sort order in both plans. A null
+    * price counts in `n` and ranks below every number, so a percentile
+    * whose rank lands on it is null; NaN ranks above every number. The
+    * exact sum skips NaN (its decimal cast is null), while max is NaN. A
+    * zero divisor (`n = 1` for `var`, a zero mean or median for the
+    * percentages) gives null, as in the DuckDB twin, not an error. */
   def stats(updates: DataFrame): DataFrame = {
-    // per-symbol scalar aggregates: materialized local (consumed by the
-    // variance pass AND the final join — recomputing the scan twice is the
-    // alternative, caching it a leak)
-    val base = localized(updates.groupBy("symbol").agg(
-      count(lit(1)).as("n"),
-      exactSum(col("price")).as("sum"),
-      min(col("price")).as("min"),
-      max(col("price")).as("max"))
-      .withColumn("mean", col("sum") / col("n"))
-      .withColumn("maxdev",
-        greatest(col("max") - col("mean"), col("mean") - col("min")))
-      .withColumn("vscale", vscaleLadder(col("maxdev"))))
-    // q1/median/q3 share one sorted pass
+    val fromSorted = graft.Tables.parquetRowBound(updates)
+      .exists(_ <= PctWindowMaxRows)
+    val per = if (fromSorted) sortedStats(updates) else scanStats(updates)
+    per.select(col("symbol"), col("n"), col("sum"), col("min"), col("max"),
+      col("mean"), col("median"), variance.as("var"),
+      sqrt(variance).as("std_dev"),
+      (try_divide(sqrt(variance), col("mean")) * 100.0).as("std_dev_pct"),
+      (col("_mdev") * 1.4826).as("mad"),
+      (try_divide(col("_mdev") * 1.4826, col("median")) * 100.0)
+        .as("mad_pct"),
+      col("q1"), col("q3"), (col("q3") - col("q1")).as("iqr"))
+  }
+
+  /** n, the exact sum, min and max per symbol. */
+  private val baseAggs: Seq[Column] = Seq(
+    count(lit(1)).as("n"),
+    exactSum(col("price")).as("sum"),
+    min(col("price")).as("min"),
+    max(col("price")).as("max"))
+
+  /** The mean and the variance quantizer's scale, from [[baseAggs]]. */
+  private def withMean(base: DataFrame): DataFrame = base
+    .withColumn("mean", col("sum") / col("n"))
+    .withColumn("maxdev",
+      greatest(col("max") - col("mean"), col("mean") - col("min")))
+    .withColumn("vscale", vscaleLadder(col("maxdev")))
+
+  // Determinism contract for the two-pass variance: the squared
+  // deviation is an ARBITRARY double, and double→decimal casts are not
+  // bit-portable (Spark goes through the shortest decimal repr, DuckDB
+  // expands the exact binary value — divergence surfaced at sf0.1 after
+  // passing at sf0.01). Quantize each term to the exact INTEGER
+  // floor(d²·vscale), sum exactly in wide decimal, divide once. vscale
+  // is a per-symbol POWER OF TWO picked by [[vscaleLadder]] so that
+  // d²·vscale provably stays ≤ 2^53: the product is a lossless exponent
+  // shift, floor() of it is an integer-valued double both engines cast
+  // identically — at ANY price scale, not just |dev| ≤ ~9.5e3 as the
+  // old fixed 1e8 scale required. The per-term floor shifts var by
+  // ≤ n·2^-k/Σ (~1e-12 relative at default granularity), far below
+  // statistical meaning; same quantize-then-exact pattern as
+  // TextOps.lnQ.
+  private def varTerm(price: Column): Column =
+    floor((price - col("mean")) * (price - col("mean")) * col("vscale"))
+      .cast("decimal(38,0)")
+
+  /** The sample variance from the exact sum of [[varTerm]]s, `_vsum`. */
+  private def variance: Column =
+    try_divide(col("_vsum").cast("double") / col("vscale"), col("n") - 1)
+
+  /** [[stats]]' per-symbol columns from one aggregation over a bounded
+    * input. `_s` holds the symbol's non-null prices sorted as the window
+    * plan sorts them; its `_k = n − size(_s)` nulls rank first, so the
+    * value at rank r is `_s[r − _k]`, and `get` gives null below `_k`
+    * (a null price) and past the end (the unused `hi` at rank n). */
+  private def sortedStats(updates: DataFrame): DataFrame = {
+    def pct(sorted: Column, p: Double): Column = {
+      val lrank = floor(lit(p / 100.0) * (col("n") - 1))
+      def at(r: Column) = get(sorted, (r - col("_k")).cast("int"))
+      interpolated(p, col("n"), at(lrank), at(lrank + 1))
+    }
+    // no price is null in `_s`, and a non-null mean makes every term
+    // non-null, so this fold is the null-skipping decimal `sum` of the
+    // scan plan; a null mean (no price with a decimal cast) gives null
+    val vsum = aggregate(col("_s"), lit(0).cast("decimal(38,0)"),
+      (acc, x) => (acc + varTerm(x)).cast("decimal(38,0)"))
+    withMean(updates.where(col("symbol").isNotNull).groupBy("symbol")
+      .agg(baseAggs.head,
+        baseAggs.tail :+ sort_array(collect_list(col("price"))).as("_s"): _*))
+      .withColumn("_k", col("n") - size(col("_s")))
+      .withColumn("median", pct(col("_s"), 50.0))
+      .withColumn("q1", pct(col("_s"), 25.0))
+      .withColumn("q3", pct(col("_s"), 75.0))
+      .withColumn("_vsum", when(col("mean").isNotNull, vsum))
+      .withColumn("_mdev", pct(
+        sort_array(transform(col("_s"), x => abs(x - col("median")))), 50.0))
+  }
+
+  /** [[stats]]' per-symbol columns for any input: the per-symbol base
+    * aggregate is materialized local (consumed by the variance pass AND
+    * the final join — recomputing the scan twice is the alternative,
+    * caching it a leak); q1/median/q3 share one sorted pass. */
+  private def scanStats(updates: DataFrame): DataFrame = {
+    val base = localized(withMean(
+      updates.groupBy("symbol").agg(baseAggs.head, baseAggs.tail: _*)))
     val quartiles = percentilesBy(updates, col("price"),
       Seq(25.0 -> "q1", 50.0 -> "median", 75.0 -> "q3"))
-    val med = quartiles.select("symbol", "median")
-    val withMean = updates.join(
-      base.select(col("symbol"), col("mean"), col("vscale")), "symbol")
-    // Determinism contract for the two-pass variance: the squared
-    // deviation is an ARBITRARY double, and double→decimal casts are not
-    // bit-portable (Spark goes through the shortest decimal repr, DuckDB
-    // expands the exact binary value — divergence surfaced at sf0.1 after
-    // passing at sf0.01). Quantize each term to the exact INTEGER
-    // floor(d²·vscale), sum exactly in wide decimal, divide once. vscale
-    // is a per-symbol POWER OF TWO picked by [[vscaleLadder]] so that
-    // d²·vscale provably stays ≤ 2^53: the product is a lossless exponent
-    // shift, floor() of it is an integer-valued double both engines cast
-    // identically — at ANY price scale, not just |dev| ≤ ~9.5e3 as the
-    // old fixed 1e8 scale required. The per-term floor shifts var by
-    // ≤ n·2^-k/Σ (~1e-12 relative at default granularity), far below
-    // statistical meaning; same quantize-then-exact pattern as
-    // TextOps.lnQ.
-    val d2 = (col("price") - col("mean")) * (col("price") - col("mean"))
-    val varDf = withMean.groupBy("symbol").agg(
-      (sum(floor(d2 * col("vscale")).cast("decimal(38,0)")).cast("double") /
-        max(col("vscale")) / (count(lit(1)) - 1)).as("var"))
-    val mdev = {
-      val wMed = updates.join(med, "symbol")
-      percentileBy(wMed, abs(col("price") - col("median")), 50.0, "_mdev")
-    }
-    base.join(quartiles, "symbol")
-      .join(varDf, "symbol").join(mdev, "symbol")
-      .select(col("symbol"), col("n"), col("sum"), col("min"), col("max"),
-        col("mean"), col("median"), col("var"),
-        sqrt(col("var")).as("std_dev"),
-        (sqrt(col("var")) / col("mean") * 100.0).as("std_dev_pct"),
-        (col("_mdev") * 1.4826).as("mad"),
-        (col("_mdev") * 1.4826 / col("median") * 100.0).as("mad_pct"),
-        col("q1"), col("q3"), (col("q3") - col("q1")).as("iqr"))
+    val vsum = updates
+      .join(base.select(col("symbol"), col("mean"), col("vscale")), "symbol")
+      .groupBy("symbol").agg(sum(varTerm(col("price"))).as("_vsum"))
+    val mdev = percentileBy(
+      updates.join(quartiles.select("symbol", "median"), "symbol"),
+      abs(col("price") - col("median")), 50.0, "_mdev")
+    base.join(quartiles, "symbol").join(vsum, "symbol").join(mdev, "symbol")
   }
 
   val statsSql: String =

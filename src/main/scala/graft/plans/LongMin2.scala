@@ -15,17 +15,17 @@ import org.apache.spark.sql.types._
   * rank ≤ 2): the window shuffles and SORTS the full candidate pair
   * stream — O(n·candidates) rows — only to discard everything past rank
   * 2, while this aggregate is hash-based (no sort) and partial: the
-  * map side reduces every partition to a two-long buffer per group, so
-  * the exchange carries two longs per (group, map task) instead of the
-  * candidate stream (optimization guide §2.3 "aggregate before you
-  * shuffle"). Values equal in `d2` are interchangeable for both
+  * map side reduces every partition to a three-long buffer per group
+  * (the two smallest values and a count), so the exchange carries three
+  * longs per (group, map task) instead of the candidate stream
+  * (optimization guide §2.3 "aggregate before you shuffle"). Values equal in `d2` are interchangeable for both
   * outputs, so dropping the window's `vec_id` tiebreak cannot change
   * either order statistic — results are bit-identical.
   *
-  * Buffer sentinel: `Long.MaxValue` stands for "no value yet". Callers
-  * must guarantee the input never legitimately reaches Long.MaxValue —
-  * the twoNN quantization guard bounds d2 ≤ 230·(2·10⁸)² ≈ 9.2·10¹⁸ <
-  * 2⁶³−1. Null inputs are skipped (min semantics).
+  * The buffer counts the non-null values it has seen, so every long,
+  * `Long.MaxValue` included, is a value: `d1` is null until one value
+  * has been seen and `d2n` until two have. Null inputs are skipped (min
+  * semantics).
   */
 case class LongMin2(child: Expression)
     extends DeclarativeAggregate with ImplicitCastInputTypes
@@ -42,29 +42,38 @@ case class LongMin2(child: Expression)
     AttributeReference("m1", LongType, nullable = false)()
   private lazy val m2 =
     AttributeReference("m2", LongType, nullable = false)()
-  private def inf: Literal = Literal(Long.MaxValue, LongType)
+  private lazy val seen =
+    AttributeReference("seen", LongType, nullable = false)()
+  // the identity of Least, so a slot not yet filled never wins it; `seen`
+  // tells such a slot from a real Long.MaxValue
+  private def top: Literal = Literal(Long.MaxValue, LongType)
 
   override lazy val aggBufferAttributes
-      : Seq[AttributeReference] = Seq(m1, m2)
-  override lazy val initialValues: Seq[Expression] = Seq(inf, inf)
+      : Seq[AttributeReference] = Seq(m1, m2, seen)
+  override lazy val initialValues: Seq[Expression] =
+    Seq(top, top, Literal(0L, LongType))
 
   // x joins the running top-2: m1' = min(m1, x),
   // m2' = min(m2, max(m1, x)) — the displaced candidate is whichever
   // of (old m1, x) is larger. Null x leaves the buffer untouched.
   override lazy val updateExpressions: Seq[Expression] = Seq(
     If(IsNull(child), m1, Least(Seq(m1, child))),
-    If(IsNull(child), m2, Least(Seq(m2, Greatest(Seq(m1, child))))))
+    If(IsNull(child), m2, Least(Seq(m2, Greatest(Seq(m1, child))))),
+    If(IsNull(child), seen, Add(seen, Literal(1L, LongType))))
 
   // second-smallest of the merged multiset {a1, a2, b1, b2} with
   // a1 ≤ a2, b1 ≤ b2: min(a2, b2, max(a1, b1)).
   override lazy val mergeExpressions: Seq[Expression] = Seq(
     Least(Seq(m1.left, m1.right)),
-    Least(Seq(m2.left, m2.right, Greatest(Seq(m1.left, m1.right)))))
+    Least(Seq(m2.left, m2.right, Greatest(Seq(m1.left, m1.right)))),
+    Add(seen.left, seen.right))
 
   override lazy val evaluateExpression: Expression =
     CreateNamedStruct(Seq(
-      Literal("d1"), If(EqualTo(m1, inf), Literal(null, LongType), m1),
-      Literal("d2n"), If(EqualTo(m2, inf), Literal(null, LongType), m2)))
+      Literal("d1"),
+      If(GreaterThanOrEqual(seen, Literal(1L)), m1, Literal(null, LongType)),
+      Literal("d2n"),
+      If(GreaterThanOrEqual(seen, Literal(2L)), m2, Literal(null, LongType))))
 
   override protected def withNewChildInternal(
       newChild: Expression): Expression = copy(child = newChild)

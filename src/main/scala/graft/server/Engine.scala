@@ -3,10 +3,7 @@ package graft.server
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetCompressionCodec
 import org.apache.spark.sql.functions._
@@ -106,6 +103,9 @@ final class Engine(spark: SparkSession, dtfFolder: String,
   private val defaultSession = new Session
   books(defaultSession.book) = mutable.ArrayBuffer.empty
   new java.io.File(dtfFolder).mkdirs()
+  // no flush of this engine is in flight before its first command, so
+  // every in-progress file already here is a crashed flush's leftover
+  FlushWriter.sweepInProgress(new java.io.File(dtfFolder))
 
   private def fsPath(book: String) = s"$dtfFolder/book=$book"
   private def hasFs(book: String) = new java.io.File(fsPath(book)).exists()
@@ -521,18 +521,10 @@ final class Engine(spark: SparkSession, dtfFolder: String,
   }
 
   /** The footer of one parquet file, read with the session Hadoop conf
-    * (as Tables' footer probe), so `spark.hadoop.*` settings reach the
-    * read. The read options come from that conf too: without them
-    * `ParquetFileReader.open` builds a new Hadoop Configuration, parsing
-    * its default resources, for every footer — about 12 ms each, more
-    * than the rest of a flush's max-ts read. */
-  private def footerOf(f: java.io.File): ParquetMetadata = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new org.apache.hadoop.fs.Path(f.getPath)
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
-      HadoopReadOptions.builder(conf, path).build())
-    try r.getFooter finally r.close()
-  }
+    * ([[graft.Tables.footer]]). */
+  private def footerOf(f: java.io.File): ParquetMetadata =
+    graft.Tables.footer(new org.apache.hadoop.fs.Path(f.getPath),
+      spark.sparkContext.hadoopConfiguration)
 
   /** Runs `body` holding the READ side of [[swapGate]]. The barging
     * `tryLock` never queues behind a waiting swap: a caller already

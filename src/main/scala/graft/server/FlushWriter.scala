@@ -55,6 +55,25 @@ private[graft] object FlushWriter {
     * complete. */
   def inProgressName(name: String): String = s".$name.inprogress"
 
+  /** Deletes the in-progress files that crashed flushes left in the
+    * `day=` leaves of the books under `dtfFolder`. Nothing else ever removes them: every reader skips
+    * them, and compaction moves only whole `*.parquet` files. Call it
+    * only where no flush into `dtfFolder` can be in flight, as
+    * [[Engine]] does once at start-up. */
+  def sweepInProgress(dtfFolder: File): Unit = {
+    def dirs(d: File, prefix: String): Seq[File] =
+      Option(d.listFiles()).toSeq.flatten
+        .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+    val leftovers = for {
+      book <- dirs(dtfFolder, "book=")
+      leaf <- dirs(book, s"${TickStore.DayCol}=")
+      f <- Option(leaf.listFiles()).toSeq.flatten
+      if f.isFile && f.getName.startsWith(".part-") &&
+        f.getName.endsWith(".parquet.inprogress")
+    } yield f
+    leftovers.foreach(_.delete())
+  }
+
   /** Writes `rows`, sorted by (ts, seq), as one file per day into
     * `bookDir/day=<epochDay>/`, in ascending day order, and returns the
     * days written. Ascending order keeps a failed flush retryable: the

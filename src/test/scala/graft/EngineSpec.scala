@@ -708,6 +708,18 @@ class EngineSpec extends SparkSpec {
 
     assert(e.bookSizes().find(_._1 == "cr").map(_._2) ===
       Some(parquetFiles(bookDir).map(_.length).sum))
+
+    // an engine started over the dir sweeps both leftovers away, and
+    // the whole files it keeps still count every row
+    def leftovers = bookDir.listFiles().toSeq
+      .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+      .filter(_.getName.endsWith(".inprogress"))
+    assert(leftovers.size === 2, leftovers.mkString(", "))
+    val restarted = new Engine(spark, dir)
+    assert(leftovers.isEmpty, leftovers.mkString(", "))
+    restarted.execute(CommandParser.parse("USE cr"))
+    assert(restarted.execute(CommandParser.parse("COUNT")) ===
+      restarted.Text("6"))
   }
 
   /** The GET reply the Spark formulation GET had before it moved to the

@@ -69,6 +69,59 @@ class OperatorPropertySpec extends SparkSpec {
     }
   }
 
+  test("stats: the sorted-array plan over parquet == the scan plan over " +
+      "the same rows, bit for bit, nulls and NaN included") {
+    import graft.operators.HistogramOps
+    import spark.implicits._
+    // doubles as their bits: -0.0 and 0.0 differ, every NaN is one value
+    def bits(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      df.collect().toSeq.map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case v => v
+      }).sortBy(_.head.toString)
+    // c has one row (var has no divisor); d has a null price and e a NaN
+    // next to ties; y's median and z's mean are zero (the percentages
+    // have no divisor); the null symbol drops out of both plans
+    val edge = Seq[(String, Option[Double])](
+      "c" -> Some(2.5),
+      "d" -> Some(1.0), "d" -> None, "d" -> Some(1.0), "d" -> Some(3.0),
+      "e" -> Some(2.0), "e" -> Some(Double.NaN), "e" -> Some(2.0),
+      "e" -> Some(0.5),
+      "y" -> Some(0.0), "y" -> Some(0.0), "y" -> Some(0.0), "y" -> Some(1.0),
+      "z" -> Some(0.0), "z" -> Some(0.0),
+      (null, Some(4.0))).toDF("symbol", "price")
+    val inputs = cases(8).filter(_.nonEmpty).map(updatesDf) :+ edge
+    inputs.zipWithIndex.foreach { case (local, i) =>
+      val dir = java.nio.file.Files.createTempDirectory("graft-stats")
+        .resolve("u").toString
+      local.write.parquet(dir)
+      val scanned = spark.read.parquet(dir)
+      // the footer bound picks the sorted-array plan for the parquet
+      // scan and cannot bound the local relation, which keeps the scan plan
+      assert(Tables.parquetRowBound(scanned) === Some(local.count()))
+      assert(Tables.parquetRowBound(local) === None)
+      val got = bits(HistogramOps.stats(scanned))
+      assert(got.nonEmpty && got === bits(HistogramOps.stats(local)),
+        s"case $i")
+    }
+  }
+
+  test("stats over a parquet-backed updates is built without a Spark job " +
+      "and runs as one aggregation") {
+    import graft.operators.HistogramOps
+    import org.apache.spark.sql.catalyst.plans.logical.{Join,
+      LocalRelation, Window}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val u = Tables.updates(spark, sf())
+    val (df, jobs) = jobsDuring(HistogramOps.stats(u))
+    assert(jobs.isEmpty, jobs.mkString(", "))
+    val barriers = df.queryExecution.optimizedPlan.collect {
+      case p @ (_: Join | _: Window | _: LocalRelation | _: InMemoryRelation)
+        => p.nodeName
+    }
+    assert(barriers.isEmpty, barriers.mkString(", "))
+  }
+
   test("event classification matches a scalar replay (event.rs:28-72)") {
     cases(10).foreach { ups =>
       val got = EventsOps.classify(updatesDf(ups))
