@@ -193,21 +193,38 @@ object Streaming {
   def subscribe(updates: Dataset[Update], book: String): Dataset[Update] =
     updates.filter(_.symbol == book)
 
-  /** Streaming exact dedup on the natural key (symbol, ts, seq):
-    * watermarked `dropDuplicates`, so replayed/overlapping frames (the
-    * case the reference's append path panics on, `file_format.rs:798-800`)
-    * collapse instead of corrupting downstream state. The watermark bounds
-    * the dedup state — keys older than the horizon age out. */
-  def streamingDedup(updates: Dataset[Update],
-      watermark: String = "10 minutes"): Dataset[Update] = {
+  /** A book's dedup high-water mark: the largest (ts, seq) emitted. */
+  case class DedupMark(ts: Long, seq: Long)
+
+  /** Streaming dedup on a per-book (ts, seq) high-water mark — the
+    * reference's append rule (S6, `file_format.rs:780-819`): a row at or
+    * below its book's mark is dropped, so replayed or overlapping frames
+    * (the case the reference's append path panics on) collapse, and a row
+    * that arrives after a newer row of its book is dropped as late. Rows of
+    * a book fold in (ts, seq) order within a micro-batch; every emitted row
+    * advances the mark. State is the mark alone, one row per book. There is
+    * no watermark: a moving watermark costs a dataless trigger after every
+    * data batch, and a watermark on a key without event time never evicted
+    * any state. */
+  def streamingDedup(updates: Dataset[Update]): Dataset[Update] = {
     import updates.sparkSession.implicits._
-    updates
-      .withColumn("event_time",
-        timestamp_millis(graft.functions.fillDigits(col("ts"))))
-      .withWatermark("event_time", watermark)
-      .dropDuplicates("symbol", "ts", "seq")
-      .drop("event_time")
-      .as[Update]
+    def fn(sym: String, rows: Iterator[Update],
+        state: GroupState[DedupMark]): Iterator[Update] = {
+      var mark = state.getOption.orNull
+      val out = Seq.newBuilder[Update]
+      rows.toSeq.sortBy(u => (u.ts, u.seq)).foreach { u =>
+        if (mark == null || u.ts > mark.ts ||
+            (u.ts == mark.ts && u.seq > mark.seq)) {
+          out += u
+          mark = DedupMark(u.ts, u.seq)
+        }
+      }
+      if (mark != null) state.update(mark)
+      out.result().iterator
+    }
+    updates.groupByKey(_.symbol)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(fn)
   }
 
   /** Streaming as-of join (the incremental twin of
@@ -1418,7 +1435,10 @@ object Streaming {
     * (`rq = floor(ln(hc/lc)·1e8)`, loud 2e9 bound, zero-cent lows
     * dropped), and emits the CURRENT estimate from the exact running
     * sums — so after a far-future closer the last serving row equals
-    * the batch operator bit-for-bit (MicrostructureFuzzSpec). */
+    * the batch operator bit-for-bit (MicrostructureFuzzSpec). A trade
+    * from an already-closed bucket is late and dropped; trades within
+    * the open bucket fold in any arrival order, since high and low do
+    * not depend on it (StreamingSpec). */
   def streamingParkinson(updates: Dataset[Update],
       seconds: Long = 60): Dataset[ParkRow] = {
     import updates.sparkSession.implicits._
@@ -1463,10 +1483,11 @@ object Streaming {
           val c = cents(sym, u.price)
           if (st.bucket == Unset)
             st = st.copy(bucket = b, hc = c, lc = c)
-          else if (b != st.bucket)
+          else if (b > st.bucket)
             st = closeBucket(sym, st).copy(bucket = b, hc = c, lc = c)
-          else st = st.copy(hc = math.max(st.hc, c),
+          else if (b == st.bucket) st = st.copy(hc = math.max(st.hc, c),
             lc = math.min(st.lc, c))
+          // else: a trade from a closed bucket is late and dropped
         }
       state.update(st)
       Iterator.single(emit(sym, st))

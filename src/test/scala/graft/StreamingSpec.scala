@@ -518,6 +518,36 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("streaming parkinson drops a trade from a closed minute that " +
+      "arrives in a later micro-batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val t0 = 1700000040000L // minute-aligned
+    def tr(minute: Int, sec: Int, seq: Long, price: Double) =
+      Update("p", t0 + minute * 60000L + sec * 1000L, seq, is_trade = true,
+        is_bid = true, price, 1.0)
+    val b1 = Seq(tr(0, 0, 0, 100.0), tr(0, 10, 1, 102.0),
+      tr(1, 0, 2, 101.0), tr(1, 10, 3, 99.5))
+    // minute 0 closed when minute 1 opened
+    val late = tr(0, 20, 4, 97.0)
+    val b2 = Seq(late, tr(2, 0, 5, 100.0), tr(2, 30, 6, 103.25))
+    val closer = tr(120, 0, 7, 100.0)
+    val r = graft.operators.RangeSpread.parkinson(updatesDf(b1 ++ b2.tail))
+      .collect().head
+    val want = (r.getLong(1), Some(r.getLong(2)), Some(r.getDouble(3)),
+      Some(r.getDouble(4)))
+    assert(want._1 === 3L)
+    val in = MemoryStream[Update]
+    val q = Streaming.streamingParkinson(in.toDS()).writeStream
+      .outputMode("append").format("memory").queryName("sparklate")
+      .start()
+    try Seq(b1, b2, Seq(closer)).foreach { b =>
+      in.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    val g = spark.table("sparklate").as[Streaming.ParkRow].collect().last
+    assert((g.n_buckets, g.sum_rq2, g.park_var, g.park_vol) === want)
+  }
+
   test("streaming rogers-satchell: after sentinel closers the serving " +
       "row per symbol IS the batch estimator bit-exactly") {
     import spark.implicits._
@@ -855,6 +885,96 @@ class StreamingSpec extends SparkSpec {
     val seqs = spark.table("sdedup").select("seq")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(seqs === Seq(0L, 1L, 2L))
+  }
+
+  /** Feeds `batches` to `streamingDedup`, one micro-batch each; returns
+    * the emitted (symbol, ts, seq) keys, sorted, duplicates kept. */
+  private def dedupRun(name: String, batches: Seq[Update]*)
+      : Seq[(String, Long, Long)] = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Update]
+    val q = Streaming.streamingDedup(in.toDS()).writeStream
+      .outputMode("append").format("memory").queryName(name).start()
+    try batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    finally q.stop()
+    spark.table(name).as[Update].collect()
+      .map(u => (u.symbol, u.ts, u.seq)).sorted.toSeq
+  }
+
+  private def dedupUp(sym: String, ts: Long, seq: Long) =
+    Update(sym, ts, seq, is_trade = true, is_bid = true, 1.0 + seq, 2.0)
+
+  test("streaming dedup drops in-batch duplicates and cross-batch " +
+      "replays") {
+    def up(i: Int) = dedupUp("d", i, i)
+    val got = dedupRun("sdedup_replay",
+      Seq(up(2), up(0), up(1), up(1), up(0)),
+      Seq(up(1), up(2), up(3), up(3)),
+      (0 to 3).map(up) :+ up(4))
+    assert(got === (0 to 4).map(i => ("d", i.toLong, i.toLong)))
+  }
+
+  test("streaming dedup keeps a same-ts row with a higher seq from a " +
+      "later batch") {
+    val got = dedupRun("sdedup_seq",
+      Seq(dedupUp("d", 0, 5)),
+      Seq(dedupUp("d", 0, 6), dedupUp("d", 0, 5)))
+    assert(got === Seq(("d", 0L, 5L), ("d", 0L, 6L)))
+  }
+
+  test("streaming dedup drops a late row at or below the book's " +
+      "(ts, seq) mark") {
+    val got = dedupRun("sdedup_late",
+      Seq(dedupUp("d", 10, 1)),
+      // earlier ts with a higher seq, same ts with a lower seq: both late
+      Seq(dedupUp("d", 5, 2), dedupUp("d", 10, 0), dedupUp("d", 11, 3)))
+    assert(got === Seq(("d", 10L, 1L), ("d", 11L, 3L)))
+  }
+
+  test("streaming dedup keeps one mark per book: books do not " +
+      "interfere") {
+    val got = dedupRun("sdedup_books",
+      Seq(dedupUp("a", 100, 1), dedupUp("b", 1, 1)),
+      // b's row is below a's mark but above b's; a's row is late
+      Seq(dedupUp("b", 2, 2), dedupUp("a", 50, 2)))
+    assert(got === Seq(("a", 100L, 1L), ("b", 1L, 1L), ("b", 2L, 2L)))
+  }
+
+  test("bench twins run one trigger per micro-batch; dedup keeps one " +
+      "state row per book") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val books = Seq("b0", "b1", "b2")
+    val n = 4
+    val in = MemoryStream[Update]
+    val ds = in.toDS()
+    val twins = Seq(
+      "g_vbars" -> Streaming.streamingVolumeBars(ds, 10.0).toDF(),
+      "g_flow" -> Streaming.streamingTickRuleFlow(ds).toDF(),
+      "g_dedup" -> Streaming.streamingDedup(ds).toDF())
+    val qs = twins.map { case (name, df) =>
+      name -> df.writeStream.outputMode("append").format("memory")
+        .queryName(name).start()
+    }.toMap
+    try (0 until n).foreach { k =>
+      // 20 trades per book a minute apart, every fifth sent twice
+      val rows = books.flatMap(b => (0 until 20).map { i =>
+        val j = k * 20 + i
+        Update(b, 1700000000000L + j * 60000L, j.toLong, is_trade = true,
+          is_bid = true, 10.0 + j % 3, 1.0 + i % 4)
+      })
+      in.addData(rows ++ rows.zipWithIndex.collect {
+        case (u, i) if i % 5 == 0 => u }: _*)
+      qs.values.foreach(_.processAllAvailable())
+    } finally qs.values.foreach(_.stop())
+    qs.foreach { case (name, q) =>
+      assert(q.recentProgress.map(_.batchId).distinct.length === n,
+        s"$name triggers")
+    }
+    val last = qs("g_dedup").recentProgress.filter(_.numInputRows > 0).last
+    assert(last.stateOperators.map(_.numRowsTotal).sum === books.size)
+    assert(spark.table("g_dedup").count() === books.size * n * 20)
   }
 
   test("streaming volume bars match the batch fold's closed bars") {
