@@ -25,6 +25,16 @@ object Streaming {
     * no per-trigger shuffle of the bigger side. */
   val BroadcastCodesMaxRows: Long = 1000000L
 
+  /** The input of a stateful twin: installs [[LocalCheckpointFileManager]]
+    * on its session, so the query's offsets and commits logs and its
+    * state files are written without forked processes on local paths.
+    * Called when the twin is built, since `start()` reads the manager
+    * class from the session. */
+  private def localCheckpoints[T](ds: Dataset[T]): Dataset[T] = {
+    LocalCheckpointFileManager.install(ds.sparkSession)
+    ds
+  }
+
   /** Ingest deserializer (S7): lines like
     * `"1505177459.658, 139010, t, f, 0.0703629, 7.65064249; bookname"`
     * — here the stream carries (book, line) pairs; malformed lines drop
@@ -68,7 +78,7 @@ object Streaming {
         Iterator.single(BookTop(sym, bb, ba, (bb + ba) / 2, b.size))
       }
     }
-    updates
+    localCheckpoints(updates)
       .groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
@@ -77,7 +87,7 @@ object Streaming {
   /** Streaming 1-minute OHLCV bars with watermarking (T6 — new capability
     * vs. the reference). */
   def streamingTimeBars(updates: DataFrame, seconds: Long = 60): DataFrame =
-    updates
+    localCheckpoints(updates)
       .withColumn("event_time",
         timestamp_millis(graft.functions.fillDigits(col("ts"))))
       .withWatermark("event_time", "10 minutes")
@@ -104,7 +114,7 @@ object Streaming {
     * as the same single IEEE division. */
   def streamingVwapBars(updates: DataFrame, seconds: Long = 60)
       : DataFrame =
-    updates
+    localCheckpoints(updates)
       .withColumn("event_time",
         timestamp_millis(graft.functions.fillDigits(col("ts"))))
       .withWatermark("event_time", "10 minutes")
@@ -131,7 +141,7 @@ object Streaming {
     * decimal sums per side, same guarded ratio. */
   def streamingTradeImbalance(updates: DataFrame, seconds: Long = 60)
       : DataFrame =
-    updates
+    localCheckpoints(updates)
       .withColumn("event_time",
         timestamp_millis(graft.functions.fillDigits(col("ts"))))
       .withWatermark("event_time", "10 minutes")
@@ -171,7 +181,7 @@ object Streaming {
     def sideLast(side: org.apache.spark.sql.Column) =
       max_by(when(side, col("price")),
         when(side, struct(col("ts"), col("seq"))))
-    updates
+    localCheckpoints(updates)
       .withColumn("event_time",
         timestamp_millis(graft.functions.fillDigits(col("ts"))))
       .withWatermark("event_time", "10 minutes")
@@ -222,7 +232,7 @@ object Streaming {
       if (mark != null) state.update(mark)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -262,7 +272,7 @@ object Streaming {
       q.foreach(state.update)
       out.result().iterator
     }
-    updates
+    localCheckpoints(updates)
       .groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
@@ -275,8 +285,11 @@ object Streaming {
     * weight live in bounded per-symbol state. Same sampler quirks as the
     * batch fold (boundary trade starts the next bar, first trade of a run
     * never feeds the accumulator). Rows within a batch are processed in
-    * (ts, seq) order; cross-batch disorder is dropped late data (the
-    * reference drops late data at flush too, SURVEY T6). */
+    * (ts, seq) order, but across batches they fold in arrival order:
+    * a row older than rows of an earlier batch is not dropped, it
+    * extends the open bar (its ts becomes the bar's end) and feeds the
+    * accumulator. So the bars equal the batch fold only when the feed
+    * is in (ts, seq) order across batches. */
   case class BarState(cur: Option[Candle], elapsed: Double)
 
   def streamingVolumeBars(updates: Dataset[Update], interval: Double)
@@ -307,7 +320,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates
+    localCheckpoints(updates)
       .groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
@@ -372,7 +385,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -419,7 +432,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -480,7 +493,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -542,7 +555,7 @@ object Streaming {
       if (st != null) state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -556,7 +569,7 @@ object Streaming {
     * apply here). */
   def streamingOrderTradeRatio(updates: DataFrame, seconds: Long = 60)
       : DataFrame =
-    updates
+    localCheckpoints(updates)
       .withColumn("event_time",
         timestamp_millis(graft.functions.fillDigits(col("ts"))))
       .withWatermark("event_time", "10 minutes")
@@ -639,7 +652,7 @@ object Streaming {
       if (st != null) state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(u => (u.symbol, u.is_bid))
+    localCheckpoints(updates).groupByKey(u => (u.symbol, u.is_bid))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -773,7 +786,7 @@ object Streaming {
       if (st != null) state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -839,7 +852,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -930,7 +943,7 @@ object Streaming {
       if (st != null) state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -986,7 +999,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1109,7 +1122,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1209,7 +1222,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1320,7 +1333,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1414,7 +1427,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1492,7 +1505,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1518,7 +1531,8 @@ object Streaming {
     * bounds, zero-cent lows and opens dropped), and the CURRENT
     * estimate is emitted from the exact running sum — after a
     * far-future closer the last serving row equals the batch operator
-    * bit-for-bit (StreamingSpec). */
+    * bit-for-bit (StreamingSpec). A trade from an already-closed bucket
+    * is late and dropped, as in [[streamingParkinson]]. */
   def streamingRogersSatchell(updates: Dataset[Update],
       seconds: Long = 60): Dataset[RsRow] = {
     import updates.sparkSession.implicits._
@@ -1570,11 +1584,11 @@ object Streaming {
           if (st.bucket == Unset)
             st = RsState(b, c, u.ts, u.seq, c, c, c, u.ts, u.seq,
               st.n, st.s)
-          else if (b != st.bucket) {
+          else if (b > st.bucket) {
             val closed = closeBucket(sym, st)
             st = RsState(b, c, u.ts, u.seq, c, c, c, u.ts, u.seq,
               closed.n, closed.s)
-          } else {
+          } else if (b == st.bucket) {
             val o =
               if (u.ts < st.ots || (u.ts == st.ots && u.seq < st.oseq))
                 (c, u.ts, u.seq) else (st.oc, st.ots, st.oseq)
@@ -1585,11 +1599,12 @@ object Streaming {
               hc = math.max(st.hc, c), lc = math.min(st.lc, c),
               cc = cl._1, cts = cl._2, cseq = cl._3)
           }
+          // else: a trade from a closed bucket is late and dropped
         }
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1621,7 +1636,8 @@ object Streaming {
     * past the decimal(38,0) regime exactly where the batch side now
     * raises) — and the CURRENT estimate is emitted with the batch
     * IEEE chain, so after a far-future closer the last serving row
-    * equals the batch operator bit-for-bit (StreamingSpec). */
+    * equals the batch operator bit-for-bit (StreamingSpec). A trade
+    * from an already-closed bucket is late and dropped. */
   def streamingYangZhang(updates: Dataset[Update],
       seconds: Long = 60): Dataset[YzRow] = {
     import updates.sparkSession.implicits._
@@ -1704,12 +1720,12 @@ object Streaming {
           if (st.bucket == Unset)
             st = st.copy(bucket = b, oc = c, ots = u.ts, oseq = u.seq,
               hc = c, lc = c, cc = c, cts = u.ts, cseq = u.seq)
-          else if (b != st.bucket) {
+          else if (b > st.bucket) {
             val closed = closeBucket(sym, st)
             st = closed.copy(bucket = b, oc = c, ots = u.ts,
               oseq = u.seq, hc = c, lc = c, cc = c, cts = u.ts,
               cseq = u.seq)
-          } else {
+          } else if (b == st.bucket) {
             val o =
               if (u.ts < st.ots || (u.ts == st.ots && u.seq < st.oseq))
                 (c, u.ts, u.seq) else (st.oc, st.ots, st.oseq)
@@ -1720,11 +1736,12 @@ object Streaming {
               hc = math.max(st.hc, c), lc = math.min(st.lc, c),
               cc = cl._1, cts = cl._2, cseq = cl._3)
           }
+          // else: a trade from a closed bucket is late and dropped
         }
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1823,7 +1840,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1918,7 +1935,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -1976,7 +1993,7 @@ object Streaming {
       state.update(st)
       Iterator.single(emit(sym, st))
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2135,7 +2152,7 @@ object Streaming {
       state.update(st)
       sortedScales.iterator.flatMap(s => emit(s, st(s.toString)))
     }
-    updates.groupByKey(_ => 0)
+    localCheckpoints(updates).groupByKey(_ => 0)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2270,7 +2287,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2345,7 +2362,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2398,7 +2415,7 @@ object Streaming {
           micro, bd, ad, imb))
       }
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2448,7 +2465,7 @@ object Streaming {
         (side(bids, isBid = true) ++ side(asks, isBid = false)).iterator
       }
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2506,7 +2523,7 @@ object Streaming {
       state.update(st)
       out.result().iterator
     }
-    updates.groupByKey(_.symbol)
+    localCheckpoints(updates).groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2546,7 +2563,7 @@ object Streaming {
       state.update(cum)
       out.result().iterator
     }
-    docs.groupByKey(_._2)
+    localCheckpoints(docs).groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -2581,7 +2598,7 @@ object Streaming {
       keeper.foreach(state.update)
       out.iterator
     }
-    docs.map { case (id, text) =>
+    localCheckpoints(docs).map { case (id, text) =>
       (graft.functions.md5Hex(text.getBytes("UTF-8")), id)
     }.groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
@@ -2627,7 +2644,7 @@ object Streaming {
   def streamingChunkDedup(docs: Dataset[(Long, String)],
       width: Int = 20): Dataset[ChunkDecision] = {
     import docs.sparkSession.implicits._
-    docs.flatMap { case (id, text) =>
+    localCheckpoints(docs).flatMap { case (id, text) =>
       graft.ext.TextOps.sqlWords(text).grouped(width).zipWithIndex
         .map { case (chunk, i) =>
           val t = chunk.mkString(" ")
@@ -2650,7 +2667,7 @@ object Streaming {
   def streamingCdcChunkDedup(docs: Dataset[(Long, String)], w: Int = 4,
       div: Int = 16): Dataset[ChunkDecision] = {
     import docs.sparkSession.implicits._
-    docs.flatMap { case (id, text) =>
+    localCheckpoints(docs).flatMap { case (id, text) =>
       graft.ext.Pipeline.cdcChunksOf(text, w, div).map { case (cid, t) =>
         (graft.functions.md5Hex(t.getBytes("UTF-8")), id, cid, t)
       }
@@ -2710,7 +2727,7 @@ object Streaming {
     // the watermark must be declared on the TIMESTAMP COLUMN that reaches
     // the stateful operator: a typed .map re-creates columns and drops
     // the event-time metadata, so hash first, watermark after
-    docs
+    localCheckpoints(docs)
       .map(d => (graft.functions.md5Hex(d.text.getBytes("UTF-8")),
         d.doc_id, d.ts))
       .toDF("hash", "doc_id", "ts")
@@ -2767,7 +2784,7 @@ object Streaming {
       state.update(members)
       out.result().iterator
     }
-    docs.flatMap { case (id, text) =>
+    localCheckpoints(docs).flatMap { case (id, text) =>
       val h = graft.ext.Dedup.simhash64(text)
       // packed bucket key: band index in the high bits, the (≤32-bit)
       // band value in the low 32 — collision-free for every bandBits
@@ -2834,7 +2851,7 @@ object Streaming {
           state.getCurrentWatermarkMs() + 1L))
       out.result().iterator
     }
-    docs.flatMap { case (id, text, ts) =>
+    localCheckpoints(docs).flatMap { case (id, text, ts) =>
       val h = graft.ext.Dedup.simhash64(text)
       (0 until nBands).map { b =>
         ((b.toLong << 32) | ((h >>> (bandBits * b)) & mask), id, h, ts)
@@ -2926,7 +2943,7 @@ object Streaming {
           state.getCurrentWatermarkMs() + 1L))
       out.result().iterator
     }
-    vecs.map(v => (assign(v.emb), v.vec_id, v.emb, v.ts))
+    localCheckpoints(vecs).map(v => (assign(v.emb), v.vec_id, v.emb, v.ts))
       .toDF("cell", "vec_id", "emb", "ts")
       .withWatermark("ts", watermarkDelay)
       .as[(Long, Long, Array[Double], java.sql.Timestamp)]
@@ -3005,7 +3022,7 @@ object Streaming {
       state.update(members)
       out.result().iterator
     }
-    docs.flatMap { case (id, text) =>
+    localCheckpoints(docs).flatMap { case (id, text) =>
       val shset = graft.ext.Dedup.shingleSet(text, n)
       if (shset.isEmpty) Iterator.empty
       else {
@@ -3073,7 +3090,7 @@ object Streaming {
           state.getCurrentWatermarkMs() + 1L))
       out.result().iterator
     }
-    docs.flatMap { case (id, text, ts) =>
+    localCheckpoints(docs).flatMap { case (id, text, ts) =>
       val shset = graft.ext.Dedup.shingleSet(text, n)
       if (shset.isEmpty) Iterator.empty
       else {
@@ -3164,7 +3181,7 @@ object Streaming {
       rows.toSeq.sortBy { case (_, cell, d, _) => (d, cell) }.take(nProbe)
         .map { case (q, cell, _, e) => (q, cell, e) }.iterator
     }
-    val probes = probed.groupByKey(_._1)
+    val probes = localCheckpoints(probed).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(probeFn)
       .toDF("q_id", "cell", "q_emb")
@@ -3352,7 +3369,7 @@ object Streaming {
         AnnHit(id, v, s, i + 1)
       }
     }
-    cand.groupByKey(_._1)
+    localCheckpoints(cand).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -3417,7 +3434,7 @@ object Streaming {
         .take(nProbe)
         .map { case (q, cid, _, e, n) => (q, cid, e, n) }.iterator
     }
-    val probes = probed.groupByKey(_._1)
+    val probes = localCheckpoints(probed).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(probeFn)
       .toDF("q_id", "cell", "q_emb", "q_norm")
@@ -3485,7 +3502,7 @@ object Streaming {
       rows.toSeq.sortBy { case (_, cid, d, _) => (d, cid) }.take(nProbe)
         .map { case (q, cid, _, e) => (q, cid, e) }.iterator
     }
-    val probes = probed.groupByKey(_._1)
+    val probes = localCheckpoints(probed).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(probeFn)
       .toDF("q_id", "cell", "q_emb")
@@ -3575,7 +3592,7 @@ object Streaming {
         .iterator.zipWithIndex
         .map { case ((v, a), i) => AdcHit(id, v, a, i + 1) }
     }
-    cand.groupByKey(_._1)
+    localCheckpoints(cand).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -3647,7 +3664,7 @@ object Streaming {
       if (n == 0) Iterator.empty
       else Iterator.single(LmScore(id, n, qsum.toDouble / 1e12 / n))
     }
-    scored.groupByKey(_._1)
+    localCheckpoints(scored).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -3689,7 +3706,7 @@ object Streaming {
       else Iterator.single(
         DsirScore(id, n, qsum.toDouble / 1e12, qsum > 0))
     }
-    scored.groupByKey(_._1)
+    localCheckpoints(scored).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -3731,7 +3748,7 @@ object Streaming {
       if (n == 0) Iterator.empty
       else Iterator.single(SemDecontamDecision(id, m, m < tau))
     }
-    scored.groupByKey(_._1)
+    localCheckpoints(scored).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -3775,7 +3792,7 @@ object Streaming {
       state.update(cum)
       out.result().iterator
     }
-    rows.groupByKey(_._2)
+    localCheckpoints(rows).groupByKey(_._2)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -3890,7 +3907,7 @@ object Streaming {
       if (n == 0) Iterator.empty
       else Iterator.single((id, lang, n, qsum.toDouble / 1e12 / n))
     }
-    val perDoc = scored.groupByKey(_._1)
+    val perDoc = localCheckpoints(scored).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
       .toDF("doc_id", "lang", "n_bigrams", "avg_logprob")
@@ -3944,7 +3961,7 @@ object Streaming {
       if (hits == 0) Iterator.empty
       else Iterator.single(BloomHit(id, hits.toLong))
     }
-    probed.groupByKey(_._1)
+    localCheckpoints(probed).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4065,7 +4082,7 @@ object Streaming {
     * while ingesting and compares against the sender's batch manifest
     * — no second pass over the corpus. */
   def streamingCorpusChecksum(docs: DataFrame): DataFrame =
-    docs.select(col("source"),
+    localCheckpoints(docs).select(col("source"),
         conv(substring(md5(col("text")), 1, 8), 16, 10)
           .cast("decimal(38,0)").as("h"),
         length(col("text")).cast("long").as("nc"))
@@ -4107,7 +4124,7 @@ object Streaming {
           Bm25Hit(qid, i + 1L, doc, s)
         }.iterator
     }
-    rows.groupByKey(_._1)
+    localCheckpoints(rows).groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4121,7 +4138,7 @@ object Streaming {
     * batch [[graft.ext.TextOps.oovRate]] after any replay order — the
     * [[streamingCorpusChecksum]] stance. */
   def streamingOovRate(docs: DataFrame, vocab: DataFrame): DataFrame =
-    docs.select(col("source"),
+    localCheckpoints(docs).select(col("source"),
         explode(split(lower(trim(col("text"))), "[ \\t\\n\\x0B\\f\\r]+")).as("term"))
       .join(broadcast(vocab.select(col("term"), lit(1L).as("in_v"))),
         Seq("term"), "left")
@@ -4201,7 +4218,7 @@ object Streaming {
       keeper.foreach(state.update)
       out.result().iterator
     }
-    val deduped = kept
+    val deduped = localCheckpoints(kept)
       .groupByKey(r => graft.functions.md5Hex(r._3.getBytes("UTF-8")))
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(dedupFn)
@@ -4260,7 +4277,7 @@ object Streaming {
     * twins' dropLast stance, enforced here by the engine itself). */
   def streamingSessionize(events: DataFrame,
       gapSeconds: Long = 1800): DataFrame =
-    events
+    localCheckpoints(events)
       .withColumn("event_time", col("ts").cast("timestamp"))
       .withColumn("tsu", unix_micros(col("event_time")))
       .withWatermark("event_time", "10 minutes")
@@ -4318,7 +4335,7 @@ object Streaming {
       if (st != null) state.update(st)
       out.result().iterator
     }
-    events.groupByKey(_.user_id)
+    localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4387,7 +4404,7 @@ object Streaming {
       state.update(FunnelState(times.toSeq))
       out.result().iterator
     }
-    events.groupByKey(_.user_id)
+    localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4422,7 +4439,7 @@ object Streaming {
       if (last != null) state.update(last)
       out.result().iterator
     }
-    val dwells = events.groupByKey(_.user_id)
+    val dwells = localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
       .toDF("user_id", "tsu", "event_type", "dwell_us")
@@ -4487,7 +4504,7 @@ object Streaming {
       Iterator.single(RfmServing(uid, st.recency, st.frequency,
         m.toLong, r, f, mm, r * 100L + f * 10L + mm))
     }
-    events.groupByKey(_.user_id)
+    localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4542,7 +4559,7 @@ object Streaming {
       Iterator.single(NavEntropyServing(uid, counts.size.toLong, n,
         sq, entropy, norm))
     }
-    events.groupByKey(_.user_id)
+    localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4578,7 +4595,7 @@ object Streaming {
       if (last != null) state.update(last)
       out.result().iterator
     }
-    events.groupByKey(_.user_id)
+    localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4613,7 +4630,7 @@ object Streaming {
       state.update(seen.toSeq)
       out.result().iterator
     }
-    events.groupByKey(_.user_id)
+    localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }
@@ -4667,7 +4684,7 @@ object Streaming {
       if (st != null) state.update(RetentionState(st.cohort, seen.toSeq))
       out.result().iterator
     }
-    events.groupByKey(_.user_id)
+    localCheckpoints(events).groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
   }

@@ -518,8 +518,10 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("streaming parkinson drops a trade from a closed minute that " +
-      "arrives in a later micro-batch") {
+  test("streaming range estimators drop a closed-minute trade from a " +
+      "later batch") {
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import graft.operators.RangeSpread
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val t0 = 1700000040000L // minute-aligned
@@ -532,20 +534,30 @@ class StreamingSpec extends SparkSpec {
     val late = tr(0, 20, 4, 97.0)
     val b2 = Seq(late, tr(2, 0, 5, 100.0), tr(2, 30, 6, 103.25))
     val closer = tr(120, 0, 7, 100.0)
-    val r = graft.operators.RangeSpread.parkinson(updatesDf(b1 ++ b2.tail))
-      .collect().head
-    val want = (r.getLong(1), Some(r.getLong(2)), Some(r.getDouble(3)),
-      Some(r.getDouble(4)))
-    assert(want._1 === 3L)
-    val in = MemoryStream[Update]
-    val q = Streaming.streamingParkinson(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName("sparklate")
-      .start()
-    try Seq(b1, b2, Seq(closer)).foreach { b =>
-      in.addData(b: _*); q.processAllAvailable() }
-    finally q.stop()
-    val g = spark.table("sparklate").as[Streaming.ParkRow].collect().last
-    assert((g.n_buckets, g.sum_rq2, g.park_var, g.park_vol) === want)
+    val kept = updatesDf(b1 ++ b2.tail)
+    // (twin, batch operator over the rows without the late trade, its
+    // term count over the three closed minutes)
+    val twins = Seq[(String, Dataset[Update] => DataFrame, DataFrame, Long)](
+      ("parkinson", Streaming.streamingParkinson(_).toDF(),
+        RangeSpread.parkinson(kept), 3L),
+      ("rogers_satchell", Streaming.streamingRogersSatchell(_).toDF(),
+        RangeSpread.rogersSatchell(kept), 3L),
+      // the first minute only supplies the previous close
+      ("yang_zhang", Streaming.streamingYangZhang(_).toDF(),
+        RangeSpread.yangZhang(kept), 2L))
+    val drift = twins.flatMap { case (name, twin, batch, n) =>
+      val want = batch.collect().head.toSeq
+      assert(want(1) === n, name)
+      val in = MemoryStream[Update]
+      val q = twin(in.toDS()).writeStream.outputMode("append")
+        .format("memory").queryName(s"late_$name").start()
+      try Seq(b1, b2, Seq(closer)).foreach { b =>
+        in.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      val got = spark.table(s"late_$name").collect().last.toSeq
+      if (got == want) None else Some(s"$name: got $got, want $want")
+    }
+    assert(drift.isEmpty)
   }
 
   test("streaming rogers-satchell: after sentinel closers the serving " +
