@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -13,8 +14,12 @@ import graft.server.CommandParser
   * SUBSCRIBE-style fan-out (T3) as a per-symbol filtered stream.
   *
   * The reference drops late/overlapping data at flush and keeps no
-  * watermarks; streaming bar aggregation below adds event-time watermarking
-  * as a documented new capability (T6).
+  * watermarks. Only the windowed-aggregation twins below (time, VWAP,
+  * trade-imbalance, bucket-spread and order-trade-ratio bars) add
+  * event-time watermarking, a documented new capability (T6). The
+  * stateful folds keep no watermark: they order rows by (ts, seq), and
+  * the bucketed ones drop a row older than their open bucket
+  * ([[bucketFold]]).
   */
 object Streaming {
 
@@ -392,7 +397,7 @@ object Streaming {
 
   /** Per-symbol decayed-intensity state: the open bucket's count and
     * the integer intensity after the last CLOSED bucket. */
-  case class IntensityState(bucket: Long, n: Long, iq: Long)
+  case class IntensityState(n: Long, iq: Long)
   case class IntensityRow(symbol: String, start: Long, n_trades: Long,
       intensity_q: Long, intensity: Double)
 
@@ -408,39 +413,20 @@ object Streaming {
     import updates.sparkSession.implicits._
     require(num >= 0 && den > 0 && num < den,
       "decay num/den must be a proper fraction")
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[IntensityState]): Iterator[IntensityRow] = {
-      var st = state.getOption.getOrElse(IntensityState(Unset, 0L, 0L))
-      val out = Seq.newBuilder[IntensityRow]
-      def close(): Unit = {
+    bucketFold[String, IntensityState, IntensityRow](updates, seconds,
+      _.symbol, _.is_trade, IntensityState(0L, 0L))(
+      add = (_, st, _) => st.copy(n = st.n + 1L),
+      close = (sym, b, st, _, out) => {
         val iq = Math.addExact(Math.multiplyExact(st.n, 1000000L),
           Math.floorDiv(Math.multiplyExact(st.iq, num), den))
-        out += IntensityRow(sym, st.bucket, st.n, iq, iq.toDouble / 1e6)
-        st = st.copy(iq = iq)
-      }
-      rows.toSeq.filter(_.is_trade).sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset) st = st.copy(bucket = b, n = 1L)
-          else if (b != st.bucket) {
-            close()
-            st = st.copy(bucket = b, n = 1L)
-          } else st = st.copy(n = st.n + 1L)
-        }
-      state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+        out(IntensityRow(sym, b, st.n, iq, iq.toDouble / 1e6))
+        IntensityState(0L, iq)
+      })
   }
 
   /** Per-symbol EMA state: the open bucket's running close (cents) and
     * the integer EMA after the last CLOSED bucket. */
-  case class EmaState(bucket: Long, closeC: Long, eq: Long,
-      seeded: Boolean)
+  case class EmaState(closeC: Long, eq: Long, seeded: Boolean)
   case class EmaRow(symbol: String, start: Long, close_cq: Long,
       ema_q: Long, ema: Double)
 
@@ -454,8 +440,6 @@ object Streaming {
     import updates.sparkSession.implicits._
     require(num >= 0 && den > 0 && num < den,
       "decay num/den must be a proper fraction")
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
     def centsOf(u: Update): Long = {
       FiniteGuard.price("emaClose", u)
       val c = math.floor(u.price * 100.0d + 0.5d)
@@ -464,44 +448,26 @@ object Streaming {
           "exact-decimal regime at symbol=" + u.symbol)
       c.toLong
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[EmaState]): Iterator[EmaRow] = {
-      var st = state.getOption.getOrElse(
-        EmaState(Unset, 0L, 0L, seeded = false))
-      val out = Seq.newBuilder[EmaRow]
-      def close(): Unit = {
+    bucketFold[String, EmaState, EmaRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0),
+      EmaState(0L, 0L, seeded = false))(
+      add = (_, st, u) => st.copy(closeC = centsOf(u)),
+      close = (sym, b, st, _, out) => {
         val cq = Math.multiplyExact(st.closeC, 10000L)
         val eq =
           if (!st.seeded) cq
           else Math.floorDiv(Math.addExact(
             Math.multiplyExact(cq, den - num),
             Math.multiplyExact(st.eq, num)), den)
-        out += EmaRow(sym, st.bucket, cq, eq, eq.toDouble / 1e6)
-        st = st.copy(eq = eq, seeded = true)
-      }
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          val b = bucketOf(u.ts)
-          val c = centsOf(u)
-          if (st.bucket == Unset) st = st.copy(bucket = b, closeC = c)
-          else if (b != st.bucket) {
-            close()
-            st = st.copy(bucket = b, closeC = c)
-          } else st = st.copy(closeC = c)
-        }
-      state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+        out(EmaRow(sym, b, cq, eq, eq.toDouble / 1e6))
+        st.copy(eq = eq, seeded = true)
+      })
   }
 
-  /** Per-symbol realized-volatility state: prevailing trade price, the
-    * open bucket, and its exact integer return accumulators. */
-  case class RvState(lastPrice: Double, bucket: Long, n: Long,
-      sumSq: Long)
+  /** Per-symbol realized-volatility state: prevailing trade price (0 =
+    * none yet; kept prices are positive) and the open bucket's exact
+    * integer return accumulators. */
+  case class RvState(lastPrice: Double, n: Long, sumSq: Long)
   case class RvBucket(symbol: String, start: Long, n_returns: Long,
       sum_sq_q: Long, rv: Double)
 
@@ -514,50 +480,34 @@ object Streaming {
     * in-progress final bucket per symbol stays open (the fold twins'
     * dropLast stance). Same floor-quantized `ln` arithmetic as the
     * batch op on the same JVM, so emitted buckets match it bit-exactly
-    * (StreamingSpec). Within a micro-batch rows fold in (ts, seq)
-    * order; across batches in-order arrival per symbol is assumed —
-    * the engine's own append contract. */
+    * (StreamingSpec). */
   def streamingRealizedVol(updates: Dataset[Update],
       seconds: Long = 60): Dataset[RvBucket] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    def emit(sym: String, st: RvState): RvBucket =
-      RvBucket(sym, st.bucket, st.n, st.sumSq,
-        math.sqrt(st.sumSq.toDouble) / 1e6)
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[RvState]): Iterator[RvBucket] = {
-      var st = state.getOption.orNull
-      val out = Seq.newBuilder[RvBucket]
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("realizedVol", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st == null) st = RvState(u.price, b, 0L, 0L)
-          else if (u.price / st.lastPrice == 0.0) {
-            // ratio underflowed the double division: the batch plan's
-            // Spark log(0.0) is NULL and the row's return DROPS (it
-            // still serves as the next return's lag) — replicate that,
-            // don't throw where the batch twin silently skips
-            st = st.copy(lastPrice = u.price)
-          } else {
-            val q = math.floor(
-              math.log(u.price / st.lastPrice) * 1e6).toLong
-            if (b != st.bucket) {
-              if (st.n > 0) out += emit(sym, st)
-              st = RvState(st.lastPrice, b, 0L, 0L)
-            }
-            // exact-or-throw, matching the batch op's guarded decimal
-            // cast (a silent Long wrap would diverge from it)
-            st = RvState(u.price, b, st.n + 1,
-              Math.addExact(st.sumSq, Math.multiplyExact(q, q)))
-          }
+    bucketFold[String, RvState, RvBucket](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0), RvState(0.0d, 0L, 0L))(
+      add = (_, st, u) => {
+        FiniteGuard.price("realizedVol", u) // the batch finitePrice
+        // no lag yet, or the ratio underflowed the double division: the
+        // batch plan's Spark log(0.0) is NULL and the row's return DROPS
+        // (it still serves as the next return's lag) — replicate that,
+        // don't throw where the batch twin silently skips
+        if (st.lastPrice == 0.0d || u.price / st.lastPrice == 0.0)
+          st.copy(lastPrice = u.price)
+        else {
+          val q = math.floor(
+            math.log(u.price / st.lastPrice) * 1e6).toLong
+          // exact-or-throw, matching the batch op's guarded decimal
+          // cast (a silent Long wrap would diverge from it)
+          RvState(u.price, st.n + 1,
+            Math.addExact(st.sumSq, Math.multiplyExact(q, q)))
         }
-      if (st != null) state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      },
+      close = (sym, b, st, _, out) => {
+        if (st.n > 0) out(RvBucket(sym, b, st.n, st.sumSq,
+          math.sqrt(st.sumSq.toDouble) / 1e6))
+        st.copy(n = 0L, sumSq = 0L)
+      })
   }
 
   /** Streaming order-to-trade ratio — twin of
@@ -594,8 +544,8 @@ object Streaming {
     * disjoint and clipped), so `wq ≤ width·cents` stays far inside a
     * long for any real price — the same bound the batch op's
     * decimal(12,0) operands encode. */
-  case class TwapState(lastTs: Long, lastCents: Long, bucket: Long,
-      nEvents: Long, durMs: Long, wq: Long)
+  case class TwapState(lastTs: Long, lastCents: Long, nEvents: Long,
+      durMs: Long, wq: Long)
   case class TwapBucket(symbol: String, is_bid: Boolean, start: Long,
       n_events: Long, dur_ms: Long, twap: Option[Double])
 
@@ -613,48 +563,32 @@ object Streaming {
   def streamingTwapQuote(updates: Dataset[Update],
       seconds: Long = 60): Dataset[TwapBucket] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    def centsOf(price: Double): Long =
-      math.floor(price * 100d + 0.5d).toLong
-    def emit(key: (String, Boolean), st: TwapState): TwapBucket =
-      TwapBucket(key._1, key._2, st.bucket, st.nEvents, st.durMs,
-        if (st.durMs != 0L)
-          Some(st.wq.toDouble / st.durMs.toDouble / 100.0d)
-        else None)
-    def fn(key: (String, Boolean), rows: Iterator[Update],
-        state: GroupState[TwapState]): Iterator[TwapBucket] = {
-      var st = state.getOption.orNull
-      val out = Seq.newBuilder[TwapBucket]
-      rows.toSeq.filter(u => !u.is_trade && SqlOrd.gt(u.size, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("twapQuote", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st == null) st = TwapState(u.ts, centsOf(u.price), b, 1L, 0L, 0L)
-          else {
-            // resolve the open event against this arrival
-            val bucketEndMs = (st.bucket + seconds) * 1000L
-            val dur = math.max(0L, math.min(u.ts, bucketEndMs) - st.lastTs)
-            val durMs = st.durMs + dur
-            // exact-or-throw: wq is bounded by width·cents by design,
-            // but a pathological price must fail loud, not wrap
-            val wq = Math.addExact(st.wq,
-              Math.multiplyExact(dur, st.lastCents))
-            st =
-              if (b == st.bucket)
-                TwapState(u.ts, centsOf(u.price), b, st.nEvents + 1,
-                  durMs, wq)
-              else {
-                out += emit(key, st.copy(durMs = durMs, wq = wq))
-                TwapState(u.ts, centsOf(u.price), b, 1L, 0L, 0L)
-              }
-          }
-        }
-      if (st != null) state.update(st)
-      out.result().iterator
+    val zero = TwapState(0L, 0L, 0L, 0L, 0L)
+    /** Resolves the open event (bucket `b`) against an arrival at `ts`. */
+    def resolve(st: TwapState, b: Long, ts: Long): TwapState = {
+      val dur = math.max(0L, math.min(ts, (b + seconds) * 1000L) - st.lastTs)
+      // exact-or-throw: wq is bounded by width·cents by design,
+      // but a pathological price must fail loud, not wrap
+      st.copy(durMs = st.durMs + dur,
+        wq = Math.addExact(st.wq, Math.multiplyExact(dur, st.lastCents)))
     }
-    localCheckpoints(updates).groupByKey(u => (u.symbol, u.is_bid))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    bucketFold[(String, Boolean), TwapState, TwapBucket](updates, seconds,
+      u => (u.symbol, u.is_bid), u => !u.is_trade && SqlOrd.gt(u.size, 0.0),
+      zero)(
+      add = (_, st, u) => {
+        FiniteGuard.price("twapQuote", u) // the batch finitePrice
+        val r = if (st.nEvents == 0L) st
+          else resolve(st, Buckets.of(u.ts, seconds), u.ts)
+        r.copy(lastTs = u.ts, lastCents = math.floor(u.price * 100d + 0.5d)
+          .toLong, nEvents = r.nEvents + 1L)
+      },
+      close = (key, b, st, next, out) => {
+        val r = resolve(st, b, next.ts)
+        out(TwapBucket(key._1, key._2, b, r.nEvents, r.durMs,
+          if (r.durMs != 0L) Some(r.wq.toDouble / r.durMs.toDouble / 100.0d)
+          else None))
+        zero
+      })
   }
 
   /** Scalar twins of the batch ops' decimal(·,4) arithmetic, in a
@@ -711,10 +645,11 @@ object Streaming {
   }
 
   /** The folds' shared bucket function — ONE definition of
-    * `floor(fillDigits(ts)/1000/seconds)*seconds` so the seven
-    * streaming twins cannot silently diverge from each other (or from
-    * the batch ops' `bucketed`). Standalone serializable holder, the
-    * [[Dec4]] stance. */
+    * `floor(fillDigits(ts)/1000/seconds)*seconds` so the bucketed
+    * streaming twins ([[bucketFold]] and [[streamingEppsEffect]])
+    * cannot silently diverge from each other (or from the batch ops'
+    * `bucketed`). Standalone serializable holder, the [[Dec4]]
+    * stance. */
   private object Buckets extends Serializable {
     def of(ts: Long, seconds: Long): Long = {
       val s = CommandParser.fillDigits(ts) / 1000L
@@ -722,10 +657,91 @@ object Streaming {
     }
   }
 
-  /** Per-symbol tick-rule state: prevailing trade price, the running
-    * last-non-zero tick sign (0 = no classified tick yet), the open
-    * bucket, and its exact unscaled scale-4 accumulators. */
-  case class TickFlowState(lastPrice: Double, carry: Int, bucket: Long,
+  /** The tick-rule signed-flow step [[streamingKyleLambda]] and
+    * [[streamingFlowAutocorr]] share: a trade's sign against the
+    * prevailing trade price (none yet → 0; a zero tick carries the
+    * last non-zero sign), and the open bucket's flow `fU` plus the
+    * trade's signed scale-4 size. Returns (carry, fU). Serializable
+    * holder, the [[Dec4]] stance. */
+  private object SignedFlow extends Serializable {
+    def step(prev: Double, hasPrev: Boolean, carry0: Int, fU: Long,
+        u: Update): (Int, Long) = {
+      val dir =
+        if (!hasPrev) 0
+        else if (SqlOrd.gt(u.price, prev)) 1
+        else if (SqlOrd.lt(u.price, prev)) -1 else 0
+      val carry = if (dir != 0) dir else carry0
+      if (carry == 0) (carry, fU)
+      else {
+        // batch guard parity (finiteSize): classified non-finite size
+        // raises in the plan — fail the same way here
+        if (!java.lang.Double.isFinite(u.size))
+          throw new ArithmeticException("signedFlow: non-finite trade size")
+        val q = Dec4.dec4(u.size)
+        (carry, Math.addExact(fU, if (carry == 1) q else -q))
+      }
+    }
+  }
+
+  /** The per-bucket fold the bucketed twins are built on. Rows passing
+    * `keep` fold per `key` in (ts, seq) order within a micro-batch,
+    * each in its [[Buckets.of]] bucket: the first row opens a bucket,
+    * a row of a later bucket closes the open one (`close` also sees
+    * that row) and opens its own, and every row folds into the state
+    * through `add`. A `side` row folds without opening or closing a
+    * bucket (quotes that only refresh a prevailing price, trades that
+    * only prime a lag).
+    *
+    * The late-row rule, the same for every twin built here: a row whose
+    * bucket is older than the open bucket is dropped, side rows
+    * included, in whichever micro-batch it arrives. So a late row
+    * neither reopens nor re-emits a closed bucket, and the output is
+    * the output of the same feed without it.
+    *
+    * State is the open bucket (Long.MinValue before the first) beside
+    * the twin's own `S`. A twin emits either one row per closed bucket
+    * (through `close`'s callback) or its current row after every
+    * micro-batch (`serve`). The hooks must capture only the twin's own
+    * parameters and the serializable holders ([[Dec4]] stance). */
+  private def bucketFold[K: Encoder, S: Encoder, O: Encoder](
+      updates: Dataset[Update], seconds: Long, key: Update => K,
+      keep: Update => Boolean, zero: S,
+      side: (S, Update) => Boolean = (_: S, _: Update) => false)(
+      add: (K, S, Update) => S,
+      close: (K, Long, S, Update, O => Unit) => S,
+      serve: (K, S) => Option[O] = (_: K, _: S) => None): Dataset[O] = {
+    val Unset = Long.MinValue
+    def fn(k: K, rows: Iterator[Update],
+        state: GroupState[(Long, S)]): Iterator[O] = {
+      var (open, st) = state.getOption.getOrElse((Unset, zero))
+      val out = Seq.newBuilder[O]
+      val kept = rows.filter(keep).toSeq.sortBy(u => (u.ts, u.seq))
+      kept.foreach { u =>
+        val b = Buckets.of(u.ts, seconds)
+        if (b < open) () // late: its bucket has closed
+        else if (side(st, u)) st = add(k, st, u)
+        else {
+          if (b > open && open != Unset)
+            st = close(k, open, st, u, out += _)
+          open = b
+          st = add(k, st, u)
+        }
+      }
+      if (kept.nonEmpty) state.update((open, st))
+      out ++= serve(k, st)
+      out.result().iterator
+    }
+    localCheckpoints(updates).groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(fn)(
+        Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[S]]),
+        implicitly[Encoder[O]])
+  }
+
+  /** Per-symbol tick-rule state: prevailing trade price (if any), the
+    * running last-non-zero tick sign (0 = no classified tick yet), and
+    * the open bucket's exact unscaled scale-4 accumulators. */
+  case class TickFlowState(lastPrice: Double, hasPrev: Boolean, carry: Int,
       n: Long, signedU: Long, classU: Long)
   case class TickFlowBucket(symbol: String, start: Long, n_trades: Long,
       signed_vol: Double, class_vol: Double, flow_ratio: Option[Double])
@@ -739,63 +755,49 @@ object Streaming {
     * the same scale-4 decimal arithmetic ([[Dec4]]), so emitted buckets
     * match the batch op bit-exactly (StreamingSpec). Emit-on-advance:
     * each symbol's in-progress final bucket stays open (the fold
-    * twins' dropLast stance). Within a micro-batch rows fold in
-    * (ts, seq) order; across batches in-order arrival per symbol is
-    * assumed — the engine's own append contract. */
+    * twins' dropLast stance). */
   def streamingTickRuleFlow(updates: Dataset[Update],
       seconds: Long = 60): Dataset[TickFlowBucket] = {
     import updates.sparkSession.implicits._
     val Dec4 = Streaming.Dec4
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    def emit(sym: String, st: TickFlowState): TickFlowBucket = {
-      val signed = Dec4.dec4ToDouble(st.signedU)
-      val cls = Dec4.dec4ToDouble(st.classU)
-      TickFlowBucket(sym, st.bucket, st.n, signed, cls,
-        if (cls != 0.0d) Some(signed / cls) else None)
-    }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[TickFlowState]): Iterator[TickFlowBucket] = {
-      var st = state.getOption.orNull
-      val out = Seq.newBuilder[TickFlowBucket]
-      rows.toSeq.filter(_.is_trade).sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          val b = bucketOf(u.ts)
-          if (st == null)
-            // first trade: lag is null → dir 0, no sign to carry
-            st = TickFlowState(u.price, 0, b, 1L, 0L, 0L)
-          else {
-            val dir =
-              if (SqlOrd.gt(u.price, st.lastPrice)) 1
-              else if (SqlOrd.lt(u.price, st.lastPrice)) -1 else 0
-            val carry = if (dir != 0) dir else st.carry
-            if (b != st.bucket) { out += emit(sym, st)
-              st = TickFlowState(u.price, carry, b, 0L, 0L, 0L) }
-            // batch guard parity: a CLASSIFIED non-finite size raises
-            // in the plan (finiteSize) — fail the same way here
-            if (carry != 0 && !java.lang.Double.isFinite(u.size))
-              throw new ArithmeticException(
-                "tickRuleFlow: non-finite trade size")
-            val q = Dec4.dec4(u.size)
-            st = TickFlowState(u.price, carry, b, st.n + 1L,
-              if (carry != 0)
-                Math.addExact(st.signedU, if (carry == 1) q else -q)
-              else st.signedU,
-              if (carry != 0) Math.addExact(st.classU, q) else st.classU)
-          }
+    bucketFold[String, TickFlowState, TickFlowBucket](updates, seconds,
+      _.symbol, _.is_trade,
+      TickFlowState(0.0d, hasPrev = false, 0, 0L, 0L, 0L))(
+      add = (_, st, u) => {
+        // the first trade's lag is null → dir 0, no sign to carry
+        val dir =
+          if (!st.hasPrev) 0
+          else if (SqlOrd.gt(u.price, st.lastPrice)) 1
+          else if (SqlOrd.lt(u.price, st.lastPrice)) -1 else 0
+        val carry = if (dir != 0) dir else st.carry
+        if (carry == 0)
+          st.copy(lastPrice = u.price, hasPrev = true, n = st.n + 1L)
+        else {
+          // batch guard parity: a CLASSIFIED non-finite size raises
+          // in the plan (finiteSize) — fail the same way here
+          if (!java.lang.Double.isFinite(u.size))
+            throw new ArithmeticException(
+              "tickRuleFlow: non-finite trade size")
+          val q = Dec4.dec4(u.size)
+          TickFlowState(u.price, hasPrev = true, carry, st.n + 1L,
+            Math.addExact(st.signedU, if (carry == 1) q else -q),
+            Math.addExact(st.classU, q))
         }
-      if (st != null) state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      },
+      close = (sym, b, st, _, out) => {
+        val signed = Dec4.dec4ToDouble(st.signedU)
+        val cls = Dec4.dec4ToDouble(st.classU)
+        out(TickFlowBucket(sym, b, st.n, signed, cls,
+          if (cls != 0.0d) Some(signed / cls) else None))
+        st.copy(n = 0L, signedU = 0L, classU = 0L)
+      })
   }
 
   /** Per-symbol effective-spread state: the prevailing touch proxy
     * (last bid / ask level-set prices; NaN = side unseen) plus the open
-    * trade bucket's exact accumulators (Long.MinValue = none open). */
-  case class EffSprState(pb: Double, pa: Double, bucket: Long, n: Long,
-      nClass: Long, effU: Long)
+    * trade bucket's exact accumulators. */
+  case class EffSprState(pb: Double, pa: Double, n: Long, nClass: Long,
+      effU: Long)
   case class EffSprBucket(symbol: String, start: Long, n_trades: Long,
       n_classified: Long, eff_sum: Double,
       avg_eff_spread: Option[Double])
@@ -815,51 +817,31 @@ object Streaming {
       seconds: Long = 60): Dataset[EffSprBucket] = {
     import updates.sparkSession.implicits._
     val Dec4 = Streaming.Dec4
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    def emit(sym: String, st: EffSprState): EffSprBucket = {
-      val sum = Dec4.dec4ToDouble(st.effU)
-      EffSprBucket(sym, st.bucket, st.n, st.nClass, sum,
-        if (st.nClass != 0L) Some(sum / st.nClass.toDouble) else None)
-    }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[EffSprState]): Iterator[EffSprBucket] = {
-      var st = state.getOption.getOrElse(
-        EffSprState(Double.NaN, Double.NaN, Long.MinValue, 0L, 0L, 0L))
-      val out = Seq.newBuilder[EffSprBucket]
-      rows.toSeq.sortBy(u => (u.ts, u.seq)).foreach { u =>
-        if (u.is_trade) {
-          FiniteGuard.price("effectiveSpread", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st.bucket != b) {
-            if (st.bucket != Long.MinValue) out += emit(sym, st)
-            st = st.copy(bucket = b, n = 0L, nClass = 0L, effU = 0L)
-          }
-          if (st.pb.isNaN || st.pa.isNaN) st = st.copy(n = st.n + 1L)
-          else {
-            val eff =
-              2.0d * math.abs(u.price - (st.pb + st.pa) / 2.0d)
-            st = st.copy(n = st.n + 1L, nClass = st.nClass + 1L,
-              effU = Math.addExact(st.effU, Dec4.dec4(eff)))
-          }
-        } else if (SqlOrd.gt(u.size, 0.0d)) {
-          // guarded BEFORE the store: a genuine NaN quote would alias
-          // the unseen-quote sentinel; batch raises via the sideMark
-          FiniteGuard.price("effectiveSpread", u)
-          if (u.is_bid) st = st.copy(pb = u.price)
-          else st = st.copy(pa = u.price)
+    bucketFold[String, EffSprState, EffSprBucket](updates, seconds,
+      _.symbol, u => u.is_trade || SqlOrd.gt(u.size, 0.0d),
+      EffSprState(Double.NaN, Double.NaN, 0L, 0L, 0L),
+      side = (_, u) => !u.is_trade)(
+      add = (_, st, u) => {
+        // a quote is guarded BEFORE the store: a genuine NaN quote would
+        // alias the unseen-quote sentinel; batch raises via the sideMark
+        FiniteGuard.price("effectiveSpread", u) // the batch finitePrice
+        if (!u.is_trade) {
+          if (u.is_bid) st.copy(pb = u.price) else st.copy(pa = u.price)
+        } else if (st.pb.isNaN || st.pa.isNaN) st.copy(n = st.n + 1L)
+        else {
+          val eff = 2.0d * math.abs(u.price - (st.pb + st.pa) / 2.0d)
+          st.copy(n = st.n + 1L, nClass = st.nClass + 1L,
+            effU = Math.addExact(st.effU, Dec4.dec4(eff)))
         }
-      }
-      state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      },
+      close = (sym, b, st, _, out) => {
+        val sum = Dec4.dec4ToDouble(st.effU)
+        out(EffSprBucket(sym, b, st.n, st.nClass, sum,
+          if (st.nClass != 0L) Some(sum / st.nClass.toDouble) else None))
+        st.copy(n = 0L, nClass = 0L, effU = 0L)
+      })
   }
 
-  /** Per-symbol Roll-estimator state: the last two trade prices in
-    * cents (Long.MinValue = unseen) plus the open bucket's exact
-    * integer accumulators. */
   /** Per-symbol VPIN state: the open volume bucket's accumulators, the
     * tick-rule carry, and the trailing (imbU, classU) of up to
     * `window − 1` CLOSED buckets — O(window) per key. */
@@ -948,8 +930,11 @@ object Streaming {
         GroupStateTimeout.NoTimeout)(fn)
   }
 
-  case class RollSprState(c1: Long, c2: Long, bucket: Long, n: Long,
-      sx: Long, sy: Long, sxy: Long)
+  /** Per-symbol Roll-estimator state: the last two trade prices in
+    * cents (Long.MinValue = unseen) plus the open bucket's exact
+    * integer accumulators. */
+  case class RollSprState(c1: Long, c2: Long, n: Long, sx: Long, sy: Long,
+      sxy: Long)
   case class RollSprBucket(symbol: String, start: Long, n_pairs: Long,
       sum_x: Long, sum_y: Long, sum_xy: Long, cov: Double,
       roll_spread: Option[Double])
@@ -961,47 +946,39 @@ object Streaming {
     * `multiplyExact`, the batch op's raise-loud stance), O(1) per key.
     * Same cents quantization, same final IEEE cov/spread sequence →
     * emitted buckets match the batch op bit-exactly (StreamingSpec).
-    * Emit-on-advance; each symbol's final bucket stays open. */
+    * Emit-on-advance; each symbol's final bucket stays open. A
+    * symbol's first two trades only prime the pair: they open no
+    * bucket. */
   def streamingRollSpread(updates: Dataset[Update],
       seconds: Long = 60): Dataset[RollSprBucket] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    def emit(sym: String, st: RollSprState): RollSprBucket = {
-      val n = st.n.toDouble
-      val cov = (st.sxy.toDouble - st.sx.toDouble * st.sy.toDouble / n) / n
-      RollSprBucket(sym, st.bucket, st.n, st.sx, st.sy, st.sxy, cov,
-        if (cov < 0.0d) Some(2.0d * math.sqrt(-cov) / 100.0d) else None)
-    }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[RollSprState]): Iterator[RollSprBucket] = {
-      val None_ = Long.MinValue
-      var st = state.getOption.getOrElse(
-        RollSprState(None_, None_, None_, 0L, 0L, 0L, 0L))
-      val out = Seq.newBuilder[RollSprBucket]
-      rows.toSeq.filter(_.is_trade).sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          FiniteGuard.price("rollSpread", u) // the batch finitePrice
-          val c0 = math.floor(u.price * 100.0d + 0.5d).toLong
-          if (st.c2 != None_) {
-            val b = bucketOf(u.ts)
-            if (st.bucket != None_ && b != st.bucket && st.n > 0)
-              { out += emit(sym, st); st = st.copy(n = 0L, sx = 0L,
-                sy = 0L, sxy = 0L) }
+    val Unseen = Long.MinValue
+    bucketFold[String, RollSprState, RollSprBucket](updates, seconds,
+      _.symbol, _.is_trade, RollSprState(Unseen, Unseen, 0L, 0L, 0L, 0L),
+      side = (st, _) => st.c2 == Unseen)(
+      add = (_, st, u) => {
+        FiniteGuard.price("rollSpread", u) // the batch finitePrice
+        val c0 = math.floor(u.price * 100.0d + 0.5d).toLong
+        val paired =
+          if (st.c2 == Unseen) st
+          else {
             val x = c0 - st.c1
             val y = st.c1 - st.c2
-            st = st.copy(bucket = b, n = st.n + 1L,
+            st.copy(n = st.n + 1L,
               sx = Math.addExact(st.sx, x),
               sy = Math.addExact(st.sy, y),
               sxy = Math.addExact(st.sxy, Math.multiplyExact(x, y)))
           }
-          st = st.copy(c2 = st.c1, c1 = c0)
-        }
-      state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+        paired.copy(c2 = st.c1, c1 = c0)
+      },
+      close = (sym, b, st, _, out) => {
+        val n = st.n.toDouble
+        val cov =
+          (st.sxy.toDouble - st.sx.toDouble * st.sy.toDouble / n) / n
+        out(RollSprBucket(sym, b, st.n, st.sx, st.sy, st.sxy, cov,
+          if (cov < 0.0d) Some(2.0d * math.sqrt(-cov) / 100.0d) else None))
+        st.copy(n = 0L, sx = 0L, sy = 0L, sxy = 0L)
+      })
   }
 
   /** Per-symbol Kyle-lambda state: the tick-rule carry (prevailing
@@ -1014,7 +991,7 @@ object Streaming {
     * magnitudes; the string is the exact-encoding the state store can
     * carry). */
   case class KyleLamState(prevTrade: Double, hasPrevTrade: Boolean,
-      carry: Int, bucket: Long, fU: Long, cb: Long, ca: Long,
+      carry: Int, fU: Long, cb: Long, ca: Long,
       cbCarry: Long, caCarry: Long, n: Long,
       sx: String, sy: String, sxy: String, sxx: String)
   case class KyleLamRow(symbol: String, n_pairs: Long, sum_x: Double,
@@ -1040,22 +1017,18 @@ object Streaming {
   def streamingKyleLambda(updates: Dataset[Update],
       seconds: Long = 60): Dataset[KyleLamRow] = {
     import updates.sparkSession.implicits._
-    val Dec4 = Streaming.Dec4
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def zero = KyleLamState(0.0, hasPrevTrade = false, 0, Unset, 0L,
-      Unset, Unset, Unset, Unset, 0L, "0", "0", "0", "0")
+    val NoQuote = Long.MinValue
     def closeBucket(st: KyleLamState): KyleLamState = {
       // the PREVIOUS bucket's carried mid, then this bucket's: each
       // side independently — the batch per-side last(... ignoreNulls)
       val prevMf: Option[Long] =
-        if (st.cbCarry != Unset && st.caCarry != Unset)
+        if (st.cbCarry != NoQuote && st.caCarry != NoQuote)
           Some(st.cbCarry + st.caCarry)
         else None
-      val cbC = if (st.cb != Unset) st.cb else st.cbCarry
-      val caC = if (st.ca != Unset) st.ca else st.caCarry
+      val cbC = if (st.cb != NoQuote) st.cb else st.cbCarry
+      val caC = if (st.ca != NoQuote) st.ca else st.caCarry
       val mf: Option[Long] =
-        if (cbC != Unset && caC != Unset) Some(cbC + caC) else None
+        if (cbC != NoQuote && caC != NoQuote) Some(cbC + caC) else None
       val paired =
         if (mf.isDefined && prevMf.isDefined) {
           if (math.abs(st.fU) > 1000000000000000L)
@@ -1069,7 +1042,7 @@ object Streaming {
             sxy = (BigInt(st.sxy) + x * y).toString,
             sxx = (BigInt(st.sxx) + x * x).toString)
         } else st
-      paired.copy(fU = 0L, cb = Unset, ca = Unset,
+      paired.copy(fU = 0L, cb = NoQuote, ca = NoQuote,
         cbCarry = cbC, caCarry = caC)
     }
     def emit(sym: String, st: KyleLamState): KyleLamRow = {
@@ -1082,30 +1055,14 @@ object Streaming {
         if (den != 0.0d) Some((nD * sxyD - sxD * syD) / den * 50.0d)
         else None)
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[KyleLamState]): Iterator[KyleLamRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.sortBy(u => (u.ts, u.seq)).foreach { u =>
-        val b = bucketOf(u.ts)
-        if (st.bucket == Unset) st = st.copy(bucket = b)
-        else if (b != st.bucket) st = closeBucket(st).copy(bucket = b)
+    bucketFold[String, KyleLamState, KyleLamRow](updates, seconds,
+      _.symbol, _ => true, KyleLamState(0.0, hasPrevTrade = false, 0, 0L,
+        NoQuote, NoQuote, NoQuote, NoQuote, 0L, "0", "0", "0", "0"))(
+      add = (_, st, u) =>
         if (u.is_trade) {
-          val dir =
-            if (!st.hasPrevTrade) 0
-            else if (SqlOrd.gt(u.price, st.prevTrade)) 1
-            else if (SqlOrd.lt(u.price, st.prevTrade)) -1 else 0
-          val carry = if (dir != 0) dir else st.carry
-          val fU =
-            if (carry != 0) {
-              // batch guard parity (finiteSize): classified non-finite
-              // size raises in the plan — fail the same way here
-              if (!java.lang.Double.isFinite(u.size))
-                throw new ArithmeticException(
-                  "signedFlow: non-finite trade size")
-              Math.addExact(st.fU,
-                if (carry == 1) Dec4.dec4(u.size) else -Dec4.dec4(u.size))
-            } else st.fU
-          st = st.copy(prevTrade = u.price, hasPrevTrade = true,
+          val (carry, fU) = SignedFlow.step(st.prevTrade, st.hasPrevTrade,
+            st.carry, st.fU, u)
+          st.copy(prevTrade = u.price, hasPrevTrade = true,
             carry = carry, fU = fU)
         } else if (SqlOrd.gt(u.size, 0.0d)) {
           val c = math.floor(u.price * 100.0d + 0.5d)
@@ -1115,16 +1072,10 @@ object Streaming {
           if (SqlOrd.gt(math.abs(c), 1.0e12d))
             throw new ArithmeticException(
               "kyleLambda: price outside the exact-decimal regime")
-          if (u.is_bid) st = st.copy(cb = c.toLong)
-          else st = st.copy(ca = c.toLong)
-        }
-      }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+          if (u.is_bid) st.copy(cb = c.toLong) else st.copy(ca = c.toLong)
+        } else st,
+      close = (_, _, st, _, _) => closeBucket(st),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** Per-symbol flow-autocorrelation state: the tick-rule carry, the
@@ -1132,8 +1083,7 @@ object Streaming {
     * BigInt regression sums as strings (the [[KyleLamState]]
     * encoding). */
   case class FlowAcState(prevTrade: Double, hasPrevTrade: Boolean,
-      carry: Int, bucket: Long, fU: Long, fPrev: Long,
-      hasFPrev: Boolean, n: Long,
+      carry: Int, fU: Long, fPrev: Long, hasFPrev: Boolean, n: Long,
       sx: String, sy: String, sxy: String, sxx: String, syy: String)
   case class FlowAcRow(symbol: String, n_pairs: Long, sum_x: Double,
       sum_y: Double, sum_xy: Double, sum_xx: Double, sum_yy: Double,
@@ -1156,11 +1106,6 @@ object Streaming {
   def streamingFlowAutocorr(updates: Dataset[Update],
       seconds: Long = 60): Dataset[FlowAcRow] = {
     import updates.sparkSession.implicits._
-    val Dec4 = Streaming.Dec4
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def zero = FlowAcState(0.0, hasPrevTrade = false, 0, Unset, 0L,
-      0L, hasFPrev = false, 0L, "0", "0", "0", "0", "0")
     def closeBucket(st: FlowAcState): FlowAcState = {
       val paired =
         if (st.hasFPrev) {
@@ -1192,46 +1137,26 @@ object Streaming {
             (math.sqrt(dx) * math.sqrt(dy)))
         else None)
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[FlowAcState]): Iterator[FlowAcRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.sortBy(u => (u.ts, u.seq)).foreach { u =>
-        val b = bucketOf(u.ts)
-        if (st.bucket == Unset) st = st.copy(bucket = b)
-        else if (b != st.bucket) st = closeBucket(st).copy(bucket = b)
-        if (u.is_trade) {
-          val dir =
-            if (!st.hasPrevTrade) 0
-            else if (SqlOrd.gt(u.price, st.prevTrade)) 1
-            else if (SqlOrd.lt(u.price, st.prevTrade)) -1 else 0
-          val carry = if (dir != 0) dir else st.carry
-          val fU =
-            if (carry != 0) {
-              // batch guard parity (finiteSize): classified non-finite
-              // size raises in the plan — fail the same way here
-              if (!java.lang.Double.isFinite(u.size))
-                throw new ArithmeticException(
-                  "signedFlow: non-finite trade size")
-              Math.addExact(st.fU,
-                if (carry == 1) Dec4.dec4(u.size) else -Dec4.dec4(u.size))
-            } else st.fU
-          st = st.copy(prevTrade = u.price, hasPrevTrade = true,
+    bucketFold[String, FlowAcState, FlowAcRow](updates, seconds,
+      _.symbol, _ => true, FlowAcState(0.0, hasPrevTrade = false, 0, 0L,
+        0L, hasFPrev = false, 0L, "0", "0", "0", "0", "0"))(
+      add = (_, st, u) =>
+        if (!u.is_trade) st
+        else {
+          val (carry, fU) = SignedFlow.step(st.prevTrade, st.hasPrevTrade,
+            st.carry, st.fU, u)
+          st.copy(prevTrade = u.price, hasPrevTrade = true,
             carry = carry, fU = fU)
-        }
-      }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+        },
+      close = (_, _, st, _, _) => closeBucket(st),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
-  /** Per-symbol variance-ratio state: the open bucket and its running
+  /** Per-symbol variance-ratio state: the open bucket's running
     * close, the last CLOSED bucket's close (the lag operand), the last
     * k−1 one-bucket returns (the overlapping-window tail), and exact
     * BigInt operand sums as strings (the [[KyleLamState]] encoding). */
-  case class VrState(bucket: Long, close: Double, prevClose: Double,
+  case class VrState(close: Double, prevClose: Double,
       hasPrevClose: Boolean, recentQs: Seq[Long], n1: Long,
       s1: String, ss1: String, nk: Long, sk: String, ssk: String)
   case class VrRow(symbol: String, n1: Long,
@@ -1259,10 +1184,6 @@ object Streaming {
       seconds: Long = 60, k: Int = 4): Dataset[VrRow] = {
     import updates.sparkSession.implicits._
     require(k >= 2, "variance ratio needs k >= 2")
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def zero = VrState(Unset, 0.0, 0.0, hasPrevClose = false, Nil, 0L,
-      "0", "0", 0L, "0", "0")
     /** The open bucket's close is final: fold its return (if a lag
       * close exists and the ratio survives) and advance the lag. */
     def closeBucket(st: VrState): VrState = {
@@ -1318,29 +1239,20 @@ object Streaming {
         if (st.nk > 0L) Some(ssk) else None,
         var1, vark, vr)
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[VrState]): Iterator[VrRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("varianceRatio", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset) st = st.copy(bucket = b, close = u.price)
-          else if (b != st.bucket)
-            st = closeBucket(st).copy(bucket = b, close = u.price)
-          else st = st.copy(close = u.price)
-        }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    bucketFold[String, VrState, VrRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0), VrState(0.0, 0.0,
+        hasPrevClose = false, Nil, 0L, "0", "0", 0L, "0", "0"))(
+      add = (_, st, u) => {
+        FiniteGuard.price("varianceRatio", u) // the batch finitePrice
+        st.copy(close = u.price)
+      },
+      close = (_, _, st, _, _) => closeBucket(st),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** Per-symbol moment state: the [[VrState]] bucket-close carry plus
     * exact BigInt power sums Σq..Σq⁴ as strings. */
-  case class MomState(bucket: Long, close: Double, prevClose: Double,
+  case class MomState(close: Double, prevClose: Double,
       hasPrevClose: Boolean, n: Long, s1: String, s2: String,
       s3: String, s4: String)
   case class MomRow(symbol: String, n: Long, sum_q: Option[Double],
@@ -1362,10 +1274,6 @@ object Streaming {
   def streamingReturnMoments(updates: Dataset[Update],
       seconds: Long = 60): Dataset[MomRow] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def zero = MomState(Unset, 0.0, 0.0, hasPrevClose = false, 0L,
-      "0", "0", "0", "0")
     def closeBucket(st: MomState): MomState = {
       if (!st.hasPrevClose)
         return st.copy(prevClose = st.close, hasPrevClose = true)
@@ -1412,31 +1320,21 @@ object Streaming {
       MomRow(sym, st.n, Some(d1), Some(d2), Some(d3), Some(d4),
         Some(mean), Some(vr), skew, kurt)
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[MomState]): Iterator[MomRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("returnMoments", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset) st = st.copy(bucket = b, close = u.price)
-          else if (b != st.bucket)
-            st = closeBucket(st).copy(bucket = b, close = u.price)
-          else st = st.copy(close = u.price)
-        }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    bucketFold[String, MomState, MomRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0), MomState(0.0, 0.0,
+        hasPrevClose = false, 0L, "0", "0", "0", "0"))(
+      add = (_, st, u) => {
+        FiniteGuard.price("returnMoments", u) // the batch finitePrice
+        st.copy(close = u.price)
+      },
+      close = (_, _, st, _, _) => closeBucket(st),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** Per-symbol Parkinson state: the open bucket's running high/low
     * in exact integer cents, plus the closed-bucket count and exact
     * Σrq² (BigInt as string — Spark state encoders have no BigInt). */
-  case class ParkState(bucket: Long, hc: Long, lc: Long, n: Long,
-      s: String)
+  case class ParkState(hc: Long, lc: Long, n: Long, s: String)
   case class ParkRow(symbol: String, n_buckets: Long,
       sum_rq2: Option[Long], park_var: Option[Double],
       park_vol: Option[Double])
@@ -1448,18 +1346,14 @@ object Streaming {
     * (`rq = floor(ln(hc/lc)·1e8)`, loud 2e9 bound, zero-cent lows
     * dropped), and emits the CURRENT estimate from the exact running
     * sums — so after a far-future closer the last serving row equals
-    * the batch operator bit-for-bit (MicrostructureFuzzSpec). A trade
-    * from an already-closed bucket is late and dropped; trades within
-    * the open bucket fold in any arrival order, since high and low do
-    * not depend on it (StreamingSpec). */
+    * the batch operator bit-for-bit (MicrostructureFuzzSpec). Trades
+    * within the open bucket fold in any arrival order, since high and
+    * low do not depend on it. */
   def streamingParkinson(updates: Dataset[Update],
       seconds: Long = 60): Dataset[ParkRow] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
     // 4·ln 2 — recomputed identically to the batch constant
     val fourLn2 = 4.0d * math.log(2.0d)
-    def zero = ParkState(Unset, Long.MinValue, Long.MaxValue, 0L, "0")
     def cents(sym: String, p: Double): Long = {
       val c = math.floor(p * 100.0d + 0.5d)
       if (math.abs(c) > 1.0e12d) throw new ArithmeticException(
@@ -1486,35 +1380,25 @@ object Streaming {
       val pv = (sumL.toDouble / 1e16d) / (fourLn2 * st.n.toDouble)
       ParkRow(sym, st.n, Some(sumL), Some(pv), Some(math.sqrt(pv)))
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[ParkState]): Iterator[ParkRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("parkinson", u)
-          val b = bucketOf(u.ts)
-          val c = cents(sym, u.price)
-          if (st.bucket == Unset)
-            st = st.copy(bucket = b, hc = c, lc = c)
-          else if (b > st.bucket)
-            st = closeBucket(sym, st).copy(bucket = b, hc = c, lc = c)
-          else if (b == st.bucket) st = st.copy(hc = math.max(st.hc, c),
-            lc = math.min(st.lc, c))
-          // else: a trade from a closed bucket is late and dropped
-        }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    // the open bucket's high/low start empty: Long.MinValue/MaxValue
+    bucketFold[String, ParkState, ParkRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0),
+      ParkState(Long.MinValue, Long.MaxValue, 0L, "0"))(
+      add = (sym, st, u) => {
+        FiniteGuard.price("parkinson", u)
+        val c = cents(sym, u.price)
+        st.copy(hc = math.max(st.hc, c), lc = math.min(st.lc, c))
+      },
+      close = (sym, _, st, _, _) =>
+        closeBucket(sym, st).copy(hc = Long.MinValue, lc = Long.MaxValue),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** Per-symbol Rogers–Satchell state: the open bucket's OHLC in exact
     * integer cents with the (ts, seq) stamps that make open/close
     * robust to out-of-order arrivals WITHIN a bucket, plus the
     * closed-bucket count and exact Σterm (BigInt as string). */
-  case class RsState(bucket: Long, oc: Long, ots: Long, oseq: Long,
+  case class RsState(oc: Long, ots: Long, oseq: Long,
       hc: Long, lc: Long, cc: Long, cts: Long, cseq: Long,
       n: Long, s: String)
   case class RsRow(symbol: String, n_buckets: Long,
@@ -1531,15 +1415,10 @@ object Streaming {
     * bounds, zero-cent lows and opens dropped), and the CURRENT
     * estimate is emitted from the exact running sum — after a
     * far-future closer the last serving row equals the batch operator
-    * bit-for-bit (StreamingSpec). A trade from an already-closed bucket
-    * is late and dropped, as in [[streamingParkinson]]. */
+    * bit-for-bit (StreamingSpec). */
   def streamingRogersSatchell(updates: Dataset[Update],
       seconds: Long = 60): Dataset[RsRow] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def zero = RsState(Unset, 0L, 0L, 0L, Long.MinValue, Long.MaxValue,
-      0L, 0L, 0L, 0L, "0")
     def cents(sym: String, p: Double): Long = {
       val c = math.floor(p * 100.0d + 0.5d)
       if (math.abs(c) > 1.0e12d) throw new ArithmeticException(
@@ -1573,40 +1452,30 @@ object Streaming {
       val rv = (sumL.toDouble / 1e16d) / st.n.toDouble
       RsRow(sym, st.n, Some(sumL), Some(rv), Some(math.sqrt(rv)))
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[RsState]): Iterator[RsRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("rogersSatchell", u)
-          val b = bucketOf(u.ts)
-          val c = cents(sym, u.price)
-          if (st.bucket == Unset)
-            st = RsState(b, c, u.ts, u.seq, c, c, c, u.ts, u.seq,
-              st.n, st.s)
-          else if (b > st.bucket) {
-            val closed = closeBucket(sym, st)
-            st = RsState(b, c, u.ts, u.seq, c, c, c, u.ts, u.seq,
-              closed.n, closed.s)
-          } else if (b == st.bucket) {
-            val o =
-              if (u.ts < st.ots || (u.ts == st.ots && u.seq < st.oseq))
-                (c, u.ts, u.seq) else (st.oc, st.ots, st.oseq)
-            val cl =
-              if (u.ts > st.cts || (u.ts == st.cts && u.seq >= st.cseq))
-                (c, u.ts, u.seq) else (st.cc, st.cts, st.cseq)
-            st = st.copy(oc = o._1, ots = o._2, oseq = o._3,
-              hc = math.max(st.hc, c), lc = math.min(st.lc, c),
-              cc = cl._1, cts = cl._2, cseq = cl._3)
-          }
-          // else: a trade from a closed bucket is late and dropped
+    // hc = Long.MinValue marks an empty open bucket (cents are >= 0)
+    bucketFold[String, RsState, RsRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0),
+      RsState(0L, 0L, 0L, Long.MinValue, 0L, 0L, 0L, 0L, 0L, "0"))(
+      add = (sym, st, u) => {
+        FiniteGuard.price("rogersSatchell", u)
+        val c = cents(sym, u.price)
+        if (st.hc == Long.MinValue)
+          RsState(c, u.ts, u.seq, c, c, c, u.ts, u.seq, st.n, st.s)
+        else {
+          val o =
+            if (u.ts < st.ots || (u.ts == st.ots && u.seq < st.oseq))
+              (c, u.ts, u.seq) else (st.oc, st.ots, st.oseq)
+          val cl =
+            if (u.ts > st.cts || (u.ts == st.cts && u.seq >= st.cseq))
+              (c, u.ts, u.seq) else (st.cc, st.cts, st.cseq)
+          st.copy(oc = o._1, ots = o._2, oseq = o._3,
+            hc = math.max(st.hc, c), lc = math.min(st.lc, c),
+            cc = cl._1, cts = cl._2, cseq = cl._3)
         }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      },
+      close = (sym, _, st, _, _) =>
+        closeBucket(sym, st).copy(hc = Long.MinValue),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** Per-symbol Yang–Zhang state: the open bucket's OHLC in exact
@@ -1614,7 +1483,7 @@ object Streaming {
     * bucket's close (0 = none yet — cents are > 0 for surviving
     * buckets), the term count and the five exact sums (BigInt as
     * string). O(1) per key. */
-  case class YzState(bucket: Long, oc: Long, ots: Long, oseq: Long,
+  case class YzState(oc: Long, ots: Long, oseq: Long,
       hc: Long, lc: Long, cc: Long, cts: Long, cseq: Long,
       pc: Long, n: Long, so: String, so2: String, sc: String,
       sc2: String, sr: String)
@@ -1636,16 +1505,11 @@ object Streaming {
     * past the decimal(38,0) regime exactly where the batch side now
     * raises) — and the CURRENT estimate is emitted with the batch
     * IEEE chain, so after a far-future closer the last serving row
-    * equals the batch operator bit-for-bit (StreamingSpec). A trade
-    * from an already-closed bucket is late and dropped. */
+    * equals the batch operator bit-for-bit (StreamingSpec). */
   def streamingYangZhang(updates: Dataset[Update],
       seconds: Long = 60): Dataset[YzRow] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
     val DecimalMax = BigInt(10).pow(38)
-    def zero = YzState(Unset, 0L, 0L, 0L, Long.MinValue, Long.MaxValue,
-      0L, 0L, 0L, 0L, 0L, "0", "0", "0", "0", "0")
     def cents(sym: String, p: Double): Long = {
       val c = math.floor(p * 100.0d + 0.5d)
       if (math.abs(c) > 1.0e12d) throw new ArithmeticException(
@@ -1709,41 +1573,31 @@ object Streaming {
       YzRow(sym, st.n, Some(so), Some(so2), Some(sc), Some(sc2),
         Some(sr), Some(yz), Some(math.sqrt(math.max(yz, 0.0d))))
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[YzState]): Iterator[YzRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("yangZhang", u)
-          val b = bucketOf(u.ts)
-          val c = cents(sym, u.price)
-          if (st.bucket == Unset)
-            st = st.copy(bucket = b, oc = c, ots = u.ts, oseq = u.seq,
-              hc = c, lc = c, cc = c, cts = u.ts, cseq = u.seq)
-          else if (b > st.bucket) {
-            val closed = closeBucket(sym, st)
-            st = closed.copy(bucket = b, oc = c, ots = u.ts,
-              oseq = u.seq, hc = c, lc = c, cc = c, cts = u.ts,
-              cseq = u.seq)
-          } else if (b == st.bucket) {
-            val o =
-              if (u.ts < st.ots || (u.ts == st.ots && u.seq < st.oseq))
-                (c, u.ts, u.seq) else (st.oc, st.ots, st.oseq)
-            val cl =
-              if (u.ts > st.cts || (u.ts == st.cts && u.seq >= st.cseq))
-                (c, u.ts, u.seq) else (st.cc, st.cts, st.cseq)
-            st = st.copy(oc = o._1, ots = o._2, oseq = o._3,
-              hc = math.max(st.hc, c), lc = math.min(st.lc, c),
-              cc = cl._1, cts = cl._2, cseq = cl._3)
-          }
-          // else: a trade from a closed bucket is late and dropped
+    // hc = Long.MinValue marks an empty open bucket (cents are >= 0)
+    bucketFold[String, YzState, YzRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0), YzState(0L, 0L, 0L,
+        Long.MinValue, 0L, 0L, 0L, 0L, 0L, 0L, "0", "0", "0", "0", "0"))(
+      add = (sym, st, u) => {
+        FiniteGuard.price("yangZhang", u)
+        val c = cents(sym, u.price)
+        if (st.hc == Long.MinValue)
+          st.copy(oc = c, ots = u.ts, oseq = u.seq, hc = c, lc = c,
+            cc = c, cts = u.ts, cseq = u.seq)
+        else {
+          val o =
+            if (u.ts < st.ots || (u.ts == st.ots && u.seq < st.oseq))
+              (c, u.ts, u.seq) else (st.oc, st.ots, st.oseq)
+          val cl =
+            if (u.ts > st.cts || (u.ts == st.cts && u.seq >= st.cseq))
+              (c, u.ts, u.seq) else (st.cc, st.cts, st.cseq)
+          st.copy(oc = o._1, ots = o._2, oseq = o._3,
+            hc = math.max(st.hc, c), lc = math.min(st.lc, c),
+            cc = cl._1, cts = cl._2, cseq = cl._3)
         }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      },
+      close = (sym, _, st, _, _) =>
+        closeBucket(sym, st).copy(hc = Long.MinValue),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** Per-symbol TSRV state: the open bucket's (ts, seq)-stamped close
@@ -1751,8 +1605,8 @@ object Streaming {
     * ratios directly), the last K closed-bucket closes most-recent
     * first, the bucket count, and the two exact square sums (BigInt
     * as string). O(K) per key. */
-  case class TsrvState(bucket: Long, close: Double, cts: Long,
-      cseq: Long, m: Long, prevs: Seq[Double], s1: String, sk: String)
+  case class TsrvState(close: Double, cts: Long, cseq: Long, m: Long,
+      prevs: Seq[Double], s1: String, sk: String)
   case class TsrvRow(symbol: String, m: Long, sum_q2_1: Option[Long],
       sum_q2_k: Option[Long], rv_full: Option[Double],
       tsrv: Option[Double], tsrv_pos: Option[Double])
@@ -1771,10 +1625,7 @@ object Streaming {
       k: Int = 5): Dataset[TsrvRow] = {
     require(k > 1, "k must exceed 1 (K=1 degenerates to RV_full)")
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
     val DecimalMax = BigInt(10).pow(38)
-    def zero = TsrvState(Unset, 0.0d, 0L, 0L, 0L, Nil, "0", "0")
     def q(sym: String, c: Double, prev: Double, what: String): Long = {
       val v = math.floor(math.log(c / prev) * 1e6d).toLong
       if (math.abs(v) > graft.operators.Microstructure.QuantizedReturnBound)
@@ -1819,30 +1670,19 @@ object Streaming {
         if (st.m > k.toLong) Some(est) else None,
         if (st.m > k.toLong) Some(math.max(est, 0.0d)) else None)
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[TsrvState]): Iterator[TsrvRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("tsrv", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset)
-            st = st.copy(bucket = b, close = u.price, cts = u.ts,
-              cseq = u.seq)
-          else if (b != st.bucket) {
-            val closed = closeBucket(sym, st)
-            st = closed.copy(bucket = b, close = u.price, cts = u.ts,
-              cseq = u.seq)
-          } else if (u.ts > st.cts ||
-              (u.ts == st.cts && u.seq >= st.cseq))
-            st = st.copy(close = u.price, cts = u.ts, cseq = u.seq)
-        }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    // the open bucket's close stamp starts below every (ts, seq)
+    bucketFold[String, TsrvState, TsrvRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0), TsrvState(0.0d,
+        Long.MinValue, Long.MinValue, 0L, Nil, "0", "0"))(
+      add = (_, st, u) => {
+        FiniteGuard.price("tsrv", u) // the batch finitePrice
+        if (u.ts > st.cts || (u.ts == st.cts && u.seq >= st.cseq))
+          st.copy(close = u.price, cts = u.ts, cseq = u.seq)
+        else st
+      },
+      close = (sym, _, st, _, _) => closeBucket(sym, st)
+        .copy(cts = Long.MinValue, cseq = Long.MinValue),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** Per-symbol realized-kernel state: the open bucket's (ts, seq)-
@@ -1850,9 +1690,8 @@ object Streaming {
     * quantized returns most-recent first, the return count and the
     * H+1 exact autocovariance sums (BigInt as string). O(H) per
     * key. */
-  case class RkState(bucket: Long, close: Double, cts: Long,
-      cseq: Long, prev: Double, nRets: Long, qHist: Seq[Long],
-      gammas: Seq[String])
+  case class RkState(close: Double, cts: Long, cseq: Long, prev: Double,
+      nRets: Long, qHist: Seq[Long], gammas: Seq[String])
   case class RkRow(symbol: String, n_rets: Long, gamma0: Option[Long],
       gamma1: Option[Long], gamma2: Option[Long],
       gamma3: Option[Long], gamma4: Option[Long],
@@ -1871,10 +1710,6 @@ object Streaming {
       seconds: Long = 60): Dataset[RkRow] = {
     import updates.sparkSession.implicits._
     val H = 4
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def zero = RkState(Unset, 0.0d, 0L, 0L, 0.0d, 0L, Nil,
-      Seq.fill(H + 1)("0"))
     def q(sym: String, c: Double, prev: Double): Long = {
       val v = math.floor(math.log(c / prev) * 1e6d).toLong
       if (math.abs(v) > graft.operators.Microstructure.QuantizedReturnBound)
@@ -1914,37 +1749,26 @@ object Streaming {
         Some(g(3)), Some(g(4)), Some(rk),
         Some(math.sqrt(math.max(rk, 0.0d))))
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[RkState]): Iterator[RkRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("realizedKernel", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset)
-            st = st.copy(bucket = b, close = u.price, cts = u.ts,
-              cseq = u.seq)
-          else if (b != st.bucket) {
-            val closed = closeBucket(sym, st)
-            st = closed.copy(bucket = b, close = u.price, cts = u.ts,
-              cseq = u.seq)
-          } else if (u.ts > st.cts ||
-              (u.ts == st.cts && u.seq >= st.cseq))
-            st = st.copy(close = u.price, cts = u.ts, cseq = u.seq)
-        }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    // the open bucket's close stamp starts below every (ts, seq)
+    bucketFold[String, RkState, RkRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0), RkState(0.0d,
+        Long.MinValue, Long.MinValue, 0.0d, 0L, Nil, Seq.fill(H + 1)("0")))(
+      add = (_, st, u) => {
+        FiniteGuard.price("realizedKernel", u) // the batch finitePrice
+        if (u.ts > st.cts || (u.ts == st.cts && u.seq >= st.cseq))
+          st.copy(close = u.price, cts = u.ts, cseq = u.seq)
+        else st
+      },
+      close = (sym, _, st, _, _) => closeBucket(sym, st)
+        .copy(cts = Long.MinValue, cseq = Long.MinValue),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
-  /** Per-symbol drawdown state: the open bucket and its running close,
+  /** Per-symbol drawdown state: the open bucket's running close,
     * the running peak over CLOSED buckets, and the exact minimum
     * quantized trough ratio with its earliest bucket. O(1) per key. */
-  case class DdState(bucket: Long, close: Double, peak: Double,
-      hasPeak: Boolean, n: Long, qMin: Long, trough: Long)
+  case class DdState(close: Double, peak: Double, hasPeak: Boolean,
+      n: Long, qMin: Long, trough: Long)
   case class DdRow(symbol: String, n_buckets: Long, q_min: Option[Long],
       trough_start: Option[Long], max_drawdown: Option[Double])
 
@@ -1960,42 +1784,29 @@ object Streaming {
   def streamingMaxDrawdown(updates: Dataset[Update],
       seconds: Long = 60): Dataset[DdRow] = {
     import updates.sparkSession.implicits._
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def zero = DdState(Unset, 0.0, 0.0, hasPeak = false, 0L, Long.MaxValue,
-      Unset)
-    def closeBucket(st: DdState): DdState = {
+    def closeBucket(st: DdState, bucket: Long): DdState = {
       val peak =
         if (!st.hasPeak || SqlOrd.gt(st.close, st.peak)) st.close
         else st.peak
       val q = math.floor(st.close / peak * 1e6).toLong
       if (q < st.qMin)
         st.copy(peak = peak, hasPeak = true, n = st.n + 1L, qMin = q,
-          trough = st.bucket)
+          trough = bucket)
       else st.copy(peak = peak, hasPeak = true, n = st.n + 1L)
     }
     def emit(sym: String, st: DdState): DdRow =
       if (st.n == 0L) DdRow(sym, 0L, None, None, None)
       else DdRow(sym, st.n, Some(st.qMin), Some(st.trough),
         Some(1.0d - st.qMin.toDouble / 1e6))
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[DdState]): Iterator[DdRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("maxDrawdown", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset) st = st.copy(bucket = b, close = u.price)
-          else if (b != st.bucket)
-            st = closeBucket(st).copy(bucket = b, close = u.price)
-          else st = st.copy(close = u.price)
-        }
-      state.update(st)
-      Iterator.single(emit(sym, st))
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    bucketFold[String, DdState, DdRow](updates, seconds, _.symbol,
+      u => u.is_trade && SqlOrd.gt(u.price, 0.0),
+      DdState(0.0, 0.0, hasPeak = false, 0L, Long.MaxValue, 0L))(
+      add = (_, st, u) => {
+        FiniteGuard.price("maxDrawdown", u) // the batch finitePrice
+        st.copy(close = u.price)
+      },
+      close = (_, b, st, _, _) => closeBucket(st, b),
+      serve = (sym, st) => Some(emit(sym, st)))
   }
 
   /** One scale's cross-symbol state: the global open coarse bucket,
@@ -2217,9 +2028,9 @@ object Streaming {
   }
 
   /** Per-symbol OFI state: the SET-only level book (key packs
-    * `(level << 1) | is_bid`, value = last set size), the open bucket,
-    * and the previous CLOSED bucket's touch. */
-  case class OfiState(book: Map[Long, Double], bucket: Long,
+    * `(level << 1) | is_bid`, value = last set size) and the previous
+    * CLOSED bucket's touch. */
+  case class OfiState(book: Map[Long, Double],
       pbbl: Option[Long], pbbs: Option[Double],
       pbal: Option[Long], pbas: Option[Double], hasPrev: Boolean)
   case class OfiRow(symbol: String, start: Long,
@@ -2240,20 +2051,15 @@ object Streaming {
       decimals: Int = 2): Dataset[OfiRow] = {
     import updates.sparkSession.implicits._
     val mult = math.pow(10, decimals)
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[OfiState]): Iterator[OfiRow] = {
-      var st = state.getOption.getOrElse(OfiState(
-        Map.empty, Unset, None, None, None, None, hasPrev = false))
-      val out = Seq.newBuilder[OfiRow]
-      def close(): Unit = {
-        // the batch touch: best live level per side with its SET size.
-        // A bucket with NO live level has no row in the batch touch
-        // table at all — its lag skips it — so emit nothing and carry
-        // the previous touch unchanged.
-        val live = st.book.filter(e => SqlOrd.gt(e._2, 0.0d))
-        if (live.isEmpty) return
+    def closeTouch(sym: String, bucket: Long, st: OfiState,
+        out: OfiRow => Unit): OfiState = {
+      // the batch touch: best live level per side with its SET size.
+      // A bucket with NO live level has no row in the batch touch
+      // table at all — its lag skips it — so emit nothing and carry
+      // the previous touch unchanged.
+      val live = st.book.filter(e => SqlOrd.gt(e._2, 0.0d))
+      if (live.isEmpty) st
+      else {
         val bids = live.collect { case (k, s) if (k & 1L) == 1L =>
           (k >> 1, s) }
         val asks = live.collect { case (k, s) if (k & 1L) == 0L =>
@@ -2268,33 +2074,27 @@ object Streaming {
         } yield
           ((if (b >= pb) bs else 0.0d) - (if (b <= pb) pbs else 0.0d)) -
           ((if (a <= pa) as else 0.0d) - (if (a >= pa) pas else 0.0d))
-        out += OfiRow(sym, st.bucket, bbl.map(_.toDouble / mult), bbs,
-          bal.map(_.toDouble / mult), bas, ofi)
-        st = st.copy(pbbl = bbl, pbbs = bbs, pbal = bal, pbas = bas,
+        out(OfiRow(sym, bucket, bbl.map(_.toDouble / mult), bbs,
+          bal.map(_.toDouble / mult), bas, ofi))
+        st.copy(pbbl = bbl, pbbs = bbs, pbal = bal, pbas = bas,
           hasPrev = true)
       }
-      rows.toSeq.filter(!_.is_trade).sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          FiniteGuard.price("ofi", u) // the batch finitePrice
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset) st = st.copy(bucket = b)
-          else if (b != st.bucket) { close(); st = st.copy(bucket = b) }
-          val level = math.floor(u.price * mult).toLong
-          st = st.copy(book =
-            st.book + (((level << 1) | (if (u.is_bid) 1L else 0L)) ->
-              u.size))
-        }
-      state.update(st)
-      out.result().iterator
     }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    bucketFold[String, OfiState, OfiRow](updates, seconds, _.symbol,
+      !_.is_trade,
+      OfiState(Map.empty, None, None, None, None, hasPrev = false))(
+      add = (_, st, u) => {
+        FiniteGuard.price("ofi", u) // the batch finitePrice
+        val level = math.floor(u.price * mult).toLong
+        st.copy(book = st.book +
+          (((level << 1) | (if (u.is_bid) 1L else 0L)) -> u.size))
+      },
+      close = (sym, b, st, _, out) => closeTouch(sym, b, st, out))
   }
 
   /** Per-symbol depth-profile state: the SET-only level book (the
-    * [[OfiState]] packing) and the open bucket. */
-  case class DepthState(book: Map[Long, Double], bucket: Long)
+    * [[OfiState]] packing). */
+  case class DepthState(book: Map[Long, Double])
   case class DepthRow(symbol: String, start: Long, is_bid: Boolean,
       band_bps: Long, n_levels: Long, depth: Double)
 
@@ -2313,58 +2113,45 @@ object Streaming {
     val mult = math.pow(10, decimals)
     val bands = bandsBps.sorted
     val Dec4 = Streaming.Dec4
-    def bucketOf(ts: Long): Long = Streaming.Buckets.of(ts, seconds)
-    val Unset = Long.MinValue
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[DepthState]): Iterator[DepthRow] = {
-      var st = state.getOption.getOrElse(DepthState(Map.empty, Unset))
-      val out = Seq.newBuilder[DepthRow]
-      def close(): Unit = {
-        val live = st.book.filter(e => SqlOrd.gt(e._2, 0.0d))
-        val bids = live.collect { case (k, s) if (k & 1L) == 1L =>
-          (k >> 1, s) }
-        val asks = live.collect { case (k, s) if (k & 1L) == 0L =>
-          (k >> 1, s) }
-        if (bids.isEmpty || asks.isEmpty) return
-        val m2 = bids.keysIterator.max + asks.keysIterator.min
-        for ((side, isBid) <- Seq((bids, true), (asks, false))) {
-          val nLv = new Array[Long](bands.length)
-          val dq = new Array[Long](bands.length)
-          side.foreach { case (l, s) =>
-            val d = 10000L * math.abs(2L * l - m2)
-            var i = 0
-            while (i < bands.length) {
-              if (d <= bands(i) * m2) {
-                nLv(i) += 1L; dq(i) += Dec4.dec4(s)
-              }
-              i += 1
-            }
-          }
+    def closeBands(sym: String, b: Long, st: DepthState,
+        out: DepthRow => Unit): Unit = {
+      val live = st.book.filter(e => SqlOrd.gt(e._2, 0.0d))
+      val bids = live.collect { case (k, s) if (k & 1L) == 1L =>
+        (k >> 1, s) }
+      val asks = live.collect { case (k, s) if (k & 1L) == 0L =>
+        (k >> 1, s) }
+      if (bids.isEmpty || asks.isEmpty) return
+      val m2 = bids.keysIterator.max + asks.keysIterator.min
+      for ((side, isBid) <- Seq((bids, true), (asks, false))) {
+        val nLv = new Array[Long](bands.length)
+        val dq = new Array[Long](bands.length)
+        side.foreach { case (l, s) =>
+          val d = 10000L * math.abs(2L * l - m2)
           var i = 0
           while (i < bands.length) {
-            out += DepthRow(sym, st.bucket, isBid, bands(i), nLv(i),
-              Dec4.dec4ToDouble(dq(i)))
+            if (d <= bands(i) * m2) {
+              nLv(i) += 1L; dq(i) += Dec4.dec4(s)
+            }
             i += 1
           }
         }
-      }
-      rows.toSeq.filter(!_.is_trade).sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          FiniteGuard.price("depthProfile", u)
-          val b = bucketOf(u.ts)
-          if (st.bucket == Unset) st = st.copy(bucket = b)
-          else if (b != st.bucket) { close(); st = st.copy(bucket = b) }
-          val level = math.floor(u.price * mult).toLong
-          st = st.copy(book =
-            st.book + (((level << 1) | (if (u.is_bid) 1L else 0L)) ->
-              u.size))
+        var i = 0
+        while (i < bands.length) {
+          out(DepthRow(sym, b, isBid, bands(i), nLv(i),
+            Dec4.dec4ToDouble(dq(i))))
+          i += 1
         }
-      state.update(st)
-      out.result().iterator
+      }
     }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    bucketFold[String, DepthState, DepthRow](updates, seconds, _.symbol,
+      !_.is_trade, DepthState(Map.empty))(
+      add = (_, st, u) => {
+        FiniteGuard.price("depthProfile", u)
+        val level = math.floor(u.price * mult).toLong
+        DepthState(st.book +
+          (((level << 1) | (if (u.is_bid) 1L else 0L)) -> u.size))
+      },
+      close = (sym, b, st, _, out) => { closeBands(sym, b, st, out); st })
   }
 
   def streamingBookFeatures(updates: Dataset[Update], decimals: Int = 2,

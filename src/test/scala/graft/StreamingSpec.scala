@@ -558,6 +558,75 @@ class StreamingSpec extends SparkSpec {
       if (got == want) None else Some(s"$name: got $got, want $want")
     }
     assert(drift.isEmpty)
+
+    // Every per-bucket twin, on one feed of trades and level sets on
+    // both sides. Batch 2 starts with a trade and a bid level from
+    // minute 1, which closed in batch 1, so each twin's output must equal
+    // its output on the same feed without those two rows: every emitted
+    // row of a per-close twin, the last serving row of the others.
+    def up(m: Int, sec: Int, seq: Long, trade: Boolean, bid: Boolean,
+        price: Double, size: Double) =
+      Update("p", t0 + m * 60000L + sec * 1000L, seq, trade, bid, price,
+        size)
+    def minute(m: Int): Seq[Update] = {
+      val (s, px) = (100L * m, 100.0 + m % 3 - 0.5 * (m % 2))
+      Seq(up(m, 0, s, trade = false, bid = true, px - 1.0, 5.0 + m),
+        up(m, 1, s + 1, trade = false, bid = false, px + 1.0, 4.0 + m),
+        up(m, 10, s + 2, trade = true, bid = true, px + 0.25, 1.0 + m),
+        up(m, 20, s + 3, trade = true, bid = false, px - 0.5, 2.0),
+        up(m, 30, s + 4, trade = true, bid = true, px + 0.75, 1.5),
+        up(m, 40, s + 5, trade = false, bid = true, px - 0.5, 3.0),
+        up(m, 45, s + 6, trade = false, bid = false, px + 1.5, 2.5))
+    }
+    val lateRows = Seq(up(1, 50, 150, trade = true, bid = true, 90.0, 3.0),
+      up(1, 55, 151, trade = false, bid = true, 98.0, 4.0))
+    val feed = Seq((0 to 3).flatMap(minute),
+      lateRows ++ (4 to 6).flatMap(minute), minute(120))
+    type Twin = Dataset[Update] => DataFrame
+    val perClose = Seq[(String, Twin)](
+      ("trade_intensity", Streaming.streamingTradeIntensity(_).toDF()),
+      ("ema_close", Streaming.streamingEmaClose(_).toDF()),
+      ("realized_vol", Streaming.streamingRealizedVol(_).toDF()),
+      ("twap_quote", Streaming.streamingTwapQuote(_).toDF()),
+      ("tick_rule_flow", Streaming.streamingTickRuleFlow(_).toDF()),
+      ("effective_spread", Streaming.streamingEffectiveSpread(_).toDF()),
+      ("roll_spread", Streaming.streamingRollSpread(_).toDF()),
+      ("ofi", Streaming.streamingOfi(_).toDF()),
+      ("depth_profile", Streaming.streamingDepthProfile(_).toDF()))
+    val serving = Seq[(String, Twin)](
+      ("kyle_lambda", Streaming.streamingKyleLambda(_).toDF()),
+      ("flow_autocorr", Streaming.streamingFlowAutocorr(_).toDF()),
+      ("variance_ratio", Streaming.streamingVarianceRatio(_).toDF()),
+      ("return_moments", Streaming.streamingReturnMoments(_).toDF()),
+      ("parkinson", Streaming.streamingParkinson(_).toDF()),
+      ("rogers_satchell", Streaming.streamingRogersSatchell(_).toDF()),
+      ("yang_zhang", Streaming.streamingYangZhang(_).toDF()),
+      ("tsrv", Streaming.streamingTsrv(_).toDF()),
+      ("realized_kernel", Streaming.streamingRealizedKernel(_).toDF()),
+      ("max_drawdown", Streaming.streamingMaxDrawdown(_).toDF()))
+    def run(name: String, twin: Twin, batches: Seq[Seq[Update]])
+        : Seq[org.apache.spark.sql.Row] = {
+      val in = MemoryStream[Update]
+      val q = twin(in.toDS()).writeStream.outputMode("append")
+        .format("memory").queryName(name).start()
+      try batches.foreach { b =>
+        in.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+      spark.table(name).collect().toSeq
+    }
+    val tableDrift = (perClose.map(_ -> true) ++ serving.map(_ -> false))
+      .flatMap { case ((name, twin), everyRow) =>
+        def view(rows: Seq[org.apache.spark.sql.Row]) =
+          if (everyRow) rows.groupBy(identity).view.mapValues(_.size).toMap
+          else Map(rows.last -> 1)
+        val want = run(s"clean_$name", twin,
+          feed.map(_.filterNot(lateRows.contains)))
+        assert(want.nonEmpty, name)
+        val got = run(s"laterow_$name", twin, feed)
+        if (view(got) == view(want)) None
+        else Some(s"$name: got $got, want $want")
+      }
+    assert(tableDrift.isEmpty, tableDrift.mkString("\n"))
   }
 
   test("streaming rogers-satchell: after sentinel closers the serving " +
