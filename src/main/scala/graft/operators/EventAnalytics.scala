@@ -389,11 +389,13 @@ object EventAnalytics {
     * (the engine's no-RNG hash-membership stance — identical strings,
     * identical split, in both engines), the metric is each user's
     * exact quantized value sum, and the output is one row of exact
-    * operands (counts; decimal sums emitted through the correctly-
-    * rounded decimal→double cast both engines share) plus the Welch
-    * z-statistic — one identical IEEE chain; null when a variance or
-    * group is degenerate. Population variance, matching the family's
-    * other estimators. */
+    * operands (counts; exact sums emitted as their correctly rounded
+    * doubles) plus the Welch z-statistic — one identical IEEE chain;
+    * null when a variance or group is degenerate. Population variance,
+    * matching the family's other estimators. Spark's decimal→double
+    * cast rounds correctly; DuckDB's HUGEINT→DOUBLE cast does not
+    * always (one ulp low on a sum of squares past 2^64), so the oracle
+    * casts each HUGEINT sum through VARCHAR, whose parse does. */
   def abTest(events: DataFrame): DataFrame = {
     val users = ev(events).groupBy("user_id")
       .agg(valueQSum("abTest").as("m"))
@@ -444,16 +446,16 @@ object EventAnalytics {
       | SELECT
       |  CAST(SUM(CASE WHEN variant = 'A' THEN 1 ELSE 0 END) AS BIGINT)
       |   AS n_a,
-      |  CAST(SUM(CASE WHEN variant = 'A' THEN CAST(m AS HUGEINT)
-      |   ELSE 0 END) AS DOUBLE) AS sum_a,
-      |  CAST(SUM(CASE WHEN variant = 'A' THEN CAST(m AS HUGEINT)
-      |   * CAST(m AS HUGEINT) ELSE 0 END) AS DOUBLE) AS sumsq_a,
+      |  CAST(CAST(SUM(CASE WHEN variant = 'A' THEN CAST(m AS HUGEINT)
+      |   ELSE 0 END) AS VARCHAR) AS DOUBLE) AS sum_a,
+      |  CAST(CAST(SUM(CASE WHEN variant = 'A' THEN CAST(m AS HUGEINT)
+      |   * CAST(m AS HUGEINT) ELSE 0 END) AS VARCHAR) AS DOUBLE) AS sumsq_a,
       |  CAST(SUM(CASE WHEN variant = 'B' THEN 1 ELSE 0 END) AS BIGINT)
       |   AS n_b,
-      |  CAST(SUM(CASE WHEN variant = 'B' THEN CAST(m AS HUGEINT)
-      |   ELSE 0 END) AS DOUBLE) AS sum_b,
-      |  CAST(SUM(CASE WHEN variant = 'B' THEN CAST(m AS HUGEINT)
-      |   * CAST(m AS HUGEINT) ELSE 0 END) AS DOUBLE) AS sumsq_b
+      |  CAST(CAST(SUM(CASE WHEN variant = 'B' THEN CAST(m AS HUGEINT)
+      |   ELSE 0 END) AS VARCHAR) AS DOUBLE) AS sum_b,
+      |  CAST(CAST(SUM(CASE WHEN variant = 'B' THEN CAST(m AS HUGEINT)
+      |   * CAST(m AS HUGEINT) ELSE 0 END) AS VARCHAR) AS DOUBLE) AS sumsq_b
       | FROM (
       |  SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1)
       |    < '8' THEN 'A' ELSE 'B' END AS variant, m

@@ -17,9 +17,11 @@ import graft.server.CommandParser
   * watermarks. Only the windowed-aggregation twins below (time, VWAP,
   * trade-imbalance, bucket-spread and order-trade-ratio bars) add
   * event-time watermarking, a documented new capability (T6). The
-  * stateful folds keep no watermark: they order rows by (ts, seq), and
-  * the bucketed ones drop a row older than their open bucket
-  * ([[bucketFold]]).
+  * stateful folds keep no watermark and are built on [[keyedFold]]. The
+  * tick folds share the reference's rule ([[tickFold]]): a row below its
+  * key's (ts, seq) high-water mark is dropped. The document and click
+  * folds keep their arrival-order contracts, and the four TTL twins
+  * expire state by event time.
   */
 object Streaming {
 
@@ -63,30 +65,25 @@ object Streaming {
     import updates.sparkSession.implicits._
     val mult = math.pow(10, decimals)
     // state key packs (is_bid, level) into one Long: (level << 1) | bid
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[Map[Long, Double]]): Iterator[BookTop] = {
-      var b = state.getOption.getOrElse(Map.empty[Long, Double])
-      rows.toSeq.sortBy(u => (u.ts, u.seq)).foreach { u =>
+    tickFold[String, Map[Long, Double], BookTop](updates, _.symbol,
+      _ => true, Map.empty)(
+      (_, b, u, _) => {
         val lvl = math.floor(u.price * mult).toLong
         val key = (lvl << 1) | (if (u.is_bid) 1L else 0L)
-        if (u.is_trade) b.get(key).foreach(sz => b = b.updated(key, sz - u.size))
-        else if (u.size == 0.0) b = b.removed(key)
-        else b = b.updated(key, u.size)
-      }
-      state.update(b)
-      val bids = b.keysIterator.filter(k => (k & 1L) == 1L).map(_ >> 1).toSeq
-      val asks = b.keysIterator.filter(k => (k & 1L) == 0L).map(_ >> 1).toSeq
-      if (bids.isEmpty || asks.isEmpty) Iterator.empty
-      else {
-        val bb = bids.max / mult
-        val ba = asks.min / mult
-        Iterator.single(BookTop(sym, bb, ba, (bb + ba) / 2, b.size))
-      }
-    }
-    localCheckpoints(updates)
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+        if (u.is_trade) b.get(key).fold(b)(sz => b.updated(key, sz - u.size))
+        else if (u.size == 0.0) b.removed(key)
+        else b.updated(key, u.size)
+      },
+      (sym, b) => {
+        val bids = b.keysIterator.filter(k => (k & 1L) == 1L).map(_ >> 1).toSeq
+        val asks = b.keysIterator.filter(k => (k & 1L) == 0L).map(_ >> 1).toSeq
+        if (bids.isEmpty || asks.isEmpty) None
+        else {
+          val bb = bids.max / mult
+          val ba = asks.min / mult
+          Some(BookTop(sym, bb, ba, (bb + ba) / 2, b.size))
+        }
+      })
   }
 
   /** Streaming 1-minute OHLCV bars with watermarking (T6 — new capability
@@ -208,7 +205,8 @@ object Streaming {
   def subscribe(updates: Dataset[Update], book: String): Dataset[Update] =
     updates.filter(_.symbol == book)
 
-  /** A book's dedup high-water mark: the largest (ts, seq) emitted. */
+  /** A book's dedup high-water mark: the largest (ts, seq) emitted
+    * ((Long.MinValue, Long.MinValue) before the first). */
   case class DedupMark(ts: Long, seq: Long)
 
   /** Streaming dedup on a per-book (ts, seq) high-water mark — the
@@ -223,64 +221,44 @@ object Streaming {
     * any state. */
   def streamingDedup(updates: Dataset[Update]): Dataset[Update] = {
     import updates.sparkSession.implicits._
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[DedupMark]): Iterator[Update] = {
-      var mark = state.getOption.orNull
-      val out = Seq.newBuilder[Update]
-      rows.toSeq.sortBy(u => (u.ts, u.seq)).foreach { u =>
-        if (mark == null || u.ts > mark.ts ||
-            (u.ts == mark.ts && u.seq > mark.seq)) {
-          out += u
-          mark = DedupMark(u.ts, u.seq)
-        }
-      }
-      if (mark != null) state.update(mark)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    // at or below the mark is dropped: stricter than tickFold's rule,
+    // which folds a row equal to its mark
+    keyedFold[Update, String, DedupMark, Update](updates, _.symbol,
+      DedupMark(Long.MinValue, Long.MinValue))(
+      _.sortBy(u => (u.ts, u.seq)),
+      (_, mark, u, out) =>
+        if (u.ts > mark.ts || (u.ts == mark.ts && u.seq > mark.seq)) {
+          out(u)
+          DedupMark(u.ts, u.seq)
+        } else mark)
   }
 
   /** Streaming as-of join (the incremental twin of
     * [[graft.operators.AsofJoin.tradesWithQuote]]): per-symbol state is
     * just the prevailing quote (price, ts) — O(1) per key — carried across
-    * micro-batches via flatMapGroupsWithState; each trade emits joined to
-    * that state. Rows within a batch process in (ts, seq) order; trades
-    * before any quote emit with no quote fields (None), matching the
-    * batch operator's NULLs. */
+    * micro-batches; each trade emits joined to that state. Rows process
+    * in (ts, seq) order; trades before any quote emit with no quote
+    * fields (None), matching the batch operator's NULLs. A row below the
+    * symbol's (ts, seq) mark is dropped ([[tickFold]]): a late trade
+    * would otherwise join a newer quote than the batch operator gives
+    * it, and a late quote would regress the prevailing one. */
   case class TradeQuote(symbol: String, ts: Long, seq: Long, price: Double,
       quote_price: Option[Double], quote_ts: Option[Long],
       slippage: Option[Double])
 
   def streamingAsof(updates: Dataset[Update]): Dataset[TradeQuote] = {
     import updates.sparkSession.implicits._
-    // State = (price, ts, seq) of the prevailing quote. A quote only
-    // ADVANCES the state — a quote arriving in a later micro-batch with an
-    // older (ts, seq) than the stored one must not regress it (it is late
-    // data; the batch operator would have joined it behind the newer
-    // quote). Trades arriving after a newer quote already consumed the
-    // state remain an inherent append-mode limitation — documented, same
-    // late-data-drops-at-flush stance as SURVEY T6.
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[(Double, Long, Long)]): Iterator[TradeQuote] = {
-      var q = state.getOption
-      val out = Seq.newBuilder[TradeQuote]
-      rows.toSeq.sortBy(u => (u.ts, u.seq)).foreach { u =>
-        if (u.is_trade)
-          out += TradeQuote(sym, u.ts, u.seq, u.price, q.map(_._1),
-            q.map(_._2), q.map(u.price - _._1))
-        else if (q.forall(p =>
-            u.ts > p._2 || (u.ts == p._2 && u.seq > p._3)))
-          q = Some((u.price, u.ts, u.seq))
-      }
-      q.foreach(state.update)
-      out.result().iterator
-    }
-    localCheckpoints(updates)
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    val NoQuote = Long.MinValue // state = (price, ts) of the prevailing quote
+    tickFold[String, (Double, Long), TradeQuote](updates, _.symbol,
+      _ => true, (0.0d, NoQuote))(
+      (sym, q, u, out) =>
+        if (!u.is_trade) (u.price, u.ts)
+        else {
+          val p = Option.when(q._2 != NoQuote)(q)
+          out(TradeQuote(sym, u.ts, u.seq, u.price, p.map(_._1), p.map(_._2),
+            p.map(u.price - _._1)))
+          q
+        })
   }
 
   /** Streaming reset-semantics volume bars: the FoldBars state machine
@@ -289,46 +267,33 @@ object Streaming {
     * accumulator crosses the interval; the in-progress candle and elapsed
     * weight live in bounded per-symbol state. Same sampler quirks as the
     * batch fold (boundary trade starts the next bar, first trade of a run
-    * never feeds the accumulator). Rows within a batch are processed in
-    * (ts, seq) order, but across batches they fold in arrival order:
-    * a row older than rows of an earlier batch is not dropped, it
-    * extends the open bar (its ts becomes the bar's end) and feeds the
-    * accumulator. So the bars equal the batch fold only when the feed
-    * is in (ts, seq) order across batches. */
+    * never feeds the accumulator). Rows fold in (ts, seq) order; a row
+    * below the symbol's (ts, seq) mark is dropped ([[tickFold]]), so a
+    * late trade neither extends the open bar nor feeds the accumulator,
+    * and the bars are those of the feed without it. A trade equal to
+    * the mark, a repeated row, still folds, as in the batch fold. */
   case class BarState(cur: Option[Candle], elapsed: Double)
 
   def streamingVolumeBars(updates: Dataset[Update], interval: Double)
       : Dataset[Candle] = {
     import updates.sparkSession.implicits._
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[BarState]): Iterator[Candle] = {
-      var st = state.getOption.getOrElse(BarState(None, 0.0))
-      val out = Seq.newBuilder[Candle]
-      rows.toSeq.filter(_.is_trade).sortBy(u => (u.ts, u.seq)).foreach { u =>
-        st.cur match {
-          case None =>
-            st = BarState(Some(Candle(sym, u.ts, u.ts, u.price, u.price,
-              u.price, u.price, u.size)), st.elapsed)
-          case Some(c) =>
-            val elapsed = st.elapsed + u.size
-            if (elapsed > interval) { // is_sample: close, start next bar
-              out += c
-              st = BarState(Some(Candle(sym, u.ts, u.ts, u.price, u.price,
-                u.price, u.price, u.size)), 0.0)
-            } else {
-              st = BarState(Some(Candle(sym, c.start, u.ts, c.open,
-                math.max(c.high, u.price), math.min(c.low, u.price),
-                u.price, c.volume + u.size)), elapsed)
-            }
-        }
-      }
-      state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates)
-      .groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    tickFold[String, BarState, Candle](updates, _.symbol, _.is_trade,
+      BarState(None, 0.0))(
+      (sym, st, u, out) => st.cur match {
+        case None =>
+          BarState(Some(Candle(sym, u.ts, u.ts, u.price, u.price, u.price,
+            u.price, u.size)), st.elapsed)
+        case Some(c) =>
+          val elapsed = st.elapsed + u.size
+          if (elapsed > interval) { // is_sample: close, start next bar
+            out(c)
+            BarState(Some(Candle(sym, u.ts, u.ts, u.price, u.price,
+              u.price, u.price, u.size)), 0.0)
+          } else
+            BarState(Some(Candle(sym, c.start, u.ts, c.open,
+              math.max(c.high, u.price), math.min(c.low, u.price),
+              u.price, c.volume + u.size)), elapsed)
+      })
   }
 
   /** Per-symbol imbalance-bar state: the open candle, the exact
@@ -343,56 +308,34 @@ object Streaming {
     * stays open (the fold twins' dropLast stance). Integer state, so
     * closed bars equal the batch fold bit-for-bit
     * (MicrostructureFuzzSpec). Non-finite prices/sizes raise loud (the
-    * batch fold's own guards). */
+    * batch fold's own guards). Late trades follow [[tickFold]]'s mark,
+    * the [[streamingVolumeBars]] rule. */
   def streamingTickImbalanceBars(updates: Dataset[Update],
       threshold: Long): Dataset[Candle] = {
     import updates.sparkSession.implicits._
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[ImbBarState]): Iterator[Candle] = {
-      var st = state.getOption.getOrElse(
-        ImbBarState(None, 0L, 0.0d, hasPrev = false, 0))
-      val out = Seq.newBuilder[Candle]
-      def bOf(u: Update): Int = {
-        val dir =
-          if (!st.hasPrev) 0
-          else if (u.price > st.prevPrice) 1
-          else if (u.price < st.prevPrice) -1 else 0
-        val carry = if (dir != 0) dir else st.carry
-        st = st.copy(prevPrice = u.price, hasPrev = true, carry = carry)
-        carry
-      }
-      rows.toSeq.filter(_.is_trade).sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          if (u.price.isNaN || u.price.isInfinite)
-            throw new ArithmeticException(
-              "tickImbalanceBars: non-finite price at symbol=" + u.symbol)
-          if (u.size.isNaN || u.size.isInfinite)
-            throw new ArithmeticException(
-              "tickImbalanceBars: non-finite trade size at symbol=" +
-                u.symbol)
-          val b = bOf(u)
-          st.cur match {
-            case None =>
-              st = st.copy(cur = Some(Candle(sym, u.ts, u.ts, u.price,
-                u.price, u.price, u.price, u.size)), theta = 0L)
-            case Some(c) =>
-              if (math.abs(st.theta + b) > threshold) {
-                out += c
-                st = st.copy(cur = Some(Candle(sym, u.ts, u.ts, u.price,
-                  u.price, u.price, u.price, u.size)), theta = 0L)
-              } else
-                st = st.copy(cur = Some(Candle(sym, c.start, u.ts,
-                  c.open, math.max(c.high, u.price),
-                  math.min(c.low, u.price), u.price,
-                  c.volume + u.size)), theta = st.theta + b)
-          }
+    tickFold[String, ImbBarState, Candle](updates, _.symbol, _.is_trade,
+      ImbBarState(None, 0L, 0.0d, hasPrev = false, 0))(
+      (sym, st0, u, out) => {
+        FiniteGuard.price("tickImbalanceBars", u)
+        FiniteGuard.size("tickImbalanceBars", u)
+        val b = SignedFlow.sign(u.price, st0.prevPrice, st0.hasPrev,
+          st0.carry)
+        val st = st0.copy(prevPrice = u.price, hasPrev = true, carry = b)
+        st.cur match {
+          case None =>
+            st.copy(cur = Some(Candle(sym, u.ts, u.ts, u.price, u.price,
+              u.price, u.price, u.size)), theta = 0L)
+          case Some(c) =>
+            if (math.abs(st.theta + b) > threshold) {
+              out(c)
+              st.copy(cur = Some(Candle(sym, u.ts, u.ts, u.price, u.price,
+                u.price, u.price, u.size)), theta = 0L)
+            } else
+              st.copy(cur = Some(Candle(sym, c.start, u.ts, c.open,
+                math.max(c.high, u.price), math.min(c.low, u.price),
+                u.price, c.volume + u.size)), theta = st.theta + b)
         }
-      state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      })
   }
 
   /** Per-symbol decayed-intensity state: the open bucket's count and
@@ -642,6 +585,10 @@ object Streaming {
       if (u.price.isNaN || u.price.isInfinite)
         throw new ArithmeticException(
           s"$op: non-finite price at symbol=" + u.symbol)
+    def size(op: String, u: Update): Unit =
+      if (u.size.isNaN || u.size.isInfinite)
+        throw new ArithmeticException(
+          s"$op: non-finite trade size at symbol=" + u.symbol)
   }
 
   /** The folds' shared bucket function — ONE definition of
@@ -657,20 +604,29 @@ object Streaming {
     }
   }
 
-  /** The tick-rule signed-flow step [[streamingKyleLambda]] and
-    * [[streamingFlowAutocorr]] share: a trade's sign against the
-    * prevailing trade price (none yet → 0; a zero tick carries the
-    * last non-zero sign), and the open bucket's flow `fU` plus the
-    * trade's signed scale-4 size. Returns (carry, fU). Serializable
-    * holder, the [[Dec4]] stance. */
+  /** The tick rule every signed fold shares. Serializable holder, the
+    * [[Dec4]] stance. */
   private object SignedFlow extends Serializable {
-    def step(prev: Double, hasPrev: Boolean, carry0: Int, fU: Long,
-        u: Update): (Int, Long) = {
+    /** A trade's sign against the prevailing trade price: none yet → 0,
+      * a zero tick carries the last non-zero sign `carry`. Compares
+      * through [[SqlOrd]], which is plain `>`/`<` on finite prices, so
+      * the folds that reject non-finite prices first (VPIN, tick
+      * imbalance bars) sign exactly as their raw comparisons did. */
+    def sign(price: Double, prev: Double, hasPrev: Boolean,
+        carry: Int): Int = {
       val dir =
         if (!hasPrev) 0
-        else if (SqlOrd.gt(u.price, prev)) 1
-        else if (SqlOrd.lt(u.price, prev)) -1 else 0
-      val carry = if (dir != 0) dir else carry0
+        else if (SqlOrd.gt(price, prev)) 1
+        else if (SqlOrd.lt(price, prev)) -1 else 0
+      if (dir != 0) dir else carry
+    }
+
+    /** The step [[streamingKyleLambda]] and [[streamingFlowAutocorr]]
+      * share: the trade's sign, and the open bucket's flow `fU` plus the
+      * trade's signed scale-4 size. Returns (carry, fU). */
+    def step(prev: Double, hasPrev: Boolean, carry0: Int, fU: Long,
+        u: Update): (Int, Long) = {
+      val carry = sign(u.price, prev, hasPrev, carry0)
       if (carry == 0) (carry, fU)
       else {
         // batch guard parity (finiteSize): classified non-finite size
@@ -683,60 +639,109 @@ object Streaming {
     }
   }
 
-  /** The per-bucket fold the bucketed twins are built on. Rows passing
-    * `keep` fold per `key` in (ts, seq) order within a micro-batch,
-    * each in its [[Buckets.of]] bucket: the first row opens a bucket,
-    * a row of a later bucket closes the open one (`close` also sees
-    * that row) and opens its own, and every row folds into the state
-    * through `add`. A `side` row folds without opening or closing a
-    * bucket (quotes that only refresh a prevailing price, trades that
+  /** The fold under every per-key state twin but the four TTL ones: each
+    * micro-batch's rows group by `key`, `order` filters and orders a
+    * key's rows, and `step` folds them one at a time into the key's
+    * state (`zero` before its first row), emitting through its callback.
+    * The state is written back when `order` kept a row; `serve` then
+    * adds the key's current rows, once per micro-batch in which the key
+    * has rows. There is no timeout, so state lives as long as the query
+    * and each twin keeps its own per-key state bounded. The hooks must
+    * capture only the twin's own parameters and the serializable holders
+    * ([[Dec4]] stance). */
+  private def keyedFold[I, K: Encoder, S: Encoder, O: Encoder](
+      in: Dataset[I], key: I => K, zero: S)(
+      order: Seq[I] => Seq[I], step: (K, S, I, O => Unit) => S,
+      serve: (K, S) => IterableOnce[O] = (_: K, _: S) => Nil)
+      : Dataset[O] = {
+    def fn(k: K, rows: Iterator[I], state: GroupState[S]): Iterator[O] = {
+      var st = state.getOption.getOrElse(zero)
+      val out = Seq.newBuilder[O]
+      val batch = order(rows.toSeq)
+      batch.foreach(r => st = step(k, st, r, out += _))
+      if (batch.nonEmpty) state.update(st)
+      out ++= serve(k, st)
+      out.result().iterator
+    }
+    localCheckpoints(in).groupByKey(key)
+      .flatMapGroupsWithState(OutputMode.Append,
+        GroupStateTimeout.NoTimeout)(fn)
+  }
+
+  /** [[keyedFold]] over the updates passing `keep`, in (ts, seq) order,
+    * with the late-row rule of every tick fold — the reference's append
+    * rule (S6, `file_format.rs:780-819`): a key keeps the (ts, seq)
+    * high-water mark of the rows it folded, and a row strictly below
+    * the mark is dropped in whichever micro-batch it arrives, so the
+    * output is the output of the same feed without it. A row equal to
+    * the mark still folds: a feed that repeats a row, within a batch or
+    * across batches, folds it twice, as the batch operators do. */
+  private def tickFold[K: Encoder, S: Encoder, O: Encoder](
+      updates: Dataset[Update], key: Update => K, keep: Update => Boolean,
+      zero: S)(step: (K, S, Update, O => Unit) => S,
+      serve: (K, S) => IterableOnce[O] = (_: K, _: S) => Nil)
+      : Dataset[O] =
+    keyedFold[Update, K, (Long, Long, S), O](updates, key,
+      (Long.MinValue, Long.MinValue, zero))(
+      _.filter(keep).sortBy(u => (u.ts, u.seq)),
+      (k, m, u, out) =>
+        if (u.ts < m._1 || (u.ts == m._1 && u.seq < m._2)) m
+        else (u.ts, u.seq, step(k, m._3, u, out)),
+      (k, m) => serve(k, m._3))(implicitly[Encoder[K]],
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
+        implicitly[Encoder[S]]), implicitly[Encoder[O]])
+
+  /** The per-bucket [[tickFold]] the bucketed twins are built on. Each
+    * row folds in its [[Buckets.of]] bucket: the first row opens a
+    * bucket, a row of a later bucket closes the open one (`close` also
+    * sees that row) and opens its own, and every row folds into the
+    * state through `add`. A `side` row folds without opening or closing
+    * a bucket (quotes that only refresh a prevailing price, trades that
     * only prime a lag).
     *
-    * The late-row rule, the same for every twin built here: a row whose
-    * bucket is older than the open bucket is dropped, side rows
-    * included, in whichever micro-batch it arrives. So a late row
-    * neither reopens nor re-emits a closed bucket, and the output is
-    * the output of the same feed without it.
+    * Late rows follow the tick fold's mark. It covers a row of a bucket
+    * older than the open one, side rows included, since such a row is
+    * older than the row that opened the open bucket: a late row neither
+    * reopens nor re-emits a closed bucket.
     *
     * State is the open bucket (Long.MinValue before the first) beside
     * the twin's own `S`. A twin emits either one row per closed bucket
     * (through `close`'s callback) or its current row after every
-    * micro-batch (`serve`). The hooks must capture only the twin's own
-    * parameters and the serializable holders ([[Dec4]] stance). */
+    * micro-batch (`serve`). */
   private def bucketFold[K: Encoder, S: Encoder, O: Encoder](
       updates: Dataset[Update], seconds: Long, key: Update => K,
       keep: Update => Boolean, zero: S,
       side: (S, Update) => Boolean = (_: S, _: Update) => false)(
       add: (K, S, Update) => S,
       close: (K, Long, S, Update, O => Unit) => S,
-      serve: (K, S) => Option[O] = (_: K, _: S) => None): Dataset[O] = {
-    val Unset = Long.MinValue
-    def fn(k: K, rows: Iterator[Update],
-        state: GroupState[(Long, S)]): Iterator[O] = {
-      var (open, st) = state.getOption.getOrElse((Unset, zero))
-      val out = Seq.newBuilder[O]
-      val kept = rows.filter(keep).toSeq.sortBy(u => (u.ts, u.seq))
-      kept.foreach { u =>
-        val b = Buckets.of(u.ts, seconds)
-        if (b < open) () // late: its bucket has closed
-        else if (side(st, u)) st = add(k, st, u)
+      serve: (K, S) => Option[O] = (_: K, _: S) => None): Dataset[O] =
+    tickFold[K, (Long, S), O](updates, key, keep, (Long.MinValue, zero))(
+      (k, os, u, out) => {
+        val (open, st) = os
+        if (side(st, u)) (open, add(k, st, u))
         else {
-          if (b > open && open != Unset)
-            st = close(k, open, st, u, out += _)
-          open = b
-          st = add(k, st, u)
+          val b = Buckets.of(u.ts, seconds)
+          (b, add(k, if (b > open && open != Long.MinValue)
+            close(k, open, st, u, out) else st, u))
         }
-      }
-      if (kept.nonEmpty) state.update((open, st))
-      out ++= serve(k, st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(key)
+      },
+      (k, os) => serve(k, os._2))(implicitly[Encoder[K]],
+      Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[S]]),
+      implicitly[Encoder[O]])
+
+  /** A per-key regroup of rows that one micro-batch holds in full (a
+    * query's candidates, a document's scored terms). Structured
+    * Streaming refuses `flatMapGroups` on a stream, so this is a
+    * `flatMapGroupsWithState` that never writes its state: the keys
+    * (query or document ids) are unbounded, and a state row per key
+    * would grow with the stream. */
+  private def regroup[K: Encoder, V, O: Encoder](rows: Dataset[V])(
+      key: V => K)(fn: (K, Iterator[V]) => Iterator[O]): Dataset[O] =
+    localCheckpoints(rows).groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)(
-        Encoders.tuple(Encoders.scalaLong, implicitly[Encoder[S]]),
-        implicitly[Encoder[O]])
-  }
+        GroupStateTimeout.NoTimeout)(
+        (k: K, vs: Iterator[V], _: GroupState[Boolean]) => fn(k, vs))(
+        Encoders.scalaBoolean, implicitly[Encoder[O]])
 
   /** Per-symbol tick-rule state: prevailing trade price (if any), the
     * running last-non-zero tick sign (0 = no classified tick yet), and
@@ -765,11 +770,8 @@ object Streaming {
       TickFlowState(0.0d, hasPrev = false, 0, 0L, 0L, 0L))(
       add = (_, st, u) => {
         // the first trade's lag is null → dir 0, no sign to carry
-        val dir =
-          if (!st.hasPrev) 0
-          else if (SqlOrd.gt(u.price, st.lastPrice)) 1
-          else if (SqlOrd.lt(u.price, st.lastPrice)) -1 else 0
-        val carry = if (dir != 0) dir else st.carry
+        val carry = SignedFlow.sign(u.price, st.lastPrice, st.hasPrev,
+          st.carry)
         if (carry == 0)
           st.copy(lastPrice = u.price, hasPrev = true, n = st.n + 1L)
         else {
@@ -842,9 +844,10 @@ object Streaming {
       })
   }
 
-  /** Per-symbol VPIN state: the open volume bucket's accumulators, the
-    * tick-rule carry, and the trailing (imbU, classU) of up to
-    * `window − 1` CLOSED buckets — O(window) per key. */
+  /** Per-symbol VPIN state: the open volume bucket's accumulators
+    * (bucket 0 = no trade yet), the tick-rule carry, and the trailing
+    * (imbU, classU) of up to `window − 1` CLOSED buckets — O(window)
+    * per key. */
   case class VpinState(bucket: Long, acc: Double, start: Long, end: Long,
       n: Long, buyU: Long, sellU: Long, classU: Long, volU: Long,
       prevPrice: Double, hasPrev: Boolean, carry: Int,
@@ -865,21 +868,19 @@ object Streaming {
     * (MicrostructureFuzzSpec, sentinel-closer pattern: a far-future
     * trade of size > interval closes each symbol's final real bucket
     * without contaminating it). Non-finite prices/sizes raise loud at
-    * ingest (the batch fold's own guards). */
+    * ingest (the batch fold's own guards). Late trades follow
+    * [[tickFold]]'s mark, the [[streamingVolumeBars]] rule. */
   def streamingVpin(updates: Dataset[Update], interval: Double = 100.0,
       window: Int = 5): Dataset[VpinRow] = {
     import updates.sparkSession.implicits._
     require(window >= 1, "vpin needs a trailing window of >= 1 buckets")
     val d4 = (u: Long) => java.math.BigDecimal.valueOf(u, 4).doubleValue()
-    def zero(u: Update) = VpinState(1L, 0.0d, u.ts, u.ts, 0L, 0L, 0L,
-      0L, 0L, 0.0d, hasPrev = false, 0, Nil)
+    val zero = VpinState(0L, 0.0d, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 0.0d,
+      hasPrev = false, 0, Nil)
     def addTo(st0: VpinState, u: Update): VpinState = {
       val s = Dec4.dec4(u.size)
-      val dir =
-        if (!st0.hasPrev) 0
-        else if (u.price > st0.prevPrice) 1
-        else if (u.price < st0.prevPrice) -1 else 0
-      val carry = if (dir != 0) dir else st0.carry
+      val carry = SignedFlow.sign(u.price, st0.prevPrice, st0.hasPrev,
+        st0.carry)
       var st = st0.copy(end = u.ts, n = st0.n + 1L,
         volU = Math.addExact(st0.volU, s),
         prevPrice = u.price, hasPrev = true, carry = carry)
@@ -891,7 +892,7 @@ object Streaming {
         classU = Math.addExact(st.classU, s))
       st
     }
-    def serve(sym: String, st: VpinState): VpinRow = {
+    def row(sym: String, st: VpinState): VpinRow = {
       val imbU = math.abs(st.buyU - st.sellU)
       val imbWinU = st.recent.map(_._1).foldLeft(imbU)(Math.addExact)
       val classWinU = st.recent.map(_._2).foldLeft(st.classU)(Math.addExact)
@@ -900,34 +901,21 @@ object Streaming {
         d4(imbWinU), d4(classWinU),
         if (classWinU != 0L) Some(d4(imbWinU) / d4(classWinU)) else None)
     }
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[VpinState]): Iterator[VpinRow] = {
-      var st = state.getOption.orNull
-      val out = Seq.newBuilder[VpinRow]
-      rows.toSeq.filter(_.is_trade).sortBy(u => (u.ts, u.seq))
-        .foreach { u =>
-          if (u.price.isNaN || u.price.isInfinite)
-            throw new ArithmeticException(
-              "vpin: non-finite price at symbol=" + u.symbol)
-          if (u.size.isNaN || u.size.isInfinite)
-            throw new ArithmeticException(
-              "vpin: non-finite trade size at symbol=" + u.symbol)
-          if (st == null) st = addTo(zero(u), u)
-          else if (st.acc + u.size > interval) {
-            out += serve(sym, st)
-            val recent = ((math.abs(st.buyU - st.sellU), st.classU) +:
-              st.recent).take(window - 1)
-            st = addTo(zero(u).copy(bucket = st.bucket + 1L,
-              prevPrice = st.prevPrice, hasPrev = st.hasPrev,
-              carry = st.carry, recent = recent), u)
-          } else st = addTo(st.copy(acc = st.acc + u.size), u)
-        }
-      if (st != null) state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    tickFold[String, VpinState, VpinRow](updates, _.symbol, _.is_trade,
+      zero)(
+      (sym, st, u, out) => {
+        FiniteGuard.price("vpin", u)
+        FiniteGuard.size("vpin", u)
+        if (st.bucket == 0L) addTo(st.copy(bucket = 1L, start = u.ts), u)
+        else if (st.acc + u.size > interval) {
+          out(row(sym, st))
+          val recent = ((math.abs(st.buyU - st.sellU), st.classU) +:
+            st.recent).take(window - 1)
+          addTo(zero.copy(bucket = st.bucket + 1L, start = u.ts,
+            prevPrice = st.prevPrice, hasPrev = st.hasPrev,
+            carry = st.carry, recent = recent), u)
+        } else addTo(st.copy(acc = st.acc + u.size), u)
+      })
   }
 
   /** Per-symbol Roll-estimator state: the last two trade prices in
@@ -1858,6 +1846,12 @@ object Streaming {
     * serving snapshot equals the batch operator bit-for-bit
     * (StreamingSpec, both row sets).
     *
+    * Late rows follow [[tickFold]]'s mark, and the fold's one key makes
+    * it one mark for the whole feed: a trade older than one already
+    * folded, of any symbol, is dropped. That covers a trade from a
+    * coarse bucket older than a scale's open one, so a bucket closes
+    * only on a later one and is never reopened.
+    *
     * Scale contract, stated honestly: pair sums are inherently
     * cross-key, so the fold runs under ONE group key — every tick
     * passes through a single stateful task. That is the right shape
@@ -1943,29 +1937,22 @@ object Streaming {
           Some(sxx), Some(syy), corr)
       }
     }
-    def fn(key: Int, rows: Iterator[Update],
-        state: GroupState[Map[String, EppsScaleState]])
-        : Iterator[EppsCorrRow] = {
-      var st = state.getOption.getOrElse(zero)
-      rows.toSeq.filter(u => u.is_trade && SqlOrd.gt(u.price, 0.0))
-        .sortBy(u => (u.ts, u.seq)).foreach { u =>
-          FiniteGuard.price("eppsEffect", u)
-          sortedScales.foreach { s =>
-            val b = Buckets.of(u.ts, s)
-            var ss = st(s.toString)
-            if (ss.gb == Unset) ss = ss.copy(gb = b)
-            else if (b != ss.gb)
-              ss = closeGlobal(ss, maxSymbols).copy(gb = b)
-            ss = ss.copy(opens = ss.opens.updated(u.symbol, u.price))
-            st = st.updated(s.toString, ss)
-          }
+    tickFold[Int, Map[String, EppsScaleState], EppsCorrRow](updates,
+      _ => 0, u => u.is_trade && SqlOrd.gt(u.price, 0.0), zero)(
+      (_, st, u, _) => {
+        FiniteGuard.price("eppsEffect", u)
+        sortedScales.foldLeft(st) { (st, s) =>
+          val b = Buckets.of(u.ts, s)
+          val ss0 = st(s.toString)
+          val ss =
+            if (b <= ss0.gb) ss0
+            else if (ss0.gb == Unset) ss0.copy(gb = b)
+            else closeGlobal(ss0, maxSymbols).copy(gb = b)
+          st.updated(s.toString,
+            ss.copy(opens = ss.opens.updated(u.symbol, u.price)))
         }
-      state.update(st)
-      sortedScales.iterator.flatMap(s => emit(s, st(s.toString)))
-    }
-    localCheckpoints(updates).groupByKey(_ => 0)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      },
+      (_, st) => sortedScales.flatMap(s => emit(s, st(s.toString))))
   }
 
   /** Per-(symbol, is_bid, level) book-state cell carrying the BATCH
@@ -2000,30 +1987,24 @@ object Streaming {
     * symbol missing a side emits null microprice and that side's
     * best/size as null; depth sums quantize each included level's
     * computed size to decimal scale 4 (the `exactSum` cast) and sum
-    * exactly. State is bounded by live price levels per symbol. */
-  /** One ordered micro-batch of updates folded into the packed-key
-    * incremental book ([[streamingBookTop]] packing, [[LevelCell]]
-    * cells) — the maintenance step [[streamingBookFeatures]] and
+    * exactly. State is bounded by live price levels per symbol. Late
+    * rows follow [[tickFold]]'s mark. */
+  /** One update folded into the packed-key incremental book
+    * ([[streamingBookTop]] packing, [[LevelCell]] cells) — the
+    * maintenance step [[streamingBookFeatures]] and
     * [[streamingLiquidityBand]] share. A serializable holder (the
     * [[Dec4]] pattern): fold closures capture IT, never the
     * non-serializable enclosing object. */
   private[streaming] object BookOps extends Serializable {
-    def advance(b0: Map[Long, LevelCell], rows: Seq[Update],
+    def step(b: Map[Long, LevelCell], u: Update,
         mult: Double): Map[Long, LevelCell] = {
-      val Dec4 = Streaming.Dec4
-      var b = b0
-      rows.sortBy(u => (u.ts, u.seq)).foreach { u =>
-        val lvl = math.floor(u.price * mult).toLong
-        val key = (lvl << 1) | (if (u.is_bid) 1L else 0L)
-        if (u.is_trade)
-          b.get(key).foreach { c =>
-            b = b.updated(key, c.copy(tradedUnscaled =
-              Math.addExact(c.tradedUnscaled, Dec4.dec4(u.size))))
-          }
-        else if (u.size == 0.0) b = b.removed(key)
-        else b = b.updated(key, LevelCell(u.size, 0L))
-      }
-      b
+      val lvl = math.floor(u.price * mult).toLong
+      val key = (lvl << 1) | (if (u.is_bid) 1L else 0L)
+      if (u.is_trade)
+        b.get(key).fold(b)(c => b.updated(key, c.copy(tradedUnscaled =
+          Math.addExact(c.tradedUnscaled, Streaming.Dec4.dec4(u.size)))))
+      else if (u.size == 0.0) b.removed(key)
+      else b.updated(key, LevelCell(u.size, 0L))
     }
   }
 
@@ -2161,12 +2142,8 @@ object Streaming {
     val Dec4 = Streaming.Dec4 // local binding: the closure captures the
     // serializable holder, not the enclosing (non-serializable) object
     val Bk = Streaming.BookOps
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[Map[Long, LevelCell]]): Iterator[BookFeat] = {
-      var b = state.getOption.getOrElse(Map.empty[Long, LevelCell])
-      b = Bk.advance(b, rows.toSeq, mult)
-      state.update(b)
-      if (b.isEmpty) Iterator.empty
+    def serve(sym: String, b: Map[Long, LevelCell]): Option[BookFeat] =
+      if (b.isEmpty) None
       else {
         // batch snapshot arithmetic: lastSize − double(Σ decimal traded)
         def sizeOf(c: LevelCell): Double =
@@ -2198,13 +2175,11 @@ object Streaming {
         val bd = Dec4.dec4ToDouble(bidDepth)
         val ad = Dec4.dec4ToDouble(askDepth)
         val imb = if (bd + ad != 0.0d) Some((bd - ad) / (bd + ad)) else None
-        Iterator.single(BookFeat(sym, bestBid, bidSz, bestAsk, askSz,
-          micro, bd, ad, imb))
+        Some(BookFeat(sym, bestBid, bidSz, bestAsk, askSz, micro, bd, ad,
+          imb))
       }
-    }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    tickFold[String, Map[Long, LevelCell], BookFeat](updates, _.symbol,
+      _ => true, Map.empty)((_, b, u, _) => Bk.step(b, u, mult), serve)
   }
 
   case class LiqRow(symbol: String, is_bid: Boolean, n_levels: Long,
@@ -2213,24 +2188,21 @@ object Streaming {
   /** Banded liquidity on a STREAM — the ingest-time twin of
     * [[graft.operators.Orderbook.liquidityBand]] off the same
     * incremental book state as [[streamingBookFeatures]]
-    * ([[advanceBook]]): per micro-batch, the CURRENT all-integer band
+    * ([[BookOps]]): per micro-batch, the CURRENT all-integer band
     * test around `(bb+ba) div 2` and the exact scale-4 size sums
     * ([[LevelCell]] sizes are the batch snapshot's arithmetic by
     * construction, the Dec4 sum is the `exactSum` decimal cast).
     * Like the batch op, a symbol missing a side emits nothing, and a
     * side with no in-band levels emits no row. Feeding the whole
-    * history reproduces the batch table bit-for-bit (StreamingSpec). */
+    * history reproduces the batch table bit-for-bit (StreamingSpec).
+    * Late rows follow [[tickFold]]'s mark. */
   def streamingLiquidityBand(updates: Dataset[Update], bps: Long = 25L,
       decimals: Int = 2): Dataset[LiqRow] = {
     import updates.sparkSession.implicits._
     val mult = math.pow(10, decimals)
     val Dec4 = Streaming.Dec4 // see streamingBookFeatures: holder capture
     val Bk = Streaming.BookOps
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[Map[Long, LevelCell]]): Iterator[LiqRow] = {
-      var b = state.getOption.getOrElse(Map.empty[Long, LevelCell])
-      b = Bk.advance(b, rows.toSeq, mult)
-      state.update(b)
+    def serve(sym: String, b: Map[Long, LevelCell]): Seq[LiqRow] = {
       def sizeOf(c: LevelCell): Double =
         if (c.tradedUnscaled == 0L) c.lastSize
         else c.lastSize - Dec4.dec4ToDouble(c.tradedUnscaled)
@@ -2238,7 +2210,7 @@ object Streaming {
         (kk >> 1, c) }
       val asks = b.collect { case (kk, c) if (kk & 1L) == 0L =>
         (kk >> 1, c) }
-      if (bids.isEmpty || asks.isEmpty) Iterator.empty
+      if (bids.isEmpty || asks.isEmpty) Nil
       else {
         val mid = (bids.keysIterator.max + asks.keysIterator.min) / 2L
         def side(levels: Map[Long, LevelCell], isBid: Boolean) = {
@@ -2249,12 +2221,11 @@ object Streaming {
             Dec4.dec4ToDouble(in.map(e => Dec4.dec4(sizeOf(e._2)))
               .foldLeft(0L)(Math.addExact))))
         }
-        (side(bids, isBid = true) ++ side(asks, isBid = false)).iterator
+        (side(bids, isBid = true) ++ side(asks, isBid = false)).toSeq
       }
     }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    tickFold[String, Map[Long, LevelCell], LiqRow](updates, _.symbol,
+      _ => true, Map.empty)((_, b, u, _) => Bk.step(b, u, mult), serve)
   }
 
   /** Per-symbol rolling-volume state: the trailing-window trade buffer
@@ -2278,41 +2249,36 @@ object Streaming {
     * everything emitted matches the batch op bit-exactly
     * (StreamingSpec): same exact scale-4 decimal sum ([[Dec4.dec4]]), same
     * single cast-to-double. State is bounded by the trades inside one
-    * `windowMs` span per symbol. Within a micro-batch rows fold in
-    * (ts, seq) order; across batches in-order arrival per symbol is
-    * assumed — the engine's own append contract. */
+    * `windowMs` span per symbol. Rows fold in (ts, seq) order, and a
+    * trade below the symbol's (ts, seq) mark is dropped ([[tickFold]]):
+    * a late trade neither resolves a pending group early nor enters a
+    * window that has already emitted. */
   def streamingRollingVolume(updates: Dataset[Update],
       windowMs: Long = 60000L): Dataset[RollRow] = {
     import updates.sparkSession.implicits._
     val Dec4 = Streaming.Dec4 // see streamingBookFeatures: avoid capture
-    def fn(sym: String, rows: Iterator[Update],
-        state: GroupState[RollState]): Iterator[RollRow] = {
-      var st = state.getOption.getOrElse(RollState(Nil, Nil))
-      val out = Seq.newBuilder[RollRow]
-      def resolve(): Unit = if (st.pend.nonEmpty) {
-        val t = st.pend.head._1
-        // peers enter the frame of every peer, then the frame is the
-        // pruned trailing buffer — identical for the whole peer group
-        val buf = (st.buf ++ st.pend.map(p => (p._1, p._4)))
-          .filter(_._1 >= t - (windowMs - 1))
-        val n = buf.length.toLong
-        val vol = Dec4.dec4ToDouble(buf.iterator.map(_._2)
-          .foldLeft(0L)(Math.addExact))
-        st.pend.reverseIterator.foreach { case (ts, seq, size, _) =>
-          out += RollRow(sym, ts, seq, size, n, vol)
-        }
-        st = RollState(buf, Nil)
+    def resolve(sym: String, st: RollState,
+        out: RollRow => Unit): RollState = {
+      val t = st.pend.head._1
+      // peers enter the frame of every peer, then the frame is the
+      // pruned trailing buffer — identical for the whole peer group
+      val buf = (st.buf ++ st.pend.map(p => (p._1, p._4)))
+        .filter(_._1 >= t - (windowMs - 1))
+      val n = buf.length.toLong
+      val vol = Dec4.dec4ToDouble(buf.iterator.map(_._2)
+        .foldLeft(0L)(Math.addExact))
+      st.pend.reverseIterator.foreach { case (ts, seq, size, _) =>
+        out(RollRow(sym, ts, seq, size, n, vol))
       }
-      rows.toSeq.filter(_.is_trade).sortBy(u => (u.ts, u.seq)).foreach { u =>
-        if (st.pend.nonEmpty && u.ts != st.pend.head._1) resolve()
-        st = st.copy(pend = (u.ts, u.seq, u.size, Dec4.dec4(u.size)) :: st.pend)
-      }
-      state.update(st)
-      out.result().iterator
+      RollState(buf, Nil)
     }
-    localCheckpoints(updates).groupByKey(_.symbol)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    tickFold[String, RollState, RollRow](updates, _.symbol, _.is_trade,
+      RollState(Nil, Nil))(
+      (sym, st0, u, out) => {
+        val st = if (st0.pend.nonEmpty && u.ts > st0.pend.head._1)
+          resolve(sym, st0, out) else st0
+        st.copy(pend = (u.ts, u.seq, u.size, Dec4.dec4(u.size)) :: st.pend)
+      })
   }
 
   /** Per-source token budgeting on a STREAM of documents — the ingest-time
@@ -2337,22 +2303,13 @@ object Streaming {
     import docs.sparkSession.implicits._
     def md5Key(id: Long): String =
       graft.functions.md5Hex(id.toString.getBytes("UTF-8"))
-    def fn(src: String, rows: Iterator[(Long, String, Long)],
-        state: GroupState[Long]): Iterator[BudgetedDoc] = {
-      var cum = state.getOption.getOrElse(0L)
-      val out = Seq.newBuilder[BudgetedDoc]
-      rows.toSeq
-        .sortBy { case (id, _, _) => (md5Key(id), id) }
-        .foreach { case (id, _, n) =>
-          cum += n
-          if (cum <= budget) out += BudgetedDoc(id, src, n, cum)
-        }
-      state.update(cum)
-      out.result().iterator
-    }
-    localCheckpoints(docs).groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    keyedFold[(Long, String, Long), String, Long, BudgetedDoc](docs, _._2,
+      0L)(_.sortBy { case (id, _, _) => (md5Key(id), id) },
+      (src, cum0, r, out) => {
+        val cum = cum0 + r._3
+        if (cum <= budget) out(BudgetedDoc(r._1, src, r._3, cum))
+        cum
+      })
   }
 
   /** Streaming EXACT dedup on a document stream — the ingest-time twin of
@@ -2371,25 +2328,16 @@ object Streaming {
   def streamingExactDedup(docs: Dataset[(Long, String)])
       : Dataset[DedupDecision] = {
     import docs.sparkSession.implicits._
-    def fn(hash: String, rows: Iterator[(String, Long)],
-        state: GroupState[Long]): Iterator[DedupDecision] = {
-      var keeper = state.getOption
-      val out = rows.map(_._2).toSeq.sorted.map { id =>
-        keeper match {
-          case None =>
-            keeper = Some(id); DedupDecision(id, id, keep = true)
-          case Some(k) =>
-            DedupDecision(id, k, keep = id == k)
-        }
-      }
-      keeper.foreach(state.update)
-      out.iterator
-    }
-    localCheckpoints(docs).map { case (id, text) =>
+    val hashed = docs.map { case (id, text) =>
       (graft.functions.md5Hex(text.getBytes("UTF-8")), id)
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    }
+    keyedFold[(String, Long), String, Option[Long], DedupDecision](hashed,
+      _._1, None)(_.sortBy(_._2),
+      (_, keeper, r, out) => {
+        val k = keeper.getOrElse(r._2)
+        out(DedupDecision(r._2, k, keep = r._2 == k))
+        Some(k)
+      })
   }
 
   /** Streaming CHUNK-level dedup — the ingest-time twin of
@@ -2410,36 +2358,32 @@ object Streaming {
       keep: Boolean)
 
   /** Keep-first chunk arbitration shared by the fixed-width and CDC
-    * streaming dedups: state per chunk hash = the keeper (doc, idx). */
-  private def chunkKeeperFn(hash: String,
-      rows: Iterator[(String, Long, Long, String)],
-      state: GroupState[(Long, Long)]): Iterator[ChunkDecision] = {
-    var keeper = state.getOption
-    val out = rows.toSeq.sortBy(r => (r._2, r._3)).map {
-      case (_, d, i, t) => keeper match {
-        case None =>
-          keeper = Some((d, i))
-          ChunkDecision(d, i, t, d, i, keep = true)
-        case Some((kd, ki)) =>
-          ChunkDecision(d, i, t, kd, ki, keep = d == kd && i == ki)
-      }
-    }
-    keeper.foreach(state.update)
-    out.iterator
+    * streaming dedups over (hash, doc, idx, text) chunks: state per
+    * chunk hash = the keeper (doc, idx); idx −1 = none yet (chunk
+    * indexes count from 0). */
+  private def chunkKeeper(chunks: Dataset[(String, Long, Long, String)])
+      : Dataset[ChunkDecision] = {
+    import chunks.sparkSession.implicits._
+    keyedFold[(String, Long, Long, String), String, (Long, Long),
+      ChunkDecision](chunks, _._1, (0L, -1L))(_.sortBy(r => (r._2, r._3)),
+      (_, keeper, r, out) => {
+        val (_, d, i, t) = r
+        val (kd, ki) = if (keeper._2 < 0L) (d, i) else keeper
+        out(ChunkDecision(d, i, t, kd, ki, keep = d == kd && i == ki))
+        (kd, ki)
+      })
   }
 
   def streamingChunkDedup(docs: Dataset[(Long, String)],
       width: Int = 20): Dataset[ChunkDecision] = {
     import docs.sparkSession.implicits._
-    localCheckpoints(docs).flatMap { case (id, text) =>
+    chunkKeeper(docs.flatMap { case (id, text) =>
       graft.ext.TextOps.sqlWords(text).grouped(width).zipWithIndex
         .map { case (chunk, i) =>
           val t = chunk.mkString(" ")
           (graft.functions.md5Hex(t.getBytes("UTF-8")), id, i.toLong, t)
         }
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(chunkKeeperFn)
+    })
   }
 
   /** [[streamingChunkDedup]] with CONTENT-DEFINED boundaries — the
@@ -2454,13 +2398,11 @@ object Streaming {
   def streamingCdcChunkDedup(docs: Dataset[(Long, String)], w: Int = 4,
       div: Int = 16): Dataset[ChunkDecision] = {
     import docs.sparkSession.implicits._
-    localCheckpoints(docs).flatMap { case (id, text) =>
+    chunkKeeper(docs.flatMap { case (id, text) =>
       graft.ext.Pipeline.cdcChunksOf(text, w, div).map { case (cid, t) =>
         (graft.functions.md5Hex(t.getBytes("UTF-8")), id, cid, t)
       }
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(chunkKeeperFn)
+    })
   }
 
   /** Exact dedup with an EVENT-TIME retention horizon — the rolling-
@@ -2473,7 +2415,9 @@ object Streaming {
     * total state O(distinct contents within the horizon), bounded for
     * any stream length. Each duplicate arrival REFRESHES its content's
     * expiry (timeout = last arrival + ttl), the LRU-ish behavior a
-    * rolling dedup wants. */
+    * rolling dedup wants.
+    * Hand-written, not on [[keyedFold]]: it sets an `EventTimeTimeout`
+    * and removes expired state, which the timeout-free fold cannot. */
   case class TimedDoc(doc_id: Long, text: String,
       ts: java.sql.Timestamp)
 
@@ -2553,34 +2497,29 @@ object Streaming {
     require(maxHamming <= nBands - 1,
       s"banding with $nBands bands is only complete for Hamming <= ${nBands - 1}")
     val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1
-    def fn(bucket: Long, rows: Iterator[(Long, Long, Long)],
-        state: GroupState[List[(Long, Long)]]): Iterator[SimPair] = {
-      var members = state.getOption.getOrElse(List.empty)
-      val out = Seq.newBuilder[SimPair]
-      rows.toSeq.sortBy(_._2).foreach { case (_, id, h) =>
-        if (!members.exists(_._1 == id)) { // replayed frame: no self-pairs
-          members.foreach { case (oid, oh) =>
-            val ham = java.lang.Long.bitCount(oh ^ h).toLong
-            if (ham <= maxHamming)
-              out += SimPair(math.min(oid, id), math.max(oid, id), ham,
-                members.size + 1)
-          }
-          members = (id, h) :: members
-        }
-      }
-      state.update(members)
-      out.result().iterator
-    }
-    localCheckpoints(docs).flatMap { case (id, text) =>
+    val banded = docs.flatMap { case (id, text) =>
       val h = graft.ext.Dedup.simhash64(text)
       // packed bucket key: band index in the high bits, the (≤32-bit)
       // band value in the low 32 — collision-free for every bandBits
       (0 until nBands).map { b =>
         ((b.toLong << 32) | ((h >>> (bandBits * b)) & mask), id, h)
       }
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    }
+    keyedFold[(Long, Long, Long), Long, List[(Long, Long)], SimPair](banded,
+      _._1, Nil)(_.sortBy(_._2),
+      (_, members, r, out) => {
+        val (_, id, h) = r
+        if (members.exists(_._1 == id)) members // replayed frame: no self-pairs
+        else {
+          members.foreach { case (oid, oh) =>
+            val ham = java.lang.Long.bitCount(oh ^ h).toLong
+            if (ham <= maxHamming)
+              out(SimPair(math.min(oid, id), math.max(oid, id), ham,
+                members.size + 1))
+          }
+          (id, h) :: members
+        }
+      })
   }
 
   /** SimHash near-dup with an EVENT-TIME retention horizon — the
@@ -2591,7 +2530,9 @@ object Streaming {
     * data in the same batch its timeout would fire suppresses the
     * timeout), and a bucket whose NEWEST member expires clears its
     * state entirely via EventTimeTimeout. State is therefore
-    * O(bucket occupancy within the horizon) for any stream length. */
+    * O(bucket occupancy within the horizon) for any stream length.
+    * Hand-written, not on [[keyedFold]]: it sets an `EventTimeTimeout`
+    * and removes expired state, which the timeout-free fold cannot. */
   def streamingSimhashNearDupTtl(docs: Dataset[(Long, String,
       java.sql.Timestamp)], ttlSecs: Long, bandBits: Int = 8,
       maxHamming: Int = 2, watermarkDelay: String = "0 seconds")
@@ -2668,7 +2609,9 @@ object Streaming {
     * (StreamingSpec proves it). Member state expires per the rolling
     * `ttlSecs` horizon — the bounded-state stance of the simhash TTL
     * twin; the horizon IS the production semantics (dedup against a
-    * recency window). */
+    * recency window).
+    * Hand-written, not on [[keyedFold]]: it sets an `EventTimeTimeout`
+    * and removes expired state, which the timeout-free fold cannot. */
   case class TimedVec(vec_id: Long, emb: Array[Double],
       ts: java.sql.Timestamp)
   case class SemDecision(vec_id: Long, cell: Long, n_twins: Long,
@@ -2788,28 +2731,7 @@ object Streaming {
     require(threshold > 0.0,
       "threshold must be > 0 (zero-overlap candidates are never emitted)")
     require(k % r == 0, s"r $r must divide k $k")
-    def fn(bucket: String, rows: Iterator[(String, Long, Array[Long])],
-        state: GroupState[List[(Long, Array[Long])]])
-        : Iterator[MhPair] = {
-      var members = state.getOption.getOrElse(List.empty)
-      val out = Seq.newBuilder[MhPair]
-      rows.toSeq.sortBy(_._2).foreach { case (_, id, shArr) =>
-        if (!members.exists(_._1 == id)) { // replayed frame: no self-pairs
-          members.foreach { case (oid, oArr) =>
-            val inter = sortedIntersect(shArr, oArr)
-            val uni = shArr.length.toLong + oArr.length - inter
-            val j = if (uni == 0L) 0.0 else inter.toDouble / uni
-            if (j >= threshold)
-              out += MhPair(math.min(oid, id), math.max(oid, id), inter,
-                uni, j, members.size + 1)
-          }
-          members = (id, shArr) :: members
-        }
-      }
-      state.update(members)
-      out.result().iterator
-    }
-    localCheckpoints(docs).flatMap { case (id, text) =>
+    val banded = docs.flatMap { case (id, text) =>
       val shset = graft.ext.Dedup.shingleSet(text, n)
       if (shset.isEmpty) Iterator.empty
       else {
@@ -2821,9 +2743,24 @@ object Streaming {
           (s"$j:$bval", id, shArr)
         }
       }
-    }.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    }
+    keyedFold[(String, Long, Array[Long]), String, List[(Long, Array[Long])],
+      MhPair](banded, _._1, Nil)(_.sortBy(_._2),
+      (_, members, r, out) => {
+        val (_, id, shArr) = r
+        if (members.exists(_._1 == id)) members // replayed frame: no self-pairs
+        else {
+          members.foreach { case (oid, oArr) =>
+            val inter = sortedIntersect(shArr, oArr)
+            val uni = shArr.length.toLong + oArr.length - inter
+            val j = if (uni == 0L) 0.0 else inter.toDouble / uni
+            if (j >= threshold)
+              out(MhPair(math.min(oid, id), math.max(oid, id), inter,
+                uni, j, members.size + 1))
+          }
+          (id, shArr) :: members
+        }
+      })
   }
 
   /** MinHash near-dup with an EVENT-TIME retention horizon — the
@@ -2834,7 +2771,9 @@ object Streaming {
     * cleared via EventTimeTimeout when their newest member expires
     * (the [[streamingSimhashNearDupTtl]] mechanics — arrival-path
     * pruning is what guarantees an expired member never pairs even
-    * when same-batch data suppresses the timeout). */
+    * when same-batch data suppresses the timeout).
+    * Hand-written, not on [[keyedFold]]: it sets an `EventTimeTimeout`
+    * and removes expired state, which the timeout-free fold cannot. */
   def streamingMinhashNearDupTtl(docs: Dataset[(Long, String,
       java.sql.Timestamp)], ttlSecs: Long, n: Int = 2, k: Int = 16,
       r: Int = 4, threshold: Double = 0.2,
@@ -2962,15 +2901,12 @@ object Streaming {
         col("q_emb"))
       .as[(Long, Long, Double, Array[Double])]
     def probeFn(id: Long,
-        rows: Iterator[(Long, Long, Double, Array[Double])],
-        state: GroupState[Boolean])
+        rows: Iterator[(Long, Long, Double, Array[Double])])
         : Iterator[(Long, Long, Array[Double])] = {
       rows.toSeq.sortBy { case (_, cell, d, _) => (d, cell) }.take(nProbe)
         .map { case (q, cell, _, e) => (q, cell, e) }.iterator
     }
-    val probes = localCheckpoints(probed).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(probeFn)
+    val probes = regroup(probed)(_._1)(probeFn)
       .toDF("q_id", "cell", "q_emb")
     val qres = probes.join(broadcast(index.cents), Seq("cell"))
       .select(col("q_id"), col("cell"),
@@ -3000,8 +2936,8 @@ object Streaming {
       .where(col("c_vec") =!= col("q_id"))
       .select(col("q_id"), col("c_vec"), col("dq"))
       .as[(Long, Long, Long)]
-    def topkFn(id: Long, rows: Iterator[(Long, Long, Long)],
-        state: GroupState[Boolean]): Iterator[AdcHit] = {
+    def topkFn(id: Long, rows: Iterator[(Long, Long, Long)])
+        : Iterator[AdcHit] = {
       val sums = scala.collection.mutable.HashMap.empty[Long, Long]
       rows.foreach { case (_, v, dq) =>
         sums.update(v, sums.getOrElse(v, 0L) + dq)
@@ -3010,9 +2946,7 @@ object Streaming {
         .iterator.zipWithIndex
         .map { case ((v, a), i) => AdcHit(id, v, a, i + 1) }
     }
-    cand.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(topkFn)
+    regroup(cand)(_._1)(topkFn)
   }
 
   /** Trained BPE merges as a broadcastable serving artifact — k rows by
@@ -3147,8 +3081,7 @@ object Streaming {
     // pattern): a query's candidate rows are complete within its batch;
     // multi-probe duplicates are identical rows, deduped by vec_id as
     // the batch op's .distinct() does
-    def fn(id: Long, rows: Iterator[(Long, Long, Double)],
-        state: GroupState[Boolean]): Iterator[AnnHit] = {
+    def fn(id: Long, rows: Iterator[(Long, Long, Double)]): Iterator[AnnHit] = {
       val best = rows.map { case (_, v, s) => (v, s) }.toSeq
         .distinct
         .sortBy { case (v, s) => (-s, v) }.take(k)
@@ -3156,9 +3089,7 @@ object Streaming {
         AnnHit(id, v, s, i + 1)
       }
     }
-    localCheckpoints(cand).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    regroup(cand)(_._1)(fn)
   }
 
   /** An IVF ANN index left IN THE CLUSTER: the coarse-quantizer
@@ -3214,16 +3145,13 @@ object Streaming {
         col("q_emb"), col("q_norm"))
       .as[(Long, Long, Double, Array[Double], Double)]
     def probeFn(id: Long,
-        rows: Iterator[(Long, Long, Double, Array[Double], Double)],
-        state: GroupState[Boolean])
+        rows: Iterator[(Long, Long, Double, Array[Double], Double)])
         : Iterator[(Long, Long, Array[Double], Double)] = {
       rows.toSeq.sortBy { case (_, cid, cs, _, _) => (-cs, cid) }
         .take(nProbe)
         .map { case (q, cid, _, e, n) => (q, cid, e, n) }.iterator
     }
-    val probes = localCheckpoints(probed).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(probeFn)
+    val probes = regroup(probed)(_._1)(probeFn)
       .toDF("q_id", "cell", "q_emb", "q_norm")
     val cand = probes.join(index.cells, Seq("cell"))
       .where(col("vec_id") =!= col("q_id"))
@@ -3231,15 +3159,13 @@ object Streaming {
         (Similarity.dotD(col("q_emb"), col("emb")) /
           (col("q_norm") * col("norm"))).as("sim"))
       .as[(Long, Long, Double)]
-    def topkFn(id: Long, rows: Iterator[(Long, Long, Double)],
-        state: GroupState[Boolean]): Iterator[AnnHit] = {
+    def topkFn(id: Long, rows: Iterator[(Long, Long, Double)])
+        : Iterator[AnnHit] = {
       rows.map { case (_, v, s) => (v, s) }.toSeq
         .sortBy { case (v, s) => (-s, v) }.take(k).iterator.zipWithIndex
         .map { case ((v, s), i) => AnnHit(id, v, s, i + 1) }
     }
-    cand.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(topkFn)
+    regroup(cand)(_._1)(topkFn)
   }
 
   /** A TRAINED (Lloyd k-means) IVF index left IN THE CLUSTER — the L2
@@ -3283,30 +3209,25 @@ object Streaming {
         col("q_emb"))
       .as[(Long, Long, Double, Array[Double])]
     def probeFn(id: Long,
-        rows: Iterator[(Long, Long, Double, Array[Double])],
-        state: GroupState[Boolean])
+        rows: Iterator[(Long, Long, Double, Array[Double])])
         : Iterator[(Long, Long, Array[Double])] = {
       rows.toSeq.sortBy { case (_, cid, d, _) => (d, cid) }.take(nProbe)
         .map { case (q, cid, _, e) => (q, cid, e) }.iterator
     }
-    val probes = localCheckpoints(probed).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(probeFn)
+    val probes = regroup(probed)(_._1)(probeFn)
       .toDF("q_id", "cell", "q_emb")
     val cand = probes.join(index.cells, Seq("cell"))
       .where(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
         Similarity.l2ToCent(col("q_emb"), col("emb")).as("dist"))
       .as[(Long, Long, Double)]
-    def topkFn(id: Long, rows: Iterator[(Long, Long, Double)],
-        state: GroupState[Boolean]): Iterator[AnnL2Hit] = {
+    def topkFn(id: Long, rows: Iterator[(Long, Long, Double)])
+        : Iterator[AnnL2Hit] = {
       rows.map { case (_, v, d) => (v, d) }.toSeq
         .sortBy { case (v, d) => (d, v) }.take(k).iterator.zipWithIndex
         .map { case ((v, d), i) => AnnL2Hit(id, v, d, i + 1) }
     }
-    cand.groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(topkFn)
+    regroup(cand)(_._1)(topkFn)
   }
 
   /** A PQ-ADC serving index left IN THE CLUSTER: the corpus's code
@@ -3369,8 +3290,7 @@ object Streaming {
       .where(col("c_vec") =!= col("q_id"))
       .select(col("q_id"), col("c_vec"), col("dq"))
       .as[(Long, Long, Long)]
-    def fn(id: Long, rows: Iterator[(Long, Long, Long)],
-        state: GroupState[Boolean]): Iterator[AdcHit] = {
+    def fn(id: Long, rows: Iterator[(Long, Long, Long)]): Iterator[AdcHit] = {
       val sums = scala.collection.mutable.HashMap.empty[Long, Long]
       rows.foreach { case (_, v, dq) =>
         sums.update(v, sums.getOrElse(v, 0L) + dq)
@@ -3379,9 +3299,7 @@ object Streaming {
         .iterator.zipWithIndex
         .map { case ((v, a), i) => AdcHit(id, v, a, i + 1) }
     }
-    localCheckpoints(cand).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    regroup(cand)(_._1)(fn)
   }
 
   /** A trained bigram LM left IN THE CLUSTER: the model and unigram
@@ -3443,17 +3361,14 @@ object Streaming {
         Seq("w2"), "left")
       .select(col("doc_id"), coalesce(col("q_lnp"), backoff).as("q"))
       .as[(Long, Long)]
-    def fn(id: Long, rows: Iterator[(Long, Long)],
-        state: GroupState[Boolean]): Iterator[LmScore] = {
+    def fn(id: Long, rows: Iterator[(Long, Long)]): Iterator[LmScore] = {
       var n = 0L
       var qsum = BigInt(0)
       rows.foreach { case (_, q) => n += 1; qsum += q }
       if (n == 0) Iterator.empty
       else Iterator.single(LmScore(id, n, qsum.toDouble / 1e12 / n))
     }
-    localCheckpoints(scored).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    regroup(scored)(_._1)(fn)
   }
 
   /** DSIR importance scoring of a DOCUMENT STREAM — train
@@ -3484,8 +3399,7 @@ object Streaming {
         explode(split(lower(trim(col("text"))), "[ \\t\\n\\x0B\\f\\r]+")).as("term"))
       .join(ref.freq, Seq("term"), "left")
       .select(col("doc_id"), q.as("q")).as[(Long, Long)]
-    def fn(id: Long, rows: Iterator[(Long, Long)],
-        state: GroupState[Boolean]): Iterator[DsirScore] = {
+    def fn(id: Long, rows: Iterator[(Long, Long)]): Iterator[DsirScore] = {
       var n = 0L
       var qsum = BigInt(0)
       rows.foreach { case (_, qq) => n += 1; qsum += qq }
@@ -3493,9 +3407,7 @@ object Streaming {
       else Iterator.single(
         DsirScore(id, n, qsum.toDouble / 1e12, qsum > 0))
     }
-    localCheckpoints(scored).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    regroup(scored)(_._1)(fn)
   }
 
   /** The eval-suite side of semantic decontamination, materialized
@@ -3527,17 +3439,15 @@ object Streaming {
     val scored = graft.ext.Similarity
       .scoreAgainstEval(vecs.toDF("vec_id", "embedding"), evalRef)
       .as[(Long, Double)]
-    def fn(id: Long, rows: Iterator[(Long, Double)],
-        state: GroupState[Boolean]): Iterator[SemDecontamDecision] = {
+    def fn(id: Long, rows: Iterator[(Long, Double)])
+        : Iterator[SemDecontamDecision] = {
       var m = Double.NegativeInfinity
       var n = 0
       rows.foreach { case (_, s) => n += 1; if (s > m) m = s }
       if (n == 0) Iterator.empty
       else Iterator.single(SemDecontamDecision(id, m, m < tau))
     }
-    localCheckpoints(scored).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    regroup(scored)(_._1)(fn)
   }
 
   /** UniMax budget enforcement on a DOCUMENT STREAM — the serving twin
@@ -3567,21 +3477,14 @@ object Streaming {
       .join(broadcast(alloc), "lang")
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("alloc"))
       .as[(Long, String, Long, Long)]
-    def fn(lang: String, it: Iterator[(Long, String, Long, Long)],
-        state: GroupState[Long]): Iterator[UnimaxDoc] = {
-      var cum = state.getOption.getOrElse(0L)
-      val out = Seq.newBuilder[UnimaxDoc]
-      it.toSeq.sortBy { case (id, _, _, _) => (md5Key(id), id) }
-        .foreach { case (id, _, n, budget) =>
-          cum += n
-          if (cum <= budget) out += UnimaxDoc(id, lang, n, cum)
-        }
-      state.update(cum)
-      out.result().iterator
-    }
-    localCheckpoints(rows).groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    keyedFold[(Long, String, Long, Long), String, Long, UnimaxDoc](rows,
+      _._2, 0L)(_.sortBy { case (id, _, _, _) => (md5Key(id), id) },
+      (lang, cum0, r, out) => {
+        val (id, _, n, budget) = r
+        val cum = cum0 + n
+        if (cum <= budget) out(UnimaxDoc(id, lang, n, cum))
+        cum
+      })
   }
 
   /** CCNet bucket boundaries trained batch-side: the per-language LAST
@@ -3684,8 +3587,7 @@ object Streaming {
       .select(col("doc_id"), col("lang"),
         coalesce(col("q_lnp"), backoff).as("q"))
       .as[(Long, String, Long)]
-    def fn(id: Long, rows: Iterator[(Long, String, Long)],
-        state: GroupState[Boolean])
+    def fn(id: Long, rows: Iterator[(Long, String, Long)])
         : Iterator[(Long, String, Long, Double)] = {
       var n = 0L
       var qsum = BigInt(0)
@@ -3694,9 +3596,7 @@ object Streaming {
       if (n == 0) Iterator.empty
       else Iterator.single((id, lang, n, qsum.toDouble / 1e12 / n))
     }
-    val perDoc = localCheckpoints(scored).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    val perDoc = regroup(scored)(_._1)(fn)
       .toDF("doc_id", "lang", "n_bigrams", "avg_logprob")
     // at-or-before a boundary in the (avg_logprob DESC, doc_id) order
     def before(bLp: Column, bId: Column): Column =
@@ -3738,8 +3638,8 @@ object Streaming {
       .join(broadcast(bits), "bit")
       .select(col("doc_id"), col("g"), col("j"))
       .as[(Long, String, Int)]
-    def fn(id: Long, rows: Iterator[(Long, String, Int)],
-        state: GroupState[Boolean]): Iterator[BloomHit] = {
+    def fn(id: Long, rows: Iterator[(Long, String, Int)])
+        : Iterator[BloomHit] = {
       // (gram, probe) set: gram multiplicity inside the doc collapses,
       // matching the batch op's DISTINCT (doc_id, g) probe stream
       val seen = scala.collection.mutable.Set.empty[(String, Int)]
@@ -3748,9 +3648,7 @@ object Streaming {
       if (hits == 0) Iterator.empty
       else Iterator.single(BloomHit(id, hits.toLong))
     }
-    localCheckpoints(probed).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    regroup(probed)(_._1)(fn)
   }
 
   /** Score a DOCUMENT STREAM under a trained bigram LM — the quality
@@ -3901,8 +3799,8 @@ object Streaming {
     val rows = qt.join(index, "term")
       .select(col("q_id"), col("doc_id"), col("term"), col("tscore"))
       .as[(Long, Long, String, Double)]
-    def fn(qid: Long, it: Iterator[(Long, Long, String, Double)],
-        state: GroupState[Boolean]): Iterator[Bm25Hit] = {
+    def fn(qid: Long, it: Iterator[(Long, Long, String, Double)])
+        : Iterator[Bm25Hit] = {
       val perDoc = it.toSeq.groupBy(_._2).map { case (doc, rs) =>
         doc -> rs.sortBy(_._3).map(_._4).foldLeft(0.0)(_ + _)
       }
@@ -3911,9 +3809,7 @@ object Streaming {
           Bm25Hit(qid, i + 1L, doc, s)
         }.iterator
     }
-    localCheckpoints(rows).groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    regroup(rows)(_._1)(fn)
   }
 
   /** Running per-source OOV rate on a STREAM against a FROZEN vocab —
@@ -3964,7 +3860,7 @@ object Streaming {
     * filter → dedup → token budget → pack), wired as ONE streaming
     * query: a stateless scalar quality gate ([[qualityFlags]], the
     * batch operator's exact decisions), then exact content dedup
-    * (state = one keeper id per distinct md5, the
+    * (state = one has-a-keeper flag per distinct md5, the
     * [[streamingExactDedup]] semantics with the row carried through),
     * then the per-source token budget ([[streamingTokenBudget]]
     * semantics). Two chained flatMapGroupsWithState stages — legal in
@@ -3987,48 +3883,29 @@ object Streaming {
         graft.ext.TextOps.tokenCount(col("text")).cast("long")
           .as("n_tokens"))
       .as[(Long, String, String, Long)]
-    // content-dedup stage: key = md5(text), state = keeper id; first
-    // arrival of a content wins (doc_id order within a batch — the batch
-    // operator's min-id keeper on a single-batch replay). A replayed
-    // keeper row is DROPPED, not re-emitted: the downstream budget stage
-    // counts every emitted row, so re-emission would double-charge the
-    // source's budget.
-    def dedupFn(hash: String,
-        rows: Iterator[(Long, String, String, Long)],
-        state: GroupState[Long])
-        : Iterator[(Long, String, String, Long)] = {
-      var keeper = state.getOption
-      val out = Seq.newBuilder[(Long, String, String, Long)]
-      rows.toSeq.sortBy(_._1).foreach { r =>
-        if (keeper.isEmpty) { keeper = Some(r._1); out += r }
-      }
-      keeper.foreach(state.update)
-      out.result().iterator
-    }
-    val deduped = localCheckpoints(kept)
-      .groupByKey(r => graft.functions.md5Hex(r._3.getBytes("UTF-8")))
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(dedupFn)
+    // content-dedup stage: key = md5(text), state = whether the content
+    // has a keeper; first arrival of a content wins (doc_id order within
+    // a batch — the batch operator's min-id keeper on a single-batch
+    // replay). A replayed keeper row is DROPPED, not re-emitted: the
+    // downstream budget stage counts every emitted row, so re-emission
+    // would double-charge the source's budget.
+    val deduped = keyedFold[(Long, String, String, Long), String, Boolean,
+      (Long, String, String, Long)](kept,
+      r => graft.functions.md5Hex(r._3.getBytes("UTF-8")), false)(
+      _.sortBy(_._1), (_, seen, r, out) => { if (!seen) out(r); true })
     // budget stage: key = source, state = cumulative tokens; md5(doc_id)
     // order within a batch (the batch operator's deterministic order),
     // arrival order across batches — streamingTokenBudget's stance
     def md5Key(id: Long): String =
       graft.functions.md5Hex(id.toString.getBytes("UTF-8"))
-    def budgetFn(src: String,
-        rows: Iterator[(Long, String, String, Long)],
-        state: GroupState[Long]): Iterator[AssembledDoc] = {
-      var cum = state.getOption.getOrElse(0L)
-      val out = Seq.newBuilder[AssembledDoc]
-      rows.toSeq.sortBy(r => (md5Key(r._1), r._1)).foreach { r =>
-        cum += r._4
-        if (cum <= budget) out += AssembledDoc(r._1, src, r._3, r._4, cum)
-      }
-      state.update(cum)
-      out.result().iterator
-    }
-    deduped.groupByKey(_._2)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(budgetFn)
+    keyedFold[(Long, String, String, Long), String, Long, AssembledDoc](
+      deduped, _._2, 0L)(
+      _.sortBy(r => (md5Key(r._1), r._1)),
+      (src, cum0, r, out) => {
+        val cum = cum0 + r._4
+        if (cum <= budget) out(AssembledDoc(r._1, src, r._3, r._4, cum))
+        cum
+      })
   }
 
   // ------------------------------------------------ clickstream twins
@@ -4046,6 +3923,18 @@ object Streaming {
     val i = ts.toInstant
     i.getEpochSecond * 1000000L + i.getNano / 1000L
   }
+
+  /** [[keyedFold]] per user over click events in (event micros,
+    * event_id) order within a micro-batch; across batches the click
+    * twins fold in arrival order, under the in-order ingest contract. */
+  private def clickFold[S: Encoder, O: Encoder](
+      events: Dataset[ClickEvent], zero: S)(
+      step: (Long, S, ClickEvent, O => Unit) => S,
+      serve: (Long, S) => IterableOnce[O] = (_: Long, _: S) => Nil)
+      : Dataset[O] =
+    keyedFold[ClickEvent, Long, S, O](events, _.user_id, zero)(
+      _.sortBy(e => (clickMicros(e.ts), e.event_id)), step, serve)(
+      Encoders.scalaLong, implicitly[Encoder[S]], implicitly[Encoder[O]])
 
   /** Streaming sessionize — twin of
     * [[graft.operators.EventAnalytics.sessionize]] via Spark's NATIVE
@@ -4085,7 +3974,8 @@ object Streaming {
   case class SessionPath(user_id: Long, session_start: Long, path: String)
 
   /** The open session: last event micros, start micros, and the
-    * truncated type prefix (≤ maxLen — O(1) state per user). */
+    * truncated type prefix (≤ maxLen — O(1) state per user; empty = no
+    * event yet). */
   case class PathState(lastTsu: Long, start: Long, types: Seq[String])
 
   /** Streaming session paths — the stateful half of
@@ -4104,27 +3994,16 @@ object Streaming {
       gapSeconds: Long = 1800, maxLen: Int = 8): Dataset[SessionPath] = {
     import events.sparkSession.implicits._
     val gapUs = gapSeconds * 1000000L
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[PathState]): Iterator[SessionPath] = {
-      var st = state.getOption.orNull
-      val out = Seq.newBuilder[SessionPath]
-      rows.toSeq
-        .map(e => (clickMicros(e.ts), e.event_id, e.event_type))
-        .sortBy(t => (t._1, t._2))
-        .foreach { case (tsu, _, typ) =>
-          if (st == null) st = PathState(tsu, tsu, Seq(typ))
-          else if (tsu - st.lastTsu >= gapUs) {
-            out += SessionPath(uid, st.start, st.types.mkString(">"))
-            st = PathState(tsu, tsu, Seq(typ))
-          } else st = PathState(tsu, st.start,
-            if (st.types.length < maxLen) st.types :+ typ else st.types)
-        }
-      if (st != null) state.update(st)
-      out.result().iterator
-    }
-    localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    clickFold[PathState, SessionPath](events, PathState(0L, 0L, Nil))(
+      (uid, st, e, out) => {
+        val (tsu, typ) = (clickMicros(e.ts), e.event_type)
+        if (st.types.isEmpty) PathState(tsu, tsu, Seq(typ))
+        else if (tsu - st.lastTsu >= gapUs) {
+          out(SessionPath(uid, st.start, st.types.mkString(">")))
+          PathState(tsu, tsu, Seq(typ))
+        } else PathState(tsu, st.start,
+          if (st.types.length < maxLen) st.types :+ typ else st.types)
+      })
   }
 
   /** Streaming bounce flags — the stateless projection that makes
@@ -4170,30 +4049,19 @@ object Streaming {
     require(steps.distinct.size == steps.size,
       s"funnel steps must be distinct: $steps")
     val horizonUs = horizonSeconds * 1000000L
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[FunnelState]): Iterator[FunnelAdvance] = {
-      val times = state.getOption.map(_.times.toArray)
-        .getOrElse(Array.fill(steps.size)(Long.MinValue))
-      val out = Seq.newBuilder[FunnelAdvance]
-      rows.toSeq
-        .map(e => (clickMicros(e.ts), e.event_id, e.event_type))
-        .sortBy(t => (t._1, t._2))
-        .foreach { case (tsu, _, typ) =>
-          val i = steps.indexOf(typ)
-          if (i == 0 && times(0) == Long.MinValue) {
-            times(0) = tsu; out += FunnelAdvance(uid, 1, tsu)
-          } else if (i > 0 && times(i) == Long.MinValue &&
+    clickFold[FunnelState, FunnelAdvance](events,
+      FunnelState(Seq.fill(steps.size)(Long.MinValue)))(
+      (uid, st, e, out) => {
+        val (tsu, i, times) = (clickMicros(e.ts), steps.indexOf(e.event_type),
+          st.times)
+        if ((i == 0 && times(0) == Long.MinValue) ||
+            (i > 0 && times(i) == Long.MinValue &&
               times(i - 1) != Long.MinValue && tsu > times(i - 1) &&
-              tsu <= times(0) + horizonUs) {
-            times(i) = tsu; out += FunnelAdvance(uid, i + 1, tsu)
-          }
-        }
-      state.update(FunnelState(times.toSeq))
-      out.result().iterator
-    }
-    localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+              tsu <= times(0) + horizonUs)) {
+          out(FunnelAdvance(uid, i + 1, tsu))
+          FunnelState(times.updated(i, tsu))
+        } else st
+      })
   }
 
   /** Per-user dwell classification on a STREAM against a batch
@@ -4210,25 +4078,13 @@ object Streaming {
   def streamingDwellBucket(events: Dataset[ClickEvent],
       bounds: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[TransState])
-        : Iterator[(Long, Long, String, Long)] = {
-      var last = state.getOption.orNull
-      val out = Seq.newBuilder[(Long, Long, String, Long)]
-      rows.toSeq
-        .map(e => (clickMicros(e.ts), e.event_id, e.event_type))
-        .sortBy(t => (t._1, t._2))
-        .foreach { case (tsu, id, typ) =>
-          if (last != null)
-            out += ((uid, last.tsu, last.typ, tsu - last.tsu))
-          last = TransState(tsu, id, typ)
-        }
-      if (last != null) state.update(last)
-      out.result().iterator
-    }
-    val dwells = localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    val dwells = clickFold[TransState, (Long, Long, String, Long)](events,
+      NoClick)(
+      (uid, last, e, out) => {
+        val tsu = clickMicros(e.ts)
+        if (last != NoClick) out((uid, last.tsu, last.typ, tsu - last.tsu))
+        TransState(tsu, e.event_id, e.event_type)
+      })
       .toDF("user_id", "tsu", "event_type", "dwell_us")
     graft.operators.EventAnalytics.assignDwellBuckets(dwells, bounds)
   }
@@ -4265,11 +4121,19 @@ object Streaming {
     val (b1m, b2m) = (b.getAs[Double]("b1_m"), b.getAs[Double]("b2_m"))
     def score(v: Double, b1: Double, b2: Double): Long =
       if (v <= b1) 1L else if (v <= b2) 2L else 3L
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[RfmUserState]): Iterator[RfmServing] = {
-      var st = state.getOption.getOrElse(
-        RfmUserState(Long.MinValue, 0L, "0"))
-      rows.foreach { e =>
+    def serve(uid: Long, st: RfmUserState): Option[RfmServing] = {
+      val m = BigInt(st.monetaryQ)
+      if (m.abs > BigInt(Long.MaxValue))
+        throw new ArithmeticException("rfm: value_q sum overflows BIGINT")
+      val (r, f, mm) = (score(st.recency.toDouble, b1r, b2r),
+        score(st.frequency.toDouble, b1f, b2f),
+        score(m.toDouble, b1m, b2m))
+      Some(RfmServing(uid, st.recency, st.frequency,
+        m.toLong, r, f, mm, r * 100L + f * 10L + mm))
+    }
+    clickFold[RfmUserState, RfmServing](events,
+      RfmUserState(Long.MinValue, 0L, "0"))(
+      (uid, st, e, _) => {
         // the batch valueQSum guards, scalar-side
         if (e.value.isNaN || e.value.isInfinite)
           throw new ArithmeticException(
@@ -4278,22 +4142,9 @@ object Streaming {
         if (math.abs(q) > 1000000000000000L)
           throw new ArithmeticException("rfm: quantized value outside " +
             "the exact-decimal regime at user_id=" + uid)
-        st = RfmUserState(math.max(st.recency, clickMicros(e.ts)),
+        RfmUserState(math.max(st.recency, clickMicros(e.ts)),
           st.frequency + 1L, (BigInt(st.monetaryQ) + q).toString)
-      }
-      state.update(st)
-      val m = BigInt(st.monetaryQ)
-      if (m.abs > BigInt(Long.MaxValue))
-        throw new ArithmeticException("rfm: value_q sum overflows BIGINT")
-      val (r, f, mm) = (score(st.recency.toDouble, b1r, b2r),
-        score(st.frequency.toDouble, b1f, b2f),
-        score(m.toDouble, b1m, b2m))
-      Iterator.single(RfmServing(uid, st.recency, st.frequency,
-        m.toLong, r, f, mm, r * 100L + f * 10L + mm))
-    }
-    localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      }, serve)
   }
 
   /** One user's navigation-entropy serving row. */
@@ -4319,16 +4170,8 @@ object Streaming {
   def streamingNavEntropy(events: Dataset[ClickEvent])
       : Dataset[NavEntropyServing] = {
     import events.sparkSession.implicits._
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[NavEntropyState])
-        : Iterator[NavEntropyServing] = {
-      var counts = state.getOption.map(_.counts)
-        .getOrElse(Map.empty[String, Long])
-      rows.foreach { e =>
-        counts = counts.updated(e.event_type,
-          counts.getOrElse(e.event_type, 0L) + 1L)
-      }
-      state.update(NavEntropyState(counts))
+    def serve(uid: Long, st: NavEntropyState): Option[NavEntropyServing] = {
+      val counts = st.counts
       val n = counts.values.sum
       val s = counts.values.map(c => BigInt(c) * BigInt(
         math.floor(math.log(c.toDouble / n.toDouble) * 1e12).toLong))
@@ -4343,12 +4186,13 @@ object Streaming {
           (math.floor(math.log(counts.size.toDouble) * 1e12)
             .toLong.toDouble / 1e12))
         else None
-      Iterator.single(NavEntropyServing(uid, counts.size.toLong, n,
-        sq, entropy, norm))
+      Some(NavEntropyServing(uid, counts.size.toLong, n, sq, entropy,
+        norm))
     }
-    localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    clickFold[NavEntropyState, NavEntropyServing](events,
+      NavEntropyState(Map.empty))(
+      (_, st, e, _) => NavEntropyState(st.counts.updated(e.event_type,
+        st.counts.getOrElse(e.event_type, 0L) + 1L)), serve)
   }
 
   /** One consecutive event-type pair of a user's stream. */
@@ -4357,6 +4201,8 @@ object Streaming {
 
   /** Last event seen per user — O(1) state. */
   case class TransState(tsu: Long, eventId: Long, typ: String)
+  /** [[TransState]] before a user's first event. */
+  private val NoClick = TransState(Long.MinValue, 0L, null)
 
   /** Streaming transition pairs — the stateful half of
     * [[graft.operators.EventAnalytics.transitions]]: a per-user fold
@@ -4368,23 +4214,11 @@ object Streaming {
   def streamingTransitionPairs(events: Dataset[ClickEvent])
       : Dataset[TransitionPair] = {
     import events.sparkSession.implicits._
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[TransState]): Iterator[TransitionPair] = {
-      var last = state.getOption.orNull
-      val out = Seq.newBuilder[TransitionPair]
-      rows.toSeq
-        .map(e => (clickMicros(e.ts), e.event_id, e.event_type))
-        .sortBy(t => (t._1, t._2))
-        .foreach { case (tsu, id, typ) =>
-          if (last != null) out += TransitionPair(uid, last.typ, typ)
-          last = TransState(tsu, id, typ)
-        }
-      if (last != null) state.update(last)
-      out.result().iterator
-    }
-    localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    clickFold[TransState, TransitionPair](events, NoClick)(
+      (uid, last, e, out) => {
+        if (last != NoClick) out(TransitionPair(uid, last.typ, e.event_type))
+        TransState(clickMicros(e.ts), e.event_id, e.event_type)
+      })
   }
 
   /** One first-occurrence record: `user_id` performed `event_type` for
@@ -4403,23 +4237,10 @@ object Streaming {
   def streamingTypeFirsts(events: Dataset[ClickEvent])
       : Dataset[TypeFirst] = {
     import events.sparkSession.implicits._
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[Seq[String]]): Iterator[TypeFirst] = {
-      val seen = scala.collection.mutable.Set[String]()
-      state.getOption.foreach(seen ++= _)
-      val out = Seq.newBuilder[TypeFirst]
-      rows.toSeq
-        .map(e => (clickMicros(e.ts), e.event_id, e.event_type))
-        .sortBy(t => (t._1, t._2))
-        .foreach { case (_, _, typ) =>
-          if (seen.add(typ)) out += TypeFirst(uid, typ)
-        }
-      state.update(seen.toSeq)
-      out.result().iterator
-    }
-    localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+    clickFold[Seq[String], TypeFirst](events, Nil)(
+      (uid, seen, e, out) =>
+        if (seen.contains(e.event_type)) seen
+        else { out(TypeFirst(uid, e.event_type)); e.event_type +: seen })
   }
 
   /** One first-activity-in-a-period record: `user_id` (cohort
@@ -4427,10 +4248,10 @@ object Streaming {
     * time. */
   case class RetentionHit(user_id: Long, cohort: Long, offset: Long)
 
-  /** Cohort period plus the period offsets already emitted. State is
-    * bounded by the number of DISTINCT periods the user was active in
-    * (≤ calendar periods of the stream's lifetime, ~52/year at weekly
-    * grain — not event volume). */
+  /** Cohort period (Long.MinValue = no event yet) plus the period
+    * offsets already emitted. State is bounded by the number of
+    * DISTINCT periods the user was active in (≤ calendar periods of the
+    * stream's lifetime, ~52/year at weekly grain — not event volume). */
   case class RetentionState(cohort: Long, offsets: Seq[Long])
 
   /** Streaming retention hits — the stateful half of
@@ -4453,26 +4274,18 @@ object Streaming {
       periodDays: Long = 7): Dataset[RetentionHit] = {
     import events.sparkSession.implicits._
     val periodUs = periodDays * 86400L * 1000000L
-    def fn(uid: Long, rows: Iterator[ClickEvent],
-        state: GroupState[RetentionState]): Iterator[RetentionHit] = {
-      var st = state.getOption.orNull
-      val seen = scala.collection.mutable.Set[Long]()
-      if (st != null) seen ++= st.offsets
-      val out = Seq.newBuilder[RetentionHit]
-      rows.toSeq
-        .map(e => (clickMicros(e.ts), e.event_id))
-        .sortBy(identity)
-        .foreach { case (tsu, _) =>
-          val period = math.floor(tsu.toDouble / periodUs).toLong
-          if (st == null) st = RetentionState(period, Nil)
-          val off = period - st.cohort
-          if (seen.add(off)) out += RetentionHit(uid, st.cohort, off)
+    clickFold[RetentionState, RetentionHit](events,
+      RetentionState(Long.MinValue, Nil))(
+      (uid, st0, e, out) => {
+        val period = math.floor(clickMicros(e.ts).toDouble / periodUs).toLong
+        val st = if (st0.cohort == Long.MinValue) RetentionState(period, Nil)
+          else st0
+        val off = period - st.cohort
+        if (st.offsets.contains(off)) st
+        else {
+          out(RetentionHit(uid, st.cohort, off))
+          st.copy(offsets = off +: st.offsets)
         }
-      if (st != null) state.update(RetentionState(st.cohort, seen.toSeq))
-      out.result().iterator
-    }
-    localCheckpoints(events).groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(fn)
+      })
   }
 }
