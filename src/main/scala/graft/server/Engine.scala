@@ -433,11 +433,11 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * under a hidden `.part-<uuid>.<codec>.parquet.inprogress` name and
     * moved to `part-<uuid>.<codec>.parquet` with `ATOMIC_MOVE`, so no
     * read, footer read, compaction or archival sweep ever lists a partial
-    * file. The codec is the session's
-    * `spark.sql.parquet.compression.codec`, and the writer properties
-    * are the `parquet.*` keys of the session Hadoop conf, as for a Spark
-    * write. No `_SUCCESS` marker and no `.crc` sidecars are written;
-    * nothing in the engine reads them. */
+    * file. The files are in [[graft.sources.TickStore.FileEncoding]], the
+    * codec is the session's `spark.sql.parquet.compression.codec`, and
+    * the other writer properties are the `parquet.*` keys of the session
+    * Hadoop conf, as for a Spark write. No `_SUCCESS` marker and no
+    * `.crc` sidecars are written; nothing in the engine reads them. */
   private def flush(book: String): Unit =
     books.get(book).filter(_.nonEmpty).foreach { buf =>
       val t0 = System.nanoTime()

@@ -96,11 +96,16 @@ private[graft] object FlushWriter {
     days.result()
   }
 
-  /** Writes `rows` as one new file in `dir` and returns it. The writer
-    * properties (row group, page and dictionary sizes, dictionary and
-    * statistics switches, writer version, page checksums) come from
-    * `conf`'s `parquet.*` keys, with parquet-hadoop's defaults, as they
-    * would for Spark's writer. */
+  /** Writes `rows` as one new file in `dir` and returns it.
+    *
+    * The writer owns the tick encoding, [[TickStore.FileEncoding]]: the
+    * writer version (v2 pages) and the dictionary switch of `ts`, `seq`,
+    * `price` and `size` are set here, after `conf`, so no `parquet.*`
+    * key of `conf` changes them. The codec is `codec`. The other writer
+    * properties (row group, page and dictionary page sizes, the default
+    * dictionary switch, which `symbol` follows, statistics, page
+    * checksums, validation) still come from `conf`'s `parquet.*` keys,
+    * with parquet-hadoop's defaults, as they would for Spark's writer. */
   def writeFile(dir: File, rows: Iterable[Update], conf: Configuration,
       codec: CompressionCodecName): File = {
     import ParquetOutputFormat._
@@ -110,7 +115,7 @@ private[graft] object FlushWriter {
     val tmp = new File(dir, inProgressName(name))
     val out = new File(dir, name)
     try {
-      val writer = new Builder(new LocalOutputFile(tmp.toPath))
+      val builder = new Builder(new LocalOutputFile(tmp.toPath))
         .withConf(conf)
         .withWriteMode(ParquetFileWriter.Mode.CREATE)
         .withCompressionCodec(codec)
@@ -118,11 +123,13 @@ private[graft] object FlushWriter {
         .withPageSize(getPageSize(conf))
         .withDictionaryPageSize(getDictionaryPageSize(conf))
         .withDictionaryEncoding(getEnableDictionary(conf))
-        .withWriterVersion(getWriterVersion(conf))
         .withStatisticsEnabled(getStatisticsEnabled(conf))
         .withPageWriteChecksumEnabled(getPageWriteChecksumEnabled(conf))
         .withValidation(getValidation(conf))
-        .build()
+        .withWriterVersion(TickStore.FileEncoding.Writer)
+      val writer = TickStore.FileEncoding.Dictionary.foldLeft(builder) {
+        case (b, (column, on)) => b.withDictionaryEncoding(column, on)
+      }.build()
       try rows.foreach(writer.write) finally writer.close()
       Files.move(tmp.toPath, out.toPath, StandardCopyOption.ATOMIC_MOVE)
     } catch {

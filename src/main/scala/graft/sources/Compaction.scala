@@ -18,11 +18,19 @@ import org.apache.spark.sql.functions._
   * one sorted partition each, and the ts-range file layout preserves the
   * reference's time-partitioned-file property (SURVEY S4) so header-stat
   * pruning still skips whole files.
+  *
+  * Every file compaction and migration write is in
+  * [[TickStore.FileEncoding]], the encoding the flush and the store
+  * writer use, whatever encoding the input files had.
   */
 object Compaction {
 
   /** Rewrite `dir` (a parquet directory) into ≈`targetBytes` files.
-    * Returns (files before, files after).
+    * Returns (files before, files after). The number of output files is
+    * sized from the input files' bytes, so a leaf of files in another
+    * encoding compacts into files of another size: v1-page files, whose
+    * `ts` and `seq` are plain 8-byte longs, compact into
+    * [[TickStore.FileEncoding]] files of about half of `targetBytes`.
     *
     * Safety properties:
     *  - the input set is PINNED to the files listed at entry (read by
@@ -72,7 +80,8 @@ object Compaction {
     spark.read.parquet(before.map(_.getPath).toIndexedSeq: _*)
       .repartitionByRange(nOut, col("ts"), col("seq"))
       .sortWithinPartitions("ts", "seq")
-      .write.mode(SaveMode.Overwrite).parquet(tmp)
+      .write.options(TickStore.FileEncoding.options)
+      .mode(SaveMode.Overwrite).parquet(tmp)
 
     // swap: park pinned originals aside, move compacted files in —
     // under the reader-exclusion lock, so no scan ever lists a
@@ -142,7 +151,8 @@ object Compaction {
       .withColumn(TickStore.DayCol, TickStore.dayOf(col("ts")))
       .repartition(col(TickStore.DayCol))
       .sortWithinPartitions("ts", "seq")
-      .write.mode(SaveMode.Overwrite)
+      .write.options(TickStore.FileEncoding.options)
+      .mode(SaveMode.Overwrite)
       .partitionBy(TickStore.DayCol).parquet(tmp.getPath)
     val old = new java.io.File(root + ".old")
     swapLock.lock()

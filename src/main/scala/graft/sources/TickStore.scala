@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.parquet.column.ParquetProperties.WriterVersion
+import org.apache.parquet.hadoop.ParquetOutputFormat
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -40,6 +42,35 @@ object TickStore {
     * book dir with no `day=` leaf reads with [[Update.schema]] alone. */
   val PartitionedSchema: StructType = Update.schema.add(DayCol, LongType)
 
+  /** The encoding of every tick file, defined once for the three tick
+    * writers: [[graft.server.FlushWriter]] sets it on its builder,
+    * [[Compaction]] and [[write]] pass [[options]] to their Spark
+    * writes. Those set keys override whatever the session's Hadoop conf
+    * says, so no session conf changes a tick file's encoding, while
+    * every other parquet write in the session keeps its own defaults.
+    *
+    * v2 data pages, with `ts` and `seq` out of the dictionary, so both
+    * are written DELTA_BINARY_PACKED: (ts, seq)-sorted ticks differ by
+    * a few ms and a few seq steps, the deltas DTF stores as u16 dts and
+    * u8 dseq (`file_format.rs:26`), where v1 pages store 8 plain bytes
+    * each. v2 pages also RLE-encode the two booleans; `price` and `size`
+    * keep their dictionaries. The codec is not part of it: it stays the
+    * session's `spark.sql.parquet.compression.codec`. Every reader reads
+    * it unchanged: Spark's vectorized scan, the parquet-hadoop reader of
+    * [[graft.server.BookFileReader]], and the footer `ts` statistics. */
+  object FileEncoding {
+    val Writer: WriterVersion = WriterVersion.PARQUET_2_0
+    /** Dictionary encoding on or off, per column. */
+    val Dictionary: Seq[(String, Boolean)] =
+      Seq("ts" -> false, "seq" -> false, "price" -> true, "size" -> true)
+    /** The same, as parquet-hadoop's writer keys for a Spark write's
+      * `.options(...)`. */
+    val options: Map[String, String] =
+      Dictionary.map { case (c, on) =>
+        s"${ParquetOutputFormat.ENABLE_DICTIONARY}#$c" -> on.toString
+      }.toMap + (ParquetOutputFormat.WRITER_VERSION -> Writer.name)
+  }
+
   /** Epoch day of a ms timestamp (floor division — exact for negatives
     * too, matching [[dayOf]]'s floor). */
   def dayOfMs(tsMs: Long): Long = Math.floorDiv(tsMs, MsPerDay)
@@ -55,7 +86,7 @@ object TickStore {
     * partition directory receives whole sorted files rather than a
     * sliver from every input task; rows are (ts, seq)-sorted within
     * each file so parquet row-group stats stay tight for the residual
-    * ts pushdown. */
+    * ts pushdown. The files are written in [[FileEncoding]]. */
   def write(updates: DataFrame, root: String,
       mode: SaveMode = SaveMode.Append): Unit = {
     val need = Update.schema.fieldNames.toSet
@@ -79,7 +110,8 @@ object TickStore {
       .withColumn(DayCol, dayOf(col("ts")))
       .repartition(col("symbol"), col(DayCol))
       .sortWithinPartitions("ts", "seq")
-      .write.mode(mode).partitionBy("symbol", DayCol).parquet(root)
+      .write.options(FileEncoding.options).mode(mode)
+      .partitionBy("symbol", DayCol).parquet(root)
   }
 
   /** The whole store, with the partition columns folded back into the

@@ -578,6 +578,225 @@ class EngineSpec extends SparkSpec {
     graft.sources.Compaction.leafDataDirs(dir).flatMap(_.listFiles()
       .filter(_.getName.endsWith(".parquet"))).sortBy(_.getPath)
 
+  /** The column chunks of one parquet file, across its row groups. */
+  private def chunks(f: java.io.File) = {
+    import scala.jdk.CollectionConverters._
+    footer(f).getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+  }
+
+  /** Asserts `f` is in [[graft.sources.TickStore.FileEncoding]]: v2 data
+    * pages in every column chunk, `ts` and `seq` DELTA_BINARY_PACKED
+    * with no dictionary, the booleans RLE, `price` and `size`
+    * dictionary-encoded, and the session's codec. The writer falls back
+    * from a dictionary that does not pay for itself, so the fixtures
+    * draw prices and sizes from small grids. */
+  private def assertTickEncoding(f: java.io.File, writer: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.column.Encoding
+    val codec = org.apache.parquet.hadoop.metadata.CompressionCodecName
+      .valueOf(spark.conf.get("spark.sql.parquet.compression.codec")
+        .toUpperCase(java.util.Locale.ROOT))
+    val cs = chunks(f)
+    val names = cs.map(_.getPath.toDotString).toSet
+    assert(Set("ts", "seq", "is_trade", "is_bid", "price", "size")
+      .subsetOf(names), s"$writer: ${f.getName} has columns $names")
+    for (c <- cs) {
+      val what = s"$writer: ${f.getName} ${c.getPath.toDotString}"
+      val stats = c.getEncodingStats
+      assert(stats != null && stats.usesV2Pages, s"$what: v1 data pages")
+      assert(c.getCodec === codec, what)
+      val data = stats.getDataEncodings.asScala.toSet
+      c.getPath.toDotString match {
+        case "ts" | "seq" =>
+          assert(data === Set(Encoding.DELTA_BINARY_PACKED) &&
+            !stats.hasDictionaryPages, s"$what: $data")
+        case "is_trade" | "is_bid" =>
+          assert(data === Set(Encoding.RLE), s"$what: $data")
+        case "price" | "size" =>
+          assert(stats.hasDictionaryEncodedPages, s"$what: $data")
+        case _ =>
+      }
+    }
+  }
+
+  /** Whether every column chunk of `f` is written in v1 data pages. */
+  private def v1Pages(f: java.io.File): Boolean =
+    chunks(f).forall(c => !c.getEncodingStats.usesV2Pages)
+
+  test("FLUSH, compactBook's migrate and compact steps and " +
+      "TickStore.write write TickStore.FileEncoding whatever the " +
+      "session's parquet keys say; a plain Spark write keeps v1 pages") {
+    val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
+    def rows(from: Long, n: Int, seq0: Long) = (0 until n).map { i =>
+      graft.model.Update("enc", from + i * 613L, seq0 + i,
+        is_trade = i % 5 == 0, is_bid = i % 3 == 0, 100.0 + i % 17 * 0.5,
+        (i % 11 + 1) * 0.25)
+    }
+    // legacy rows on days 0 and 1, flushed rows on days 1 and 2
+    val day0 = base / day * day
+    val legacy = rows(day0 + day - 100000L, 300, 0L)
+    val flushed = rows(day0 + 2 * day - 60000L, 300, 1000L)
+    val keys = Map("parquet.writer.version" -> "v1",
+      "parquet.enable.dictionary" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val dir = Files.createTempDirectory("graft-enc").toString
+      val bookDir = new java.io.File(s"$dir/book=enc")
+      spark.createDataset(legacy)(enc).toDF().coalesce(1).write
+        .parquet(bookDir.getPath)
+      val plain = parquetFiles(bookDir)
+      assert(plain.nonEmpty && plain.forall(v1Pages),
+        "a plain Spark write did not keep the session's v1 pages")
+
+      val e = new Engine(spark, dir)
+      e.execute(CommandParser.parse("CREATE enc"))
+      e.execute(CommandParser.parse("USE enc"))
+      flushed.foreach(u => e.execute(Command.Insert(Some(u), None)))
+      e.execute(CommandParser.parse("FLUSH"))
+      val flushFiles = parquetFiles(bookDir).filterNot(plain.contains)
+      assert(flushFiles.size === 2, flushFiles.mkString(", "))
+      flushFiles.foreach(assertTickEncoding(_, "FLUSH"))
+
+      // compactBook's first step, on its own so its files can be told
+      // apart from the compact step's
+      assert(graft.sources.Compaction
+        .migrateFlatToPartitioned(spark, bookDir.getPath) === plain.size)
+      val migrated = parquetFiles(bookDir).filterNot(flushFiles.contains)
+      assert(migrated.size === 2 && !migrated.exists(plain.contains),
+        migrated.mkString(", "))
+      migrated.foreach(assertTickEncoding(_, "migrate"))
+      e.compactBook("enc")
+      val compacted = parquetFiles(bookDir)
+      assert(compacted.nonEmpty && !compacted.exists(f =>
+        flushFiles.contains(f) || migrated.contains(f)),
+        compacted.mkString(", "))
+      compacted.foreach(assertTickEncoding(_, "compact"))
+      assert(e.bookDf("enc").as(enc).collect().sortBy(_.seq).toSeq ===
+        legacy ++ flushed)
+
+      val root = s"$dir/store"
+      graft.sources.TickStore.write(
+        spark.createDataset(legacy ++ flushed)(enc).toDF(), root)
+      val stored = parquetFiles(new java.io.File(root))
+      assert(stored.size === 3, stored.mkString(", "))
+      stored.foreach(assertTickEncoding(_, "TickStore.write"))
+    } finally keys.keys.foreach(spark.conf.unset)
+
+    // the encoding is the tick writers' alone: at the session's
+    // defaults a plain Spark write is v1 too
+    val out = Files.createTempDirectory("graft-enc-plain").toString + "/out"
+    spark.createDataset(legacy)(enc).toDF().write.parquet(out)
+    val plain = parquetFiles(new java.io.File(out))
+    assert(plain.nonEmpty && plain.forall(v1Pages))
+  }
+
+  test("a book of v1 files written the old way next to flushed v2 files: " +
+      "GET, COUNT, LOAD and OB read every row, FLUSH drops exactly the " +
+      "stale rows, and compactBook leaves the same rows in v2 files") {
+    import org.apache.spark.sql.functions.col
+    val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
+    val rnd = new scala.util.Random(17)
+    var seq = 0L
+    /** `n` rows from `from` on, with gaps of 0 to 3 s, unique seqs with
+      * a jump now and then, and a price/size walk on a small grid. */
+    def walk(from: Long, n: Int): Seq[graft.model.Update] = {
+      var ts = from
+      Seq.fill(n) {
+        ts += rnd.nextInt(3000)
+        seq += (if (rnd.nextInt(50) == 0) 1L + rnd.nextInt(1 << 30) else 1L)
+        graft.model.Update("mix", ts, seq, is_trade = rnd.nextInt(4) == 0,
+          is_bid = rnd.nextBoolean(), 100.0 + rnd.nextInt(40) * 0.5,
+          rnd.nextInt(40) / 8.0)
+      }
+    }
+    def ts(us: Seq[graft.model.Update]) = us.map(_.ts)
+    val day0 = base / day * day
+    val legacy = walk(day0 + day - 200000L, 200) // root file, days 0-1
+    val oldLeaf = walk(legacy.last.ts + 1L, 200) // day 1, Spark-written
+    val dir = Files.createTempDirectory("graft-mixed").toString
+    val bookDir = new java.io.File(s"$dir/book=mix")
+    spark.createDataset(legacy)(enc).toDF().coalesce(1).write
+      .parquet(bookDir.getPath)
+    spark.createDataset(oldLeaf)(enc).toDF().coalesce(1)
+      .withColumn("day", graft.sources.TickStore.dayOf(col("ts")))
+      .write.mode("append").partitionBy("day").parquet(bookDir.getPath)
+    val v1Files = parquetFiles(bookDir)
+    assert(v1Files.size === 2 && v1Files.forall(v1Pages),
+      v1Files.mkString(", "))
+
+    val e = new Engine(spark, dir)
+    e.execute(CommandParser.parse("CREATE mix"))
+    e.execute(CommandParser.parse("USE mix"))
+    /** Stages `fresh` and `stale` interleaved by ts, FLUSHes, and checks
+      * the flush dropped exactly `stale`. */
+    def flushWith(fresh: Seq[graft.model.Update],
+        stale: Seq[graft.model.Update]): Unit = {
+      val dropped0 = e.flushStats.droppedRows
+      (fresh ++ stale).sortBy(u => (u.ts, u.seq))
+        .foreach(u => e.execute(Command.Insert(Some(u), None)))
+      e.execute(CommandParser.parse("FLUSH"))
+      assert(e.flushStats.droppedRows - dropped0 === stale.size)
+    }
+    // the stored max is in the v1 leaf, then in a flushed v2 file
+    val flushed1 = walk(day0 + 2 * day - 200000L, 300) // days 1-2
+    flushWith(flushed1, (legacy.take(3) ++ oldLeaf.takeRight(3))
+      .map(_.copy(seq = 0L, price = 1.0)))
+    val flushed2 = walk(flushed1.last.ts + 1L, 100)
+    flushWith(flushed2, flushed1.takeRight(5).map(_.copy(seq = 0L)))
+    val all = legacy ++ oldLeaf ++ flushed1 ++ flushed2
+    val v2Files = parquetFiles(bookDir).filterNot(v1Files.contains)
+    assert(v2Files.nonEmpty && v1Files.forall(_.exists))
+    v2Files.foreach(assertTickEncoding(_, "FLUSH"))
+
+    /** GET, COUNT, LOAD and OB against `all`. */
+    def readsAll(e: Engine, what: String): Unit = {
+      assert(e.execute(CommandParser.parse("COUNT")) === e.Text(s"${all.size}"),
+        what)
+      assert(e.bookDf("mix").as(enc).collect().sortBy(_.seq).toSeq === all,
+        what)
+      val ranges = Seq(None,
+        Some((legacy(150).ts, flushed1(50).ts)), // v1 root, v1 leaf, v2
+        Some((oldLeaf(20).ts, oldLeaf(120).ts)), // v1 leaf alone
+        Some((flushed1(10).ts, flushed2(10).ts))) // v2 alone
+      for {
+        range <- ranges
+        format <- Seq(GetFormat.Dtf, GetFormat.Json, GetFormat.Csv)
+      } {
+        val get = Command.Get(ReqCount.All, format, range, Loc.Fs)
+        val reply = e.execute(get)
+        val want = range.fold(ts(all)) { case (lo, hi) =>
+          ts(all).filter(t => t >= lo && t <= hi)
+        }
+        assert(replyTs(e)(reply) === want, s"$what: $get")
+        assert(reply.asInstanceOf[e.Frame].body.map(_.toSeq) ===
+          Some(sparkGetBody(e, "mix", get).toSeq), s"$what: $get")
+      }
+      val loader = new Engine(spark, dir)
+      assert(loader.execute(Command.Load("mix")) ===
+        loader.Text("Loaded orderbook `mix`."), what)
+      assert(loader.memDf("mix").as(enc).collect().toSeq.sortBy(_.seq) ===
+        all, what)
+      val inMem = new Engine(spark,
+        Files.createTempDirectory("graft-mixed-mem").toString)
+      inMem.execute(CommandParser.parse("CREATE mix"))
+      inMem.execute(CommandParser.parse("USE mix"))
+      all.foreach(u => inMem.execute(Command.Insert(Some(u), None)))
+      assert(e.execute(CommandParser.parse("OB mix")) ===
+        e.Text(inMem.execute(CommandParser.parse("OB mix")) match {
+          case inMem.Text(t) => t
+          case other => fail(s"$what: $other")
+        }), what)
+    }
+    readsAll(e, "mixed")
+
+    e.compactBook("mix")
+    val compacted = parquetFiles(bookDir)
+    assert(compacted.nonEmpty && compacted.forall(_.getParentFile != bookDir),
+      "root files left after compactBook")
+    compacted.foreach(assertTickEncoding(_, "compactBook"))
+    readsAll(e, "compacted")
+  }
+
   test("flushed files have the schema a Spark write gives, ts statistics " +
       "in every row group and the session's parquet codec; autoflush " +
       "runs no Spark job") {

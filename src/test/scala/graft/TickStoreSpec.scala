@@ -186,12 +186,16 @@ class TickStoreSpec extends SparkSpec {
     // tiny target -> multiple sorted output files per leaf, so the
     // disjointness assertion below actually has file pairs to check
     val (nb, na) = Compaction.compactPartitioned(spark, root,
-      targetBytes = 8192L)
+      targetBytes = 4096L)
     assert(na < nb, s"no compaction happened: $nb -> $na")
     // layout: same leaf set, no staging residue, tree still symbol=/day=
     val leavesAfter = Compaction.leafDataDirs(new java.io.File(root))
       .map(_.getPath).toSet
     assert(leavesAfter === leavesBefore)
+    val splitLeaves = leavesAfter.count(d => new java.io.File(d).listFiles()
+      .count(_.getName.endsWith(".parquet")) >= 2)
+    assert(splitLeaves > 0, "no leaf compacted into two or more files: " +
+      "the disjointness check below would check nothing")
     val residue = new java.io.File(root).getParentFile.listFiles()
       .map(_.getName).filter(n => n.contains(".stage_") ||
         n.endsWith(".compact") || n.endsWith(".old"))
