@@ -151,9 +151,12 @@ object Bench {
     val total = results.map(_._2).filter(_ >= 0).sum
     val totalWarm = warm.map(_._2).filter(_ >= 0).sum
 
-    // storage density: the updates table as parquet+zstd, bytes per event —
-    // the comparable for the reference's ~12 B/event DTF claim (README.md:28;
-    // DTF delta-encodes (ts,seq), parquet gets delta+dictionary+zstd)
+    // storage density: the updates table as parquet+zstd, bytes per event,
+    // next to the reference's ~12 B/event DTF claim (README.md:28). It is a
+    // plain Spark write: v1 pages with Spark's default encodings and zstd,
+    // so ts/seq are not delta-encoded as DTF and the tick writers'
+    // TickStore.FileEncoding do it; not comparable with perfbench's
+    // bytes_per_event
     val densityBpe =
       try {
         val dir = java.nio.file.Files.createTempDirectory("graft-dens")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions._
+import graft.model.Update
+import graft.streaming.Streaming.Dec4
 
 /** L2 orderbook reconstruction (`postprocessing/orderbook.rs:16-131`).
   *
@@ -13,15 +15,65 @@ import graft.functions._
   *   - trade: subtract size at that level IF the level exists (no-op
   *     otherwise); levels driven negative by trades are kept.
   *
+  * [[step]] is that replay step, written once: [[replayFold]], the
+  * server's OB and the book twins in `graft.streaming.Streaming` all fold
+  * it. It keeps the batch snapshot's arithmetic, not the naive
+  * sequential one: a level is `lastSize − double(Σ decimal(30,4) trades
+  * since)` ([[LevelCell]], [[sizeOf]]), so every replay is bit-equal to
+  * [[snapshot]]. Two bounds, where the replay fails loud with an
+  * `ArithmeticException` instead of returning a wrong book: a level's
+  * trade sum at scale 4 must fit a Long (|Σ| < 2^63 / 10^4, about
+  * 9.2e14), where Spark's `decimal(30,4)` sum still returns a number; and
+  * a level must fit the packed key (|price·10^decimals| < 2^62).
+  *
   * The final snapshot is order-theoretic, so it has a pure relational form
   * (no fold): for each `(symbol, side, level)` take the LAST level-set by
   * `(ts, seq)`; drop it if that set was 0; subtract the trade sizes that
   * arrived after it. This shuffles once on the level key and scales by
   * symbol×level cardinality — no sequential pass, no driver state. The
-  * sequential `flatMapGroups` replay would give the same answer (cross-checked
-  * in OrderbookSpec); the relational form is what you want at 100 TB.
+  * sequential replay gives the same answer (cross-checked in
+  * OrderbookSpec); the relational form is what you want at 100 TB.
   */
-object Orderbook {
+object Orderbook extends Serializable {
+
+  /** One level of a replayed book: the size of its last set and the exact
+    * scale-4 sum of the trades since, unscaled (`Dec4`). */
+  final case class LevelCell(lastSize: Double, tradedUnscaled: Long)
+
+  /** `process_update` on a book keyed by `(level << 1) | is_bid`, at
+    * `mult` = 10^decimals: a set replaces the level's cell and resets its
+    * trade sum, a set of size 0 removes the level, and a trade adds its
+    * scale-4 size only to a level that exists. */
+  def step(book: Map[Long, LevelCell], u: Update,
+      mult: Double): Map[Long, LevelCell] = {
+    val key = Math.multiplyExact(math.floor(u.price * mult).toLong, 2L) |
+      (if (u.is_bid) 1L else 0L)
+    if (u.is_trade)
+      book.get(key).fold(book)(c => book.updated(key, c.copy(tradedUnscaled =
+        Math.addExact(c.tradedUnscaled, Dec4.dec4(u.size)))))
+    else if (u.size == 0.0) book.removed(key)
+    else book.updated(key, LevelCell(u.size, 0L))
+  }
+
+  /** A level's size as [[snapshot]] computes it: one decimal sum, ONE
+    * double subtraction. */
+  def sizeOf(c: LevelCell): Double =
+    if (c.tradedUnscaled == 0L) c.lastSize
+    else c.lastSize - Dec4.dec4ToDouble(c.tradedUnscaled)
+
+  /** `updates`, in (ts, seq) order, folded through [[step]]. */
+  def replay(updates: Iterator[Update],
+      decimals: Int): Map[Long, LevelCell] = {
+    val mult = math.pow(10, decimals)
+    updates.foldLeft(Map.empty[Long, LevelCell])(step(_, _, mult))
+  }
+
+  /** A replayed book's bid and ask levels, each keyed by its level. */
+  def sides(book: Map[Long, LevelCell])
+      : (Map[Long, LevelCell], Map[Long, LevelCell]) = {
+    val (bids, asks) = book.partition(e => (e._1 & 1L) == 1L)
+    (bids.map(e => (e._1 >> 1) -> e._2), asks.map(e => (e._1 >> 1) -> e._2))
+  }
 
   /** Final book snapshot: `(symbol, is_bid, level, size)`. */
   def snapshot(updates: DataFrame, decimals: Int = 2): DataFrame = {
@@ -78,40 +130,20 @@ object Orderbook {
        |ORDER BY 1, 2, 3""".stripMargin.replace('\n', ' ')
   }
 
-  /** Sequential replay (`process_update`, orderbook.rs:46-63) as a
-    * per-symbol ordered fold — same answer as [[snapshot]] (cross-checked in
-    * OrderbookSpec); used by the streaming/server path where the book is
-    * maintained incrementally. */
+  /** Sequential replay (`process_update`, orderbook.rs:46-63): per
+    * symbol, the (ts, seq)-sorted rows folded through [[step]]. The
+    * sequential reference [[snapshot]] is checked against in
+    * OrderbookSpec and OperatorPropertySpec. */
   def replayFold(updates: DataFrame, decimals: Int = 2): DataFrame = {
     val spark = updates.sparkSession
     import spark.implicits._
-    val mult = math.pow(10, decimals)
-    updates
-      .repartition(col("symbol"))
-      .sortWithinPartitions("symbol", "ts", "seq")
-      .as[graft.model.Update]
-      .mapPartitions { rows =>
-        val out = scala.collection.mutable.ArrayBuffer
-          .empty[(String, Boolean, Long, Double)]
-        var sym: String = null
-        var book = scala.collection.mutable.TreeMap.empty[(Boolean, Long), Double]
-        def flush(): Unit = if (sym != null) {
-          book.foreach { case ((bid, lvl), sz) => out += ((sym, bid, lvl, sz)) }
-          book = scala.collection.mutable.TreeMap.empty
-        }
-        rows.foreach { u =>
-          if (u.symbol != sym) { flush(); sym = u.symbol }
-          val lvl = math.floor(u.price * mult).toLong
-          val key = (u.is_bid, lvl)
-          if (u.is_trade) {
-            book.get(key).foreach(sz => book(key) = sz - u.size)
-          } else if (u.size == 0.0) book.remove(key)
-          else book(key) = u.size
-        }
-        flush()
-        out.iterator
+    updates.as[Update].groupByKey(_.symbol).flatMapGroups { (sym, rows) =>
+      val (bids, asks) = sides(replay(
+        rows.toSeq.sortBy(u => (u.ts, u.seq)).iterator, decimals))
+      Seq(true -> bids, false -> asks).flatMap { case (bid, levels) =>
+        levels.map { case (level, c) => (sym, bid, level, sizeOf(c)) }
       }
-      .toDF("symbol", "is_bid", "level", "size")
+    }.toDF("symbol", "is_bid", "level", "size")
   }
 
   /** Top of book per symbol (`orderbook.rs:84-131`): best bid = max bid

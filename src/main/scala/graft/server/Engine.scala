@@ -33,8 +33,9 @@ final class Session {
   *
   * GET and LOAD read the book's files on the driver, as the reference
   * does ([[GetReader]]); FLUSH writes them there ([[FlushWriter]]); COUNT
-  * and CLEAR read their footers. None of them runs a Spark job. OB, SQL
-  * and compaction stay DataFrame plans over the same files.
+  * and CLEAR read their footers; OB folds the rows GET would read through
+  * [[Orderbook.step]]. None of them runs a Spark job. SQL and compaction
+  * stay DataFrame plans over the same files.
   */
 final class Engine(spark: SparkSession, dtfFolder: String,
     autoflush: Boolean = false, flushInterval: Long = 1000L,
@@ -373,7 +374,10 @@ final class Engine(spark: SparkSession, dtfFolder: String,
       val book = bookOpt.getOrElse(session.book)
       if (!books.contains(book) && !hasFs(book))
         Err("Unable to get orderbook")
-      else Text(orderbookJson(book))
+      else try Text(orderbookJson(book)) catch {
+        case e: ArithmeticException =>
+          Err(s"Unable to get orderbook `$book`: ${e.getMessage}")
+      }
 
     case Command.Get(count, format, range, loc) =>
       val book = session.book
@@ -395,21 +399,29 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * `orderbook_as_json_str` (`state.rs:437-441` serializing `Orderbook`,
     * `postprocessing/orderbook.rs:15-23`): `{"price_decimals":N,
     * "bids":{"<level>":size,...},"asks":{...}}` with BTreeMap
-    * ascending-level key order. The snapshot of one book is bounded by its
-    * distinct price levels, so collecting it is fine. Default decimals is
-    * the reference's hardcoded `PRICE_DECIMALS = 10` (`state.rs:23`,
-    * `Book::new`) so level keys and level-merge granularity are
-    * key-compatible with reference OB replies. */
+    * ascending-level key order. Default decimals is the reference's
+    * hardcoded `PRICE_DECIMALS = 10` (`state.rs:23`, `Book::new`) so level
+    * keys and level-merge granularity are key-compatible with reference
+    * OB replies.
+    *
+    * The book is replayed on the driver, as the reference does: the rows
+    * a GET ALL would read (staged rows and the book's files, in (ts, seq)
+    * order, file rows first on a tie) folded through [[Orderbook.step]],
+    * whose sizes equal [[Orderbook.snapshot]]'s bit for bit. A level
+    * whose trade sum overflows the step's bounds throws
+    * `ArithmeticException`. */
   private def orderbookJson(book: String,
       decimals: Int = Engine.PriceDecimals): String = {
-    val rows = Orderbook.snapshot(bookDf(book), decimals)
-      .select(col("is_bid"), col("level"), col("size"))
-      .orderBy("level").collect()
-    def side(bid: Boolean): String = rows.iterator
-      .filter(_.getBoolean(0) == bid)
-      .map(r => s""""${r.getLong(1)}":${r.getDouble(2)}""")
-      .mkString(",")
-    s"""{"price_decimals":$decimals,"bids":{${side(true)}},"asks":{${side(false)}}}"""
+    val staged = books.get(book).fold(Array.empty[Update])(_.toArray)
+    val rows = withSwapRead(
+      getReader(layoutOf(book), staged, None, None).rows)
+    val (bids, asks) =
+      Orderbook.sides(Orderbook.replay(rows.iterator, decimals))
+    def side(levels: Map[Long, Orderbook.LevelCell]): String =
+      levels.toSeq.sortBy(_._1)
+        .map { case (level, c) => s""""$level":${Orderbook.sizeOf(c)}""" }
+        .mkString(",")
+    s"""{"price_decimals":$decimals,"bids":{${side(bids)}},"asks":{${side(asks)}}}"""
   }
 
   /** Flush staging to parquet, keeping only rows newer than the stored
@@ -470,8 +482,8 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     * the max sits in the highest `day=` leaf holding rows — not always
     * the highest `day=` dir: Archiver's `removeLocal` can empty one.
     * Legacy root-level flat files can hold any ts and are always read.
-    * A leaf whose footers lack `ts` statistics falls back to a Spark
-    * `max` over that leaf alone. Runs under the
+    * A leaf whose footers lack `ts` statistics falls back to reading
+    * that leaf's rows on the driver. Runs under the
     * READ side of [[swapGate]], so a compaction or archival swap never
     * lands between the listing and the footer reads. */
   private def storedMaxTs(book: String): Long = withSwapRead {
@@ -497,8 +509,8 @@ final class Engine(spark: SparkSession, dtfFolder: String,
   }
 
   /** Max `ts` over a set of parquet files (Long.MinValue when they hold
-    * no rows): footer statistics per row group, or one Spark `max` over
-    * the set when any row group lacks them. */
+    * no rows): footer statistics per row group, or, when any row group
+    * lacks them, the max over the set's rows read with [[BookFileReader]]. */
   private def maxTsOf(files: Seq[java.io.File]): Long = {
     val fromFooters: Seq[Option[Long]] = files.flatMap { f =>
       footerOf(f).getBlocks.asScala.toSeq.filter(_.getRowCount > 0)
@@ -513,10 +525,11 @@ final class Engine(spark: SparkSession, dtfFolder: String,
     if (fromFooters.forall(_.isDefined))
       fromFooters.flatten.foldLeft(Long.MinValue)(math.max)
     else {
-      val m = spark.read.schema(Update.schema)
-        .parquet(files.map(_.getPath): _*)
-        .agg(max(col("ts"))).head()
-      if (m.isNullAt(0)) Long.MinValue else m.getLong(0)
+      var m = Long.MinValue
+      files.foreach(BookFileReader.foreach(_,
+        spark.sparkContext.hadoopConfiguration, None)(u =>
+        m = math.max(m, u.ts)))
+      m
     }
   }
 

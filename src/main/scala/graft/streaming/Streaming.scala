@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{Candle, Update}
+import graft.operators.Orderbook
+import graft.operators.Orderbook.LevelCell
 import graft.server.CommandParser
 
 /** Structured-Streaming rebuild of the reference's server loop
@@ -53,8 +55,8 @@ object Streaming {
     }
   }
 
-  /** Per-symbol book state: price level -> size, updated incrementally per
-    * micro-batch (flatMapGroupsWithState, key = symbol — bounded state:
+  /** Per-symbol book state: the [[graft.operators.Orderbook.step]] book,
+    * updated incrementally per micro-batch (key = symbol — bounded state:
     * live price levels only, SURVEY §7.4-7). Emits (symbol, best_bid,
     * best_ask, mid, n_levels) after each batch. */
   case class BookTop(symbol: String, best_bid: Double, best_ask: Double,
@@ -64,23 +66,15 @@ object Streaming {
       : Dataset[BookTop] = {
     import updates.sparkSession.implicits._
     val mult = math.pow(10, decimals)
-    // state key packs (is_bid, level) into one Long: (level << 1) | bid
-    tickFold[String, Map[Long, Double], BookTop](updates, _.symbol,
+    tickFold[String, Map[Long, LevelCell], BookTop](updates, _.symbol,
       _ => true, Map.empty)(
-      (_, b, u, _) => {
-        val lvl = math.floor(u.price * mult).toLong
-        val key = (lvl << 1) | (if (u.is_bid) 1L else 0L)
-        if (u.is_trade) b.get(key).fold(b)(sz => b.updated(key, sz - u.size))
-        else if (u.size == 0.0) b.removed(key)
-        else b.updated(key, u.size)
-      },
+      (_, b, u, _) => Orderbook.step(b, u, mult),
       (sym, b) => {
-        val bids = b.keysIterator.filter(k => (k & 1L) == 1L).map(_ >> 1).toSeq
-        val asks = b.keysIterator.filter(k => (k & 1L) == 0L).map(_ >> 1).toSeq
+        val (bids, asks) = Orderbook.sides(b)
         if (bids.isEmpty || asks.isEmpty) None
         else {
-          val bb = bids.max / mult
-          val ba = asks.min / mult
+          val bb = bids.keysIterator.max / mult
+          val ba = asks.keysIterator.min / mult
           Some(BookTop(sym, bb, ba, (bb + ba) / 2, b.size))
         }
       })
@@ -1955,58 +1949,11 @@ object Streaming {
       (_, st) => sortedScales.flatMap(s => emit(s, st(s.toString))))
   }
 
-  /** Per-(symbol, is_bid, level) book-state cell carrying the BATCH
-    * snapshot's arithmetic shape, not the naive sequential one:
-    * [[graft.operators.Orderbook.snapshot]] computes each level as
-    * `lvl_size − cast(Σ decimal(30,4) traded-after-last-set AS double)`
-    * (one decimal sum, ONE double subtraction), which is not in general
-    * the IEEE value of `((lvl_size − t1) − t2)…` — so the stream keeps
-    * (last set size, exact unscaled traded sum) and materializes the
-    * subtraction only at emission, making every emitted size bit-equal
-    * to the batch snapshot by construction. */
-  case class LevelCell(lastSize: Double, tradedUnscaled: Long)
-
   case class BookFeat(symbol: String,
       best_bid: Option[Double], bid_size: Option[Double],
       best_ask: Option[Double], ask_size: Option[Double],
       microprice: Option[Double],
       bid_depth: Double, ask_depth: Double, imbalance: Option[Double])
-
-  /** Book-derived features on a STREAM — the ingest-time twin of
-    * [[graft.operators.BookFeatures.microprice]] and
-    * [[graft.operators.BookFeatures.depthImbalance]] off ONE shared
-    * incremental book state (the [[streamingBookTop]] key packing,
-    * [[LevelCell]] cells for batch-exact sizes). Emits one row per
-    * symbol per micro-batch with the CURRENT features — the serving
-    * cadence; feeding the whole history is the batch result bit-for-bit
-    * (StreamingSpec proves both features against the batch ops).
-    *
-    * Parity notes, all inherited from the batch ops: a level set to
-    * size 0 is REMOVED; a level whose computed size reaches 0 via
-    * trades is KEPT (the batch filter is on last-set size only); a
-    * symbol missing a side emits null microprice and that side's
-    * best/size as null; depth sums quantize each included level's
-    * computed size to decimal scale 4 (the `exactSum` cast) and sum
-    * exactly. State is bounded by live price levels per symbol. Late
-    * rows follow [[tickFold]]'s mark. */
-  /** One update folded into the packed-key incremental book
-    * ([[streamingBookTop]] packing, [[LevelCell]] cells) — the
-    * maintenance step [[streamingBookFeatures]] and
-    * [[streamingLiquidityBand]] share. A serializable holder (the
-    * [[Dec4]] pattern): fold closures capture IT, never the
-    * non-serializable enclosing object. */
-  private[streaming] object BookOps extends Serializable {
-    def step(b: Map[Long, LevelCell], u: Update,
-        mult: Double): Map[Long, LevelCell] = {
-      val lvl = math.floor(u.price * mult).toLong
-      val key = (lvl << 1) | (if (u.is_bid) 1L else 0L)
-      if (u.is_trade)
-        b.get(key).fold(b)(c => b.updated(key, c.copy(tradedUnscaled =
-          Math.addExact(c.tradedUnscaled, Streaming.Dec4.dec4(u.size)))))
-      else if (u.size == 0.0) b.removed(key)
-      else b.updated(key, LevelCell(u.size, 0L))
-    }
-  }
 
   /** Per-symbol OFI state: the SET-only level book (key packs
     * `(level << 1) | is_bid`, value = last set size) and the previous
@@ -2135,24 +2082,34 @@ object Streaming {
       close = (sym, b, st, _, out) => { closeBands(sym, b, st, out); st })
   }
 
+  /** Book-derived features on a STREAM — the ingest-time twin of
+    * [[graft.operators.BookFeatures.microprice]] and
+    * [[graft.operators.BookFeatures.depthImbalance]] off ONE shared
+    * incremental book state ([[graft.operators.Orderbook.step]], whose
+    * cells give batch-exact sizes). Emits one row per
+    * symbol per micro-batch with the CURRENT features — the serving
+    * cadence; feeding the whole history is the batch result bit-for-bit
+    * (StreamingSpec proves both features against the batch ops).
+    *
+    * Parity notes, all inherited from the batch ops: a level set to
+    * size 0 is REMOVED; a level whose computed size reaches 0 via
+    * trades is KEPT (the batch filter is on last-set size only); a
+    * symbol missing a side emits null microprice and that side's
+    * best/size as null; depth sums quantize each included level's
+    * computed size to decimal scale 4 (the `exactSum` cast) and sum
+    * exactly. State is bounded by live price levels per symbol. Late
+    * rows follow [[tickFold]]'s mark. */
   def streamingBookFeatures(updates: Dataset[Update], decimals: Int = 2,
       k: Long = 10L): Dataset[BookFeat] = {
     import updates.sparkSession.implicits._
     val mult = math.pow(10, decimals)
     val Dec4 = Streaming.Dec4 // local binding: the closure captures the
     // serializable holder, not the enclosing (non-serializable) object
-    val Bk = Streaming.BookOps
+    import Orderbook.sizeOf
     def serve(sym: String, b: Map[Long, LevelCell]): Option[BookFeat] =
       if (b.isEmpty) None
       else {
-        // batch snapshot arithmetic: lastSize − double(Σ decimal traded)
-        def sizeOf(c: LevelCell): Double =
-          if (c.tradedUnscaled == 0L) c.lastSize
-          else c.lastSize - Dec4.dec4ToDouble(c.tradedUnscaled)
-        val bids = b.collect { case (kk, c) if (kk & 1L) == 1L =>
-          (kk >> 1, c) }
-        val asks = b.collect { case (kk, c) if (kk & 1L) == 0L =>
-          (kk >> 1, c) }
+        val (bids, asks) = Orderbook.sides(b)
         val bb = if (bids.isEmpty) None else Some(bids.keysIterator.max)
         val ba = if (asks.isEmpty) None else Some(asks.keysIterator.min)
         val bidSz = bb.map(l => sizeOf(bids(l)))
@@ -2179,7 +2136,8 @@ object Streaming {
           imb))
       }
     tickFold[String, Map[Long, LevelCell], BookFeat](updates, _.symbol,
-      _ => true, Map.empty)((_, b, u, _) => Bk.step(b, u, mult), serve)
+      _ => true, Map.empty)((_, b, u, _) => Orderbook.step(b, u, mult),
+      serve)
   }
 
   case class LiqRow(symbol: String, is_bid: Boolean, n_levels: Long,
@@ -2188,10 +2146,10 @@ object Streaming {
   /** Banded liquidity on a STREAM — the ingest-time twin of
     * [[graft.operators.Orderbook.liquidityBand]] off the same
     * incremental book state as [[streamingBookFeatures]]
-    * ([[BookOps]]): per micro-batch, the CURRENT all-integer band
-    * test around `(bb+ba) div 2` and the exact scale-4 size sums
-    * ([[LevelCell]] sizes are the batch snapshot's arithmetic by
-    * construction, the Dec4 sum is the `exactSum` decimal cast).
+    * ([[graft.operators.Orderbook.step]]): per micro-batch, the CURRENT
+    * all-integer band test around `(bb+ba) div 2` and the exact scale-4
+    * size sums (`Orderbook.sizeOf` is the batch snapshot's arithmetic,
+    * the Dec4 sum is the `exactSum` decimal cast).
     * Like the batch op, a symbol missing a side emits nothing, and a
     * side with no in-band levels emits no row. Feeding the whole
     * history reproduces the batch table bit-for-bit (StreamingSpec).
@@ -2201,15 +2159,9 @@ object Streaming {
     import updates.sparkSession.implicits._
     val mult = math.pow(10, decimals)
     val Dec4 = Streaming.Dec4 // see streamingBookFeatures: holder capture
-    val Bk = Streaming.BookOps
+    import Orderbook.sizeOf
     def serve(sym: String, b: Map[Long, LevelCell]): Seq[LiqRow] = {
-      def sizeOf(c: LevelCell): Double =
-        if (c.tradedUnscaled == 0L) c.lastSize
-        else c.lastSize - Dec4.dec4ToDouble(c.tradedUnscaled)
-      val bids = b.collect { case (kk, c) if (kk & 1L) == 1L =>
-        (kk >> 1, c) }
-      val asks = b.collect { case (kk, c) if (kk & 1L) == 0L =>
-        (kk >> 1, c) }
+      val (bids, asks) = Orderbook.sides(b)
       if (bids.isEmpty || asks.isEmpty) Nil
       else {
         val mid = (bids.keysIterator.max + asks.keysIterator.min) / 2L
@@ -2225,7 +2177,8 @@ object Streaming {
       }
     }
     tickFold[String, Map[Long, LevelCell], LiqRow](updates, _.symbol,
-      _ => true, Map.empty)((_, b, u, _) => Bk.step(b, u, mult), serve)
+      _ => true, Map.empty)((_, b, u, _) => Orderbook.step(b, u, mult),
+      serve)
   }
 
   /** Per-symbol rolling-volume state: the trailing-window trade buffer

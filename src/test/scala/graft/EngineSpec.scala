@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.operators.Orderbook
 import graft.server._
 
 /** Server state-machine goldens ported from `handler.rs:197-260` and
@@ -374,14 +375,15 @@ class EngineSpec extends SparkSpec {
       "day emptied by archival, a footer without statistics") {
     import org.apache.spark.sql.functions.col
     val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
-    /** Stages `ts` (one row each), FLUSHes, and checks the flush kept
-      * exactly the rows newer than `diskMax`. */
+    /** Stages `ts` (one row each), FLUSHes, and checks the flush ran no
+      * Spark job and kept exactly the rows newer than `diskMax`. */
     def flushAgainst(e: Engine, book: String, diskMax: Long,
         ts: Seq[Long]): Unit = {
       val before = e.bookDf(book).count()
       val dropped0 = e.flushStats.droppedRows
       ts.zipWithIndex.foreach { case (t, i) => addAt(e, t, 500L + i) }
-      e.execute(CommandParser.parse("FLUSH"))
+      val (_, jobs) = jobsDuring(e.execute(CommandParser.parse("FLUSH")))
+      assert(jobs.isEmpty, s"$book: FLUSH ran $jobs")
       val kept = ts.filter(_ > diskMax).sorted
       assert(kept.nonEmpty && kept.size < ts.size)
       assert(e.execute(CommandParser.parse("COUNT")) ===
@@ -447,8 +449,8 @@ class EngineSpec extends SparkSpec {
     flushAgainst(e4, "archived", base + 2000L,
       Seq(1000L, 2000L, 3000L, day + 5000L).map(base + _))
 
-    // a later day whose footer carries no ts statistics: the leaf falls
-    // back to a Spark max
+    // a later day whose footer carries no ts statistics: the leaf's rows
+    // are read on the driver
     val (e5, root5) = bookOnDisk("nostats")
     writeDays(updates("nostats", Seq(base + day, base + day + 700L)), root5,
       Map("parquet.column.statistics.enabled" -> "false"))
@@ -466,6 +468,51 @@ class EngineSpec extends SparkSpec {
     } finally footer.close()
     flushAgainst(e5, "nostats", base + day + 700L,
       Seq(day + 600L, day + 700L, day + 800L).map(base + _))
+  }
+
+  test("OB folds a book of a legacy root file, day= leaves and staged " +
+      "rows on the driver: no Spark job, and Orderbook.snapshot's JSON " +
+      "bit for bit") {
+    val enc = org.apache.spark.sql.Encoders.product[graft.model.Update]
+    def up(t: Long, seq: Long, trade: Boolean, bid: Boolean, px: Double,
+        size: Double) = graft.model.Update("ob", base + t, seq, trade, bid,
+      px, size)
+    val dir = Files.createTempDirectory("graft-ob-fold").toString
+    spark.createDataset(Seq(
+      up(0L, 1L, trade = true, bid = true, 10.0, 1.0), // before the first set
+      up(1000L, 2L, trade = false, bid = true, 10.0, 3.0),
+      up(2000L, 3L, trade = false, bid = false, 10.5, 2.0),
+      up(3000L, 4L, trade = false, bid = false, 11.0, 1.5),
+      up(4000L, 5L, trade = true, bid = true, 10.0, 0.1)))(enc).toDF()
+      .coalesce(1).write.parquet(s"$dir/book=ob")
+    val e = new Engine(spark, dir)
+    e.execute(CommandParser.parse("CREATE ob"))
+    e.execute(CommandParser.parse("USE ob"))
+    def add(ups: graft.model.Update*): Unit =
+      ups.foreach(u => e.execute(Command.Insert(Some(u), None)))
+    add(up(5000L, 6L, trade = false, bid = false, 11.0, 0.0), // delete
+      up(day, 7L, trade = true, bid = false, 11.0, 0.5), // deleted level
+      up(day + 1000L, 8L, trade = false, bid = true, 9.5, 1.0),
+      up(day + 2000L, 9L, trade = true, bid = true, 9.5, 0.75))
+    e.execute(CommandParser.parse("FLUSH")) // leaves day 0 and day 1
+    add(up(day + 3000L, 10L, trade = true, bid = true, 10.0, 0.2),
+      up(day + 4000L, 11L, trade = true, bid = true, 9.5, 0.75), // negative
+      up(day + 5000L, 12L, trade = true, bid = false, 10.5, 0.3))
+    assert(new java.io.File(s"$dir/book=ob").list().count(n =>
+      n.startsWith("day=")) === 2)
+
+    val (reply, jobs) = jobsDuring(e.execute(CommandParser.parse("OB")))
+    assert(jobs.isEmpty, jobs)
+    val rows = Orderbook.snapshot(e.bookDf("ob"), Engine.PriceDecimals)
+      .orderBy("level").collect()
+    def side(bid: Boolean) = rows.filter(_.getAs[Boolean]("is_bid") == bid)
+      .map(r => s""""${r.getAs[Long]("level")}":${r.getAs[Double]("size")}""")
+      .mkString(",")
+    val want = s"""{"price_decimals":10,"bids":{${side(true)}},""" +
+      s""""asks":{${side(false)}}}"""
+    assert(want === """{"price_decimals":10,"bids":{"95000000000":-0.5,""" +
+      """"100000000000":2.7},"asks":{"105000000000":1.7}}""")
+    assert(reply === e.Text(want))
   }
 
   /** The `ts` of every row a GET reply frames, in reply order. */

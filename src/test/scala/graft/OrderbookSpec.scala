@@ -11,7 +11,9 @@ class OrderbookSpec extends SparkSpec {
         r.getDouble(3))).toSeq.sorted
 
   /** Handcrafted replay covering set / overwrite / delete / trade-subtract /
-    * trade-on-missing-level (`orderbook.rs:46-63`). */
+    * trade-on-missing-level (`orderbook.rs:46-63`), and trades summed
+    * exactly before one subtraction: 3.0 − 0.1 − 0.2 is 2.7, not the
+    * 2.6999999999999997 of two double subtractions. */
   test("snapshot semantics: set, delete, trade subtraction") {
     val ups = Seq(
       Update("s", 1, 1, false, true, 10.00, 5.0),  // set bid 1000 -> 5
@@ -21,9 +23,13 @@ class OrderbookSpec extends SparkSpec {
       Update("s", 5, 5, false, true, 10.50, 0.0),  // delete bid 1050
       Update("s", 6, 6, true, false, 12.00, 9.0),  // trade on missing ask: no-op
       Update("s", 7, 7, false, true, 9.00, 7.0),   // set bid 900 -> 7
-      Update("s", 8, 8, false, true, 9.00, 6.0))   // overwrite bid 900 -> 6
+      Update("s", 8, 8, false, true, 9.00, 6.0),   // overwrite bid 900 -> 6
+      Update("s", 9, 9, false, false, 11.50, 3.0), // set ask 1150 -> 3
+      Update("s", 10, 10, true, false, 11.50, 0.1), // trade ask 1150
+      Update("s", 11, 11, true, false, 11.50, 0.2)) // -> 3.0 - 0.3
     val expected = Seq(
       ("s", false, 1100L, 3.0),
+      ("s", false, 1150L, 2.7),
       ("s", true, 900L, 6.0),
       ("s", true, 1000L, 3.0))
     assert(book(Orderbook.snapshot(updatesDf(ups))) === expected)
@@ -60,26 +66,5 @@ class OrderbookSpec extends SparkSpec {
       .select(col("event_class")).collect().map(_.getString(0)).toSeq
     assert(got === Seq("create", "cancel", "trade", "create", "cancel",
       "create"))
-  }
-
-  test("typed Aggregator snapshot == relational snapshot (mergeable fold)") {
-    import spark.implicits._
-    val ups = graft.Tables.updates(spark, sf()).as[graft.model.Update]
-    val viaAgg = graft.operators.BookAggregator.snapshot(ups)
-      .toDF("symbol", "is_bid", "level", "size")
-      .orderBy("symbol", "is_bid", "level")
-      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getLong(2),
-        r.getDouble(3)))
-    val viaRel = graft.operators.Orderbook.snapshot(ups.toDF())
-      .orderBy("symbol", "is_bid", "level")
-      .collect().map(r => (r.getString(0), r.getBoolean(1), r.getLong(2),
-        r.getDouble(3)))
-    assert(viaAgg.length === viaRel.length)
-    viaAgg.zip(viaRel).foreach { case ((s1, b1, l1, z1), (s2, b2, l2, z2)) =>
-      assert((s1, b1, l1) === ((s2, b2, l2)))
-      // relational path sums trades through decimal(30,4); the typed
-      // aggregate sums doubles — identical to FP noise
-      assert(math.abs(z1 - z2) < 1e-6, s"size mismatch at $s1/$b1/$l1")
-    }
   }
 }

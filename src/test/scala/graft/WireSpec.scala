@@ -99,6 +99,26 @@ class WireSpec extends SparkSpec {
     } finally { client.close(); server.stop() }
   }
 
+  test("OB on a level whose scale-4 trade sum overflows a Long replies " +
+      "ERR naming the book and keeps the connection") {
+    val engine =
+      new Engine(spark, Files.createTempDirectory("graft-ob-big").toString)
+    val server = new TcpServer(engine)
+    val client = new TcpClient("127.0.0.1", server.boundPort)
+    try {
+      client.cmd("CREATE bigtrade")
+      // 1e21 at scale 4 is 1e25 unscaled: past a Long, inside decimal(30,4)
+      assert(client.insertRaw(Some("bigtrade"), Update("", 1505177459658L,
+        1L, is_trade = false, is_bid = true, 1.25, 4.5)))
+      assert(client.insertRaw(Some("bigtrade"), Update("", 1505177459659L,
+        2L, is_trade = true, is_bid = true, 1.25, 1e21)))
+      val (ok, err) = client.cmd("OB bigtrade")
+      assert(!ok && err.startsWith("ERR: ") && err.contains("`bigtrade`"),
+        err)
+      assert(client.cmd("PING") === ((true, "PONG")))
+    } finally { client.close(); server.stop() }
+  }
+
   test("current book is per-connection (Connection.book_entry semantics)") {
     val engine =
       new Engine(spark, Files.createTempDirectory("graft-sess").toString)
